@@ -28,39 +28,15 @@ def entry(spark: SparkSession) -> DataFrame:
     return get("a2_summary_by_source").fn(spark, SF_SMOKE_DIR)
 
 
-def _rotated_names() -> list[str]:
-    """Harness-adapter concern: order the export by the driver's own
-    ``CORRECTNESS_r*.json`` artifacts (tools/rotation.py) — queries
-    whose source changed since their last driver row first (r15,
-    PLAN_FINGERPRINTS.json), then failed rows, then never-sampled,
-    then stalest-green — so the fixed-size sampling prefix re-checks
-    round-touched code and stale coverage before fresh results.
-    Library order (``plans.registry``) stays plain registration order."""
-    from wiki_data_pipeline_spark.plans.registry import (
-        all_oracles,
-        all_queries,
-    )
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    sys.path.insert(0, os.path.join(root, "tools"))
-    from rotation import rotate
-
-    return rotate(list(all_queries()), all_oracles(), root)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator, in registration order."""
     from wiki_data_pipeline_spark.plans.registry import all_queries
 
-    fns = all_queries()
-    return {name: fns[name] for name in _rotated_names()}
+    return all_queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted → rows-only check)."""
+    """DuckDB-equivalent SQL per query, in registration order."""
     from wiki_data_pipeline_spark.plans.registry import all_oracles
 
-    oracles = all_oracles()
-    return {
-        name: oracles[name] for name in _rotated_names() if name in oracles
-    }
+    return all_oracles()

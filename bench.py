@@ -95,17 +95,9 @@ HEADLINE = [
 
 # Regression-gate baseline: a frozen snapshot covering ALL headline
 # queries (BENCH_BASELINE.json merges the r1 medians with first-seen
-# medians for queries added after r1), falling back to the raw r1
-# artifact if the snapshot is absent. Path overridable for local
-# experiments; queries in neither file are skipped by the gate.
-def _default_baseline() -> str:
-    here = os.path.dirname(os.path.abspath(__file__))
-    if os.path.exists(os.path.join(here, "BENCH_BASELINE.json")):
-        return "BENCH_BASELINE.json"
-    return "BENCH_r01.json"
-
-
-BASELINE_BENCH = os.environ.get("SPARK_GRAFT_BENCH_BASELINE", _default_baseline())
+# medians for queries added after r1). Path overridable for local
+# experiments; queries absent from it are skipped by the gate.
+BASELINE_BENCH = os.environ.get("SPARK_GRAFT_BENCH_BASELINE", "BENCH_BASELINE.json")
 REGRESSION_FACTOR = 2.0
 # Absolute-slowdown floor for the regression gate. A pure ratio gate
 # has no noise floor: round 7 flagged a3_status_counts at "2.18x" on a
@@ -449,8 +441,8 @@ def replica_layout_fingerprint(sf1_dir: str) -> dict[str, dict[str, int]]:
     Why this is gated (r13): the sf1 baselines are append-only values
     frozen against a SPECIFIC replica layout — r13's replica packed
     each fact table into ONE row group, so scan-bound x10 timings
-    were single-core measurements (root-caused in NOTES_r13.md;
-    build_scaled writes 4·mult files per fact table since r14, and
+    were single-core measurements (build_scaled writes 4·mult files
+    per fact table since r14, and
     the baselines were re-frozen against that layout in the same
     commit). If build_scaled's write path ever changes the layout
     again, every scan-bound query's x10 time shifts for reasons that
@@ -516,7 +508,7 @@ def run_sf1() -> None:
     # at mult=1 (r15, verdict item 3): the r14 replica re-layout gave
     # the x10 side 40-file scan parallelism while the driver's sf0.1
     # source stayed single-file-single-row-group, so every scan-bound
-    # exponent carried a DOWNWARD layout bias (NOTES_r14 §3). With
+    # exponent carried a DOWNWARD layout bias. With
     # both decades on the same layout formula the log-ratio measures
     # the engine, not the file count. The sf0.1 GATE (main bench) is
     # unaffected — it still times the driver's own source dir.
@@ -555,8 +547,8 @@ def run_sf1() -> None:
     # replica-layout fingerprint (r13): flag drift from the layout the
     # baselines were frozen against. The stamp-if-absent branch only
     # exists for pre-r14 baseline files (fresh freezes above carry the
-    # fingerprint from birth); its retroactive-blessing caveat is
-    # recorded in NOTES_r13.md §9 / the r13 ADVICE entry.
+    # fingerprint from birth); a stamp written after the freeze can
+    # bless a replica the frozen timings never saw.
     layout_stamped = "replica_layout" not in doc0
     if layout_stamped:
         doc0["replica_layout"] = layout

@@ -8,8 +8,8 @@ family and asserts the canonical result hash is IDENTICAL under
 spark.sql.shuffle.partitions in {4, 64, 200} — exercising single-task,
 default, and over-partitioned execution of every shuffle in the plan.
 The full-registry sweep (201/201, plus local[4]-vs-local[32] dump
-comparison) runs per-round via tools/metamorphic_sweep.py and is
-recorded in NOTES_r9.md; this pytest keeps the invariant wired into
+comparison) runs via tools/metamorphic_sweep.py; this pytest keeps
+the invariant wired into
 the default suite so a new order-sensitive expression fails CI, not
 the round gate.
 

@@ -1150,7 +1150,7 @@ def test_replica_layout_fingerprint(tmp_path):
     """The x10 replica layout fingerprint (r13): counts non-empty
     part files and total row groups per table — the physical facts
     the frozen sf1 baselines depend on (a single-row-group fact file
-    makes scan-bound x10 timings single-core; see NOTES_r13.md). A
+    makes scan-bound x10 timings single-core). A
     layout change must flip the fingerprint."""
     import os
     import sys

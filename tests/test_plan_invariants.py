@@ -429,12 +429,14 @@ def test_registry_wide_blanket_invariants(spark):
     )
 
 
-def test_round_plan_variants_are_auditable(spark, sf_dir):
-    """r10: the x10 sweep audits the iterative queries through their
+def test_round_plan_variants_are_auditable(spark, sf_dir, monkeypatch):
+    """The x10 sweep audits the iterative queries through their
     one-round stand-ins (plans/scale_audit.py). Pin that each stand-in
     exposes real join/aggregate structure — if a refactor ever made
     one return a checkpoint scan (zero joins), the sweep would go
-    blind on exactly the family where a scale regression hides."""
+    blind on exactly the family where a scale regression hides — and
+    that each fixpoint query and its stand-in build the SAME round
+    function, so a re-forked copy of a round body fails here."""
     import os
     import sys
 
@@ -443,10 +445,45 @@ def test_round_plan_variants_are_auditable(spark, sf_dir):
     )
     from plan_audit import audit_plan
 
+    from wiki_data_pipeline_spark.plans import llm_ops
+    from wiki_data_pipeline_spark.plans.registry import get
     from wiki_data_pipeline_spark.plans.scale_audit import round_plan_variants
 
-    for name, fn in round_plan_variants().items():
+    round_fns = {
+        "dedup_cluster_components": "_min_label_round",
+        "dedup_cluster_components_star": "_star_round",
+        "graph_pagerank_dedup": "_pr_round",
+    }
+    calls = dict.fromkeys(round_fns.values(), 0)
+
+    def counted(fn_name):
+        real = getattr(llm_ops, fn_name)
+
+        def wrapper(*args):
+            calls[fn_name] += 1
+            return real(*args)
+
+        return wrapper
+
+    for fn_name in calls:
+        monkeypatch.setattr(llm_ops, fn_name, counted(fn_name))
+
+    for name, fn_name in round_fns.items():
+        before = calls[fn_name]
+        get(name).fn(spark, sf_dir)  # eager pins run the rounds
+        assert calls[fn_name] > before, (
+            f"{name}: query loop does not build llm_ops.{fn_name}"
+        )
+
+    variants = round_plan_variants()
+    assert set(round_fns) <= set(variants)
+    for name, fn in variants.items():
+        before = dict(calls)
         df = fn(spark, sf_dir)
+        if name in round_fns:
+            assert calls[round_fns[name]] == before[round_fns[name]] + 1, (
+                f"{name}: stand-in does not build llm_ops.{round_fns[name]}"
+            )
         a = audit_plan(df._jdf.queryExecution().executedPlan().toString())
         joins = a["bhj"] + a["smj"] + a["bnlj"]
         assert joins >= 1, f"{name}: round plan carries no join nodes"

@@ -2,10 +2,9 @@
 `python tools/check_parity.py [--json OUT] [sf_dir] [name ...]`.
 
 Runs every registered query (or the named subset) against its DuckDB
-oracle and prints a pass/fail line each — the local mirror of the
-driver's CORRECTNESS gate. With ``--json OUT`` it also writes a
-CORRECTNESS-artifact-shaped JSON (name -> rows/schema/hash match +
-row counts + err), which is how the per-round ADVERSARIAL_PARITY.json
+oracle and prints a pass/fail line each. With ``--json OUT`` it also
+writes a parity JSON (name -> rows/schema/hash match + row counts +
+err), which is how the per-round ADVERSARIAL_PARITY.json
 is produced:
 
     python tools/make_adversarial_sf.py /tmp/adversarial_sf
@@ -40,7 +39,7 @@ from wiki_data_pipeline_spark.testing import compare_query
 def _row(
     rows_match, schema_match, hash_match, spark_rows, oracle_rows, err
 ) -> dict:
-    """One artifact row — the CORRECTNESS shape, spelled out once."""
+    """One artifact row, spelled out once."""
     return {
         "rows_match": rows_match,
         "schema_match": schema_match,

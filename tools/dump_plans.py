@@ -2,8 +2,8 @@
 
 Usage: python tools/dump_plans.py OUT_DIR SUFFIX [--sf-dir DIR] name...
 
-Writes OUT_DIR/<name>_<SUFFIX>.txt per query — the round's
-before/after plan evidence (plans/r15/<query>_before.txt etc.).
+Writes OUT_DIR/<name>_<SUFFIX>.txt per query — before/after plan
+evidence for a rewrite (e.g. SUFFIX=before, then SUFFIX=after).
 
 The data directory is an explicit ``--sf-dir`` flag (r15 ADVICE: the
 old positional ``os.path.isdir(rest[0])`` heuristic silently consumed

@@ -213,8 +213,8 @@ def build_scaled(spark, workdir: str, mult: int) -> str:
     # crossJoin preserves the SOURCE's partitioning — one single-file
     # fixture scan in, one output file with ONE giant row group out —
     # and parquet cannot split inside a row group, so every scan-bound
-    # x10 measurement was a single-core measurement (NOTES_r13 §9: the
-    # (11+1)/12 straggler stage; q1's exponent partly an artifact; the
+    # x10 measurement was a single-core measurement (the (11+1)/12
+    # straggler stage; q1's exponent partly an artifact; the
     # sentinel-spread alert). 4·mult files (x10 → 40 ≥ the 32 local
     # cores) restores the scan parallelism a real 10× dataset would
     # have. Fixed formula, not defaultParallelism: the layout must not

@@ -1805,6 +1805,33 @@ def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _min_label_init(edges: DataFrame) -> DataFrame:
+    """Round 1 folded into initialization: with lbl₀ = node, the first
+    propagation round computes least(node, min(neighbors)) — which is
+    ONE aggregate over the symmetric (u, v) edge set (the groupBy(u)
+    yields exactly the distinct node set), so the distinct + join +
+    agg of a full round collapses into the init pass → (node, lbl)."""
+    return (
+        edges.groupBy(F.col("u").alias("node"))
+        .agg(F.min("v").alias("nmin"))
+        .select("node", F.least(F.col("node"), F.col("nmin")).alias("lbl"))
+    )
+
+
+def _min_label_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label propagation round: min(own label, min neighbor
+    label) as ONE aggregate over the union of neighbor contributions
+    and the labels themselves — a neighbor-min aggregate + left join
+    back would spend an extra shuffle per round on the same result.
+    Every node appears in ``labels``, so the union keeps
+    isolated-in-this-round nodes alive exactly like a left-join
+    coalesce would."""
+    contrib = edges.join(labels, edges.u == labels.node).select(
+        F.col("v").alias("node"), F.col("lbl")
+    )
+    return contrib.unionAll(labels).groupBy("node").agg(F.min("lbl").alias("lbl"))
+
+
 def _min_label_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
     """Min-label connected components over an (a, b) pair DataFrame →
     (node, lbl) at fixpoint — the shared iterative core of
@@ -1813,11 +1840,9 @@ def _min_label_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
     localCheckpoint / Observation-fixpoint scale discipline. The first
     propagation round is folded into label initialization (one
     aggregate over the symmetric edges), saving a join + checkpoint
-    round and the init-sum collect.
-
-    NOTE: the loop body is mirrored line-for-line by
-    plans/scale_audit.py:cluster_components_round_plan (the x10
-    sweep's compile-only stand-in) — change them together."""
+    round and the init-sum collect. The init and round bodies are
+    ``_min_label_init`` / ``_min_label_round``, which the x10 sweep's
+    compile-only stand-in (plans/scale_audit.py) builds too."""
     from pyspark.sql import Observation
 
     # Materialize the pair frame ONCE before symmetrizing: the union
@@ -1837,38 +1862,19 @@ def _min_label_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
     # round's join (and by the init aggregate below, which is keyed on
     # u too); rounds now move only the node-sized label table.
     edges = edges.repartition("u").transform(pin)
-    # Round 1 folded into initialization: with lbl₀ = node, the first
-    # propagation round computes least(node, min(neighbors)) — which is
-    # ONE aggregate over the symmetric edge set (the groupBy(u) below
-    # yields exactly the distinct node set), so the distinct + join +
-    # agg + checkpoint of a full round collapses into the init pass.
-    # The convergence sum rides the same checkpoint as an Observation
-    # (no separate collect job).
+    # The convergence sum rides each round's checkpoint as an
+    # Observation (no separate collect job).
     obs0 = Observation()
     labels = (
-        edges.groupBy(F.col("u").alias("node"))
-        .agg(F.min("v").alias("nmin"))
-        .select("node", F.least(F.col("node"), F.col("nmin")).alias("lbl"))
+        _min_label_init(edges)
         .observe(obs0, F.sum("lbl").alias("lbl_sum"))
         .transform(pin)
     )
     prev_sum = obs0.get["lbl_sum"]
     for _ in range(19):
-        # Fused round: min(own label, min neighbor label) as ONE
-        # aggregate over the union of neighbor contributions and the
-        # labels themselves — the earlier neighbor-min aggregate + left
-        # join back spent an extra shuffle per round on the same
-        # result. Every node appears in `labels`, so the union keeps
-        # isolated-in-this-round nodes alive exactly like the old
-        # left-join coalesce did.
-        contrib = edges.join(labels, edges.u == labels.node).select(
-            F.col("v").alias("node"), F.col("lbl")
-        )
         obs = Observation()
         labels = (
-            contrib.unionAll(labels)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
+            _min_label_round(edges, labels)
             .observe(obs, F.sum("lbl").alias("lbl_sum"))
             .transform(pin)
         )
@@ -1944,6 +1950,33 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star + small-star half-round pair over an (a, b) edge
+    set oriented a > b → the next round's (a, b) edge set."""
+    # -- large-star: symmetric adjacency; larger neighbors -> min
+    adj = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+        edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
+    mn = adj.groupBy("u").agg(F.min("v").alias("mn"))
+    m = F.least(F.col("u"), F.col("mn"))
+    large = (
+        adj.join(mn, "u")
+        .filter(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("a"), m.alias("b"))
+        .distinct()
+    )
+    # -- small-star: orientation large->small; smaller neighbors
+    #    and the center itself -> min
+    dmn = large.groupBy("a").agg(F.min("b").alias("mn"))
+    return (
+        large.join(dmn, "a")
+        .select(F.col("b").alias("a"), F.col("mn").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .unionAll(dmn.select(F.col("a"), F.col("mn").alias("b")))
+        .distinct()
+    )
+
+
 @query(
     "dedup_cluster_components_star",
     oracle=f"""
@@ -1995,11 +2028,8 @@ def dedup_cluster_components_star(spark: SparkSession, sf_dir: str) -> DataFrame
     fine: both stars key the shuffle by node id and the min-aggregate
     is decomposable (map-side partials), so a 10⁶-degree boilerplate
     hub never funnels its neighbor list through one reducer as a
-    collected array.
-
-    NOTE: the round body is mirrored by
-    plans/scale_audit.py:cluster_components_star_round_plan (x10 sweep
-    stand-in) — change them together."""
+    collected array. The round body is ``_star_round``, which the x10
+    sweep's compile-only stand-in (plans/scale_audit.py) builds too."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     # undirected edge set, canonical orientation a > b. The LSH pair
     # contract is already DISTINCT rows with doc_a < doc_b (the band
@@ -2010,28 +2040,7 @@ def dedup_cluster_components_star(spark: SparkSession, sf_dir: str) -> DataFrame
     ).transform(pin)
     prev_sig = None
     for _ in range(12):
-        # -- large-star: symmetric adjacency; larger neighbors -> min
-        adj = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-            edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        mn = adj.groupBy("u").agg(F.min("v").alias("mn"))
-        m = F.least(F.col("u"), F.col("mn"))
-        large = (
-            adj.join(mn, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), m.alias("b"))
-            .distinct()
-        )
-        # -- small-star: orientation large->small; smaller neighbors
-        #    and the center itself -> min
-        dmn = large.groupBy("a").agg(F.min("b").alias("mn"))
-        small = (
-            large.join(dmn, "a")
-            .select(F.col("b").alias("a"), F.col("mn").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .unionAll(dmn.select(F.col("a"), F.col("mn").alias("b")))
-            .distinct()
-        )
+        small = _star_round(edges)
         obs = Observation()
         # Fixpoint signature = (count, sum of per-edge xxhash64): a
         # plain (count, sum(a+b)) can collide across different edge
@@ -2638,7 +2647,7 @@ def text_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured 9× faster at sf0.1 than the previous explode +
     groupBy(doc_id, gram) + min_by shape, whose (doc_id, gram) shuffle
     moved every bigram occurrence across the cluster — the opposite
-    verdict from the simhash narrow-fold negative result (NOTES_r1.md):
+    verdict from the simhash narrow-fold negative result:
     there the fold REPLACED a map-side-combining aggregate of few
     outputs; here it replaces a full-width shuffle of all bigrams."""
     docs = read_table(spark, sf_dir, "documents")
@@ -3629,9 +3638,9 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, but at a realistic dup rate that is a corpus-FRACTION
     table — it grows with the data, so a hard ``F.broadcast`` would
     force an OOM-class build into every executor at 100 TB (the exact
-    both-sides-grow shape ``cdc_merge_plan`` refused to hint, NOTES_r14
-    §9). The strategy is now the planner's call from stats: statically
-    the checkpointed components frame has unknown size → SortMergeJoin;
+    both-sides-grow shape ``cdc_merge_plan`` refused to hint). The
+    strategy is now the planner's call from stats: statically the
+    checkpointed components frame has unknown size → SortMergeJoin;
     at runtime AQE sees the tiny build side but (measured at sf0.1)
     keeps the shuffle join with local reads — its demote rule fires on
     the mostly-empty build-side partitions, and the already-written
@@ -4794,6 +4803,39 @@ def _pr_iter_sql(prev: str) -> str:
     """
 
 
+def _pr_init(deg: DataFrame, nn: DataFrame) -> DataFrame:
+    """Uniform initial ranks 1/N over the node set — the key set of
+    the out-degree table ``deg`` (src, outdeg) — as (doc_id, pr_nano)."""
+    return deg.crossJoin(F.broadcast(nn)).select(
+        F.col("src").alias("doc_id"),
+        F.expr("(2 * 1000000000 + n) div (2 * n)").alias("pr_nano"),
+    )
+
+
+def _pr_round(e2: DataFrame, pr: DataFrame, nn: DataFrame) -> DataFrame:
+    """One PageRank power iteration: contribution join of the
+    outdeg-carrying edges ``e2`` (src, dst, outdeg) onto the rank table
+    ``pr`` (doc_id, pr_nano) on src, sum keyed on dst, then the damping
+    step against the broadcast node-count scalar ``nn`` (n) → the next
+    (doc_id, pr_nano)."""
+    contrib = F.expr("(2 * pr_nano + outdeg) div (2 * outdeg)")
+    return (
+        e2.join(pr.withColumnRenamed("doc_id", "src"), on="src")
+        .select(F.col("dst").alias("doc_id"), contrib.alias("c"))
+        .groupBy("doc_id")
+        .agg(F.sum("c").alias("s"))
+        .crossJoin(F.broadcast(nn))
+        .select(
+            "doc_id",
+            F.expr(
+                f"(2 * 150000000 + n) div (2 * n)"
+                f" + (2 * {_PR_DAMP_NUM} * s + {_PR_DAMP_DEN})"
+                f" div (2 * {_PR_DAMP_DEN})"
+            ).alias("pr_nano"),
+        )
+    )
+
+
 @query(
     "graph_pagerank_dedup",
     oracle=f"""
@@ -4845,11 +4887,9 @@ def graph_pagerank_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of the O(1) node-count scalar; lineage truncated per
     round with localCheckpoint exactly like dedup_cluster_components;
     3 fixed rounds (dup-cluster diameters are tiny — rank gap closes
-    geometrically at 0.85^t).
-
-    NOTE: the iteration body is mirrored by
-    plans/scale_audit.py:pagerank_round_plan (x10 sweep stand-in) —
-    change them together."""
+    geometrically at 0.85^t). The iteration body is ``_pr_round``,
+    which the x10 sweep's compile-only stand-in (plans/scale_audit.py)
+    builds too."""
     # pin the pair frame before the symmetrizing union — one LSH
     # pipeline run, not two (see _min_label_components)
     pairs = (
@@ -4881,28 +4921,9 @@ def graph_pagerank_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition("src")
         .transform(pin)
     )
-    pr = deg.crossJoin(F.broadcast(nn)).select(
-        F.col("src").alias("doc_id"),
-        F.expr("(2 * 1000000000 + n) div (2 * n)").alias("pr_nano"),
-    )
+    pr = _pr_init(deg, nn)
     for _ in range(_PR_ITERS):
-        contrib = F.expr("(2 * pr_nano + outdeg) div (2 * outdeg)")
-        pr = (
-            e2.join(pr.withColumnRenamed("doc_id", "src"), on="src")
-            .select(F.col("dst").alias("doc_id"), contrib.alias("c"))
-            .groupBy("doc_id")
-            .agg(F.sum("c").alias("s"))
-            .crossJoin(F.broadcast(nn))
-            .select(
-                "doc_id",
-                F.expr(
-                    f"(2 * 150000000 + n) div (2 * n)"
-                    f" + (2 * {_PR_DAMP_NUM} * s + {_PR_DAMP_DEN})"
-                    f" div (2 * {_PR_DAMP_DEN})"
-                ).alias("pr_nano"),
-            )
-            .transform(pin, eager=False)
-        )
+        pr = _pr_round(e2, pr, nn).transform(pin, eager=False)
     # TakeOrderedAndProject first (distributed top-k, no global sort),
     # THEN rank — the single-partition window sees only 100 rows.
     micro = F.expr("(2 * pr_nano + 1000) div 2000")

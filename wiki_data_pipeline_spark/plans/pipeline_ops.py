@@ -1252,8 +1252,7 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run in the bytecode interpreter. The zip_with+aggregate HOF
     # fold below is the fastest available spelling; the query is
     # map-only and shuffle-free, so its gate drift is a measurement
-    # artifact, not a plan defect (idle ×5 evidence in
-    # OPTIMIZATION_r16.md).
+    # artifact, not a plan defect (idle ×5 re-timing).
     outs = F.array(
         *[
             F.struct(
@@ -2707,9 +2706,9 @@ def sim_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `cells` was then consumed TWICE, and the two groupBy(cid)
     # exchanges did not canonicalize in the static plan, so the ENTIRE
     # assignment pipeline (embeddings scan + centroid collect + fold +
-    # aggregate) executed twice per run (plans/r15/
-    # sim_ivf_cell_stats_after.txt: 8 parquet scans, two ObjectHash
-    # centroid collects). A partition-less window over `cells` is
+    # aggregate) executed twice per run (8 parquet scans, two
+    # ObjectHash centroid collects). A partition-less window over
+    # `cells` is
     # k-BOUNDED input (≤ _N_CENTROIDS rows by construction — cid is
     # drawn from the capped centroid set), so the single-partition
     # sort-free frame is O(k); the duplicated subtree, the second
@@ -3352,7 +3351,7 @@ def join_cogrouped_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tie predicate); overflow-free (no ts*K+id packing). r14: ONE
         # np.lexsort over the union replaces the r13 pandas concat +
         # drop_duplicates + two hash merges (which tripled per-bucket
-        # Python work and breached the 2× bench gate, BENCH_r13) AND
+        # Python work and breached the 2× bench gate) AND
         # the two per-side sort_values — the union order contains each
         # side's sorted order, so both merge_asof inputs are carved
         # from the same sort. event_ids are unique across the events
@@ -4331,8 +4330,8 @@ def dedup_family_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections over the same `pairwise_shingle_overlap` frame on the
     same bounded corpus subset — the r15 plan ran the shingle
     inverted-index join (scan → explode → self-join → sizes) twice,
-    once per score (plans/r15/dedup_family_agreement_before.txt: 54
-    parquet scans = 18 corpus subtrees). The overlap frame is now
+    once per score (54 parquet scans = 18 corpus subtrees). The
+    overlap frame is now
     built ONCE and pinned (pair-sized — the same class as the
     components pin); both scores project from the checkpoint. The
     projected pair sets are expression-identical to the registered

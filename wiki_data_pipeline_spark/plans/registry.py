@@ -53,12 +53,7 @@ def _load_all() -> None:
 
 
 def all_queries() -> dict[str, QueryFn]:
-    """All registered queries in plain registration order.
-
-    Library export order never depends on anything outside the package
-    (the evaluation harness's coverage-rotation policy lives in
-    ``tools/rotation.py`` and is applied only by the harness adapter
-    ``__spark_entry__.py``)."""
+    """All registered queries in registration order."""
     _load_all()
     return {name: spec.fn for name, spec in _REGISTRY.items()}
 

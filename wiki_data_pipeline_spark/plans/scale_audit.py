@@ -1,16 +1,14 @@
-"""Compile-only ROUND PLANS for the iterative queries (r10 verdict
-item 2 — closing the x10 plan-sweep skip list).
+"""Compile-only ROUND PLANS for the iterative queries (the x10 plan
+sweep's stand-ins).
 
 The three fixpoint queries truncate lineage with ``localCheckpoint``
 every round, so their *returned* frame is a checkpoint scan carrying no
 join nodes — invisible to a cross-scale join-strategy audit. But the
-plan that matters at 100 TB is the one that REPEATS: each function here
-builds exactly one un-checkpointed iteration (edge derivation included,
-since that is the scale-varying part) and returns it for
-``tools/plan_scale_diff.py`` to audit at the fixture SF and the 10x
-replica. The loop bodies mirror the registered queries line for line —
-each source docstring points back here so a drift in one is caught in
-review of the other.
+plan that matters at 100 TB is the one that REPEATS: each stand-in
+builds the query's edge set unpinned (edge derivation included, since
+that is the scale-varying part) and applies the query's OWN round
+function once, so ``tools/plan_scale_diff.py`` audits the code the
+query runs at the fixture SF and the 10x replica.
 
 ``round_plan_variants()`` is the sweep's lookup: query name → the
 compile-audit callable standing in for it.
@@ -21,14 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wiki_data_pipeline_spark.plans import llm_ops
+
+
+def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return llm_ops.dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+
 
 def _lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetrized near-dup pair graph — the shared edge derivation of
-    all three iterative queries (dedup_minhash_lsh composed, exactly
-    as the queries themselves do)."""
-    from wiki_data_pipeline_spark.plans.llm_ops import dedup_minhash_lsh
-
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+    """Symmetrized (u, v) near-dup pair graph, unpinned."""
+    pairs = _lsh_pairs(spark, sf_dir)
     return pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionAll(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
@@ -37,98 +37,27 @@ def _lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cluster_components_round_plan(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """One min-label propagation round (mirrors
-    llm_ops._min_label_components' loop body, minus the checkpoint):
-    neighbor-min aggregate + left join back onto labels."""
+    """One min-label propagation round over the init labels."""
     edges = _lsh_edges(spark, sf_dir)
-    # init mirrors the folded first round: least(node, min neighbor)
-    labels = (
-        edges.groupBy(F.col("u").alias("node"))
-        .agg(F.min("v").alias("nmin"))
-        .select("node", F.least(F.col("node"), F.col("nmin")).alias("lbl"))
-    )
-    # fused round: union of neighbor contributions and own labels →
-    # one min aggregate (mirrors the registered loop body)
-    contrib = edges.join(labels, edges.u == labels.node).select(
-        F.col("v").alias("node"), F.col("lbl")
-    )
-    return (
-        contrib.unionAll(labels.select("node", "lbl"))
-        .groupBy("node")
-        .agg(F.min("lbl").alias("lbl"))
-    )
+    return llm_ops._min_label_round(edges, llm_ops._min_label_init(edges))
 
 
 def cluster_components_star_round_plan(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """One large-star + small-star half-round pair (mirrors
-    llm_ops.dedup_cluster_components_star's loop body, minus the
-    checkpoint/Observation)."""
-    from wiki_data_pipeline_spark.plans.llm_ops import dedup_minhash_lsh
-
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    # rename-only orientation: LSH pairs are distinct with doc_a < doc_b
+    """One large-star + small-star half-round pair."""
+    pairs = _lsh_pairs(spark, sf_dir)
     edges = pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-    adj = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    mn = adj.groupBy("u").agg(F.min("v").alias("mn"))
-    m = F.least(F.col("u"), F.col("mn"))
-    large = (
-        adj.join(mn, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("a"), m.alias("b"))
-        .distinct()
-    )
-    dmn = large.groupBy("a").agg(F.min("b").alias("mn"))
-    return (
-        large.join(dmn, "a")
-        .select(F.col("b").alias("a"), F.col("mn").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .unionAll(dmn.select(F.col("a"), F.col("mn").alias("b")))
-        .distinct()
-    )
+    return llm_ops._star_round(edges)
 
 
 def pagerank_round_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One PageRank power iteration over the LSH pair graph (mirrors
-    llm_ops.graph_pagerank_dedup's loop body, minus the checkpoint):
-    contribution join on src, sum keyed on dst, broadcast node-count
-    scalar."""
-    from wiki_data_pipeline_spark.plans.llm_ops import (
-        _PR_DAMP_DEN,
-        _PR_DAMP_NUM,
-    )
-
+    """One PageRank power iteration over the initial ranks."""
     e = _lsh_edges(spark, sf_dir).selectExpr("u AS src", "v AS dst")
-    # r16 mirror of graph_pagerank_dedup's loop: deg's key set IS the
-    # node set; edges carry outdeg(src) so the round is ONE edge join
-    # + the dst-keyed aggregate (the production loop additionally
-    # pins deg/nn/e2 once outside the rounds)
     deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     nn = deg.agg(F.count("*").cast("bigint").alias("n"))
     e2 = e.join(deg, on="src").repartition("src")
-    pr = deg.crossJoin(F.broadcast(nn)).select(
-        F.col("src").alias("doc_id"),
-        F.expr("(2 * 1000000000 + n) div (2 * n)").alias("pr_nano"),
-    )
-    contrib = F.expr("(2 * pr_nano + outdeg) div (2 * outdeg)")
-    return (
-        e2.join(pr.withColumnRenamed("doc_id", "src"), on="src")
-        .select(F.col("dst").alias("doc_id"), contrib.alias("c"))
-        .groupBy("doc_id")
-        .agg(F.sum("c").alias("s"))
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "doc_id",
-            F.expr(
-                f"(2 * 150000000 + n) div (2 * n)"
-                f" + (2 * {_PR_DAMP_NUM} * s + {_PR_DAMP_DEN})"
-                f" div (2 * {_PR_DAMP_DEN})"
-            ).alias("pr_nano"),
-        )
-    )
+    return llm_ops._pr_round(e2, llm_ops._pr_init(deg, nn), nn)
 
 
 def round_plan_variants() -> dict:

@@ -2064,8 +2064,8 @@ def q12_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12-shaped join: conditional-count aggregation over a
     fact⋈fact equi-join with a POST-JOIN date-arithmetic predicate
     (l_shipdate ≥ o_orderdate + 60 days — the late-shipment analog;
-    the fixtures carry no shipmode/commitdate/receiptdate, NOTES_r1.md
-    documents the original Q12 skip). Closes the last hole in the
+    the fixtures carry no shipmode/commitdate/receiptdate, which is
+    why the original Q12 was skipped). Closes the last hole in the
     join-shape sweep: CASE-inside-sum classification, which Spark
     plans as a single hash aggregate after the join — no per-class
     scans. The l_shipdate range predicate is join-independent and

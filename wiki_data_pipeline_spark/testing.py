@@ -1,7 +1,5 @@
 """Parity harness: run a registered query on Spark AND its DuckDB
-oracle, compare row-count + schema-insensitive sorted values — a local
-mirror of the driver's CORRECTNESS check so failures surface before the
-round gate."""
+oracle, compare row-count + schema-insensitive sorted values."""
 
 from __future__ import annotations
 
