@@ -10,7 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from wiki_data_pipeline_spark.io import read_table
-from wiki_data_pipeline_spark.sinks.per_record_json import write_per_record_json
+from wiki_data_pipeline_spark.sinks.per_record_json import (
+    write_per_record_json_with_watermark,
+)
 from wiki_data_pipeline_spark.sources.paged_json import read_paged_json, register
 
 _SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint, batch int"
@@ -19,7 +21,7 @@ _SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigin
 def _stage(spark, sf_dir, tmp_path) -> tuple[str, int, int]:
     out = str(tmp_path / "paged")
     docs = read_table(spark, sf_dir, "documents").limit(300)
-    n = write_per_record_json(docs, out, order_col="doc_id", batch_size=100)
+    n = write_per_record_json_with_watermark(docs, out, order_col="doc_id", batch_size=100)[0]
     n_batches = len([d for d in os.listdir(out) if d.startswith("batch_")])
     return out, n, n_batches
 

@@ -9,11 +9,6 @@ import json
 import os
 
 import pytest
-
-# heavy tier (r16): the end-to-end runner writes one JSON file per
-# record across resume/reset scenarios (~3 min) — builder-tier
-pytestmark = pytest.mark.heavy
-
 from pyspark.sql import functions as F
 
 from wiki_data_pipeline_spark.pipeline import run_pipeline
@@ -101,6 +96,59 @@ def test_pipeline_failed_rows_not_retried_forever(spark, sf_dir, tmp_path):
     assert s2["failed"] == 0  # NOT re-dead-lettered
     dlq = spark.read.parquet(os.path.join(out, "_dead_letter"))
     assert dlq.count() == 1  # exactly one dead-letter row, not per-run dupes
+
+
+@pytest.mark.parametrize(
+    "enrichment",
+    [
+        None,
+        {
+            "global_qps": None,
+            "max_retries": 0,  # every 5th doc fails its only fetch
+            "initial_delay": 0.0,
+            "max_delay": 0.0,
+            "fail_every": 5,
+        },
+    ],
+    ids=["plain", "enriched"],
+)
+def test_batch_and_streaming_records_match(spark, sf_dir, tmp_path, enrichment):
+    """Both runners share one record path: over the same docs they
+    must write, per doc_id, the same JSON record (same keys in the same
+    order, same values) and dead-letter the same docs with the same
+    error kind. Only the file naming differs (consecutive index vs
+    doc_id)."""
+    from wiki_data_pipeline_spark.pipeline import run_pipeline_streaming
+
+    docs = spark.createDataFrame(
+        [(i, None if i == 7 else f"body {i}", "en", "api") for i in range(20)],
+        "doc_id BIGINT, text STRING, lang STRING, source STRING",
+    )
+    src = str(tmp_path / "src")
+    docs.coalesce(1).write.parquet(src)
+    batch_out, stream_out = str(tmp_path / "batch"), str(tmp_path / "stream")
+    run_pipeline(spark, sf_dir, batch_out, docs=docs, enrichment=enrichment)
+    run_pipeline_streaming(spark, src, stream_out, enrichment=enrichment)
+
+    def records(out: str) -> dict:
+        recs = [json.loads(open(f, encoding="utf-8").read()) for f in _json_files(out)]
+        return {r["doc_id"]: r for r in recs}
+
+    def error_kinds(path: str) -> dict:
+        dlq = spark.read.parquet(path).collect()
+        return {r.doc_id: r.error.split(":")[0] for r in dlq}
+
+    failed = {7: "validation_failed"}
+    if enrichment is not None:
+        failed.update({i: "fetch_failed" for i in (0, 5, 10, 15)})
+    batch, stream = records(batch_out), records(stream_out)
+    assert set(batch) == set(stream) == set(range(20)) - set(failed)
+    for doc_id, rec in batch.items():
+        assert list(rec) == list(stream[doc_id])
+        assert rec == stream[doc_id]
+        assert rec["author"] is None
+    assert error_kinds(os.path.join(batch_out, "_dead_letter")) == failed
+    assert error_kinds(os.path.join(stream_out, "_dead_letter_stream")) == failed
 
 
 def test_pipeline_streaming_delta_and_idempotence(spark, sf_dir, tmp_path):

@@ -13,7 +13,9 @@ from pyspark.sql import functions as F
 
 from wiki_data_pipeline_spark.io import read_table
 from wiki_data_pipeline_spark.operators.enrichment import fetch_enrich
-from wiki_data_pipeline_spark.sinks.per_record_json import write_per_record_json
+from wiki_data_pipeline_spark.sinks.per_record_json import (
+    write_per_record_json_with_watermark,
+)
 
 
 def _stubs(spark, sf_dir, n=None):
@@ -28,7 +30,7 @@ def _stubs(spark, sf_dir, n=None):
 def test_per_record_json_layout(spark, sf_dir, tmp_path):
     out = str(tmp_path / "out")
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    n = write_per_record_json(docs, out, order_col="doc_id", batch_size=100)
+    n = write_per_record_json_with_watermark(docs, out, order_col="doc_id", batch_size=100)[0]
     assert n == docs.count()
 
     files = sorted(glob.glob(os.path.join(out, "batch_*", "article_*.json")))
@@ -45,9 +47,45 @@ def test_per_record_json_layout(spark, sf_dir, tmp_path):
     assert rec["doc_id"] == 0 and "\n" in open(files[0]).read()
 
     # idempotent overwrite (ST3): rerun → same file count, same content
-    n2 = write_per_record_json(docs, out, order_col="doc_id", batch_size=100)
+    n2 = write_per_record_json_with_watermark(docs, out, order_col="doc_id", batch_size=100)[0]
     assert n2 == n
     assert len(glob.glob(os.path.join(out, "batch_*", "article_*.json"))) == n
+
+
+def test_partition_writer_pickles_by_value(tmp_path):
+    """Both runners ship ``_make_writer``'s closure to Python workers,
+    which cannot import this package: the pickled writer must load and
+    write in a process with no repo on ``sys.path`` and never pull
+    ``wiki_data_pipeline_spark`` into ``sys.modules``."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from wiki_data_pipeline_spark.sinks.per_record_json import _make_writer
+
+    out = str(tmp_path / "out")
+    blob = cloudpickle.dumps(_make_writer(out, 10, 0, "doc_id"))
+    child = (
+        "import pickle, sys\n"
+        "from pyspark.sql import Row\n"
+        "write = pickle.loads(sys.stdin.buffer.read())\n"
+        "print(list(write([(Row(doc_id=13, title='Doc 13'), 13)])))\n"
+        "assert 'wiki_data_pipeline_spark' not in sys.modules\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", child],
+        input=blob,
+        capture_output=True,
+        cwd="/tmp",
+        env=env,
+        timeout=120,
+    )
+    assert res.returncode == 0, res.stderr.decode()[-2000:]
+    assert res.stdout.decode().strip() == "[(1, 13)]"
+    with open(os.path.join(out, "batch_001", "article_000013.json")) as f:
+        assert json.load(f) == {"doc_id": 13, "title": "Doc 13"}
 
 
 def test_enrichment_happy_path(spark, sf_dir):
@@ -207,7 +245,7 @@ def test_s8_json_read_roundtrip(spark, sf_dir, tmp_path):
     schema-on-read made explicit (SURVEY.md §1.3)."""
     out = str(tmp_path / "rt")
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    write_per_record_json(docs, out, order_col="doc_id", batch_size=100)
+    write_per_record_json_with_watermark(docs, out, order_col="doc_id", batch_size=100)
 
     back = spark.read.schema("doc_id bigint, lang string, n_chars bigint").option(
         "multiLine", True

@@ -76,6 +76,29 @@ def test_dead_letter_split_and_resume(spark, sf_dir, tmp_path):
     assert (n_ok2 + n_dlq2) - (n_ok + n_dlq) == extra.count()
 
 
+def test_dead_letter_split_failed_write_releases_cache(spark, sf_dir, tmp_path):
+    """A foreachBatch sink that fails mid-batch must still unpersist
+    its cached micro-batch: the session is long-lived, and a leaked
+    cache pins executor memory for every later query. The dead-letter
+    write fails here because its target is a regular file."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src = str(tmp_path / "src")
+    stage_events_as_stream_source(spark, sf_dir, src, n_files=1)
+    dlq_dir = tmp_path / "dlq"
+    dlq_dir.write_text("not a directory")
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # earlier tests may share the session
+    assert cache_manager.isEmpty()
+
+    with pytest.raises(StreamingQueryException):
+        run_dead_letter_split(
+            spark, src, str(tmp_path / "ckpt"), str(tmp_path / "ok"), str(dlq_dir)
+        )
+    assert cache_manager.isEmpty()
+
+
 def test_stateful_user_counts(spark, sf_dir, tmp_path):
     src = str(tmp_path / "src")
     stage_events_as_stream_source(spark, sf_dir, src, n_files=3)

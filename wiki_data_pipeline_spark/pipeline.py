@@ -21,6 +21,12 @@ Reference flow mapped (SURVEY.md §3 entry point 1):
   watermark commit AFTER the sink succeeds (at-least-once +
   idempotent sink ≡ ST3), then an A2-style summary dict.
 
+The streaming twin (``run_pipeline_streaming``) runs the same record
+path per micro-batch: one shaping function (``_article_records`` —
+validate split, normalize, optional fetch stage) and one JSON writer
+(``sinks/per_record_json._make_writer``) serve both runners, so batch
+and streaming records cannot drift apart.
+
 At 100 TB: everything before the sink is narrow (no shuffle); the
 sink's range-repartition is the only exchange. Resume is a pushed-down
 range predicate — no driver-side work list, no per-row state writes
@@ -39,9 +45,72 @@ from pyspark.sql import functions as F
 from wiki_data_pipeline_spark.functions.text import build_url, is_valid_content
 from wiki_data_pipeline_spark.io import read_table
 from wiki_data_pipeline_spark.sinks.per_record_json import (
+    DIRECTORY_PATTERN,
+    FILE_PATTERN,
+    _make_writer,
     write_per_record_json_with_watermark,
 )
 from wiki_data_pipeline_spark.streaming.checkpoint import HighWatermarkCheckpoint
+
+
+def _article_records(
+    rows: DataFrame, enrichment: dict | None
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """The record path both runners share: F7 validate split, T1
+    normalize projection, and the optional rate-limited fetch stage.
+    Returns ``(ok, dlq, enriched)``: the JSON records, the dead-letter
+    rows (``doc_id``, ``source``, ``error``) and the persisted fetch
+    pass, which the caller unpersists once both sinks have run
+    (``None`` without ``enrichment``).
+
+    ``enrichment`` — kwargs for ``operators.enrichment.fetch_enrich``
+    (the config ``enrichment`` section as a dict) — enables the
+    reference's per-article API fetch: each valid doc's stub is
+    fetched under the QPS/retry contract, fetched rows gain
+    ``api_content`` and ``attempts`` columns, and retry-exhausted
+    fetches dead-letter as ``fetch_failed`` alongside validation
+    failures (reference mark_failed, src/main.py:122-133)."""
+    valid_pred = is_valid_content("text")
+    dlq = rows.filter(~valid_pred).select(
+        "doc_id",
+        "source",
+        F.lit("validation_failed: empty or null content").alias("error"),
+    )
+    title = F.concat(F.lit("Doc "), F.col("doc_id"))
+    ok = rows.filter(valid_pred).select(
+        "doc_id",
+        title.alias("title"),
+        build_url(title).alias("url"),
+        F.col("text").alias("content"),
+        F.lit(None).cast("string").alias("author"),
+        F.length("text").cast("bigint").alias("content_length"),
+        "lang",
+        "source",
+    )
+    if enrichment is None:
+        return ok, dlq, None
+
+    from wiki_data_pipeline_spark.operators.enrichment import fetch_enrich
+
+    # The fetch stage is rate-limited and side-effectful (a real
+    # deployment calls an external API) — persist so the sink job and
+    # the dead-letter job share ONE fetch pass, never two.
+    enriched = fetch_enrich(ok.select("doc_id", "title"), **enrichment).persist()
+    fetch_ok = enriched.filter(F.col("error").isNull()).select(
+        "doc_id",
+        F.col("content").alias("api_content"),
+        "attempts",
+    )
+    fetch_dlq = enriched.filter(F.col("error").isNotNull()).select(
+        "doc_id",
+        F.lit(None).cast("string").alias("source"),
+        F.concat(F.lit("fetch_failed: "), "error").alias("error"),
+    )
+    return (
+        ok.join(fetch_ok, "doc_id", "inner"),
+        dlq.unionByName(fetch_dlq),
+        enriched,
+    )
 
 
 def run_pipeline(
@@ -52,52 +121,8 @@ def run_pipeline(
     reset: bool = False,
     batch_size: int = 1000,
     docs: DataFrame | None = None,
-    file_pattern: str = "article_{index:06d}.json",
-    directory_pattern: str = "batch_{batch_num:03d}",
-    enrichment: dict | None = None,
-    fault_injector=None,
-    sink_task_fault_injector=None,
-) -> dict:
-    """Single-writer entry point: takes the checkpoint lease for the
-    whole run (reset through watermark commit), so a second concurrent
-    invocation on the same ``out_dir`` fails fast with
-    ``CheckpointLeaseError`` instead of double-processing the same
-    delta or interleaving watermark commits — the fencing the
-    reference's one-process JSON checkpoint silently assumes
-    (src/checkpoint_manager.py:39-47). See :func:`_run_pipeline_impl`
-    for the pipeline semantics."""
-    ckpt = HighWatermarkCheckpoint(
-        os.path.join(out_dir, "_checkpoint", "progress.json")
-    )
-    with ckpt.lease():
-        return _run_pipeline_impl(
-            spark,
-            sf_dir,
-            out_dir,
-            ckpt,
-            limit=limit,
-            reset=reset,
-            batch_size=batch_size,
-            docs=docs,
-            file_pattern=file_pattern,
-            directory_pattern=directory_pattern,
-            enrichment=enrichment,
-            fault_injector=fault_injector,
-            sink_task_fault_injector=sink_task_fault_injector,
-        )
-
-
-def _run_pipeline_impl(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    ckpt: HighWatermarkCheckpoint,
-    limit: int | None = None,
-    reset: bool = False,
-    batch_size: int = 1000,
-    docs: DataFrame | None = None,
-    file_pattern: str = "article_{index:06d}.json",
-    directory_pattern: str = "batch_{batch_num:03d}",
+    file_pattern: str = FILE_PATTERN,
+    directory_pattern: str = DIRECTORY_PATTERN,
     enrichment: dict | None = None,
     fault_injector=None,
     sink_task_fault_injector=None,
@@ -106,15 +131,16 @@ def _run_pipeline_impl(
     src/main.py:213-221 shape). ``docs`` overrides the corpus for
     tests; default reads ``documents`` from ``sf_dir``.
 
+    Single writer: the whole run (reset through watermark commit)
+    holds the checkpoint lease, so a second concurrent invocation on
+    the same ``out_dir`` fails fast with ``CheckpointLeaseError``
+    instead of double-processing the same delta or interleaving
+    watermark commits — the fencing the reference's one-process JSON
+    checkpoint silently assumes (src/checkpoint_manager.py:39-47).
+
     ``file_pattern``/``directory_pattern`` are the reference naming
-    knobs (config.yaml ``naming``). ``enrichment`` — kwargs for
-    ``operators.enrichment.fetch_enrich`` (the config ``enrichment``
-    section as a dict) — enables the reference's rate-limited
-    per-article API fetch stage: each valid doc's stub is fetched
-    under the QPS/retry contract, fetched rows gain ``api_content``
-    and ``attempts`` columns in the JSON output, and retry-exhausted
-    fetches dead-letter alongside validation failures (reference
-    mark_failed, src/main.py:122-133).
+    knobs (config.yaml ``naming``). ``enrichment``: see
+    :func:`_article_records`.
 
     ``fault_injector``: test-only crash hook called AFTER both sink
     writes but BEFORE the watermark commit — raising from it models a
@@ -123,137 +149,95 @@ def _run_pipeline_impl(
     same output (same file numbering from the uncommitted
     total_processed, same dead-letter rows via the watermark-keyed
     overwrite directory)."""
-    if reset:
-        if os.path.exists(ckpt.path):
-            os.remove(ckpt.path)  # reference --reset, src/main.py:244-248
-        # the dead-letter history is keyed by watermark; a reset run
-        # reprocesses everything from since=-1 and would otherwise
-        # leave the previous runs' since=<W> directories behind,
-        # double-counting historical dead letters on a root read
-        dlq_root = os.path.join(out_dir, "_dead_letter")
-        if os.path.exists(dlq_root):
-            shutil.rmtree(dlq_root)
-
-    if docs is None:
-        docs = read_table(spark, sf_dir, "documents")
-    if limit is not None:
-        # L1 early-exit: LocalLimit pushes below the scan; orderBy keeps
-        # the "first N" deterministic like the reference's FIFO queue.
-        docs = docs.orderBy("doc_id").limit(limit)
-
-    pending = ckpt.incremental(docs, "doc_id")
-
-    valid_pred = is_valid_content("text")
-    ok = pending.filter(valid_pred)
-    dlq = pending.filter(~valid_pred).select(
-        "doc_id",
-        "source",
-        F.lit("validation_failed: empty or null content").alias("error"),
+    ckpt = HighWatermarkCheckpoint(
+        os.path.join(out_dir, "_checkpoint", "progress.json")
     )
+    with ckpt.lease():
+        if reset:
+            if os.path.exists(ckpt.path):
+                os.remove(ckpt.path)  # reference --reset, src/main.py:244-248
+            # the dead-letter history is keyed by watermark; a reset run
+            # reprocesses everything from since=-1 and would otherwise
+            # leave the previous runs' since=<W> directories behind,
+            # double-counting historical dead letters on a root read
+            dlq_root = os.path.join(out_dir, "_dead_letter")
+            if os.path.exists(dlq_root):
+                shutil.rmtree(dlq_root)
 
-    title = F.concat(F.lit("Doc "), F.col("doc_id"))
-    normalized = ok.select(
-        "doc_id",
-        title.alias("title"),
-        build_url(title).alias("url"),
-        F.col("text").alias("content"),
-        F.lit(None).cast("string").alias("author"),
-        F.length("text").cast("bigint").alias("content_length"),
-        "lang",
-        "source",
-    )
+        if docs is None:
+            docs = read_table(spark, sf_dir, "documents")
+        if limit is not None:
+            # L1 early-exit: LocalLimit pushes below the scan; orderBy
+            # keeps the "first N" deterministic like the reference's
+            # FIFO queue.
+            docs = docs.orderBy("doc_id").limit(limit)
 
-    # try covers EVERY action after the persist — the per-record sink
-    # write included, not just the dead-letter write — so a failure
-    # anywhere in the run can't leak the cached fetch pass into the
-    # long-lived session.
-    enriched = None
-    try:
-        if enrichment is not None:
-            from wiki_data_pipeline_spark.operators.enrichment import (
-                fetch_enrich,
+        pending = ckpt.incremental(docs, "doc_id")
+
+        # try covers EVERY action after the persist — the per-record
+        # sink write included, not just the dead-letter write — so a
+        # failure anywhere in the run can't leak the cached fetch pass
+        # into the long-lived session.
+        enriched = None
+        try:
+            ok, dlq, enriched = _article_records(pending, enrichment)
+            # Continue the global file numbering where the last run
+            # stopped (reference L3 consecutive indices across
+            # batches/resumes).
+            prev_state = ckpt.load()
+            start_index = prev_state.total_processed
+            n_written, max_ok = write_per_record_json_with_watermark(
+                ok,
+                out_dir,
+                order_col="doc_id",
+                batch_size=batch_size,
+                start_index=start_index,
+                file_pattern=file_pattern,
+                directory_pattern=directory_pattern,
+                task_fault_injector=sink_task_fault_injector,
             )
-
-            # The fetch stage is rate-limited and side-effectful (a
-            # real deployment calls an external API) — persist so the
-            # sink job and the dead-letter job share ONE fetch pass,
-            # never two.
-            enriched = fetch_enrich(
-                normalized.select("doc_id", "title"), **enrichment
-            ).persist()
-            fetch_ok = enriched.filter(F.col("error").isNull()).select(
-                "doc_id",
-                F.col("content").alias("api_content"),
-                "attempts",
+            # Single pass over the dead-letter split: the row count AND
+            # the max doc_id ride an Observation on the write job
+            # instead of separate scans (at 100 TB the old
+            # count-then-write recomputed the filter twice).
+            dlq_obs = Observation("dlq")
+            # Dead-letter dir is keyed by the watermark this run STARTED
+            # from and written with overwrite: a retry of a crashed run
+            # (sink written, commit missed) starts from the same
+            # watermark, hits the same directory, and overwrites instead
+            # of appending duplicates — the batch analog of the
+            # streaming runner's per-batch-id overwrite (a successful
+            # run advances the watermark, so the next delta gets its own
+            # directory and history is preserved).
+            dlq.observe(
+                dlq_obs, F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("mx")
+            ).write.mode("overwrite").parquet(
+                os.path.join(
+                    out_dir, "_dead_letter", f"since={prev_state.watermark}"
+                )
             )
-            fetch_dlq = enriched.filter(F.col("error").isNotNull()).select(
-                "doc_id",
-                F.lit(None).cast("string").alias("source"),
-                F.concat(F.lit("fetch_failed: "), "error").alias("error"),
-            )
-            normalized = normalized.join(fetch_ok, "doc_id", "inner")
-            dlq = dlq.unionByName(fetch_dlq)
+            n_failed = int(dlq_obs.get["n"])
+            max_dlq = dlq_obs.get["mx"]
+            if fault_injector is not None:
+                # crash window: both sinks written, watermark commit pending
+                fault_injector()
+        finally:
+            if enriched is not None:
+                enriched.unpersist()
 
-        # Continue the global file numbering where the last run stopped
-        # (reference L3 consecutive indices across batches/resumes).
-        prev_state = ckpt.load()
-        start_index = prev_state.total_processed
-        n_written, max_ok = write_per_record_json_with_watermark(
-            normalized,
-            out_dir,
-            order_col="doc_id",
-            batch_size=batch_size,
-            start_index=start_index,
-            file_pattern=file_pattern,
-            directory_pattern=directory_pattern,
-            task_fault_injector=sink_task_fault_injector,
+        # Watermark covers ALL disposed rows (valid + dead-lettered) — a
+        # failed doc above the max valid doc_id must not be re-selected
+        # and re-dead-lettered forever (reference mark_failed
+        # semantics). Both maxima came out of the two sink jobs
+        # themselves, so the commit is O(1) — no third scan of the
+        # pending set. total_processed still counts only sink-written
+        # rows: it seeds the consecutive output-file numbering.
+        candidates = [m for m in (max_ok, max_dlq) if m is not None]
+        state = ckpt.commit_values(
+            watermark=max(candidates) if candidates else None,
+            n_disposed=n_written + n_failed,
+            n_processed=n_written,
         )
-        # Single pass over the dead-letter split: the row count AND the
-        # max doc_id ride an Observation on the write job instead of
-        # separate scans (at 100 TB the old count-then-write recomputed
-        # the filter twice).
-        dlq_obs = Observation("dlq")
-        # Dead-letter dir is keyed by the watermark this run STARTED
-        # from and written with overwrite: a retry of a crashed run
-        # (sink written, commit missed) starts from the same watermark,
-        # hits the same directory, and overwrites instead of appending
-        # duplicates — the batch analog of the streaming runner's
-        # per-batch-id overwrite (a successful run advances the
-        # watermark, so the next delta gets its own directory and
-        # history is preserved).
-        dlq.observe(
-            dlq_obs, F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("mx")
-        ).write.mode("overwrite").parquet(
-            os.path.join(
-                out_dir, "_dead_letter", f"since={prev_state.watermark}"
-            )
-        )
-        n_failed = int(dlq_obs.get["n"])
-        max_dlq = dlq_obs.get["mx"]
-        if fault_injector is not None:
-            # crash window: both sinks written, watermark commit pending
-            fault_injector()
-    finally:
-        # a crash anywhere after the persist must not leak the cached
-        # fetch pass into the long-lived session (same discipline as
-        # the streaming twin's per-batch cache)
-        if enriched is not None:
-            enriched.unpersist()
-            enriched = None
-
-    # Watermark covers ALL disposed rows (valid + dead-lettered) — a
-    # failed doc above the max valid doc_id must not be re-selected and
-    # re-dead-lettered forever (reference mark_failed semantics). Both
-    # maxima came out of the two sink jobs themselves, so the commit is
-    # O(1) — no third scan of the pending set. total_processed still
-    # counts only sink-written rows: it seeds the consecutive
-    # output-file numbering.
-    candidates = [m for m in (max_ok, max_dlq) if m is not None]
-    state = ckpt.commit_values(
-        watermark=max(candidates) if candidates else None,
-        n_disposed=n_written + n_failed,
-        n_processed=n_written,
-    )
     n_batches = (
         (start_index + n_written - 1) // batch_size - start_index // batch_size + 1
         if n_written
@@ -270,12 +254,6 @@ def _run_pipeline_impl(
     }
 
 
-def reset_output(out_dir: str) -> None:
-    """Full reset (reference reset_checkpoint + reset_all)."""
-    if os.path.exists(out_dir):
-        shutil.rmtree(out_dir)
-
-
 def run_pipeline_streaming(
     spark: SparkSession,
     source_dir: str,
@@ -288,20 +266,55 @@ def run_pipeline_streaming(
     sink_task_fault_injector=None,
     reset: bool = False,
 ) -> None:
-    """Single-writer entry point for the streaming twin: same
-    fencing as the batch runner (a second concurrent drain of one
-    ``out_dir`` raises ``CheckpointLeaseError`` up front). Structured
-    Streaming's own checkpoint log does NOT fence two concurrent
-    ``availableNow`` queries on one checkpointLocation — they race the
-    offset log — so the lease closes the same hole the batch
-    watermark store had. See :func:`_run_pipeline_streaming_impl`
-    for the pipeline semantics.
+    """Streaming twin of ``run_pipeline`` — ST1–ST4 composed as ONE
+    Structured Streaming job: file-source micro-batches (ST1 ≡ the
+    reference's gapcontinue pages), then per micro-batch the same
+    :func:`_article_records` path and the same per-record JSON writer
+    as the batch runner, plus a dead-letter sink, inside
+    ``foreachBatch``; offsets live in ``checkpointLocation`` (ST2 —
+    rerunning after new files arrive processes ONLY the delta).
+    ``availableNow`` drains pending input then stops — batch-drain
+    semantics for backfills. Dead letters land under
+    ``out_dir/_dead_letter_stream`` (partition key ``batch_id``).
 
-    ``reset`` drops the offset log + streaming dead-letter history
-    INSIDE the lease (mirroring the batch runner's reset-in-lease in
-    ``_run_pipeline_impl``): a ``--stream --reset`` invocation that
-    loses the lease race fails fast WITHOUT having deleted a live
-    run's offset log first."""
+    Single writer: same fencing as the batch runner (a second
+    concurrent drain of one ``out_dir`` raises ``CheckpointLeaseError``
+    up front). Structured Streaming's own checkpoint log does NOT
+    fence two concurrent ``availableNow`` queries on one
+    checkpointLocation — they race the offset log. ``reset`` drops the
+    offset log + streaming dead-letter history INSIDE the lease, so a
+    ``--stream --reset`` invocation that loses the lease race fails
+    fast WITHOUT having deleted a live run's offset log first.
+
+    Sink naming differs from the batch runner BY DESIGN: the writer's
+    index is the row's ``doc_id`` (``batch_{doc_id//batch_size}/
+    article_{doc_id:06d}.json``) instead of a consecutive counter —
+    a replayed micro-batch (failure between sink write and offset
+    commit) must overwrite the exact same files for the at-least-once
+    + idempotent-sink contract (ST3) to hold; a global counter can't
+    replay deterministically.
+
+    ``metrics_path``: when set, a per-batch progress row (batch_id,
+    input rows, rates, trigger duration — the reference's
+    ``log_progress`` surface, src/logging_manager.py:84-88) is appended
+    to this JSONL metrics table via ``streaming.progress`` for the
+    duration of the run.
+
+    ``enrichment``: see :func:`_article_records`; in streaming form the
+    per-partition QPS budget applies within each micro-batch (the
+    reference's per-chunk pacing,
+    src/enhanced_production_mediawiki_client.py:397-415). With the
+    default deterministic fetcher a replayed batch rewrites identical
+    bytes; an injected real fetcher is last-write-wins under replay —
+    the inherent at-least-once contract for non-deterministic
+    sources.
+
+    ``fault_injector``: test-only crash hook, called with the batch_id
+    AFTER the per-record sink write but BEFORE the dead-letter write /
+    offset commit — raising from it kills the query at the exact
+    mid-batch point the ST3 exactly-once claim must survive (sink
+    output on disk, offset uncommitted → the restart REPLAYS the
+    batch and must overwrite the same files byte-identically)."""
     # lock lives BESIDE the checkpoint dir (out_dir/_stream_runner.lock),
     # not inside it: the offset log stays exactly what Spark wrote, and
     # --reset's rmtree of _stream_checkpoint never races the lease file
@@ -317,237 +330,95 @@ def run_pipeline_streaming(
                 path = os.path.join(out_dir, sub)
                 if os.path.exists(path):
                     shutil.rmtree(path)
-        _run_pipeline_streaming_impl(
-            spark,
-            source_dir,
-            out_dir,
-            max_files_per_trigger=max_files_per_trigger,
-            batch_size=batch_size,
-            metrics_path=metrics_path,
-            enrichment=enrichment,
-            fault_injector=fault_injector,
-            sink_task_fault_injector=sink_task_fault_injector,
+
+        schema = spark.read.parquet(source_dir).schema
+        docs = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(source_dir)
+        )
+        # Mode-distinct dead-letter root: the batch runner owns
+        # out_dir/_dead_letter (partitioned since=<watermark>); the
+        # streaming twin partitions by batch_id, and sharing one root
+        # would make a root parquet read fail on mixed partition
+        # columns — and batch --reset (which legitimately clears ITS
+        # watermark-keyed history) would silently delete the streaming
+        # history too.
+        dlq_dir = os.path.join(out_dir, "_dead_letter_stream")
+        # the executor-side hook kills a task attempt mid-partition; the
+        # retry rewrites the same doc_id-derived paths, so ST3
+        # idempotence must hold under task retries exactly as under
+        # micro-batch replay
+        write_rows = _make_writer(
+            out_dir, batch_size, 0, "doc_id",
+            task_fault_injector=sink_task_fault_injector,
         )
 
-
-def _run_pipeline_streaming_impl(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    max_files_per_trigger: int = 4,
-    batch_size: int = 1000,
-    metrics_path: str | None = None,
-    enrichment: dict | None = None,
-    fault_injector=None,
-    sink_task_fault_injector=None,
-) -> None:
-    """Streaming twin of ``run_pipeline`` — ST1–ST4 composed as ONE
-    Structured Streaming job: file-source micro-batches (ST1 ≡ the
-    reference's gapcontinue pages), validate split with persisted
-    error reasons (ST4), T1 normalize, per-record JSON + dead-letter
-    sinks inside ``foreachBatch``, offsets in ``checkpointLocation``
-    (ST2 — rerunning after new files arrive processes ONLY the delta).
-    Dead letters land under ``out_dir/_dead_letter_stream`` (partition
-    key ``batch_id``) — a root distinct from the batch runner's
-    watermark-keyed ``_dead_letter`` so both modes can share one
-    ``out_dir`` without mixing partition schemas.
-
-    Sink naming differs from the batch runner BY DESIGN: streaming
-    uses doc_id-DERIVED paths (``batch_{doc_id//batch_size}/
-    article_{doc_id:06d}.json``) instead of a consecutive counter —
-    a replayed micro-batch (failure between sink write and offset
-    commit) must overwrite the exact same files for the at-least-once
-    + idempotent-sink contract (ST3) to hold; a global counter can't
-    replay deterministically. ``availableNow`` drains pending input
-    then stops — batch-drain semantics for backfills.
-
-    ``metrics_path``: when set, a per-batch progress row (batch_id,
-    input rows, rates, trigger duration — the reference's
-    ``log_progress`` surface, src/logging_manager.py:84-88) is appended
-    to this JSONL metrics table via ``streaming.progress`` for the
-    duration of the run.
-
-    ``enrichment``: kwargs for ``operators.enrichment.fetch_enrich``,
-    enabling the reference's production loop in its STREAMING form —
-    a stream of article stubs rate-limited-fetched per micro-batch
-    (ST5–ST8 inside ST1's batching), fetched rows gaining
-    ``api_content``/``attempts`` in the JSON output and
-    retry-exhausted fetches dead-lettering alongside validation
-    failures. The per-partition QPS budget applies within each
-    micro-batch (the reference's per-chunk pacing,
-    src/enhanced_production_mediawiki_client.py:397-415). With the
-    default deterministic fetcher a replayed batch rewrites identical
-    bytes; an injected real fetcher is last-write-wins under replay —
-    the inherent at-least-once contract for non-deterministic
-    sources.
-
-    ``fault_injector``: test-only crash hook, called with the batch_id
-    AFTER the per-record sink write but BEFORE the dead-letter write /
-    offset commit — raising from it kills the query at the exact
-    mid-batch point the ST3 exactly-once claim must survive (sink
-    output on disk, offset uncommitted → the restart REPLAYS the
-    batch and must overwrite the same files byte-identically)."""
-    schema = spark.read.parquet(source_dir).schema
-    docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-    valid_pred = is_valid_content("text")
-    title = F.concat(F.lit("Doc "), F.col("doc_id"))
-    # Mode-distinct dead-letter root: the batch runner owns
-    # out_dir/_dead_letter (partitioned since=<watermark>); the
-    # streaming twin partitions by batch_id, and sharing one root would
-    # make a root parquet read fail on mixed partition columns — and
-    # batch --reset (which legitimately clears ITS watermark-keyed
-    # history) would silently delete the streaming history too.
-    dlq_dir = os.path.join(out_dir, "_dead_letter_stream")
-    sink_root = out_dir
-
-    def _write_batch(batch: DataFrame, batch_id: int) -> None:
-        # Two consumers (ok sink + dead-letter sink) → without a cache
-        # each action re-scans the micro-batch from source (visible as
-        # numInputRows = 2× actual in the progress metrics). One-batch
-        # cache bounds memory; 2× read amplification matters at scale.
-        # try/finally: a mid-batch failure (real or injected) must not
-        # leak the cached batch into the long-lived session.
-        batch = batch.cache()
-        try:
-            _write_batch_inner(batch, batch_id)
-        finally:
-            batch.unpersist()
-
-    def _write_batch_inner(batch: DataFrame, batch_id: int) -> None:
-        ok = batch.filter(valid_pred).select(
-            "doc_id",
-            title.alias("title"),
-            build_url(title).alias("url"),
-            F.col("text").alias("content"),
-            F.length("text").cast("bigint").alias("content_length"),
-            "lang",
-            "source",
-        )
-        dlq = batch.filter(~valid_pred).select(
-            "doc_id",
-            "source",
-            F.lit("validation_failed: empty or null content").alias("error"),
-        )
-
-        enriched = None
-        if enrichment is not None:
-            from wiki_data_pipeline_spark.operators.enrichment import (
-                fetch_enrich,
-            )
-
-            # One fetch pass shared by both sinks (the stage is
-            # rate-limited and side-effectful — a real deployment
-            # calls an external API), same discipline as the batch
-            # runner's persist.
-            enriched = fetch_enrich(
-                ok.select("doc_id", "title"), **enrichment
-            ).persist()
-            fetch_ok = enriched.filter(F.col("error").isNull()).select(
-                "doc_id",
-                F.col("content").alias("api_content"),
-                "attempts",
-            )
-            fetch_dlq = enriched.filter(F.col("error").isNotNull()).select(
-                "doc_id",
-                F.lit(None).cast("string").alias("source"),
-                F.concat(F.lit("fetch_failed: "), "error").alias("error"),
-            )
-            ok = ok.join(fetch_ok, "doc_id", "inner")
-            dlq = dlq.unionByName(fetch_dlq)
-
-        bs = batch_size
-        root = sink_root
-
-        def _write_partition(rows):
-            import json
-            import os
-
-            ctx = None
-            if sink_task_fault_injector is not None:
-                from pyspark import TaskContext
-
-                ctx = TaskContext.get()
-            n_done = 0
-            for row in rows:
-                if sink_task_fault_injector is not None:
-                    # executor-side hook: raising kills THIS task
-                    # attempt mid-partition (n_done files already on
-                    # disk); the retry rewrites the same doc_id-derived
-                    # paths, so ST3 idempotence must hold under task
-                    # retries exactly as under micro-batch replay
-                    sink_task_fault_injector(ctx, n_done)
-                d = os.path.join(root, f"batch_{row['doc_id'] // bs:03d}")
-                os.makedirs(d, exist_ok=True)
-                path = os.path.join(d, f"article_{row['doc_id']:06d}.json")
-                tmp = f"{path}.{batch_id}.tmp"
-                with open(tmp, "w", encoding="utf-8") as f:
-                    f.write(
-                        json.dumps(
-                            row.asDict(recursive=True),
-                            ensure_ascii=False,
-                            indent=2,
-                            default=str,
-                        )
-                    )
-                os.replace(tmp, path)  # atomic, replay-idempotent
-                n_done += 1
-            yield
-
-        try:
-            ok.rdd.mapPartitions(_write_partition).count()
-            if fault_injector is not None:
-                # crash window: per-record files written, offset NOT
-                # committed — the ST3 replay-idempotence test point
-                fault_injector(batch_id)
-            # Per-batch overwrite directory: replayed micro-batches
-            # rewrite the same path instead of appending duplicates
-            # (foreachBatch is at-least-once), and the old emptiness
-            # probe (limit(1).count()) was a second scan of the split.
-            dlq.write.mode("overwrite").parquet(
-                os.path.join(dlq_dir, f"batch_id={batch_id}")
-            )
-        finally:
-            if enriched is not None:
-                enriched.unpersist()
-
-    recorder = None
-    if metrics_path is not None:
-        from wiki_data_pipeline_spark.streaming.progress import ProgressRecorder
-
-        recorder = ProgressRecorder(metrics_path=metrics_path)
-        spark.streams.addListener(recorder)
-    try:
-        q = (
-            docs.writeStream.foreachBatch(_write_batch)
-            .option(
-                "checkpointLocation",
-                os.path.join(out_dir, "_stream_checkpoint"),
-            )
-            .queryName("pipeline_streaming")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if recorder is not None:
-            # listener delivery is async — the terminated event lands
-            # AFTER all progress events for this query, so waiting for
-            # it (not just the first row) guarantees the metrics table
-            # is complete even for multi-batch availableNow runs. A
-            # timeout means the tail of the metrics table may be
-            # missing — say so instead of silently truncating.
-            if not recorder.wait_for_terminated(str(q.id), timeout=30.0):
-                import sys
-
-                print(
-                    "warning: streaming listener did not drain within "
-                    f"30s; metrics at {metrics_path} may be incomplete",
-                    file=sys.stderr,
+        def _write_batch(batch: DataFrame, batch_id: int) -> None:
+            # Two consumers (ok sink + dead-letter sink) → without a
+            # cache each action re-scans the micro-batch from source
+            # (visible as numInputRows = 2× actual in the progress
+            # metrics). One-batch cache bounds memory. A mid-batch
+            # failure (real or injected) must not leak the cached batch
+            # or fetch pass into the long-lived session.
+            batch = batch.cache()
+            enriched = None
+            try:
+                ok, dlq, enriched = _article_records(batch, enrichment)
+                ok.rdd.map(lambda r: (r, r["doc_id"])).mapPartitions(
+                    write_rows
+                ).count()
+                if fault_injector is not None:
+                    # crash window: per-record files written, offset NOT
+                    # committed — the ST3 replay-idempotence test point
+                    fault_injector(batch_id)
+                # Per-batch overwrite directory: replayed micro-batches
+                # rewrite the same path instead of appending duplicates
+                # (foreachBatch is at-least-once).
+                dlq.write.mode("overwrite").parquet(
+                    os.path.join(dlq_dir, f"batch_id={batch_id}")
                 )
-    finally:
-        if recorder is not None:
-            spark.streams.removeListener(recorder)
+            finally:
+                if enriched is not None:
+                    enriched.unpersist()
+                batch.unpersist()
+
+        recorder = None
+        if metrics_path is not None:
+            from wiki_data_pipeline_spark.streaming.progress import (
+                ProgressRecorder,
+            )
+
+            recorder = ProgressRecorder(metrics_path=metrics_path)
+            spark.streams.addListener(recorder)
+        try:
+            q = (
+                docs.writeStream.foreachBatch(_write_batch)
+                .option(
+                    "checkpointLocation",
+                    os.path.join(out_dir, "_stream_checkpoint"),
+                )
+                .queryName("pipeline_streaming")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            if recorder is not None:
+                # listener delivery is async — the terminated event
+                # lands AFTER all progress events for this query, so
+                # waiting for it (not just the first row) guarantees the
+                # metrics table is complete even for multi-batch
+                # availableNow runs. A timeout means the tail of the
+                # metrics table may be missing — say so instead of
+                # silently truncating.
+                if not recorder.wait_for_terminated(str(q.id), timeout=30.0):
+                    import sys
+
+                    print(
+                        "warning: streaming listener did not drain within "
+                        f"30s; metrics at {metrics_path} may be incomplete",
+                        file=sys.stderr,
+                    )
+        finally:
+            if recorder is not None:
+                spark.streams.removeListener(recorder)

@@ -10,6 +10,11 @@ job to compute per-partition offsets, then fully parallel writes with
 globally consecutive ids. Deterministic order: sort by the order
 column first (range partitioning keeps the sort distributed).
 
+One partition writer (``_make_writer``) serves both pipeline runners:
+the batch runner feeds it ``zipWithIndex`` indices, the streaming twin
+feeds it each row's ``doc_id`` as the index, so both produce the same
+record bytes, layout, atomic temp-file rename and task fault hook.
+
 Paths are deterministic → re-running after a crash overwrites the same
 files (the reference's at-least-once + idempotent-sink story, ST3).
 Local filesystem here; on a cluster the same writer targets any
@@ -24,17 +29,20 @@ FILE_PATTERN = "article_{index:06d}.json"
 DIRECTORY_PATTERN = "batch_{batch_num:03d}"
 
 
-def write_per_record_json(
+def write_per_record_json_with_watermark(
     df: DataFrame,
     out_dir: str,
     order_col: str,
     batch_size: int = 1000,
-    indent: int = 2,
     start_index: int = 0,
     file_pattern: str = FILE_PATTERN,
     directory_pattern: str = DIRECTORY_PATTERN,
-) -> int:
-    """Write each row as a pretty JSON file; returns rows written.
+    task_fault_injector=None,
+) -> tuple[int, int | None]:
+    """Write each row as a pretty JSON file; returns ``(rows_written,
+    max(order_col))`` from the SAME write job — the caller's watermark
+    commit then needs no second scan of the input (the per-partition
+    writer already sees every row, so tracking the max is free).
 
     ``start_index`` continues the global numbering across resumed runs
     (reference ``start_index + i``, src/azure_manager.py:66-67 +
@@ -42,28 +50,7 @@ def write_per_record_json(
     article_000000 and silently overwrites the previous run's files.
     ``file_pattern``/``directory_pattern`` are the reference naming
     knobs (config.yaml ``naming`` section): ``{index}`` is the global
-    record index, ``{batch_num}`` the batch directory number."""
-    return write_per_record_json_with_watermark(
-        df, out_dir, order_col, batch_size, indent, start_index,
-        file_pattern, directory_pattern,
-    )[0]
-
-
-def write_per_record_json_with_watermark(
-    df: DataFrame,
-    out_dir: str,
-    order_col: str,
-    batch_size: int = 1000,
-    indent: int = 2,
-    start_index: int = 0,
-    file_pattern: str = FILE_PATTERN,
-    directory_pattern: str = DIRECTORY_PATTERN,
-    task_fault_injector=None,
-) -> tuple[int, int | None]:
-    """Like ``write_per_record_json`` but returns ``(rows_written,
-    max(order_col))`` from the SAME write job — the caller's watermark
-    commit then needs no second scan of the input (the per-partition
-    writer already sees every row, so tracking the max is free).
+    record index, ``{batch_num}`` the batch directory number.
 
     ``task_fault_injector``: test-only executor-side hook, called as
     ``injector(task_context, rows_written_so_far)`` before each file
@@ -81,7 +68,7 @@ def write_per_record_json_with_watermark(
     )
     parts = ordered.rdd.zipWithIndex().mapPartitions(
         _make_writer(
-            out_dir, batch_size, indent, start_index, order_col,
+            out_dir, batch_size, start_index, order_col,
             file_pattern, directory_pattern, task_fault_injector,
         )
     ).collect()
@@ -93,17 +80,17 @@ def write_per_record_json_with_watermark(
 def _make_writer(
     out_dir: str,
     batch_size: int,
-    indent: int,
-    start_index: int = 0,
-    order_col: str | None = None,
+    start_index: int,
+    order_col: str,
     file_pattern: str = FILE_PATTERN,
     directory_pattern: str = DIRECTORY_PATTERN,
     task_fault_injector=None,
 ):
-    """Build the partition writer as a self-contained closure
-    (cloudpickle by value — workers can't import this package).
-    Yields one ``(count, max_order_value)`` pair per partition so the
-    caller gets its checkpoint watermark from the write job itself."""
+    """Build the partition writer over ``(row, index)`` pairs as a
+    self-contained closure (cloudpickle by value — workers can't
+    import this package). Yields one ``(count, max_order_value)`` pair
+    per partition so the caller gets its checkpoint watermark from the
+    write job itself."""
 
     def _write(rows):
         import json
@@ -127,7 +114,7 @@ def _make_writer(
             payload = json.dumps(
                 row.asDict(recursive=True),
                 ensure_ascii=False,
-                indent=indent,
+                indent=2,
                 default=str,
             )
             tmp = path + ".tmp"
@@ -135,10 +122,9 @@ def _make_writer(
                 f.write(payload)
             os.replace(tmp, path)  # atomic, idempotent overwrite (ST3)
             count += 1
-            if order_col is not None:
-                v = row[order_col]
-                if v is not None and (max_seq is None or v > max_seq):
-                    max_seq = v
+            v = row[order_col]
+            if v is not None and (max_seq is None or v > max_seq):
+                max_seq = v
         yield count, max_seq
 
     return _write

@@ -115,18 +115,25 @@ def run_dead_letter_split(
     def _split(batch: DataFrame, batch_id: int) -> None:
         # Two sink actions on one micro-batch: cache so the source is
         # scanned once, not once per action (2× read amplification
-        # otherwise — visible as doubled numInputRows in progress).
+        # otherwise — visible as doubled numInputRows in progress). A
+        # failed write must not leak the cache into the session.
         batch = batch.cache()
-        ok = batch.filter(F.col("value") >= min_value)
-        dlq = batch.filter(F.col("value") < min_value).withColumn(
-            "error",
-            F.concat(F.lit("value_below_threshold: "), F.col("value").cast("string")),
-        )
-        ok.write.mode("overwrite").parquet(os.path.join(ok_dir, f"batch_id={batch_id}"))
-        dlq.write.mode("overwrite").parquet(
-            os.path.join(dlq_dir, f"batch_id={batch_id}")
-        )
-        batch.unpersist()
+        try:
+            ok = batch.filter(F.col("value") >= min_value)
+            dlq = batch.filter(F.col("value") < min_value).withColumn(
+                "error",
+                F.concat(
+                    F.lit("value_below_threshold: "), F.col("value").cast("string")
+                ),
+            )
+            ok.write.mode("overwrite").parquet(
+                os.path.join(ok_dir, f"batch_id={batch_id}")
+            )
+            dlq.write.mode("overwrite").parquet(
+                os.path.join(dlq_dir, f"batch_id={batch_id}")
+            )
+        finally:
+            batch.unpersist()
 
     q = (
         events.writeStream.foreachBatch(_split)
@@ -542,6 +549,8 @@ def run_streaming_incremental_dedup(
     )
 
     def _probe(batch: DataFrame, batch_id: int) -> None:
+        from pyspark.errors.exceptions.captured import AnalysisException
+
         sess = batch.sparkSession
         # Cache the computed signatures: both sink actions (pairs +
         # store append) consume them, and without a cache each action
@@ -552,39 +561,45 @@ def run_streaming_incremental_dedup(
             .select("band_idx", "sig", "doc_id")
             .cache()
         )
-        from pyspark.errors.exceptions.captured import AnalysisException
-
         try:
-            # Retry-idempotence: a foreachBatch retry may run AFTER this
-            # batch's own store_dir/batch=N write landed but before the
-            # checkpoint committed; restricting the probe to strictly
-            # prior batches keeps the re-run's view identical to the
-            # first attempt's (no spurious self/within-batch pairs).
-            store = (
-                sess.read.parquet(store_dir)
-                .filter(F.col("batch") < F.lit(batch_id))
-                .select(
-                    "band_idx", "sig", F.col("doc_id").alias("existing_doc")
+            try:
+                # Retry-idempotence: a foreachBatch retry may run AFTER
+                # this batch's own store_dir/batch=N write landed but
+                # before the checkpoint committed; restricting the probe
+                # to strictly prior batches keeps the re-run's view
+                # identical to the first attempt's (no spurious
+                # self/within-batch pairs).
+                store = (
+                    sess.read.parquet(store_dir)
+                    .filter(F.col("batch") < F.lit(batch_id))
+                    .select(
+                        "band_idx", "sig", F.col("doc_id").alias("existing_doc")
+                    )
                 )
-            )
-            pairs = (
-                bands.join(store, on=["band_idx", "sig"])
-                .select(
-                    F.col("doc_id").alias("new_doc"),
-                    "existing_doc",
+                pairs = (
+                    bands.join(store, on=["band_idx", "sig"])
+                    .select(
+                        F.col("doc_id").alias("new_doc"),
+                        "existing_doc",
+                    )
+                    .distinct()
                 )
-                .distinct()
+            except AnalysisException:  # first batch: no store yet
+                pairs = (
+                    bands.select(
+                        F.col("doc_id").alias("new_doc"),
+                        F.col("doc_id").alias("existing_doc"),
+                    ).limit(0)
+                )
+            pairs.write.mode("overwrite").parquet(
+                f"{pairs_dir}/batch={batch_id}"
             )
-        except AnalysisException:  # first batch: no store yet
-            pairs = (
-                bands.select(
-                    F.col("doc_id").alias("new_doc"),
-                    F.col("doc_id").alias("existing_doc"),
-                ).limit(0)
+            bands.write.mode("overwrite").parquet(
+                f"{store_dir}/batch={batch_id}"
             )
-        pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch={batch_id}")
-        bands.write.mode("overwrite").parquet(f"{store_dir}/batch={batch_id}")
-        bands.unpersist()
+        finally:
+            # a failed write must not leak the cache into the session
+            bands.unpersist()
 
     q = (
         stream.writeStream.foreachBatch(_probe)
@@ -717,20 +732,21 @@ def run_streaming_cms_maintenance(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         # 3 hash-row branches union over the same micro-batch: cache so
         # the source is scanned once, not once per union branch.
+        # A failed write must not leak the cache into the session.
         batch_df = batch_df.cache()
-        partial = None
-        for r in range(3):
-            b = batch_df.groupBy(
-                lit(r).alias("row_id"),
-                _bucket(F.col("user_id"), r).alias("bucket"),
-            ).agg(count("*").alias("cnt"))
-            partial = b if partial is None else partial.unionAll(b)
-        (
+        try:
+            partial = None
+            for r in range(3):
+                b = batch_df.groupBy(
+                    lit(r).alias("row_id"),
+                    _bucket(F.col("user_id"), r).alias("bucket"),
+                ).agg(count("*").alias("cnt"))
+                partial = b if partial is None else partial.unionAll(b)
             partial.write.mode("overwrite").parquet(
                 os.path.join(store_dir, f"batch={batch_id}")
             )
-        )
-        batch_df.unpersist()
+        finally:
+            batch_df.unpersist()
 
     q = (
         events.writeStream.foreachBatch(_sink)
