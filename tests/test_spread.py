@@ -7,10 +7,14 @@ exchange on any pre-split (i.e. production) scan. These tests pin the
 plan invariant from both sides: a pre-split input passes through
 IDENTICALLY (no exchange inserted, same object), while the fixture's
 single-split parquet scans still get the fan-out the fixture needs.
+The decision is taken from the live plan on every call, so a table's
+in-place layout rewrite or a mid-session change to a split conf must
+change it for the next frame read from that table.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from wiki_data_pipeline_spark.io import read_table
@@ -109,71 +113,38 @@ def test_spread_gate_adds_no_exchange_to_presplit_plan(spark):
         assert "RoundRobinPartitioning" in _physical(pipeline(single))
 
 
-def test_spread_memoizes_equivalent_plans(spark):
-    """r14: the probe decision is memoized on (exprId-normalized
-    analyzed plan, sizeInBytes, target, maxPartitionBytes) — the
-    measured fix for the r13 drift (~115 ms of py4j probing per call
-    on every query construction). Two independently-built but
-    equivalent frames must share ONE cache entry and the SAME
-    decision; a different target must key separately."""
-    from wiki_data_pipeline_spark.operators import spread as mod
-
-    mod._clear_decision_cache()
+@pytest.mark.parametrize(
+    "conf, value",
+    [
+        ("spark.sql.files.maxPartitionNum", "2"),
+        ("spark.sql.leafNodeDefaultParallelism", "1"),
+    ],
+)
+def test_spread_decision_follows_split_confs(spark, tmp_path, conf, value):
+    """A mid-session change to a conf that feeds the scan's split math
+    must change the decision for the same table: a multi-file scan
+    that passed through before the conf cut its splits below target
+    is repartitioned after it."""
     target = spark.sparkContext.defaultParallelism
-
-    def fresh():
-        return read_table(spark, SF_DIR, "documents").select(
-            "doc_id", "text"
-        )
-
-    out1 = spread(fresh())
-    assert len(mod._DECISIONS) == 1
-    out2 = spread(fresh())
-    assert len(mod._DECISIONS) == 1  # hit, not a second probe
-    # same decision both times (both repartition or both pass)
-    assert ("Repartition" in out1._jdf.queryExecution().analyzed().treeString()) == (
-        "Repartition" in out2._jdf.queryExecution().analyzed().treeString()
-    )
-    spread(fresh(), target=target + 7)  # different target -> new key
-    assert len(mod._DECISIONS) == 2
-
-
-def test_spread_memo_keys_on_packing_confs(spark):
-    """r15 (ADVICE): the split count is FilePartition packing math, so
-    every packing input keys separately — a mid-session change to
-    openCostInBytes (or maxPartitionBytes) must MISS the memo, not
-    serve the decision computed under the old conf."""
-    from wiki_data_pipeline_spark.operators import spread as mod
-
-    mod._clear_decision_cache()
-    docs = read_table(spark, SF_DIR, "documents")
-    old = spark.conf.get("spark.sql.files.openCostInBytes", None)
+    path = str(tmp_path / "t.parquet")
+    spark.range(0, 8_000).repartition(max(target, 8)).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert spread(df) is df
     try:
-        spread(docs)
-        assert len(mod._DECISIONS) == 1
-        spark.conf.set("spark.sql.files.openCostInBytes", str(64 << 20))
-        spread(read_table(spark, SF_DIR, "documents"))
-        assert len(mod._DECISIONS) == 2, (
-            "openCostInBytes change reused the stale decision key"
-        )
+        spark.conf.set(conf, value)
+        cut = spark.read.parquet(path)
+        out = spread(cut)
+        assert out is not cut, f"{conf}={value} kept the pre-conf decision"
+        assert out.rdd.getNumPartitions() == target
     finally:
-        if old is None:
-            spark.conf.unset("spark.sql.files.openCostInBytes")
-        else:
-            spark.conf.set("spark.sql.files.openCostInBytes", old)
-        mod._clear_decision_cache()
+        spark.conf.unset(conf)
 
 
 def test_spread_decision_flips_after_layout_rewrite(spark, tmp_path):
-    """r15 (verdict item 4): a table rewritten in-process into a
-    different number of files — same path, ~same bytes, IDENTICAL plan
-    text — must not be served the pre-rewrite decision. File count is
-    deliberately not in the memo key (recovering it per call would
-    re-introduce the probe cost the memo exists to remove), so the
-    rewrite path calls note_layout_rewrite(); this pins both the flip
-    and the hook's contract."""
-    from wiki_data_pipeline_spark.operators import spread as mod
-
+    """A table rewritten in-process into a different number of files —
+    same path, ~same bytes, IDENTICAL plan text — gets the decision of
+    its new layout: the single-file original repartitions, the
+    many-file rewrite passes through."""
     target = spark.sparkContext.defaultParallelism
     path = str(tmp_path / "t.parquet")
     base = spark.range(0, 50_000).select(
@@ -181,28 +152,17 @@ def test_spread_decision_flips_after_layout_rewrite(spark, tmp_path):
     )
     base.coalesce(1).write.mode("overwrite").parquet(path)
 
-    mod._clear_decision_cache()
     single = spark.read.parquet(path)
     out1 = spread(single)
     assert out1 is not single, "single-file scan should repartition"
-    stale_key = next(iter(mod._DECISIONS))
 
     # rewrite IN PLACE to many files (same rows, plan text identical
-    # modulo exprIds; byte size shifts only by per-file footer
-    # overhead — the hazard is precisely that the key may not change)
+    # modulo exprIds; byte size shifts only by per-file footer overhead)
     base.repartition(max(target, 32)).write.mode("overwrite").parquet(path)
-    mod.note_layout_rewrite()
-    assert not mod._DECISIONS, "rewrite hook must drop ALL decisions"
 
     multi = spark.read.parquet(path)
     out2 = spread(multi)
     assert out2 is multi, (
-        "post-rewrite multi-file scan must pass through — a stale "
-        "memoized decision would have repartitioned it"
+        "post-rewrite multi-file scan must pass through — the "
+        "pre-rewrite decision would have repartitioned it"
     )
-    # the recomputed decision must not have landed under the stale key
-    # with the old value (guards against a future key regression IF
-    # the sizes happen to collide)
-    if stale_key in mod._DECISIONS:
-        assert mod._DECISIONS[stale_key] is True
-    mod._clear_decision_cache()

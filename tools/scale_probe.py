@@ -327,16 +327,6 @@ def build_scaled(spark, workdir: str, mult: int) -> str:
             os.unlink(link)
         os.symlink(os.path.join(SRC, f"{dim}.parquet"), link)
     open(done, "w").close()
-    # In-process layout rewrite under paths this session may already
-    # have probed: spread()'s decision memo keys on plan text + size +
-    # packing confs but NOT file count (r15, verdict item 4 — see
-    # operators/spread.py), so every replica (re)write must invalidate
-    # it explicitly.
-    from wiki_data_pipeline_spark.operators.spread import (
-        note_layout_rewrite,
-    )
-
-    note_layout_rewrite()
     return out
 
 

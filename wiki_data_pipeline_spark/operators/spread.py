@@ -20,28 +20,10 @@ measured extra job); otherwise the frame passes through iff its scan
 already has target parallelism, and is repartitioned only when the
 source genuinely lacks it (the single-file fixture tables).
 
-What changed in r14 is the COST of deciding (verdict item 2: spread's
-probes were the measured r13 drift of the pin/iterative query
-family — ~115 ms per call at steady state). Two fixes:
-
-1. **Decision memo.** The probe's inputs are pure functions of
-   (logical plan modulo expression IDs, input size, target,
-   maxPartitionBytes): the same narrow chain over the same files
-   always yields the same split count. The decision is cached on
-   exactly that key — the exprId-normalized ANALYZED plan string
-   (analysis already ran at DataFrame creation, so this triggers no
-   optimizer/planner work) plus the analyzed plan's sizeInBytes
-   (from the already-listed file index; also what keeps e.g. the
-   sf0.1 and x10 copies of one query from colliding in the memo —
-   identical plan text, different bytes). Repeat constructions of a
-   query's frames (bench's warmup + 3 trials, parity's twin builds)
-   hit the memo at ~5-10 ms instead of re-probing.
-2. **Single-round-trip probes on miss.** The exchange check reads
-   ONE ``treeString()`` and parses node names Python-side; the old
-   recursive py4j walk paid one round trip per plan node (~55 ms on
-   a plain scan chain). The partition probe is unchanged
-   (``df.rdd.getNumPartitions`` — partition math, zero jobs on an
-   exchange-free plan).
+The decision is re-derived from the live plan on every call, so it
+always reflects the current file layout and session conf; a call
+costs one physical planning of the input frame plus partition math,
+and runs zero jobs.
 
 The reference never faces this choice because it pulls pre-sized
 chunks from an API (reference:
@@ -52,38 +34,7 @@ manufacturing parallelism when the source genuinely lacks it.
 
 from __future__ import annotations
 
-import re
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame
-
-# exprId / plan-id markers — the only per-construction noise in an
-# analyzed treeString ("text#1234" vs "text#7"); stripping them makes
-# the string a stable key across re-builds of the same query.
-_ID_RE = re.compile(r"#\d+")
-
-# (normalized analyzed plan, sizeInBytes, target, maxPartitionBytes,
-# openCostInBytes, minPartitionNum conf, defaultParallelism)
-# -> True = pass through, False = repartition(target). Bounded LRU —
-# a long-lived session building many distinct plans must not grow a
-# driver-side leak.
-#
-# Key completeness (r15, verdict item 4 + ADVICE): the memoized
-# decision is a pure function of the scan's SPLIT COUNT vs target,
-# and split count is FilePartition packing math over (file layout,
-# maxPartitionBytes, openCostInBytes, minPartitionNum/parallelism).
-# The confs are cheap session-local reads, so they live IN the key.
-# The file LAYOUT is not: recovering file count per call would mean
-# a py4j plan walk (the exact per-call cost the r14 memo removed) or
-# transferring the file list (millions of paths at 100 TB). Instead,
-# every in-process path that REWRITES a table's layout under an
-# unchanged path must call :func:`note_layout_rewrite` — a same-size
-# different-file-count rewrite is otherwise invisible to the key
-# (plan text and sizeInBytes both unchanged) and would serve a stale
-# decision. tools/scale_probe.build_scaled (the replica writer) is
-# wired; tests/test_spread.py pins the contract.
-_DECISIONS: OrderedDict[tuple, bool] = OrderedDict()
-_CACHE_CAP = 256
 
 
 def _plan_has_exchange(tree: str) -> bool:
@@ -99,65 +50,18 @@ def _plan_has_exchange(tree: str) -> bool:
     return False
 
 
-def _clear_decision_cache() -> None:
-    """Test hook: drop memoized decisions."""
-    _DECISIONS.clear()
-
-
-def note_layout_rewrite() -> None:
-    """Invalidate memoized decisions after an IN-PROCESS table-layout
-    rewrite (same path, different file count). Split count depends on
-    the file layout, which is deliberately NOT in the memo key (see
-    the key-completeness note above) — so whoever rewrites a table's
-    files under a path this session may already have probed must call
-    this. A rewrite that lands byte-identical in size with unchanged
-    plan text would otherwise return the pre-rewrite decision."""
-    _DECISIONS.clear()
-
-
 def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     """Fan ``df`` out to ``target`` partitions (default: the
     cluster's ``defaultParallelism``) iff it is an exchange-free
     frame that currently has fewer — otherwise return ``df``
-    unchanged, inserting NO exchange (``spread(df) is df``).
-
-    Decision semantics identical to r13; the probe cost is memoized —
-    see the module docstring."""
-    spark = df.sparkSession
-    default_par = spark.sparkContext.defaultParallelism
-    tgt = target or default_par
+    unchanged, inserting NO exchange (``spread(df) is df``)."""
+    tgt = target or df.sparkSession.sparkContext.defaultParallelism
     qe = df._jdf.queryExecution()
-    analyzed = qe.analyzed()
-    key = (
-        _ID_RE.sub("", analyzed.treeString()),
-        int(analyzed.stats().sizeInBytes()),
-        tgt,
-        spark.conf.get("spark.sql.files.maxPartitionBytes", None),
-        # the rest of FilePartition's packing inputs (r15): open-cost
-        # padding, the explicit min-split floor, and the parallelism
-        # floor applied when no explicit minimum is set — any of these
-        # changing mid-session changes the split count under an
-        # unchanged plan, so each keys separately
-        spark.conf.get("spark.sql.files.openCostInBytes", None),
-        spark.conf.get("spark.sql.files.minPartitionNum", None),
-        default_par,
-    )
-    passthrough = _DECISIONS.get(key)
-    if passthrough is not None:
-        # refresh recency so eviction is true LRU, not FIFO — the
-        # hottest keys (every query's frames, rebuilt per bench trial)
-        # must outlive one-off probe keys once the cache fills
-        _DECISIONS.move_to_end(key)
-    if passthrough is None:
-        if _plan_has_exchange(qe.executedPlan().treeString()):
-            # exchange-governed frame: never probe (df.rdd would
-            # materialize AQE query stages), never repartition
-            passthrough = True
-        else:
-            # pure partition math over the scan splits — zero jobs
-            passthrough = df.rdd.getNumPartitions() >= tgt
-        _DECISIONS[key] = passthrough
-        _DECISIONS.move_to_end(key)
-        while len(_DECISIONS) > _CACHE_CAP:
-            _DECISIONS.popitem(last=False)
+    if _plan_has_exchange(qe.executedPlan().treeString()):
+        # exchange-governed frame: never probe (df.rdd would
+        # materialize AQE query stages), never repartition
+        passthrough = True
+    else:
+        # pure partition math over the scan splits — zero jobs
+        passthrough = df.rdd.getNumPartitions() >= tgt
     return df if passthrough else df.repartition(tgt)
