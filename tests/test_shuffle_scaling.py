@@ -20,21 +20,25 @@ fact-side star aggregation (bounded group keys -> near-constant
 shuffle, the map-side-combine claim), and session windowing (shuffle
 on user, growth tracks events).
 
-Needs its own JVM (spark.ui.enabled is a static conf, off in the
-shared session) -> subprocess child, the tests/_task_retry_child.py
-pattern.
+Runs in the shared test session with its shuffle partition count; the
+bytes come from the driver's status store, which Spark keeps with the
+UI off (tools/shuffle_audit.py's _run_measured).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
 import sys
 
 import pytest
 
-HERE = os.path.dirname(os.path.abspath(__file__))
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(HERE, "tools"))
+
+from shuffle_audit import _run_measured  # noqa: E402
+
+from wiki_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
+
 SMALL = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 BIG = "/root/testdata/sf0.01"
 
@@ -48,16 +52,15 @@ GROWTH_CEILING = 20.0  # 10x rows; 2x margin on linear
 
 
 @pytest.fixture(scope="module")
-def shuffle_bytes() -> dict[str, dict[str, int]]:
-    proc = subprocess.run(
-        [sys.executable, os.path.join(HERE, "_shuffle_child.py"),
-         SMALL, BIG, *SAMPLE],
-        capture_output=True, text=True, timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
-    assert line, proc.stdout[-3000:]
-    return json.loads(line[-1][len("RESULT "):])
+def shuffle_bytes(spark) -> dict[str, dict[str, int]]:
+    queries = all_queries()
+    return {
+        name: {
+            "small": _run_measured(spark, queries[name], SMALL)[0],
+            "big": _run_measured(spark, queries[name], BIG)[0],
+        }
+        for name in SAMPLE
+    }
 
 
 @pytest.mark.parametrize("name", SAMPLE)
@@ -80,6 +83,6 @@ def test_mechanism_measures_nonzero_shuffles(shuffle_bytes):
     grouped = ["dedup_exact", "dedup_minhash_lsh"]
     for name in grouped:
         assert shuffle_bytes[name]["big"] > 0, (
-            f"{name} reported zero shuffle bytes at sf0.01 — the REST "
-            f"stage-metrics diff is not measuring"
+            f"{name} reported zero shuffle bytes at sf0.01 — the "
+            f"status-store stage read is not measuring"
         )

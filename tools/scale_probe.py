@@ -8,7 +8,7 @@ runs the probed queries at each scale, and prints one JSON line per
 scale plus a growth summary. `--deep` probes the steepest growers at
 30x; `--heap <size> [--cpus N]` runs the constrained-heap degradation
 probe instead (5 heaviest queries at 10x under a small driver heap,
-spill metrics from the UI REST API — see HEAP_PROBED).
+spill metrics from the driver's status store — see HEAP_PROBED).
 
 Replica construction matters: naive replication would make every doc a
 10-way near-duplicate, inflating candidate pairs quadratically and
@@ -81,10 +81,11 @@ SCALES_DEEP = [1, 30]
 # 1x/3x/10x/30x linearity claims were proven on a roomy heap with zero
 # spill; this mode proves graceful DEGRADATION — the 5 heaviest
 # queries at 10x data under a deliberately small driver heap and few
-# cores (local[8] by default), recording per-query spill deltas (from
-# the UI REST API) and wall time. The pass criterion is "spills and
-# finishes", not "fast": an OOM here is a real scale finding (memory
-# footprint not bounded per-partition), spill is the designed behavior.
+# cores (local[8] by default), recording the spill of each query's own
+# stages (from the driver's status store, tools/stage_metrics.py) and
+# wall time. The pass criterion is "spills and finishes", not "fast":
+# an OOM here is a real scale finding (memory footprint not bounded
+# per-partition), spill is the designed behavior.
 HEAP_PROBED = [
     "dedup_minhash_verified",
     "dedup_minhash_calibration",
@@ -99,44 +100,22 @@ HEAP_PROBED = [
 ]
 
 
-def _spill_totals(spark) -> tuple[int, int]:
-    """Cumulative (memoryBytesSpilled, diskBytesSpilled) across all
-    completed stages, via the UI REST API (the only spill surface
-    PySpark exposes without a JVM listener)."""
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            stages = json.load(r)
-    except Exception:
-        return (0, 0)
-    return (
-        sum(s.get("memoryBytesSpilled", 0) for s in stages),
-        sum(s.get("diskBytesSpilled", 0) for s in stages),
-    )
-
-
 def run_heap_probe(workdir: str, heap: str, cpus: str) -> None:
     # env must land before the JVM starts — get_spark reads both
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = heap
     os.environ["SPARK_GRAFT_CPUS"] = cpus
+    from stage_metrics import snapshot, stages_since
+
     from wiki_data_pipeline_spark.plans.registry import all_queries
     from wiki_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(
-        "scale-probe-heap", extra_conf={"spark.ui.enabled": "true"}
-    )
+    spark = get_spark("scale-probe-heap")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
     sf_dir = build_scaled(spark, workdir, 10)
     results = []
     for name in HEAP_PROBED:
-        m0, d0 = _spill_totals(spark)
+        snap = snapshot(spark)
         t0 = time.perf_counter()
         try:
             queries[name](spark, sf_dir).write.format("noop").mode(
@@ -146,15 +125,19 @@ def run_heap_probe(workdir: str, heap: str, cpus: str) -> None:
         except Exception as e:  # OOM lands here as a Py4J error
             status = f"failed: {type(e).__name__}: {str(e)[:200]}"
         wall = round(time.perf_counter() - t0, 2)
-        m1, d1 = _spill_totals(spark)
+        new = stages_since(spark, snap)
         row = {
             "query": name,
             "heap": heap,
             "cpus": int(cpus),
             "scale": 10,
             "wall_sec": wall,
-            "memory_spilled_mb": round((m1 - m0) / 1e6, 1),
-            "disk_spilled_mb": round((d1 - d0) / 1e6, 1),
+            "memory_spilled_mb": round(
+                sum(s.memory_spilled for s in new) / 1e6, 1
+            ),
+            "disk_spilled_mb": round(
+                sum(s.disk_spilled for s in new) / 1e6, 1
+            ),
             "status": status,
         }
         results.append(row)

@@ -10,9 +10,10 @@ through it). At 100 TB the shuffle IS the bottleneck, so this tool
 measures it directly:
 
 For every registered query, run once at sf0.01 and once at sf0.1 (10x
-the rows) in one session and attribute shuffle-write / input bytes per
-query by diffing the UI REST completed-stage totals around each
-execution (queries run sequentially, so the delta is the query's).
+the rows) in one session and attribute shuffle-write bytes per query
+by reading the stages each execution completed from the driver's
+status store (tools/stage_metrics.py; queries run sequentially, so
+every stage after the snapshot is the query's).
 Report, per query:
 
 - shuffle_growth: shuffle bytes at sf0.1 / bytes at sf0.01 — the
@@ -46,42 +47,20 @@ import os
 import re
 import sys
 import time
-import urllib.request
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
+
+from stage_metrics import snapshot, stages_since  # noqa: E402
 
 GROWTH_FLAG = 20.0  # 10x data; 2x margin on linear
 ABS_FLOOR_BYTES = 10 * 1024 * 1024  # ignore sub-10MB shuffles at sf0.1
 
 
-def _stage_bytes(spark) -> dict[int, tuple[int, int]]:
-    """stageId -> (shuffleWriteBytes, inputBytes) over completed stages."""
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete",
-            timeout=15,
-        ) as r:
-            stages = json.load(r)
-    except Exception:
-        return {}
-    out: dict[int, tuple[int, int]] = {}
-    for s in stages:
-        sid = s["stageId"]
-        w = int(s.get("shuffleWriteBytes", 0))
-        i = int(s.get("inputBytes", 0))
-        # multiple attempts: keep the max-bytes attempt
-        if sid not in out or w + i > sum(out[sid]):
-            out[sid] = (w, i)
-    return out
-
-
 def _scan_bytes(df) -> int:
     """On-disk bytes of the parquet files the executed plan scans.
 
-    The stage-level `inputBytes` REST metric systematically undercounts
+    The stage-level `inputBytes` metric systematically undercounts
     for sub-second local tasks (bytes-read is polled every N records,
     so a task that finishes within one poll interval reports ~0), so
     the amplification denominator is taken from the filesystem instead:
@@ -118,15 +97,13 @@ def _run_measured(spark, fn, sf_dir: str) -> tuple[int, int, float]:
     # shuffles — inside fn() via per-round pins and driver scalars;
     # snapshotting after fn() attributed 0 bytes to exactly the
     # queries whose shuffle growth most needs watching.
-    before = _stage_bytes(spark)
+    snap = snapshot(spark)
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    after = _stage_bytes(spark)
-    new = {sid: v for sid, v in after.items() if sid not in before}
     return (
-        sum(w for w, _ in new.values()),
+        sum(s.shuffle_write_bytes for s in stages_since(spark, snap)),
         _scan_bytes(df),
         wall,
     )
@@ -145,21 +122,8 @@ def main() -> int:
     from wiki_data_pipeline_spark.plans.registry import all_queries
     from wiki_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(
-        "shuffle-audit",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            # full-registry runs create thousands of stages; keep them
-            # all resident so the before/after REST diffs never lose a
-            # stage of the query being measured
-            "spark.ui.retainedStages": "50000",
-            "spark.ui.retainedJobs": "50000",
-        },
-    )
+    spark = get_spark("shuffle-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    if not spark.sparkContext.uiWebUrl:
-        print("Spark UI unavailable — cannot read stage metrics")
-        return 2
     queries = all_queries()
 
     rows: dict[str, dict] = {}

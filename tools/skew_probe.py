@@ -1,7 +1,8 @@
 """Skew wall-clock probe (r9 verdict item 4): measure the hot-key
 join three ways on a REAL skewed corpus — one key owning 30% of the
-fact rows — and report wall time plus MAX TASK RUNTIME (UI REST
-taskSummary) so the per-task imbalance is visible, not inferred:
+fact rows — and report wall time plus MAX TASK RUNTIME (the driver
+status store's taskSummary, tools/stage_metrics.py) so the per-task
+imbalance is visible, not inferred:
 
   plain   — shuffle join, AQE skew handling OFF (what a naive plan
             does at 100 TB when the dim outgrows broadcast)
@@ -31,48 +32,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+from stage_metrics import snapshot, stages_since  # noqa: E402
 
 HOT_SHARE = 0.30
 N_DIM_KEYS = 200_000
 TARGET_ROWS = 20_000  # rows per (key, salt) slice the plan aims for
 N_SALTS_UNIFORM = 32
-
-
-def _completed_stage_ids(spark) -> set[int]:
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            return {s["stageId"] for s in json.load(r)}
-    except Exception:
-        return set()
-
-
-def _max_task_runtime_ms(spark, new_stages: set[int]) -> float:
-    """Max executorRunTime over all tasks of the given stages (the
-    dominating task of the dominating stage)."""
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    worst = 0.0
-    for sid in new_stages:
-        try:
-            with urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}/stages/{sid}/0/"
-                "taskSummary?quantiles=1.0",
-                timeout=10,
-            ) as r:
-                summ = json.load(r)
-            worst = max(worst, float(summ["executorRunTime"][0]))
-        except Exception:
-            continue
-    return worst
 
 
 def main() -> None:
@@ -87,9 +52,7 @@ def main() -> None:
     )
     from wiki_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(
-        "skew-probe", extra_conf={"spark.ui.enabled": "true"}
-    )
+    spark = get_spark("skew-probe")
     spark.sparkContext.setLogLevel("ERROR")
     n_hot = int(n_rows * HOT_SHARE)
     fact = (
@@ -155,12 +118,15 @@ def main() -> None:
         for name, v in variants.items():
             spark.conf.set("spark.sql.adaptive.skewJoin.enabled", v["skew"])
             agg_out(v["fn"]())  # warmup (codegen; also primes checkpts)
-            before = _completed_stage_ids(spark)
+            snap = snapshot(spark)
             t0 = time.perf_counter()
             agg_out(v["fn"]())
             wall = round(time.perf_counter() - t0, 2)
-            new = _completed_stage_ids(spark) - before
-            mx = _max_task_runtime_ms(spark, new)
+            # the dominating task of the dominating stage
+            mx = max(
+                s.max_task_ms
+                for s in stages_since(spark, snap, max_task=True)
+            )
             results[name] = {
                 "wall_sec": wall,
                 "max_task_runtime_ms": round(mx, 0),
