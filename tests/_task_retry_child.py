@@ -11,8 +11,8 @@ retry (ST5, src/enhanced_production_mediawiki_client.py) maps to Spark
 TASK retries for the sink stage, and our per-record JSON sinks must be
 exactly-once under them. The injector kills every FIRST task attempt
 mid-partition (2 files already on disk), so Spark reruns the task;
-because file paths are deterministic (zipWithIndex indices over the
-materialized shuffle output for batch, doc_id-derived paths for
+because file paths are deterministic (indices from the range shuffle
+the retried task re-reads for batch, doc_id-derived paths for
 streaming), the retry overwrites the same files and the final tree
 must be byte-identical to a never-faulted control run — and the
 per-partition (count, max) receipts must come only from the attempt

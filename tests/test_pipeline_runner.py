@@ -1029,3 +1029,146 @@ def test_pipeline_streaming_concurrent_runners_fenced(spark, tmp_path):
     run_pipeline_streaming(spark, src, out)
     assert len(_json_files(out)) == 20
     assert not os.path.exists(os.path.join(out, "_stream_runner.lock"))
+
+
+def _write_corpus(sf: str, first_id: int, n_docs: int, n_files: int) -> set[int]:
+    """Add ``n_docs`` docs from ``first_id`` to the ``documents`` table
+    under ``sf`` as ``n_files`` parquet files; every 37th doc has blank
+    or null text. Returns the valid doc_ids."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf, "documents.parquet")
+    os.makedirs(path, exist_ok=True)
+    ids = list(range(first_id, first_id + n_docs))
+    texts = [
+        (None if i % 2 else "  ") if i % 37 == 0 else f"body of doc {i}" for i in ids
+    ]
+    per_file = -(-n_docs // n_files)
+    for k in range(n_files):
+        lo, hi = k * per_file, min((k + 1) * per_file, n_docs)
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array(ids[lo:hi], pa.int64()),
+                    "text": pa.array(texts[lo:hi], pa.string()),
+                    "lang": ["en"] * (hi - lo),
+                    "source": ["api"] * (hi - lo),
+                }
+            ),
+            os.path.join(path, f"part-{first_id:06d}-{k}.parquet"),
+        )
+    return {i for i, t in zip(ids, texts) if t is not None and t.strip()}
+
+
+def test_pipeline_fetches_each_doc_once_within_job_budget(spark, tmp_path):
+    """One fetch pass per run: the fetched record frame is persisted,
+    so the sink's range sample, its sort and the dead-letter write never
+    re-run the side-effectful fetch. A subtree that runs twice shows up
+    here as a duplicate fetcher call and as extra Spark jobs."""
+    src = str(tmp_path / "corpus")
+    valid = _write_corpus(src, 0, 400, 4)
+    calls = str(tmp_path / "fetch_calls.txt")
+
+    def fetcher(title: str) -> str:
+        # workers share the local filesystem; one short O_APPEND write
+        # per call keeps concurrent lines whole
+        with open(calls, "a", encoding="utf-8") as f:
+            f.write(title + "\n")
+        return f"fetched {title}"
+
+    sc = spark.sparkContext
+    group = f"fetch-once-{os.getpid()}"
+    sc.setJobGroup(group, "fresh enriched run_pipeline")
+    try:
+        s = run_pipeline(
+            spark, src, str(tmp_path / "out"),
+            enrichment={"global_qps": None, "fetcher": fetcher},
+        )
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert s["processed"] == len(valid)
+    assert s["failed"] == 400 - len(valid)
+    with open(calls, encoding="utf-8") as f:
+        titles = f.read().splitlines()
+    assert sorted(titles) == sorted(f"Doc {i}" for i in valid)
+    # file listing, range sample, the fetch cache and range shuffle
+    # stages, the JVM offset count, the writer, the dead-letter write
+    assert n_jobs <= 7, n_jobs
+
+
+def test_pipeline_reliable_pin_tier_matches_local(spark, tmp_path):
+    """The pipeline takes no pins, so ``pin.mode=reliable`` must change
+    nothing: a fresh run plus one resume write the same JSON bytes and
+    dead-letter the same rows as under the default local tier, and
+    leave no checkpoint files behind."""
+    from wiki_data_pipeline_spark.operators.pin import PIN_DIR_KEY, PIN_MODE_KEY
+
+    enrichment = {
+        "global_qps": None,
+        "max_retries": 0,  # every 7th doc fails its only fetch
+        "initial_delay": 0.0,
+        "max_delay": 0.0,
+        "fail_every": 7,
+    }
+
+    def run_twice(out: str, src: str) -> None:
+        _write_corpus(src, 0, 300, 4)
+        run_pipeline(spark, src, out, batch_size=100, enrichment=enrichment)
+        _write_corpus(src, 300, 60, 1)
+        s = run_pipeline(spark, src, out, batch_size=100, enrichment=enrichment)
+        assert s["watermark"] == 359 and s["runs"] == 2
+
+    def tree(out: str) -> dict:
+        return {
+            os.path.relpath(p, out): open(p, "rb").read() for p in _json_files(out)
+        }
+
+    def dead_letters(out: str) -> list:
+        rows = spark.read.parquet(os.path.join(out, "_dead_letter")).collect()
+        return sorted((r.doc_id, r.source, r.error, r.since) for r in rows)
+
+    local = str(tmp_path / "local")
+    run_twice(local, str(tmp_path / "src_local"))
+    reliable = str(tmp_path / "reliable")
+    spark.conf.set(PIN_MODE_KEY, "reliable")
+    spark.conf.set(PIN_DIR_KEY, str(tmp_path / "pins"))
+    try:
+        run_twice(reliable, str(tmp_path / "src_reliable"))
+    finally:
+        spark.conf.unset(PIN_MODE_KEY)
+        spark.conf.unset(PIN_DIR_KEY)
+    assert not glob.glob(str(tmp_path / "pins" / "**" / "part-*"), recursive=True)
+    assert tree(reliable) == tree(local)
+    assert len(tree(local)) > 0
+    dlq = dead_letters(local)
+    assert dead_letters(reliable) == dlq
+    kinds = {e.split(":")[0] for _, _, e, _ in dlq}
+    assert kinds == {"validation_failed", "fetch_failed"}
+
+
+@pytest.mark.parametrize("enrich", [False, True], ids=["plain", "enriched"])
+def test_pipeline_releases_what_it_caches(spark, tmp_path, enrich):
+    """A batch run leaves the session's storage as it found it: the
+    fetched frame is unpersisted after a run that succeeds and after
+    one that fails between the sink writes and the watermark commit."""
+    src = str(tmp_path / "corpus")
+    out = str(tmp_path / "out")
+    enrichment = {"global_qps": None} if enrich else None
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    _write_corpus(src, 0, 200, 2)
+    run_pipeline(spark, src, out, batch_size=50, enrichment=enrichment)
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+
+    def crash():
+        raise RuntimeError("injected crash before commit")
+
+    _write_corpus(src, 200, 50, 1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(
+            spark, src, out, batch_size=50, enrichment=enrichment, fault_injector=crash
+        )
+    assert set(jsc.getPersistentRDDs().keySet()) == before

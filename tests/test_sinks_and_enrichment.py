@@ -52,6 +52,30 @@ def test_per_record_json_layout(spark, sf_dir, tmp_path):
     assert len(glob.glob(os.path.join(out, "batch_*", "article_*.json"))) == n
 
 
+def test_per_record_json_indices_over_many_partitions(spark, tmp_path):
+    """The offset math across partitions: 2,000 rows in 4 input
+    partitions with doc_ids in shuffled order, enough rows per
+    partition that the range bounds come from a random sample. The
+    indices must run exactly 0..1999 and file ``i`` must hold the
+    ``i``-th smallest doc_id."""
+    import random
+
+    ids = random.Random(11).sample(range(1_000_000), 2000)
+    rdd = spark.sparkContext.parallelize([(i, f"Doc {i}") for i in ids], 4)
+    df = spark.createDataFrame(rdd, "doc_id bigint, title string")
+    out = str(tmp_path / "out")
+    n, mx = write_per_record_json_with_watermark(
+        df, out, order_col="doc_id", batch_size=500
+    )
+    assert (n, mx) == (2000, max(ids))
+    by_index = {}
+    for f in glob.glob(os.path.join(out, "batch_*", "article_*.json")):
+        with open(f, encoding="utf-8") as fh:
+            by_index[int(os.path.basename(f)[8:14])] = json.load(fh)["doc_id"]
+    assert sorted(by_index) == list(range(2000))
+    assert [by_index[i] for i in range(2000)] == sorted(ids)
+
+
 def test_partition_writer_pickles_by_value(tmp_path):
     """Both runners ship ``_make_writer``'s closure to Python workers,
     which cannot import this package: the pickled writer must load and

@@ -6,10 +6,12 @@ src/mediawiki_client.py:22-64).
 Spark mapping: the reference's ThreadPoolExecutor over 100-article
 chunks IS partition parallelism; the per-request machinery (token
 bucket, retry with exponential backoff, dead-letter on exhaustion)
-lives inside a mapInPandas closure. Each partition gets a local QPS
-budget of global_qps / num_partitions — the distributed analog of one
-shared limiter (no cross-executor coordination needed, which would
-never scale anyway).
+lives inside one mapInArrow closure, ``fetch_records``, which carries
+whole record frames through; ``fetch_enrich`` is a projection over it
+for stub tables. Each partition gets a local QPS budget of
+global_qps / num_partitions — the distributed analog of one shared
+limiter (no cross-executor coordination needed, which would never
+scale anyway).
 
 The closure is fully self-contained (cloudpickle by value — workers
 don't have this package importable), and the default "fetcher" is a
@@ -19,15 +21,10 @@ wall-clock (test_enhanced_parallel_client.py:171-174)."""
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
-
-ENRICHED_SCHEMA = (
-    "doc_id bigint, title string, content string, source string, "
-    "attempts int, error string"
-)
+from pyspark.sql import functions as F
 
 
 def resolve_fetcher(spec):
@@ -61,44 +58,50 @@ def demo_fetcher(title: str) -> str:
     return f"demo[{digest}]"
 
 
-def fetch_enrich(
-    stubs: DataFrame,
+def fetch_records(
+    records: DataFrame,
     global_qps: float | None = None,
     max_retries: int = 3,
     initial_delay: float = 0.05,
     max_delay: float = 1.0,
     fail_every: int = 0,
     fetcher: Callable[[str], str] | str | None = None,
-    source_name: str = "fake_api",
 ) -> DataFrame:
-    """Enrich a stub table (doc_id, title) with 'fetched' content.
+    """Fetch content for the rows of ``records``: a frame with
+    ``doc_id``, ``title`` and a nullable string ``error`` column.
 
-    global_qps=None disables pacing (pure-throughput mode);
-    fail_every=N makes every Nth doc fail transiently on the first
-    attempt (deterministic retry-path testing); retries use the
-    reference's min(initial * 2^attempt, max_delay) backoff
-    (src/mediawiki_client.py:46-51); exhausted retries dead-letter the
-    row with an error column instead of raising (ST4).
+    Rows whose ``error`` is set are passed through unfetched; the
+    others are fetched under the pacing / retry contract described in
+    :func:`fetch_enrich`. Every column except ``error`` passes through
+    unchanged, then come ``api_content`` and ``attempts`` (both null
+    on an unfetched row) and ``error``, which a fetch that ran out of
+    retries sets to its last exception message. So a row was fetched
+    iff ``attempts`` is set, and failed iff ``error`` is set too.
 
-    ``fetcher`` mirrors the reference's pluggable fetch interface (the
-    parallel client takes arbitrary article lists through one
-    title→content callable, src/enhanced_production_mediawiki_client.py
-    :397-415, src/mediawiki_client.py:114-171): pass any
-    ``title -> content`` function and it is cloudpickled into the
-    mapInPandas closure, wrapped by the same pacing / retry /
-    dead-letter machinery. Exceptions it raises are treated as
-    transient and retried up to ``max_retries`` times, then
-    dead-lettered. Default None keeps the deterministic hermetic
-    fetcher (tests, benchmarks); a ``"module:attr"`` string resolves
-    via :func:`resolve_fetcher` (config-driven client selection).
-    ``source_name`` labels the source column for injected fetchers."""
+    Arrow batches in and out (``mapInArrow``): the passed-through
+    columns, text included, never go through pandas or Python
+    objects."""
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
     fetcher = resolve_fetcher(fetcher)
-    num_parts = max(1, stubs.rdd.getNumPartitions())
-    part_qps = (global_qps / num_parts) if global_qps else None
+    part_qps = (
+        global_qps / max(1, records.rdd.getNumPartitions()) if global_qps else None
+    )
+    keep = [c for c in records.columns if c != "error"]
+    schema = StructType(
+        [records.schema[c] for c in keep]
+        + [
+            StructField("api_content", StringType()),
+            StructField("attempts", IntegerType()),
+            StructField("error", StringType()),
+        ]
+    )
 
-    def _enrich(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _fetch(batches):
         import hashlib
         import time as _time
+
+        import pyarrow as pa
 
         last_req = [0.0]
 
@@ -138,21 +141,21 @@ def fetch_enrich(
         else:
             _do_fetch = _fake_fetch
 
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "title": [],
-                "content": [],
-                "source": [],
-                "attempts": [],
-                "error": [],
-            }
-            for doc_id, title in zip(pdf["doc_id"], pdf["title"]):
-                content, err, attempt = None, None, 0
+        for batch in batches:
+            out = {"api_content": [], "attempts": [], "error": []}
+            for doc_id, title, err in zip(
+                *(batch.column(c).to_pylist() for c in ("doc_id", "title", "error"))
+            ):
+                if err is not None:  # not to be fetched
+                    out["api_content"].append(None)
+                    out["attempts"].append(None)
+                    out["error"].append(err)
+                    continue
+                content, attempt = None, 0
                 while attempt <= max_retries:
                     _pace()
                     try:
-                        content = _do_fetch(int(doc_id), str(title), attempt)
+                        content = _do_fetch(doc_id, title, attempt)
                         break
                     except Exception as exc:  # noqa: BLE001
                         err = str(exc)
@@ -160,16 +163,74 @@ def fetch_enrich(
                         _time.sleep(delay)
                         attempt += 1
                 ok = content is not None
-                out["doc_id"].append(int(doc_id))
-                out["title"].append(str(title))
-                out["content"].append(content if ok else None)
-                out["source"].append(source_name if ok else None)
+                out["api_content"].append(content if ok else None)
                 # success: `attempt` failed tries preceded the winning
                 # one → attempt + 1 total. exhaustion: the loop already
                 # post-incremented past the last try → attempt IS the
                 # total (max_retries + 1).
                 out["attempts"].append(attempt + 1 if ok else attempt)
                 out["error"].append(None if ok else err)
-            yield pd.DataFrame(out)
+            # Spark's Arrow string type for this session (string or
+            # large_string), as it sent the input's `error` column
+            text = batch.schema.field("error").type
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep]
+                + [
+                    pa.array(out["api_content"], text),
+                    pa.array(out["attempts"], pa.int32()),
+                    pa.array(out["error"], text),
+                ],
+                names=keep + ["api_content", "attempts", "error"],
+            )
 
-    return stubs.select("doc_id", "title").mapInPandas(_enrich, schema=ENRICHED_SCHEMA)
+    return records.mapInArrow(_fetch, schema)
+
+
+def fetch_enrich(
+    stubs: DataFrame,
+    global_qps: float | None = None,
+    max_retries: int = 3,
+    initial_delay: float = 0.05,
+    max_delay: float = 1.0,
+    fail_every: int = 0,
+    fetcher: Callable[[str], str] | str | None = None,
+    source_name: str = "fake_api",
+) -> DataFrame:
+    """Enrich a stub table (doc_id, title) with 'fetched' content:
+    ``doc_id, title, content, source, attempts, error``.
+
+    global_qps=None disables pacing (pure-throughput mode);
+    fail_every=N makes every Nth doc fail transiently on the first
+    attempt (deterministic retry-path testing); retries use the
+    reference's min(initial * 2^attempt, max_delay) backoff
+    (src/mediawiki_client.py:46-51); exhausted retries dead-letter the
+    row with an error column instead of raising (ST4).
+
+    ``fetcher`` mirrors the reference's pluggable fetch interface (the
+    parallel client takes arbitrary article lists through one
+    title→content callable, src/enhanced_production_mediawiki_client.py
+    :397-415, src/mediawiki_client.py:114-171): pass any
+    ``title -> content`` function and it is cloudpickled into the
+    mapInArrow closure, wrapped by the same pacing / retry /
+    dead-letter machinery. Exceptions it raises are treated as
+    transient and retried up to ``max_retries`` times, then
+    dead-lettered. Default None keeps the deterministic hermetic
+    fetcher (tests, benchmarks); a ``"module:attr"`` string resolves
+    via :func:`resolve_fetcher` (config-driven client selection).
+    ``source_name`` labels the source column of fetched rows."""
+    fetched = fetch_records(
+        stubs.select(
+            F.col("doc_id").cast("bigint"),
+            F.col("title").cast("string"),
+            F.lit(None).cast("string").alias("error"),
+        ),
+        global_qps, max_retries, initial_delay, max_delay, fail_every, fetcher,
+    )
+    return fetched.select(
+        "doc_id",
+        "title",
+        F.col("api_content").alias("content"),
+        F.when(F.col("error").isNull(), F.lit(source_name)).alias("source"),
+        "attempts",
+        "error",
+    )

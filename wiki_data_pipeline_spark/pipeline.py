@@ -15,23 +15,29 @@ Reference flow mapped (SURVEY.md §3 entry point 1):
   DROPS the error reason, §2.11)  →  invalid rows keep an ``error``
   column and append to a dead-letter parquet table.
 - batch flush + K1 JSON sink (L4/K1, src/main.py:137-142)  →
-  `sinks/per_record_json.py` (zipWithIndex consecutive ids,
-  batch_NNN dirs, idempotent overwrite).
+  `sinks/per_record_json.py` (range sort, consecutive ids from JVM
+  per-partition counts, batch_NNN dirs, idempotent overwrite).
 - final checkpoint + summary (src/main.py:157-167, 213-221)  →
   watermark commit AFTER the sink succeeds (at-least-once +
   idempotent sink ≡ ST3), then an A2-style summary dict.
 
 The streaming twin (``run_pipeline_streaming``) runs the same record
 path per micro-batch: one shaping function (``_article_records`` —
-validate split, normalize, optional fetch stage) and one JSON writer
+validate, normalize, optional fetch stage, as one frame with an
+``error`` column) and one JSON writer
 (``sinks/per_record_json._make_writer``) serve both runners, so batch
 and streaming records cannot drift apart.
 
-At 100 TB: everything before the sink is narrow (no shuffle); the
-sink's range-repartition is the only exchange. Resume is a pushed-down
-range predicate — no driver-side work list, no per-row state writes
-(the reference rewrote its queue JSON on EVERY row, §2.11's O(n²)
-I/O).
+With enrichment, one batch run scans the corpus once and fetches once:
+the fetch carries the record columns through (no join back to the
+corpus), the fetched frame is persisted for the run, and the sink's
+range sort and the dead-letter write both read that cache.
+
+At 100 TB: everything before the sink is narrow (no shuffle, no
+broadcast); the sink's range-repartition is the only exchange. Resume
+is a pushed-down range predicate — no driver-side work list, no
+per-row state writes (the reference rewrote its queue JSON on EVERY
+row, §2.11's O(n²) I/O).
 """
 
 from __future__ import annotations
@@ -53,31 +59,26 @@ from wiki_data_pipeline_spark.sinks.per_record_json import (
 from wiki_data_pipeline_spark.streaming.checkpoint import HighWatermarkCheckpoint
 
 
-def _article_records(
-    rows: DataFrame, enrichment: dict | None
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+def _article_records(rows: DataFrame, enrichment: dict | None) -> DataFrame:
     """The record path both runners share: F7 validate split, T1
-    normalize projection, and the optional rate-limited fetch stage.
-    Returns ``(ok, dlq, enriched)``: the JSON records, the dead-letter
-    rows (``doc_id``, ``source``, ``error``) and the persisted fetch
-    pass, which the caller unpersists once both sinks have run
-    (``None`` without ``enrichment``).
+    normalize projection and the optional rate-limited fetch stage, as
+    ONE frame. Columns: the JSON record in key order (``doc_id, title,
+    url, content, author, content_length, lang, source``, plus
+    ``api_content, attempts`` with ``enrichment``), then ``error``.
+    ``error`` is null for rows to write; a validation failure sets it
+    in the JVM projection (null text fails validation too).
 
     ``enrichment`` — kwargs for ``operators.enrichment.fetch_enrich``
     (the config ``enrichment`` section as a dict) — enables the
-    reference's per-article API fetch: each valid doc's stub is
-    fetched under the QPS/retry contract, fetched rows gain
-    ``api_content`` and ``attempts`` columns, and retry-exhausted
-    fetches dead-letter as ``fetch_failed`` alongside validation
-    failures (reference mark_failed, src/main.py:122-133)."""
-    valid_pred = is_valid_content("text")
-    dlq = rows.filter(~valid_pred).select(
-        "doc_id",
-        "source",
-        F.lit("validation_failed: empty or null content").alias("error"),
-    )
+    reference's per-article API fetch through
+    ``operators.enrichment.fetch_records``: each valid row is fetched
+    under the QPS/retry contract and gains ``api_content`` and
+    ``attempts``; a retry-exhausted fetch sets ``error`` to
+    ``fetch_failed: <msg>`` and drops the row's ``source`` (reference
+    mark_failed, src/main.py:122-133). The fetch is side-effectful, so
+    a caller that reads the frame more than once persists it first."""
     title = F.concat(F.lit("Doc "), F.col("doc_id"))
-    ok = rows.filter(valid_pred).select(
+    records = rows.select(
         "doc_id",
         title.alias("title"),
         build_url(title).alias("url"),
@@ -86,31 +87,39 @@ def _article_records(
         F.length("text").cast("bigint").alias("content_length"),
         "lang",
         "source",
+        F.when(
+            ~is_valid_content("text"),
+            F.lit("validation_failed: empty or null content"),
+        ).alias("error"),
     )
     if enrichment is None:
-        return ok, dlq, None
+        return records
 
-    from wiki_data_pipeline_spark.operators.enrichment import fetch_enrich
+    from wiki_data_pipeline_spark.operators.enrichment import fetch_records
 
-    # The fetch stage is rate-limited and side-effectful (a real
-    # deployment calls an external API) — persist so the sink job and
-    # the dead-letter job share ONE fetch pass, never two.
-    enriched = fetch_enrich(ok.select("doc_id", "title"), **enrichment).persist()
-    fetch_ok = enriched.filter(F.col("error").isNull()).select(
-        "doc_id",
-        F.col("content").alias("api_content"),
-        "attempts",
+    # `source_name` labels fetch_enrich's stub output; a record keeps
+    # its doc's source
+    kwargs = {k: v for k, v in enrichment.items() if k != "source_name"}
+    fetched = fetch_records(records, **kwargs)
+    # a row was fetched iff `attempts` is set, and failed iff `error` is too
+    failed = F.col("attempts").isNotNull() & F.col("error").isNotNull()
+    return fetched.withColumns(
+        {
+            "source": F.when(~failed, F.col("source")),
+            "error": F.when(failed, F.concat(F.lit("fetch_failed: "), "error"))
+            .otherwise(F.col("error")),
+        }
     )
-    fetch_dlq = enriched.filter(F.col("error").isNotNull()).select(
-        "doc_id",
-        F.lit(None).cast("string").alias("source"),
-        F.concat(F.lit("fetch_failed: "), "error").alias("error"),
+
+
+def _split(records: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(ok, dlq)`` over one record frame: the JSON records, and the
+    dead-letter rows (``doc_id``, ``source``, ``error``)."""
+    ok = records.filter(F.col("error").isNull()).drop("error")
+    dlq = records.filter(F.col("error").isNotNull()).select(
+        "doc_id", "source", "error"
     )
-    return (
-        ok.join(fetch_ok, "doc_id", "inner"),
-        dlq.unionByName(fetch_dlq),
-        enriched,
-    )
+    return ok, dlq
 
 
 def run_pipeline(
@@ -174,13 +183,19 @@ def run_pipeline(
 
         pending = ckpt.incremental(docs, "doc_id")
 
+        records = _article_records(pending, enrichment)
+        if enrichment is not None:
+            # The fetch is rate-limited and side-effectful, and the
+            # sink's range exchange samples by evaluating its whole
+            # upstream: persist the fetched frame so the range sample,
+            # the sort and the dead-letter write all read ONE fetch
+            # pass. A lost cache block is recomputed from lineage.
+            records = records.persist()
         # try covers EVERY action after the persist — the per-record
-        # sink write included, not just the dead-letter write — so a
-        # failure anywhere in the run can't leak the cached fetch pass
-        # into the long-lived session.
-        enriched = None
+        # sink write included — so a failure anywhere in the run can't
+        # leak the cached fetch pass into the long-lived session.
         try:
-            ok, dlq, enriched = _article_records(pending, enrichment)
+            ok, dlq = _split(records)
             # Continue the global file numbering where the last run
             # stopped (reference L3 consecutive indices across
             # batches/resumes).
@@ -222,8 +237,8 @@ def run_pipeline(
                 # crash window: both sinks written, watermark commit pending
                 fault_injector()
         finally:
-            if enriched is not None:
-                enriched.unpersist()
+            if enrichment is not None:
+                records.unpersist()
 
         # Watermark covers ALL disposed rows (valid + dead-lettered) — a
         # failed doc above the max valid doc_id must not be re-selected
@@ -358,13 +373,12 @@ def run_pipeline_streaming(
             # Two consumers (ok sink + dead-letter sink) → without a
             # cache each action re-scans the micro-batch from source
             # (visible as numInputRows = 2× actual in the progress
-            # metrics). One-batch cache bounds memory. A mid-batch
-            # failure (real or injected) must not leak the cached batch
-            # or fetch pass into the long-lived session.
-            batch = batch.cache()
-            enriched = None
+            # metrics) and re-runs the fetch. A mid-batch failure (real
+            # or injected) must not leak the cached batch into the
+            # long-lived session.
+            records = _article_records(batch, enrichment).persist()
             try:
-                ok, dlq, enriched = _article_records(batch, enrichment)
+                ok, dlq = _split(records)
                 ok.rdd.map(lambda r: (r, r["doc_id"])).mapPartitions(
                     write_rows
                 ).count()
@@ -379,9 +393,7 @@ def run_pipeline_streaming(
                     os.path.join(dlq_dir, f"batch_id={batch_id}")
                 )
             finally:
-                if enriched is not None:
-                    enriched.unpersist()
-                batch.unpersist()
+                records.unpersist()
 
         recorder = None
         if metrics_path is not None:

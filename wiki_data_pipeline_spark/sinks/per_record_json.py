@@ -5,13 +5,21 @@ idempotent overwrite).
 
 Scalable indexing: the reference's global counter (and the naive
 ``row_number()`` over an unpartitioned window) serializes on one
-partition. Here indices come from ``zipWithIndex`` — one extra count
-job to compute per-partition offsets, then fully parallel writes with
-globally consecutive ids. Deterministic order: sort by the order
-column first (range partitioning keeps the sort distributed).
+partition. Here the input is range-partitioned and sorted on the order
+column (a distributed sort); each partition's start offset comes from
+one JVM count job (the JVM ``zipWithIndex``, one number per partition
+to the driver), and one Python pass writes every file at its
+partition's offset plus its position in the partition — the
+``with_global_offsets`` pattern (operators/packing.py). Both jobs read
+ONE range shuffle: the range exchange samples its bounds afresh each
+time a plan is executed, so both jobs read the sorted frame's one
+physical RDD. Its shuffle dependency, bounds included, is fixed, so a
+lost shuffle block is rebuilt into the same partition and the offsets
+stay right — no pin, no lineage cut, and no Python pass just to
+count.
 
 One partition writer (``_make_writer``) serves both pipeline runners:
-the batch runner feeds it ``zipWithIndex`` indices, the streaming twin
+the batch runner feeds it the partition offsets, the streaming twin
 feeds it each row's ``doc_id`` as the index, so both produce the same
 record bytes, layout, atomic temp-file rename and task fault hook.
 
@@ -57,21 +65,32 @@ def write_per_record_json_with_watermark(
     write — raising from it kills the TASK ATTEMPT mid-partition
     (files 0..k-1 already on disk), exercising Spark's task-retry
     path (``spark.task.maxFailures`` ≥ 2): the retry attempt rewrites
-    the same deterministic paths (zipWithIndex indices are stable
-    across attempts — the shuffle output the result stage reads is
-    already materialized), so output stays byte-identical and the
-    per-partition ``(count, max)`` receipts come only from the
-    attempt that succeeded."""
+    the same deterministic paths (the retry re-reads the range shuffle
+    the counts came from), so output stays byte-identical and the
+    per-partition ``(count, max)`` receipts come only from the attempt
+    that succeeded."""
     n_parts = max(1, df.rdd.getNumPartitions())  # 0 on an empty plan
     ordered = df.repartitionByRange(n_parts, order_col).sortWithinPartitions(
         order_col
     )
-    parts = ordered.rdd.zipWithIndex().mapPartitions(
-        _make_writer(
-            out_dir, batch_size, start_index, order_col,
-            file_pattern, directory_pattern, task_fault_injector,
-        )
-    ).collect()
+    # The writer below reads `ordered.rdd`, which Spark builds on the
+    # Dataset's one physical RDD (`queryExecution.toRdd`, planned once
+    # per Dataset). Counting that same RDD makes both jobs read one
+    # range shuffle. The JVM zipWithIndex counts the rows of every
+    # partition but the last in one job and keeps each partition's
+    # start index.
+    rows = ordered._jdf.queryExecution().toRdd()
+    starts = [p.startIndex() for p in rows.zipWithIndex().partitions()]
+    write_rows = _make_writer(
+        out_dir, batch_size, start_index, order_col,
+        file_pattern, directory_pattern, task_fault_injector,
+    )
+
+    def _write_partition(pid, part):
+        base = starts[pid]
+        return write_rows((row, base + i) for i, row in enumerate(part))
+
+    parts = ordered.rdd.mapPartitionsWithIndex(_write_partition).collect()
     n_written = sum(c for c, _ in parts)
     maxes = [m for _, m in parts if m is not None]
     return int(n_written), (max(maxes) if maxes else None)
