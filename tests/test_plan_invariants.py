@@ -1,29 +1,19 @@
-"""Plan-shape regression manifest (r8 verdict item 1).
+"""Plan-shape invariants, compile-only (``executedPlan`` is the pre-AQE
+physical plan, deterministic at the pinned fixture SF).
 
-The wall-clock gate (bench.py) catches >=2x slowdowns at sf0.1; a plan
-regression that costs 1.5x at sf0.1 but is a scale-killer at 100x —
-a broadcast silently becoming a shuffle join after a threshold/stats
-change, a new Exchange, a CartesianProduct, a filter no longer reaching
-the parquet scan — sails through it. This manifest pins the PHYSICAL
-PLAN SHAPE of the most expensive registered queries (top of
-BENCH_BASELINE.json by frozen cost, plus the queries whose plan IS the
-design claim: j1's broadcast at plans/star_schema.py:115, q9's single
-fact-fact shuffle, q19's disjunctive pushdown): each declares ceilings
-on shuffle Exchanges and scans, floors on BroadcastHashJoins where
-broadcast is the designed strategy, and whether predicate pushdown must
-reach the scan. Compilation only — ``executedPlan`` is the pre-AQE
-physical plan, deterministic at the pinned fixture SF — so the sweep is
-cheap and the failure message carries the full audit diff.
+``test_registry_wide_blanket_invariants`` applies the structural rules
+to every registered query: zero CartesianProduct, zero row-at-a-time
+Python, no partition-less Window over an unbounded input, and no
+duplicated exchange work (``plan_audit.duplicate_exchanges``: two
+exchanges over the same input that AQE cannot reuse, the shape column
+pruning leaves when a frame has two consumers). Each rule's allowlist
+is exact: its entries must still trip the rule.
 
-Blanket invariants over every manifest entry (and, cheaply, the WHOLE
-registry in test_registry_wide_blanket_invariants): zero
-CartesianProduct, zero row-at-a-time Python (BatchEvalPython) — the two
-shapes that are never acceptable at 100 TB.
-
-Ceilings are the r9 measured values at sf0.001 — i.e. "the plan we
-audited and accepted", not aspirations. A failure means the plan
-CHANGED; if the change is intentional and audited, update the manifest
-entry in the same commit and say why in its note.
+``MANIFEST`` keeps the per-query claims no structural rule states:
+designed broadcasts (``min_bhj`` / ``max_smj`` / ``max_bnlj``),
+pushdown reaching the scan, and plans whose zero- or one-exchange
+shape IS the design. tests/test_plan_invariants_x10.py recompiles the
+join-strategy and pushdown claims against the 10x replica.
 """
 
 from __future__ import annotations
@@ -33,6 +23,7 @@ import re
 import sys
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 sys.path.insert(
@@ -41,332 +32,190 @@ sys.path.insert(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
     ),
 )
-from plan_audit import audit_plan  # noqa: E402
+from plan_audit import (  # noqa: E402
+    audit_plan,
+    duplicate_exchanges,
+    unbounded_global_windows,
+)
 
 from wiki_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
 
-# name -> declared invariants. Fields (all optional except the blanket
-# zero-cartesian / zero-row-python, asserted for every entry):
-#   max_exchanges:  ceiling on shuffle Exchange nodes (pre-AQE)
-#   max_scans:      ceiling on parquet scans (branch-reuse regressions)
-#   min_bhj:        floor on BroadcastHashJoin nodes (designed broadcasts)
-#   max_smj:        ceiling on SortMergeJoin nodes (a broadcast that
-#                   silently became a shuffle join raises this)
-#   max_bnlj:       ceiling on BroadcastNestedLoopJoin (range/boundary
-#                   joins that are broadcast-small by design)
-#   pushdown:       True = at least one scan must carry a non-empty
-#                   PushedFilters list
-#   note:           why the declared shape is the intended one
+# name -> the query's design claims, checked by shape_errors:
+#   max_exchanges, max_smj, max_bnlj: ceilings on shuffle Exchange,
+#       SortMergeJoin and BroadcastNestedLoopJoin nodes (pre-AQE)
+#   min_bhj:  floor on BroadcastHashJoin nodes (designed broadcasts)
+#   pushdown: some scan carries a non-empty PushedFilters list
+#   note:     the design claim the fields defend
 MANIFEST: dict[str, dict] = {
     # -- dedup family (documents) --
     "dedup_minhash_verified": dict(
-        max_exchanges=5, max_scans=12, min_bhj=2, max_smj=0, pushdown=True,
-        note="two-stage LSH->exact-Jaccard, r10 single-consumption "
-        "spelling: the LSH pair pipeline appears ONCE (the old "
-        "candidate-id semi-joins triplicated it — 3x the md5 map at "
-        "x10) and the verify side is a linear all-docs shingle-array "
-        "map with the token array materialized before the lambda "
-        "(plans/llm_ops.py:497-530)",
+        min_bhj=2, max_smj=0, pushdown=True,
+        note="candidate pairs meet the shingle arrays by broadcast",
     ),
     "dedup_minhash_calibration": dict(
-        max_exchanges=8, max_scans=0, max_smj=2,
-        note="r15: the shared (signatures + shingle-array) state frame "
-        "is now an eager pin — the r11 repartition-exchange form "
-        "relied on exchange reuse that column pruning silently broke "
-        "(the band consumer's 9-col exchange no longer canonicalized "
-        "with the pair joins' 10-col one, so the md5 map ran twice). "
-        "Visible plan is checkpoint scans + the 2 pair joins; zero "
-        "parquet scans, so no pushdown assertion (filters ran at pin "
-        "time). r16: the r15 entry pinned min_bhj=2/max_smj=0, but "
-        "the pair joins' build side is the PER-DOC state frame — "
-        "corpus-sized, the keep_best class — so the broadcast is an "
-        "accident of fixture stats, not a design; under the cluster "
-        "profile at x10 the stats-owned plan is (correctly) SMJ. "
-        "Floor dropped, SMJ ceiling 2, exchange ceiling covers the "
-        "SMJ regime's hash exchanges (pairs + sa + sb per join side)",
+        max_smj=2,
+        note="the pair joins' build side is corpus-sized: two SMJs at most",
     ),
     "dedup_family_agreement": dict(
-        max_exchanges=8, max_scans=3, max_smj=2, pushdown=True,
-        note="r16: the Jaccard and containment arms project from ONE "
-        "pinned pairwise_shingle_overlap frame (the r15 plan ran the "
-        "shingle inverted-index join twice — 27 scans / 19 exchanges "
-        "pinned here, 54 scan nodes in the dump). Visible plan is the "
-        "LSH arm (3 corpus scans) + checkpoint-scan projections + the "
-        "2 full-outer membership SMJs (pair-keyed, never broadcast); "
-        "the old min_bhj=6 counted the overlap pipelines' internal "
-        "joins, which now run at pin time",
+        max_smj=2, pushdown=True,
+        note="the only SMJs are the two pair-keyed membership joins",
     ),
     "dedup_keep_best": dict(
-        max_exchanges=3, max_scans=3, max_smj=1, pushdown=True,
-        note="r15 (verdict item 1): the hard F.broadcast(comp) hint is "
-        "GONE — the components table is dup-rate-sized (a corpus "
-        "fraction, unbounded at 100 TB), so forcing it into every "
-        "executor was an OOM-class hint. Statically the checkpointed "
-        "comp frame has unknown stats -> ONE SortMergeJoin on doc_id "
-        "(the scale-correct plan); AQE owns the runtime choice. The "
-        "2 extra exchanges are that join's two hash exchanges",
+        max_smj=1, pushdown=True,
+        note="components are a corpus fraction: one SMJ, never a hint",
     ),
     "dedup_simhash": dict(
-        max_exchanges=2, max_scans=3, max_smj=0, pushdown=True,
-        note="sign-LSH blocks; bit-vote aggregate, no join",
+        max_smj=0, pushdown=True, note="bit-vote aggregate, no join"
     ),
     "dedup_simhash_hamming_histogram": dict(
-        max_exchanges=8, max_scans=9, min_bhj=2, max_smj=0, pushdown=True,
-        note="block-join candidates + popcount histogram; r15: the "
-        "participant semi-filter broadcast is stats-chosen, not "
-        "hinted (pair-participant set is a corpus fraction)",
+        min_bhj=2, max_smj=0, pushdown=True,
+        note="the participant semi-filter broadcast is stats-chosen",
     ),
     "dedup_minhash_lsh": dict(
-        max_exchanges=3, max_scans=3, max_smj=0, pushdown=True,
-        note="banded signatures; shuffle on (band, sig) only — an SMJ "
-        "here would mean an accidental all-pairs self-join",
+        max_smj=0, pushdown=True,
+        note="shuffle on (band, sig) only; an SMJ is an all-pairs join",
     ),
     "dedup_impact_report": dict(
-        max_exchanges=10, max_scans=3, pushdown=True,
-        note="r16: Jaccard/containment branches project from ONE "
-        "pinned pairwise_shingle_overlap frame (was 27 scans / 23 "
-        "exchanges with the inverted-index join once per score). "
-        "Visible plan: LSH arm (3 corpus scans) + checkpoint-scan "
-        "count branches; min_bhj dropped — the overlap joins run at "
-        "pin time",
+        pushdown=True, note="corpus predicates reach the scan"
     ),
     "dedup_substring_spans": dict(
-        max_exchanges=4, max_scans=0, max_smj=0,
-        note="r11: span stream pinned (3 consumers) — visible plan is "
-        "checkpoint-scan aggregates + 2 joins; tokenize/md5 runs once",
+        max_smj=0, note="joins over the pinned span stream broadcast"
     ),
     # -- text / scoring --
-    "text_winnow_fingerprint": dict(
-        max_exchanges=2, max_scans=2,
-        note="winnowing is map-only (higher-order transform) + one "
-        "groupBy; plan may fold to a checkpointed scan",
-    ),
     "score_bigram_surprisal": dict(
-        max_exchanges=2, max_scans=0, min_bhj=1, max_smj=0,
-        note="r11: bigram stream AND per-doc score table pinned — "
-        "visible plan is the broadcast threshold join over the "
-        "checkpointed scores; count tables built once at pin time",
+        min_bhj=1, max_smj=0,
+        note="the threshold join broadcasts over the pinned scores",
     ),
     "sample_dsir_importance": dict(
-        max_exchanges=4, max_scans=0, min_bhj=1, max_smj=0, max_bnlj=1,
-        note="r11: one explode pass into a pinned (doc,lang,term) "
-        "frame; both LMs from one conditional aggregate; broadcast "
-        "weight join (BNLJ = the O(1)-row consts broadcast)",
+        min_bhj=1, max_smj=0, max_bnlj=1,
+        note="broadcast weight join; the BNLJ is the 1-row consts",
     ),
     # -- pipeline rollups --
     "quality_gopher_filters": dict(
-        max_exchanges=1, max_scans=1, max_smj=0,
-        note="r9 shuffle-audit rewrite: MAP-ONLY per-doc quality gate "
-        "(array_sort + linear aggregate run-length pass instead of "
-        "explode->groupBy — was re-shuffling 14x the corpus bytes); "
-        "the ONE exchange is _spread's fixture-parallelism repartition "
-        "of raw doc rows",
+        max_exchanges=1, max_smj=0,
+        note="map-only gate; the one exchange is _spread's repartition",
     ),
     "pipeline_yield_report": dict(
-        max_exchanges=7, max_scans=6, min_bhj=5, pushdown=True,
-        note="stage-yield funnel; stage filters pushed to scan "
-        "(r9: gopher stage went map-only — one exchange and one "
-        "BHJ fewer)",
+        min_bhj=5, pushdown=True,
+        note="stage joins broadcast, stage filters reach the scan",
     ),
     "pipeline_quality_gate": dict(
-        max_exchanges=2, max_scans=3, min_bhj=2, pushdown=True,
-        note="gate thresholds broadcast against the scored corpus "
-        "(r9: gopher stage went map-only — both remaining exchanges "
-        "are _spread repartitions)",
+        min_bhj=2, pushdown=True,
+        note="gate thresholds broadcast against the scored corpus",
     ),
     "contamination_apply_clean": dict(
-        max_exchanges=5, max_scans=3, min_bhj=2, max_smj=0, pushdown=True,
-        note="decontamination anti-join broadcasts the contaminated-id "
-        "set BY STATS at fixture scale (r15: the hard hint is gone — "
-        "the flag set is contamination-rate-sized, a corpus fraction, "
-        "so the planner must stay free to flip at scale)",
+        min_bhj=2, max_smj=0, pushdown=True,
+        note="the anti-join broadcasts by stats, not by a hint",
     ),
     # -- graph / clustering --
     "graph_triangle_stats": dict(
-        max_exchanges=12, max_scans=0, min_bhj=2, max_smj=0,
-        note="r11: the LSH pair pipeline runs ONCE behind a "
-        "localCheckpoint (this plan consumes it 6x); visible plan is "
-        "checkpoint-scan joins/aggregates only, so no parquet scans "
-        "or pushdown to assert here — the pipeline's own shape is "
-        "pinned under dedup_minhash_lsh",
+        min_bhj=2, max_smj=0,
+        note="joins over the pinned pair frame broadcast",
     ),
     "graph_degree_histogram": dict(
-        max_exchanges=4, max_scans=0, max_smj=0,
-        note="r11: pair frame checkpointed once (the degree union "
-        "consumes it twice); two hash aggregates over checkpoint "
-        "scans — pipeline shape pinned under dedup_minhash_lsh",
+        max_smj=0, note="hash aggregates over the pinned pair frame"
     ),
     "cluster_kmeans_embeddings": dict(
-        max_exchanges=11, max_scans=6, max_bnlj=3, max_smj=0,
-        note="r15: assignment is a narrow argmin fold over a one-row "
-        "broadcast centroid array (BNLJ = that scalar cross, one per "
-        "assignment) and update explodes the vector carried through "
-        "the fold — the r14 min_by(struct) aggregate (SortAggregate "
-        "of N·k rows + exchange) and the per-iteration join back to "
-        "emb (the old min_bhj floor) are gone by design. r16: +4 "
-        "exchanges vs the r15 ceiling = the conditional _spread "
-        "repartition (the single-split fixture scan ran every fold "
-        "on ONE core; passthrough on a pre-split scan) and the "
-        "k-row centroid collects now counted un-reused statically",
+        max_bnlj=3, max_smj=0,
+        note="assignment folds over a one-row broadcast centroid array",
     ),
     # -- ANN --
     "sim_ann_ivf": dict(
-        max_exchanges=5, max_scans=4, min_bhj=1, max_bnlj=2, max_smj=0,
-        pushdown=True,
-        note="inline IVF: r15 narrow argmin/probe folds over the "
-        "one-row broadcast centroid array. r16: assignment CARRIES "
-        "the vector and probes carry the query vector, so the "
-        "posting-list probe is ONE BroadcastHashJoin on cid whose "
-        "build side is the |Q|·nprobe probe table (both factors "
-        "fixed index parameters — a designed bounded broadcast, "
-        "hinted, so it holds at any corpus size: max_smj=0 again); "
-        "the r15 joins back to the corpus on vec_id/query_id (two "
-        "corpus-keyed exchanges + the x10 SMJ allowance) are gone. "
-        "min_bhj=1 = that probe join. _spread feeds the fold "
-        "(single-split fixture scan ran it on one core)",
+        min_bhj=1, max_bnlj=2, max_smj=0, pushdown=True,
+        note="the probe is ONE hinted broadcast of |Q|·nprobe rows",
     ),
     "sim_ann_recall_eval": dict(
-        max_exchanges=9, max_scans=4, min_bhj=1, max_bnlj=2, pushdown=True,
-        note="ANN vs exact baseline; query vectors broadcast. r16: "
-        "the exact-baseline arm is PINNED (it was consumed twice — "
-        "hits join + qs distinct — re-running the O(Q·N) brute-force "
-        "pass per consumer); scans drop 10 -> 4 (the IVF arm's), and "
-        "the hits/qs joins run over |Q|·k checkpoint scans",
+        min_bhj=1, max_bnlj=2, pushdown=True,
+        note="query vectors broadcast",
     ),
     # -- joins / TPC-H shapes --
     "join_bloom_runtime_filter": dict(
-        max_exchanges=2, max_scans=2, min_bhj=4, pushdown=True,
-        note="bloom-pruned probe: filter side broadcast twice (build + "
-        "probe), big side scanned once",
+        min_bhj=4, pushdown=True, note="the filter side is broadcast"
     ),
     "j1_enrichment_join": dict(
-        max_exchanges=0, max_scans=2, min_bhj=1, max_smj=0, pushdown=True,
-        note="THE broadcast-join claim (plans/star_schema.py:115): "
-        "dim broadcast, ZERO shuffle exchanges",
+        max_exchanges=0, min_bhj=1, max_smj=0, pushdown=True,
+        note="THE broadcast-join claim: dim broadcast, ZERO exchanges",
     ),
     "q9_product_profit": dict(
-        max_exchanges=1, max_scans=5, min_bhj=4, max_smj=0, pushdown=True,
-        note="all four dims broadcast; the ONE exchange is the final "
-        "group-by — the claimed single fact-side shuffle",
+        max_exchanges=1, min_bhj=4, max_smj=0, pushdown=True,
+        note="four dims broadcast; the ONE exchange is the final group-by",
     ),
     "sample_weighted_topk": dict(
-        max_exchanges=0, max_scans=1, max_smj=0,
-        note="A-ES weighted sample: orderBy+limit MUST compile to "
-        "TakeOrderedAndProject (per-partition heap of k) — an Exchange "
-        "here means a global sort snuck in",
+        max_exchanges=0, max_smj=0,
+        note="orderBy+limit is TakeOrderedAndProject, not a global sort",
     ),
     "q2_min_cost_supplier": dict(
-        max_exchanges=2, max_scans=9, min_bhj=8, max_smj=0, pushdown=True,
-        note="correlated-MIN decorrelated to one (partkey,suppkey) agg "
-        "+ partkey window — the 2 exchanges; EU-supplier and part-size "
-        "predicates pushed BELOW the aggregate as broadcast semi-joins "
-        "on the grouping keys (r9 shuffle audit: 41x less shuffle at "
-        "sf0.1 — Catalyst cannot push joins through aggregates itself)",
+        min_bhj=8, max_smj=0, pushdown=True,
+        note="predicates pushed below the aggregate as broadcast semi-joins",
     ),
     "q20_dominant_suppliers": dict(
-        max_exchanges=3, max_scans=4, min_bhj=3, max_smj=0, pushdown=True,
-        note="nested-agg semi-join chain, dims broadcast; the 3rd "
-        "exchange is the qualifying-suppkey DISTINCT (r9: added so "
-        "the semi-join build side is bounded by the supplier dim and "
-        "the broadcast survives 10x stats — the x10 sweep caught the "
-        "un-distinct-ed set flipping to SMJ); blue-part predicate "
-        "pushed below the aggregate as a broadcast semi-join (r9 "
-        "shuffle audit: 8.4x less shuffle at sf0.1)",
+        min_bhj=3, max_smj=0, pushdown=True,
+        note="the DISTINCT-ed suppkey set broadcasts at any scale",
     ),
     "q6_forecast_revenue": dict(
-        max_exchanges=1, max_scans=1, pushdown=True,
+        max_exchanges=1, pushdown=True,
         note="pure scan+agg; range predicates MUST reach the scan",
     ),
     "q19_disjunctive_pushdown": dict(
-        max_exchanges=1, max_scans=2, min_bhj=1, max_smj=0, pushdown=True,
+        max_exchanges=1, min_bhj=1, max_smj=0, pushdown=True,
         note="OR-of-ANDs partially pushed; broadcast part side",
     ),
     "range_partition_plan": dict(
-        max_exchanges=1, max_scans=1, max_bnlj=2,
-        note="r11 cumulative-quantile rewrite: bounds come from ONE "
-        "distributed prefix-sum pass instead of 7 percentile_disc "
-        "buffers. r15: the per-bucket aggregate carries only the "
-        "count (any_value(bounds) made it a SortAggregate). r16 "
-        "(ADVICE item 1): the 1-row bounds frame is PINNED — the r15 "
-        "claim that the two broadcast subtrees canonicalize was "
-        "false (column pruning made them 1-col vs 2-col, so the "
-        "orders count shuffle + prefix sum ran TWICE); now the "
-        "quantile pipeline runs once at pin time and the visible "
-        "plan is one orders scan + 2 broadcast crosses of the "
-        "checkpointed row + the bucket-count exchange (min_bhj "
-        "dropped — the offset broadcasts run at pin time)",
-    ),
-    # -- iterative fixpoints: the returned DF is a localCheckpoint
-    # scan (rounds ran eagerly), so only blanket invariants apply --
-    "dedup_cluster_components": dict(
-        note="fixpoint rounds execute at build; final DF is checkpointed"
+        max_exchanges=1, max_bnlj=2,
+        note="pinned bounds: one orders scan, one bucket-count exchange",
     ),
     "dedup_cluster_components_star": dict(
-        max_exchanges=1, note="star fixpoint; final rollup exchange only"
-    ),
-    "graph_pagerank_dedup": dict(
-        note="3 fixed rounds at build; final DF checkpointed"
+        max_exchanges=1, note="rounds run at build; final rollup only"
     ),
     "join_bucketed_orderkey": dict(
         max_exchanges=0,
-        note="bucketed co-located join: ZERO exchanges is the claim "
-        "(tests/test_bucketing.py is the setup-owning twin)",
+        note="bucketed co-located join (tests/test_bucketing.py sets up)",
     ),
 }
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def _compile(spark, name: str) -> tuple[str, dict]:
-    # Compile under a CLEARED cache (r16): a cached frame left alive
-    # by an earlier test in the same session (kmeans caches its
-    # embedding projection) prints its whole InMemoryRelation subtree
-    # into every later compile that overlaps it, so the audited
-    # exchange/scan counts depended on suite order — the manifest must
-    # pin the query's OWN plan, not the session's cache history.
+# MANIFEST bound -> the audit_plan counter it bounds
+_BOUNDS = dict(
+    max_exchanges="exchanges", min_bhj="bhj", max_smj="smj", max_bnlj="bnlj"
+)
+
+
+def shape_errors(inv: dict, plan: str) -> list[str]:
+    """The MANIFEST fields in `inv` that the plan text breaks, plus the
+    blanket shapes never acceptable at any scale."""
+    a = audit_plan(plan)
+    errors = [f"{k} x{a[k]}" for k in ("cartesian", "row_python") if a[k]]
+    for field, counter in _BOUNDS.items():
+        if field not in inv:
+            continue
+        n, bound = a[counter], inv[field]
+        if (n < bound) if field.startswith("min") else (n > bound):
+            errors.append(f"{counter} {n} breaks {field}={bound}")
+    if inv.get("pushdown") and not re.search(r"PushedFilters: \[[^\]]", plan):
+        errors.append("no scan carries a non-empty PushedFilters list")
+    return errors
+
+
+def _compile(spark, name: str):
+    # Compile under a CLEARED cache: a frame cached by an earlier test
+    # in the same session shows up as a leaf InMemoryTableScan, which
+    # hides its subtree from every check here — the query's OWN plan
+    # is audited, not the session's cache history.
     spark.catalog.clearCache()
     df = all_queries()[name](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    audit = audit_plan(plan)
-    audit["pushed_filters"] = len(
-        re.findall(r"PushedFilters: \[[^\]]", plan)
-    )
-    return plan, audit
+    return df, df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.mark.parametrize("name", sorted(MANIFEST))
 def test_plan_invariants(spark, name):
     inv = MANIFEST[name]
-    plan, a = _compile(spark, name)
-    errors = []
-    # blanket: never acceptable at any scale
-    if a["cartesian"]:
-        errors.append(f"CartesianProduct x{a['cartesian']}")
-    if a["row_python"]:
-        errors.append(f"row-at-a-time Python x{a['row_python']}")
-    if "max_exchanges" in inv and a["exchanges"] > inv["max_exchanges"]:
-        errors.append(
-            f"exchanges {a['exchanges']} > ceiling {inv['max_exchanges']}"
-        )
-    if "max_scans" in inv and a["scans"] > inv["max_scans"]:
-        errors.append(f"scans {a['scans']} > ceiling {inv['max_scans']}")
-    if "min_bhj" in inv and a["bhj"] < inv["min_bhj"]:
-        errors.append(
-            f"BroadcastHashJoin {a['bhj']} < floor {inv['min_bhj']} — "
-            "a designed broadcast degraded to a shuffle join"
-        )
-    if "max_smj" in inv and a["smj"] > inv["max_smj"]:
-        errors.append(f"SortMergeJoin {a['smj']} > ceiling {inv['max_smj']}")
-    if "max_bnlj" in inv and a["bnlj"] > inv["max_bnlj"]:
-        errors.append(
-            f"BroadcastNestedLoopJoin {a['bnlj']} > ceiling {inv['max_bnlj']}"
-        )
-    if inv.get("pushdown") and a["pushed_filters"] == 0:
-        errors.append("no scan carries a non-empty PushedFilters list")
+    _, plan = _compile(spark, name)
+    errors = shape_errors(inv, plan)
     assert not errors, (
         f"{name}: plan shape degraded — {'; '.join(errors)}\n"
-        f"note: {inv.get('note', '')}\naudit: {a}\n"
-        f"plan (first 4000 chars):\n{plan[:4000]}"
+        f"note: {inv['note']}\nplan (first 4000 chars):\n{plan[:4000]}"
     )
 
 
@@ -378,55 +227,54 @@ def test_manifest_names_are_registered():
 
 # The single sanctioned partition-less-window-over-unbounded-input
 # query: l4_batch_index is the reference's L3/L4 fixture form, whose
-# docstring explicitly flags it as NOT 100 TB-safe and points at the
-# scalable twin (sinks/per_record_json.py + l3_global_index_scalable).
-# Everything else with an empty partitionSpec must sit above an
-# Aggregate/Limit — the r13 audit (plan_audit.unbounded_global_windows)
-# is what stops query #210 from silently sorting a corpus-scale frame
-# on one partition.
+# docstring flags it as NOT 100 TB-safe and points at the scalable
+# twin (sinks/per_record_json.py + l3_global_index_scalable).
 UNBOUNDED_WINDOW_WHITELIST = {"l4_batch_index"}
+
+# Queries that compute one input twice (plan_audit.duplicate_exchanges):
+# column pruning, or an IsNotNull inferred on one join side only, left
+# two exchanges AQE cannot reuse. Exact: each entry must still trip the
+# rule. This is the queue for removing the duplicated work.
+DUPLICATE_WORK_ALLOWED: dict[str, str] = {
+    "dedup_title_hamming_salted": "block shuffle with and without seg_i",
+    "funnel_view_click_purchase": "per-user shuffle with and without min(ts)",
+    "mixture_token_budget": "per-source shuffle with and without count",
+    "q15_top_supplier": "revenue view twice; isnotnull(l_suppkey) one side",
+    "sample_domain_temperature": "source counts x3; isnotnull on one side",
+    "skew_salted_join_planned": "per-user shuffle as [count], [count, sum]",
+    "text_vocab_oov_rate": "corpus _spread as [doc_id, text] and [text]",
+}
 
 
 def test_registry_wide_blanket_invariants(spark):
-    """Every registered query compiles to a plan with ZERO
-    CartesianProduct, ZERO BatchEvalPython nodes, and (r13) zero
-    partition-less Windows over unbounded inputs outside the single
-    documented fixture-form whitelist. Compile-only (iterative queries
-    do execute their build-time rounds at sf0.001 — a few seconds
-    total). Counting is per-line via audit_plan, not substring, so
-    Reused/Broadcast exchanges don't confound; the window audit walks
-    the JVM plan tree, where partitionSpec is unambiguous."""
-    from plan_audit import unbounded_global_windows
-
-    queries = all_queries()
-    bad: dict[str, str] = {}
-    whitelist_tripped = False
-    for name in sorted(queries):
+    """Every registered query's plan passes the blanket shapes and the
+    plan-tree rules outside their exact allowlists. Compile-only
+    (iterative queries run their build-time rounds at sf0.001)."""
+    rules = [  # plan-tree rule, its exact allowlist
+        (unbounded_global_windows, UNBOUNDED_WINDOW_WHITELIST),
+        (duplicate_exchanges, set(DUPLICATE_WORK_ALLOWED)),
+    ]
+    stale = {(rule.__name__, n) for rule, allowed in rules for n in allowed}
+    bad: dict[str, list[str]] = {}
+    for name in sorted(all_queries()):
         try:
-            df = queries[name](spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            df, plan = _compile(spark, name)
         except Exception as e:  # noqa: BLE001
-            bad[name] = f"COMPILE_ERROR: {str(e)[:150]}"
+            bad[name] = [f"COMPILE_ERROR: {str(e)[:150]}"]
             continue
-        a = audit_plan(plan)
-        if a["cartesian"]:
-            bad[name] = f"CartesianProduct x{a['cartesian']}"
-        elif a["row_python"]:
-            bad[name] = f"BatchEvalPython x{a['row_python']}"
-        else:
-            wins = unbounded_global_windows(df)
-            if wins and name in UNBOUNDED_WINDOW_WHITELIST:
-                whitelist_tripped = True
-            elif wins:
-                bad[name] = f"UNBOUNDED_GLOBAL_WINDOW: {wins[0][:150]}"
+        found = shape_errors({}, plan)
+        for rule, allowed in rules:
+            hits = rule(df)
+            if hits and name in allowed:
+                stale.discard((rule.__name__, name))
+            else:
+                found += [f"{rule.__name__}: {h[:200]}" for h in hits]
+        if found:
+            bad[name] = found
     assert not bad, f"scale-hostile plan shapes: {bad}"
-    # the whitelist is exact, not a dead allowance: if l4_batch_index
-    # stops tripping the audit (e.g. it gains the scalable form), the
-    # whitelist entry must be deleted in the same commit
-    assert whitelist_tripped, (
-        "UNBOUNDED_WINDOW_WHITELIST entry no longer trips the audit — "
-        "remove it"
-    )
+    # an allowlist entry that no longer trips its rule is deleted in the
+    # same commit, so no allowance outlives its cause
+    assert not stale, f"allowlist entries no longer trip their rule: {stale}"
 
 
 def test_round_plan_variants_are_auditable(spark, sf_dir, monkeypatch):
@@ -437,14 +285,6 @@ def test_round_plan_variants_are_auditable(spark, sf_dir, monkeypatch):
     blind on exactly the family where a scale regression hides — and
     that each fixpoint query and its stand-in build the SAME round
     function, so a re-forked copy of a round body fails here."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
-    )
-    from plan_audit import audit_plan
-
     from wiki_data_pipeline_spark.plans import llm_ops
     from wiki_data_pipeline_spark.plans.registry import get
     from wiki_data_pipeline_spark.plans.scale_audit import round_plan_variants
@@ -493,15 +333,10 @@ def test_round_plan_variants_are_auditable(spark, sf_dir, monkeypatch):
 
 
 def test_window_audit_catches_reexpanded_bound(spark):
-    """r14 (ADVICE): a bound BELOW a row-multiplying operator does not
-    bound the window — explode(agg(...)) re-expands cardinality, so a
+    """A bound BELOW a row-multiplying operator does not bound the
+    window — explode(agg(...)) re-expands cardinality, so a
     partition-less window above it must flag even though an Aggregate
-    sits in the subtree. The pre-fix audit searched the whole subtree
-    for any bound and passed exactly this shape."""
-    from pyspark.sql import Window
-
-    from plan_audit import unbounded_global_windows
-
+    sits in the subtree."""
     agged = (
         spark.range(1000)
         .groupBy((F.col("id") % 10).alias("g"))
@@ -524,14 +359,9 @@ def test_window_audit_catches_reexpanded_bound(spark):
 
 
 def test_window_audit_union_needs_all_children_bounded(spark):
-    """r15 (ADVICE): a union's cardinality is the SUM of its children,
-    so union(bounded, corpus-sized) is NOT bounded — the pre-fix any()
-    search blessed a partition-less window over exactly that shape.
-    union(bounded, bounded) stays clean."""
-    from pyspark.sql import Window
-
-    from plan_audit import unbounded_global_windows
-
+    """A union's cardinality is the SUM of its children, so
+    union(bounded, corpus-sized) is NOT bounded; union(bounded,
+    bounded) stays clean."""
     bounded = (
         spark.range(1000)
         .groupBy((F.col("id") % 10).alias("k"))
@@ -564,13 +394,9 @@ def test_window_audit_union_needs_all_children_bounded(spark):
 
 
 def test_window_audit_cartesian_product_stops_bound_search(spark):
-    """r15 (ADVICE): CartesianProductExec's node name does not contain
-    'Join', so the row-multiplying stop-list must name it explicitly —
-    a bound BELOW a cartesian product does not bound the product."""
-    from pyspark.sql import Window
-
-    from plan_audit import unbounded_global_windows
-
+    """CartesianProductExec's node name does not contain 'Join', so
+    the row-multiplying stop-list must name it explicitly — a bound
+    BELOW a cartesian product does not bound the product."""
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # force a genuine CartesianProductExec (broadcast disabled;
@@ -597,3 +423,75 @@ def test_window_audit_cartesian_product_stops_bound_search(spark):
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_duplicate_work_audit_flags_a_pruned_consumer(spark):
+    """Two consumers of one aggregate that read different columns get
+    two exchanges AQE cannot reuse — the range_partition_plan shape,
+    where pruning dropped any_value(total) from one consumer. Two
+    consumers reading the SAME columns canonicalize and are reused."""
+    agg = spark.range(1000).groupBy((F.col("id") % 10).alias("k")).agg(
+        F.count("*").alias("n"), F.sum("id").alias("s")
+    )
+    pruned = agg.select("k", "n").join(agg.select("k", "s"), "k")
+    assert duplicate_exchanges(pruned), "pruned consumer pair not flagged"
+    same = agg.select("k", "n")
+    reused = same.join(same.select("k", F.col("n").alias("n2")), "k")
+    assert duplicate_exchanges(reused) == []
+
+
+def test_duplicate_work_audit_exempts_scan_broadcasts(spark):
+    """A broadcast of a filtered scan used twice, once per column set,
+    is exempt: the broadcast threshold already bounds its size."""
+    small = spark.range(100).filter(F.col("id") % 3 == 0).select(
+        "id", (F.col("id") * 2).alias("x")
+    )
+    big = spark.range(100_000)
+    twice = big.join(F.broadcast(small.select("id")), "id").unionByName(
+        big.join(F.broadcast(small), "id").select(
+            (F.col("id") + F.col("x")).alias("id")
+        )
+    )
+    plan = twice._jdf.queryExecution().executedPlan().toString()
+    assert audit_plan(plan)["broadcast_exchanges"] == 2
+    assert duplicate_exchanges(twice) == []
+
+
+def test_duplicate_work_audit_resolves_grouping_aliases(spark):
+    """Pulled-out grouping keys all print as `_groupingexpression`; the
+    rule compares what they alias, so two salts are two inputs (the
+    CMS salt literals '#0'/'#1' also defeat an id-stripping regex)."""
+    salted = [
+        spark.range(1000).groupBy(
+            F.concat((F.col("id") % 10).cast("string"), F.lit(f"#{s}"))
+            .alias("k")
+        ).agg(F.count("*").alias("n"))
+        for s in (0, 1)
+    ]
+    both = salted[0].unionByName(salted[1])
+    plan = both._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("_groupingexpression") >= 2
+    assert duplicate_exchanges(both) == []
+
+
+def test_duplicate_work_audit_ignores_inferred_isnotnull(spark):
+    """Catalyst infers isnotnull(k) on the join side only and pushes it
+    below that consumer's aggregate; the other consumer's aggregate has
+    no filter. The two are still one input computed twice. The input
+    is checkpointed so the inferred filter stays a plain isnotnull(k)
+    above the scan instead of being rewritten through a projection."""
+    rows = (
+        spark.range(1000)
+        .select(
+            F.when(F.col("id") % 7 != 0, F.col("id") % 10).alias("k"),
+            F.col("id").alias("v"),
+        )
+        .localCheckpoint()
+    )
+    agg = rows.groupBy("k").agg(F.sum("v").alias("s"))
+    keys = spark.range(10).select(F.col("id").alias("k"))
+    top = agg.agg(F.max("s").alias("m"))
+    both = agg.join(keys, "k").crossJoin(F.broadcast(top))
+    plan = both._jdf.queryExecution().executedPlan().toString()
+    assert "isnotnull(k" in plan
+    assert duplicate_exchanges(both), "one-sided IsNotNull hid the pair"

@@ -1,16 +1,14 @@
-"""Plan-shape invariants recompiled against the 10x replica (r9).
+"""Plan-shape invariants recompiled against the 10x replica.
 
-The sf0.001 manifest (test_plan_invariants.py) pins the audited plan
-shape at fixture scale — but Catalyst's join-strategy pick is
-STATS-DRIVEN: a "designed broadcast" that is really an accident of
-small files (a fact-side branch sitting under
+Catalyst's join-strategy pick is STATS-DRIVEN: a "designed broadcast"
+that is really an accident of small files (a fact-side branch under
 spark.sql.autoBroadcastJoinThreshold at the fixture SF) silently
-degrades to a SortMergeJoin the moment the table grows past the
-threshold, and no fixture-SF test can see it. This module recompiles
-the SAME manifest against the 10x decorrelated replica that
-`bench.py --sf1` / `tools/scale_probe.py build_scaled` materialize
-under `.scale/x10` (facts 10x, dims fixed — the shape a real scale-up
-has), asserting the scale-critical subset of each entry's invariants:
+degrades to a SortMergeJoin once the table outgrows the threshold, and
+no fixture-SF test can see it. This module recompiles the manifest of
+test_plan_invariants.py against the 10x replica that `bench.py --sf1` /
+`tools/scale_probe.py build_scaled` materialize under `.scale/x10`
+(facts 10x, dims fixed — the shape a real scale-up has), asserting the
+scale-critical subset of each entry's invariants:
 
 - blanket: zero CartesianProduct, zero row-at-a-time Python;
 - ``min_bhj`` floors — every DESIGNED broadcast (dims, centroid sets,
@@ -19,11 +17,11 @@ has), asserting the scale-critical subset of each entry's invariants:
 - ``max_smj`` ceilings — the degradation a lost broadcast shows up as;
 - ``pushdown`` — predicate pushdown must still reach the scan.
 
-Exchange/scan COUNT ceilings are deliberately not re-asserted here:
-they are pinned at fixture SF, and replica file layout (coalesced
-writes) can legally change scan splits without changing the plan's
-scale behavior; the join-strategy and pushdown claims are the ones
-whose silent flip is a 100x scale-killer.
+The exchange claims and the duplicate-work rule are not re-asserted
+here: replica file layout can legally change scan splits and exchange
+placement without changing the plan's scale behavior; the
+join-strategy and pushdown claims are the ones whose silent flip is a
+100x scale-killer.
 
 Opt-in by artifact presence: skips when `.scale/x10` has not been
 built (run `python bench.py --sf1` once). The replica is a build
@@ -33,18 +31,18 @@ product, not a checked-in fixture.
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 import pytest
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(HERE, "tools"))
-from plan_audit import audit_plan, unbounded_global_windows  # noqa: E402
+from plan_audit import unbounded_global_windows  # noqa: E402
 
 from test_plan_invariants import (  # noqa: E402
     MANIFEST,
     UNBOUNDED_WINDOW_WHITELIST,
+    shape_errors,
 )
 
 from wiki_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
@@ -54,8 +52,8 @@ X10_DIR = os.environ.get(
 )
 
 pytestmark = [
-    # heavy tier (r16): the x10 recompile sweep ran ~8 min alone and
-    # the replica is a build product — builder-tier by construction
+    # heavy tier: the replica is a build product, and the cluster-profile
+    # sweep alone took 24 min on 4 cores
     pytest.mark.heavy,
     pytest.mark.skipif(
         not os.path.exists(os.path.join(X10_DIR, "_DONE")),
@@ -65,13 +63,8 @@ pytestmark = [
 
 # Fixpoint queries execute their build-time rounds eagerly at compile;
 # at 10x data each costs tens of seconds and their returned DF is a
-# checkpoint scan carrying no join-strategy claims (their sf0.001
-# entries assert blanket-only for the same reason) — skip them here.
-_EAGER_FIXPOINTS = {
-    "dedup_cluster_components",
-    "dedup_cluster_components_star",
-    "graph_pagerank_dedup",
-}
+# checkpoint scan carrying no join-strategy claims — skip them here.
+_EAGER_FIXPOINTS = {"dedup_cluster_components_star"}
 
 # join_bucketed_orderkey reads the bucketed warehouse table that
 # tests/test_bucketing.py materializes from the fixture SF — there is
@@ -79,43 +72,28 @@ _EAGER_FIXPOINTS = {
 _FIXTURE_BOUND = {"join_bucketed_orderkey"}
 
 X10_NAMES = sorted(set(MANIFEST) - _EAGER_FIXPOINTS - _FIXTURE_BOUND)
+# the join-strategy and pushdown claims (see the module docstring)
+_X10_FIELDS = ("min_bhj", "max_smj", "pushdown")
 
 
 def _x10_invariant_errors(spark, name: str) -> list[str]:
     """The scale-critical per-query checks, reusable across conf
-    regimes (session defaults and the 100 TB cluster profile)."""
+    regimes (session defaults and the 100 TB cluster profile). A
+    broken min_bhj floor means a designed broadcast held at fixture SF
+    but degraded at 10x: an accident of small stats, not a fixed-size
+    build side."""
     inv = MANIFEST[name]
     df = all_queries()[name](spark, X10_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    a = audit_plan(plan)
-    pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
-    errors = []
-    if a["cartesian"]:
-        errors.append(f"CartesianProduct x{a['cartesian']}")
-    if a["row_python"]:
-        errors.append(f"row-at-a-time Python x{a['row_python']}")
-    if "min_bhj" in inv and a["bhj"] < inv["min_bhj"]:
-        errors.append(
-            f"BroadcastHashJoin {a['bhj']} < floor {inv['min_bhj']} — "
-            "a designed broadcast held at fixture SF but degraded at "
-            "10x: it was an accident of small stats, not a fixed-size "
-            "build side"
-        )
-    if "max_smj" in inv and a["smj"] > inv["max_smj"]:
-        errors.append(f"SortMergeJoin {a['smj']} > ceiling {inv['max_smj']}")
-    if inv.get("pushdown") and pushed == 0:
-        errors.append("no scan carries a non-empty PushedFilters list")
+    errors = shape_errors({k: inv[k] for k in _X10_FIELDS if k in inv}, plan)
     if name not in UNBOUNDED_WINDOW_WHITELIST:
-        wins = unbounded_global_windows(df)
-        if wins:
-            errors.append(
-                f"partition-less Window over unbounded input at 10x: "
-                f"{wins[0][:150]}"
-            )
+        errors += [
+            f"unbounded_global_windows: {w[:150]}"
+            for w in unbounded_global_windows(df)
+        ]
     if errors:
         errors.append(
-            f"note: {inv.get('note', '')} audit: {a} "
-            f"plan (first 2000 chars): {plan[:2000]}"
+            f"note: {inv['note']} plan (first 2000 chars): {plan[:2000]}"
         )
     return errors
 
@@ -132,23 +110,18 @@ def test_plan_invariants_hold_at_x10(spark, name):
 def test_plan_invariants_hold_at_x10_under_cluster_profile(
     spark, tmp_path
 ):
-    """The x10 invariants tier re-run with the deployable 100 TB
-    profile APPLIED, not just key-checked (r14, verdict item 5): AQE
-    initialPartitionNum 8192 + 128 MB advisory coalescing + 256 MB
-    scan partitions genuinely change physical plans, and the
+    """The x10 invariants re-run with the deployable 100 TB profile
+    APPLIED: AQE initialPartitionNum 8192 + 128 MB advisory coalescing
+    + 256 MB scan partitions change physical plans, and the
     join-strategy/pushdown/window claims must survive that regime.
 
     Only the profile's runtime-settable keys can apply to a live
-    session (serializer / dynamicAllocation / speculation are
-    JVM-static submit-time confs — exercising those needs a real
-    cluster); the SQL-planning keys are exactly the ones that shape
-    plans, so this is the aperture that matters. The pin checkpoint
-    dir is redirected from the deliberately-unreachable DFS
-    placeholder to a local tmp dir, which ALSO exercises the
-    reliable pin tier live for every pin-routed query that compiles
-    eagerly here. One conf apply/restore around a single loop (not a
-    parametrize) so a mid-run failure cannot leak profile confs into
-    the rest of the session-scoped fixture's tests."""
+    session; the SQL-planning keys are the ones that shape plans. The
+    pin checkpoint dir is redirected from the unreachable DFS
+    placeholder to a local tmp dir, which also exercises the reliable
+    pin tier for every pin-routed query built here. One conf
+    apply/restore around a single loop (not a parametrize) so a failure
+    cannot leak profile confs into the session-scoped fixture."""
     sys.path.insert(0, HERE)
     from wiki_data_pipeline_spark.operators.pin import PIN_DIR_KEY
     from wiki_data_pipeline_spark.session import load_profile

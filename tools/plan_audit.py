@@ -3,18 +3,19 @@ tools/plan_audit.py [sf_dir] [name ...]`.
 
 For every registered query, compiles the physical plan (no execution)
 and counts the structures that matter at 100 TB: parquet scans (and
-scans per distinct table — repeated scans of one table often mean a
-branch that ReuseExchange can't collapse, the round-6 tfidf finding),
-exchanges, single-partition exchanges, explodes, join strategies,
-cartesian products, and Python-eval nodes (Arrow-batched vs
-row-at-a-time). Prints one JSON line per query plus a summary of
-flagged queries.
+scans per distinct table), exchanges, single-partition exchanges,
+explodes, join strategies, cartesian products, and Python-eval nodes
+(Arrow-batched vs row-at-a-time). It also applies the two plan-tree
+rules that tests/test_plan_invariants.py asserts over the registry:
+partition-less windows over unbounded inputs, and duplicated exchange
+work (`duplicate_exchanges`). Prints one JSON line per query plus a
+summary of flagged queries.
 
-Flags are HEURISTICS for a human to read, not failures: a two-LM
-surprisal score legitimately scans its corpus twice, and the
-fixture-window L3/L4 forms legitimately use a single partition (their
-scale-safe twins are separate queries). The audit makes every such
-choice visible so it is a decision, not an accident.
+Flags are for a human to read, not failures: the fixture-window L3/L4
+forms legitimately use a single partition (their scale-safe twins are
+separate queries), and the test suite keeps the exact allowlists. The
+audit makes every such choice visible so it is a decision, not an
+accident.
 """
 
 from __future__ import annotations
@@ -76,23 +77,17 @@ def audit_plan(plan: str) -> dict:
     }
 
 
-# --- partition-less Window audit (r13, verdict item 6) ---------------
+# --- partition-less Window audit --------------------------------------
 # A Window with no PARTITION BY moves its entire input to ONE
 # partition — fine above an aggregate/limit whose output is
 # schema-sized, a 100 TB scale-killer above anything corpus-sized.
-# Today's partition-less windows all sit above bounded frames (or are
-# the documented fixture-scale L3 form); this audit is what stops
-# query #210 from silently sorting a corpus on one partition. Tree
-# walk over the JVM plan (not text): WindowExec's partitionSpec and
-# the bounding Aggregate/Limit are unambiguous on the nodes, brittle
-# in the string form.
+# Tree walk over the JVM plan (not text): WindowExec's partitionSpec
+# and the bounding Aggregate/Limit are unambiguous on the nodes,
+# brittle in the string form.
 
 # Only WindowExec is the hazard: WindowGroupLimitExec is Spark's
-# rank-limit PUSHDOWN (a partial-mode WGL above a scan keeps k rows
-# per partition — scale-safe by construction, and the reason a
-# partition-less rank()<=k plan avoids the global sort), so it counts
-# as a BOUND below, never as a violation itself (r13 review fix: the
-# first cut flagged the partial WGL and excused the costly Final one).
+# rank-limit PUSHDOWN (a partial-mode WGL keeps k rows per partition,
+# scale-safe by construction), so it counts as a BOUND below.
 _WINDOW_NODES = {"WindowExec"}
 _BOUNDING_NODES = {
     # aggregates: output is group-count-sized, not input-sized
@@ -108,6 +103,10 @@ _BOUNDING_NODES = {
 }
 
 
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.length())]
+
+
 def _jchildren(node):
     name = node.getClass().getSimpleName()
     if name == "AdaptiveSparkPlanExec":
@@ -116,21 +115,14 @@ def _jchildren(node):
         # references (not re-executes) another exchange subtree — the
         # bound, if any, lives in the referenced child
         return [node.child()]
-    ch = node.children()
-    return [ch.apply(i) for i in range(ch.length())]
+    return _seq(node.children())
 
 
 # Row-multiplying nodes BETWEEN a bound and the window re-expand
-# cardinality, so a bound below them does not bound the window's
-# frame (r14, ADVICE: a partition-less window over explode(agg(...))
-# sorted a re-expanded frame on one partition yet passed the audit).
-# The bounded-subtree search must stop when it crosses one. Joins:
-# every join exec can multiply rows (even Left/Semi variants change
-# cardinality in ways the audit can't bound statically), so any
-# *Join* node name stops the search — and CartesianProductExec, whose
-# name does NOT contain "Join", is listed explicitly (r15 ADVICE: the
-# blanket cartesian==0 asserts cover registered queries, but the
-# bounded-subtree search itself must not bless a bound below one).
+# cardinality (explode(agg(...))), so the bounded-subtree search stops
+# when it crosses one. Every join exec can multiply rows, so any *Join*
+# node name stops it — and CartesianProductExec, whose name does NOT
+# contain "Join", is listed explicitly.
 _ROW_MULTIPLYING_NODES = {
     "GenerateExec",
     "ExpandExec",
@@ -151,8 +143,7 @@ def _subtree_is_bounded(node) -> bool:
     children = _jchildren(node)
     if name == "UnionExec":
         # a union's cardinality is the SUM of its children — one
-        # bounded branch does not bound the union (r15 ADVICE:
-        # union(limit-bounded, corpus-sized) passed the any() search)
+        # bounded branch does not bound the union
         return bool(children) and all(
             _subtree_is_bounded(c) for c in children
         )
@@ -183,15 +174,144 @@ def unbounded_global_windows(df) -> list[str]:
     return out
 
 
+# --- duplicate-work audit ---------------------------------------------
+# AQE reuses an exchange only when its subtree matches another one
+# EXACTLY under Catalyst's `canonicalized` form. Column pruning breaks
+# that: two consumers of one frame that read different columns get two
+# exchanges that differ only in their column lists, and the input runs
+# twice. The rule fingerprints every exchange subtree with pruning
+# ignored — projections, scan column lists and aggregate functions
+# skipped, inferred IsNotNull conjuncts dropped — and flags a pair whose
+# fingerprints match but whose canonical forms do not.
+
+# carry no work of their own beyond the column list
+_TRANSPARENT_NODES = {
+    "ProjectExec", "ColumnarToRowExec", "InputAdapter", "WholeStageCodegenExec"
+}
+_GROUPING_ALIAS = "_groupingexpression"
+
+
+def _sql(e, aliases: dict) -> str:
+    """`e.sql()` (names, no expression ids), with the planner's
+    `_groupingexpression` aliases replaced by what they alias — every
+    pulled-out grouping key prints under that one name."""
+    text = e.sql()
+    if _GROUPING_ALIAS not in text:
+        return text
+    if e.getClass().getSimpleName() == "AttributeReference":
+        return aliases.get(e.exprId().id(), text)
+    kids = ", ".join(_sql(c, aliases) for c in _seq(e.children()))
+    return f"{text}[{kids}]"
+
+
+def _conjuncts(e, aliases: dict) -> list[str]:
+    """Condition conjuncts without IsNotNull: Catalyst infers those on
+    one join side only, so they differ between consumers of the same
+    input."""
+    kind = e.getClass().getSimpleName()
+    if kind == "And":
+        return _conjuncts(e.left(), aliases) + _conjuncts(e.right(), aliases)
+    return [] if kind == "IsNotNull" else [_sql(e, aliases)]
+
+
+def _node_key(node, name: str, aliases: dict):
+    """What two nodes must share to do the same work, column lists
+    aside; None makes the node transparent."""
+
+    def sqls(seq) -> tuple[str, ...]:
+        return tuple(_sql(e, aliases) for e in _seq(seq))
+
+    def cond(opt) -> tuple[str, ...]:  # sorted: pushdown order varies
+        c = _conjuncts(opt.get(), aliases) if opt.isDefined() else []
+        return tuple(sorted(c))
+
+    if name in _TRANSPARENT_NODES:
+        return None
+    if name.endswith("AggregateExec"):
+        return (name, sqls(node.groupingExpressions()))
+    if name == "FilterExec":
+        conj = tuple(sorted(_conjuncts(node.condition(), aliases)))
+        return (name, conj) if conj else None
+    if name.endswith("HashJoinExec") or name == "SortMergeJoinExec":
+        keys = (sqls(node.leftKeys()), sqls(node.rightKeys()))
+        return (name, node.joinType().toString(), keys, cond(node.condition()))
+    if name == "BroadcastNestedLoopJoinExec":
+        sides = (node.joinType().toString(), node.buildSide().toString())
+        return (name, sides, cond(node.condition()))
+    if name == "WindowExec":
+        return (name, sqls(node.partitionSpec()), sqls(node.orderSpec()))
+    if name == "GenerateExec":
+        return (name, _sql(node.generator(), aliases), node.outer())
+    if name == "ShuffleExchangeExec":
+        p = node.outputPartitioning()
+        kind = p.getClass().getSimpleName()
+        keyed = kind in ("HashPartitioning", "RangePartitioning")
+        exprs = sqls(p.children()) if keyed else ()
+        return (name, kind, p.numPartitions(), exprs)
+    if name == "FileSourceScanExec":
+        return (name, node.relation().location().rootPaths().toString())
+    if name == "RDDScanExec":  # a pin: the checkpointed RDD is the input
+        return (name, node.rdd().id())
+    if name == "InMemoryTableScanExec":
+        return (name, node.relation().cacheBuilder().hashCode())
+    if name == "RangeExec":
+        return (name, node.range().toString())
+    return (name, sqls(node.expressions()))  # anything else in full
+
+
+def duplicate_exchanges(df) -> list[str]:
+    """Exchange subtrees that compute the same input as another one but
+    cannot be reused by it: equal with column pruning ignored, unequal
+    under `canonicalized`. A broadcast of a scan plus filters and
+    projections is exempt — the broadcast threshold bounds its size.
+    Returns one description per duplicated subtree (empty = clean)."""
+    aliases: dict = {}  # _groupingexpression exprId -> aliased sql
+    exchanges: dict = {}  # fingerprint -> [exchange nodes]
+
+    def walk(node) -> tuple[tuple, bool]:
+        """(fingerprint, is the subtree a scan plus filters/projects);
+        bottom-up, so a grouping alias is known before its users."""
+        name = node.getClass().getSimpleName()
+        kids = [walk(c) for c in _jchildren(node)]
+        if name == "AdaptiveSparkPlanExec":
+            return kids[0]
+        if name == "ProjectExec":
+            for e in _seq(node.projectList()):
+                if e.getClass().getSimpleName() == "Alias" and e.name(
+                ).startswith(_GROUPING_ALIAS):
+                    aliases[e.exprId().id()] = e.child().sql()
+        scan_only = (
+            "Scan" in name
+            or name in _TRANSPARENT_NODES | {"FilterExec", "RangeExec"}
+        ) and all(s for _, s in kids)
+        key = _node_key(node, name, aliases)
+        fps = tuple(fp for fp, _ in kids)
+        fp = fps[0] if key is None else (key, fps)
+        if name == "ShuffleExchangeExec" or (
+            name == "BroadcastExchangeExec" and not kids[0][1]
+        ):
+            exchanges.setdefault(fp, []).append(node)
+        return fp, scan_only
+
+    walk(df._jdf.queryExecution().executedPlan())
+    out = []
+    for nodes in exchanges.values():
+        forms = [nodes[0]]
+        for n in nodes[1:]:
+            if not any(n.sameResult(f) for f in forms):
+                forms.append(n)
+        if len(forms) > 1:
+            cols = [[a.name() for a in _seq(f.output())] for f in forms]
+            out.append(f"{forms[0].nodeName()} x{len(nodes)}, columns {cols}")
+    return out
+
+
 def flags_for(name: str, a: dict) -> list[str]:
     out = []
     if a["cartesian"]:
         out.append("CARTESIAN")
     if a["row_python"]:
         out.append("ROW_PYTHON")
-    dup = {t: n for t, n in a["scans_per_table"].items() if n >= 3}
-    if dup:
-        out.append(f"SCANx3+:{dup}")
     if a["single_partition"] >= 2:
         out.append(f"SINGLE_PART x{a['single_partition']}")
     return out
@@ -216,6 +336,7 @@ def main() -> None:
 
     flagged: dict[str, list[str]] = {}
     for name in selected:
+        spark.catalog.clearCache()  # a cached leaf would hide its subtree
         try:
             df = queries[name](spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
@@ -228,8 +349,10 @@ def main() -> None:
         try:
             for v in unbounded_global_windows(df):
                 fl.append(f"UNBOUNDED_GLOBAL_WINDOW: {v[:120]}")
+            for v in duplicate_exchanges(df):
+                fl.append(f"DUPLICATE_EXCHANGE: {v[:160]}")
         except Exception as e:  # noqa: BLE001
-            fl.append(f"WINDOW_AUDIT_ERROR: {str(e)[:120]}")
+            fl.append(f"TREE_AUDIT_ERROR: {str(e)[:120]}")
         if fl:
             flagged[name] = fl
         print(json.dumps({"name": name, **a, "flags": fl}))
