@@ -1,6 +1,17 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+"""Benchmark runner on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line.
+
+    python bench.py                     sf0.1 run ($SPARK_GRAFT_SF_DIR)
+    python bench.py --sf1               x10 replica run (BENCH_SF1.json)
+    python bench.py [--sf1] --refreeze TAG
+                                        the same run, then re-freeze
+                                        its baseline (archive[TAG])
+
+The sf0.1 run times every registered query, reports the HEADLINE sum
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+on stdout and the full table in BENCH_SPREAD.json. The x10 run times
+every query at a x1 and a x10 replica and writes BENCH_SF1.json. Both
+gate every query against their frozen baseline (BENCH_BASELINE.json,
+BENCH_SF1_BASELINE.json) and append first-seen medians to it.
 
 Each query is forced end-to-end with the noop sink (full execution,
 no driver-side collect bottleneck). Session startup and JVM warmup are
@@ -12,13 +23,18 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "tools"))
 
-from wiki_data_pipeline_spark.plans.registry import all_queries
-from wiki_data_pipeline_spark.session import get_spark
+from scale_probe import build_scaled  # noqa: E402
+
+from wiki_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
+from wiki_data_pipeline_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -93,11 +109,11 @@ HEADLINE = [
     "streaming_lateness_profile",
 ]
 
-# Regression-gate baseline: a frozen snapshot covering ALL headline
-# queries (BENCH_BASELINE.json merges the r1 medians with first-seen
-# medians for queries added after r1). Path overridable for local
-# experiments; queries absent from it are skipped by the gate.
-BASELINE_BENCH = os.environ.get("SPARK_GRAFT_BENCH_BASELINE", "BENCH_BASELINE.json")
+# Regression-gate baseline: a frozen snapshot covering every registered
+# query (BENCH_BASELINE.json merges the r1 medians with first-seen
+# medians for queries added after r1); queries absent from it are
+# skipped by the gate and frozen at the end of the run.
+BASELINE_BENCH = "BENCH_BASELINE.json"
 REGRESSION_FACTOR = 2.0
 # Absolute-slowdown floor for the regression gate. A pure ratio gate
 # has no noise floor: round 7 flagged a3_status_counts at "2.18x" on a
@@ -265,171 +281,17 @@ def compute_regressions(
     return out
 
 
-def _load_baseline() -> dict[str, float]:
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), BASELINE_BENCH)
-    if not os.path.exists(path):
-        return {}
-    try:
-        with open(path, encoding="utf-8") as f:
-            doc = json.load(f)
-        return (doc.get("parsed") or doc).get("queries") or {}
-    except (json.JSONDecodeError, AttributeError):
-        return {}
-
-
 # --- sf1 scale surface (r9 verdict item 3) ---------------------------
-# The second decade as a GATED artifact, not an ad-hoc probe: the ~25
-# heaviest queries (plus the session sentinels) run at sf0.1 AND at a
-# 10x decorrelated replica ("sf1", built by tools/scale_probe.py's
-# build_scaled — replica construction documented there: disjoint
-# shingle spaces, shifted embeddings, offset keys, fixed dims), in ONE
-# session so the per-query scaling exponent log10(t_sf1/t_sf0.1) is
-# host-load-self-normalized. The sf1 timings gate against
-# BENCH_SF1_BASELINE.json with the same 2x factor + absolute floor +
-# sentinel session normalization as the sf0.1 gate (floor scaled 10x:
-# at 10x data, a real regression costs seconds). First run freezes the
-# baseline; artifact lands in BENCH_SF1.json.
-SF1_QUERIES = [
-    # sentinels first (session_ratio needs them)
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "dedup_exact",
-    # heaviest by frozen sf0.1 cost, spanning every big-data family
-    "dedup_minhash_verified",
-    "text_winnow_fingerprint",
-    "dedup_minhash_calibration",
-    "pipeline_yield_report",
-    "dedup_family_agreement",
-    "join_bloom_runtime_filter",
-    "graph_pagerank_dedup",
-    "dedup_keep_best",
-    "cluster_kmeans_embeddings",
-    "dedup_simhash_hamming_histogram",
-    "score_bigram_surprisal",
-    "dedup_cluster_components",
-    "sample_dsir_importance",
-    "graph_triangle_stats",
-    "pipeline_quality_gate",
-    "q20_dominant_suppliers",
-    "sim_ann_recall_eval",
-    "contamination_apply_clean",
-    "sim_ann_ivf",
-    "dedup_minhash_lsh",
-    "q9_product_profit",
-    "q18_large_orders",
-    # r10 widening (verdict item 4): the next tier by frozen sf0.1
-    # cost, bringing the gated set to 55 — the sf1 gate is the only
-    # instrument that has caught an O(N^2) defect (r9 IVF), so its
-    # aperture grows every round the budget allows
-    "join_bucketed_orderkey",
-    "dedup_cluster_components_star",
-    "range_partition_plan",
-    "dedup_impact_report",
-    "dedup_simhash",
-    "graph_degree_histogram",
-    "dedup_substring_spans",
-    "text_char_entropy",
-    "dedup_semantic_keep",
-    "text_shingle_novelty",
-    "split_leakage_minhash",
-    "bloom_filter_probe",
-    "dedup_paragraph_chunks",
-    "sim_ann_pq_rerank",
-    "score_unigram_surprisal",
-    "q2_min_cost_supplier",
-    "quality_gopher_filters",
-    "st_props_schema_audit",
-    "text_vocab_oov_rate",
-    "sql_segment_revenue",
-    "dedup_title_hamming",
-    "dedup_ngram_jaccard",
-    "q8_market_share",
-    "sim_ann_pq_adc",
-    "contamination_ngram_overlap",
-    "q10_returned_revenue",
-    "sketch_bloom_fpp_curve",
-    # r10 second widening (same round, after the HOF-lambda fixes
-    # freed budget): next-25 tier by frozen sf0.1 cost -> 80 gated
-    "dedup_incremental_minhash",
-    "dedup_title_hamming_salted",
-    "sql_recursive_hierarchy",
-    "join_interval_overlap",
-    "ann_pq_codes",
-    "sketch_cms_join_cardinality",
-    "q7_nation_trade_volume",
-    "sim_ivf_cell_stats",
-    "cdc_merge_apply",
-    "sketch_count_min_heavy_hitters",
-    "text_tfidf_keywords",
-    "q5_star_join_revenue",
-    "pack_sequences_concat",
-    "dedup_ngram_containment",
-    "q21_sole_blame_suppliers",
-    "quality_column_profile",
-    "sim_label_purity",
-    "text_unicode_normalize",
-    "dedup_embedding_cosine",
-    "pipeline_training_prep",
-    "ann_pq_reconstruction_eval",
-    "sim_ann_lsh",
-    "bpe_pair_counts",
-    "multimodal_audio_stats",
-    "window_session_30m",
-    # r11 widening (verdict item 6): next-40 tier by frozen sf0.1
-    # cost -> 120 gated. The sf1 gate has caught four O(N^2) defects
-    # to date (r9 IVF, r10 title-Hamming flat join, r10 SemDeDup
-    # blocking, r10 salted twin) — its aperture grows every round the
-    # wall-clock budget allows.
-    "join_cogrouped_asof",
-    "sketch_approx_distinct_check",
-    "q17_small_quantity_revenue",
-    "window_rolling_distinct_users",
-    "sessionize_session_stats",
-    "sim_cosine_topk",
-    "path_common_triples",
-    "join_asof_forward",
-    "q12_late_shipment_priority",
-    "events_anomaly_mad",
-    "q4_priority_semijoin",
-    "l3_global_index_scalable",
-    "window_rolling_distinct_hll",
-    "emb_random_projection",
-    "q16_supplier_part_counts",
-    "path_markov_transitions",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "mixture_token_budget",
-    "text_top_tokens",
-    "join_asof",
-    "cdc_merge_plan",
-    "window_range_interval",
-    "text_token_idf",
-    "window_moving_value",
-    "streaming_lateness_profile",
-    "compliance_delete_plan",
-    "events_hourly_seasonality",
-    "incr_topk_maintenance",
-    "sample_domain_temperature",
-    "skew_salted_join_planned",
-    "incr_agg_merge",
-    "text_lang_confusion",
-    "ts_minute_gap_fill",
-    "events_minute_ohlc",
-    "sketch_quantile_rank_check",
-    "q19_disjunctive_pushdown",
-    "layout_zorder_files",
-    "q14_promo_revenue_share",
-    "window_rank_functions",
-    "snapshot_expiry_plan",
-    "window_tumbling_hourly",
-    "q11_important_parts",
-]
-# r11 final widening: the ENTIRE registry is gated. The explicit list
-# above keeps the curated heavy-first ordering; this dynamic tail
-# guarantees no registered query — present or future — can sit outside
-# the gate's aperture (the append-only baseline freeze in run_sf1
-# assigns first-run medians to newly gated names automatically).
-SF1_QUERIES += sorted(n for n in all_queries() if n not in set(SF1_QUERIES))
+# The second decade as a GATED artifact, not an ad-hoc probe: every
+# registered query runs at a x1 AND a 10x decorrelated replica ("sf1",
+# built by tools/scale_probe.py's build_scaled — replica construction
+# documented there: disjoint shingle spaces, shifted embeddings, offset
+# keys, fixed dims), in ONE session so the per-query scaling exponent
+# log10(t_sf1/t_sf0.1) is host-load-self-normalized. The sf1 timings
+# gate against BENCH_SF1_BASELINE.json with the same 2x factor +
+# absolute floor + sentinel session normalization as the sf0.1 gate
+# (floor scaled 10x: at 10x data, a real regression costs seconds).
+# Artifact lands in BENCH_SF1.json.
 SF1_BASELINE_PATH = "BENCH_SF1_BASELINE.json"
 SF1_ABS_FLOOR_SEC = 5.0  # 10x data -> 10x the sf0.1 floor
 
@@ -474,127 +336,265 @@ def replica_layout_fingerprint(sf1_dir: str) -> dict[str, dict[str, int]]:
     return fp
 
 
-def _time_set(spark, queries, names, sf_dir, trials=3) -> dict[str, float]:
-    for name in names:  # warmup: codegen + parquet footers
+# --- the one measurement path both runs share --------------------------
+# The sf0.1 run and the --sf1 run differ only in their inputs: the scale
+# dir, the baseline file, the warm-up set and the absolute floor. Each
+# is timed by time_queries, gated by gate and frozen by freeze.
+
+
+def time_queries(spark, queries, names, sf_dir, warm) -> dict[str, list[float]]:
+    """Per-trial noop-sink wall of every query in ``names`` at
+    ``sf_dir``: one untimed run of each query in ``warm`` (JIT/codegen
+    + parquet footer cache), then three timed passes over ``names``.
+
+    The warm-up set is each run's own protocol, kept so its frozen
+    values stay comparable: the sf0.1 run warms HEADLINE only (the
+    median-of-3 already discards the one cold trial of the rest, and a
+    full-registry warmup adds ~2.5 min for no change in the median);
+    the x10 run and every sentinel re-measure warm every name. Three
+    trials and a per-query MEDIAN: the fixture host's shared disk shows
+    multi-second I/O stalls, and a median of three makes the 2x gate
+    robust to one contended trial without letting a lucky min hide a
+    real slowdown."""
+
+    def run(name: str) -> None:
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    t: dict[str, list[float]] = {n: [] for n in names}
-    for _ in range(trials):
+
+    for name in warm:
+        run(name)
+    trials: dict[str, list[float]] = {name: [] for name in names}
+    for _ in range(3):
         for name in names:
             t0 = time.perf_counter()
-            queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t[name].append(round(time.perf_counter() - t0, 3))
-    return {n: sorted(ts)[len(ts) // 2] for n, ts in t.items()}
+            run(name)
+            trials[name].append(round(time.perf_counter() - t0, 3))
+    return trials
 
 
-def run_sf1() -> None:
+def medians(trials: dict[str, list[float]]) -> dict[str, float]:
+    return {name: sorted(ts)[len(ts) // 2] for name, ts in trials.items()}
+
+
+def gate(spark, queries, sf_dir, trials, baseline, abs_floor_sec):
+    """The regression gate of both runs: returns the gated medians, the
+    gate fields both artifacts carry, and the per-query raw and
+    normalized deltas against ``baseline`` the sf0.1 sidecar ships.
+
+    Sentinel agreement check (r13): if the three sentinels disagree
+    past the band, re-measure them once — the common cause is a
+    transient load spike during one sentinel's trials — and merge by
+    per-sentinel min (strict-safe; see SENTINEL_SPREAD_BOUND). The
+    fresh medians join ``trials`` so a per-query [min, max] stays
+    consistent with the merged median. Everything downstream (session
+    ratio, regressions, exponents) reads the merged medians. The delta
+    table goes to stderr so stdout stays ONE JSON line."""
+    timings = medians(trials)
+    raw_sentinels = sentinel_ratios(timings, baseline)
+    remeasured = sentinel_spread(raw_sentinels) > SENTINEL_SPREAD_BOUND
+    if remeasured:
+        fresh = medians(time_queries(spark, queries, SENTINELS, sf_dir, SENTINELS))
+        timings = merge_remeasured(timings, fresh)
+        raw_sentinels = sentinel_ratios(timings, baseline)
+        for s, sec in fresh.items():
+            trials.setdefault(s, []).append(sec)
+    spread = sentinel_spread(raw_sentinels)
+    raw_norm = session_ratio(timings, baseline)
+    norm = gate_norm(raw_norm)
+    regressions = compute_regressions(
+        timings, baseline, abs_floor_sec=abs_floor_sec, norm=norm
+    )
+    deltas = {
+        name: round(timings[name] / baseline[name], 2)
+        for name in timings
+        if baseline.get(name)
+    }
+    report = {
+        "deltas": deltas,
+        "deltas_normalized": {n: round(d / norm, 2) for n, d in deltas.items()},
+    }
+    fields = {
+        "session_ratio": round(raw_norm, 3),
+        "session_ratio_applied": round(norm, 3),
+        "session_ratio_sentinels": raw_sentinels,
+        "session_ratio_alert": raw_norm > SESSION_RATIO_SANITY_BOUND,
+        "sentinel_spread": round(spread, 3),
+        "sentinel_spread_alert": spread > SENTINEL_SPREAD_BOUND,
+        "sentinels_remeasured": remeasured,
+        "regressions_over_2x": regressions,
+        "regressions_over_2x_normalized": {
+            n: round(timings[n] / baseline[n] / norm, 2) for n in regressions
+        },
+    }
+    if baseline:
+        print(
+            f"-- bench deltas vs the frozen baseline (this/prev, >1 = "
+            f"slower; session_ratio={raw_norm:.3f}, gate divisor "
+            f"applied={norm:.3f} (capped at {GATE_NORM_CAP}), "
+            f"sentinels={raw_sentinels}):",
+            file=sys.stderr,
+        )
+        if fields["session_ratio_alert"]:
+            print(
+                f"-- WARNING: session_ratio {norm:.3f} exceeds sanity "
+                f"bound {SESSION_RATIO_SANITY_BOUND} — either extreme "
+                "host load or a GENUINE uniform code-wide slowdown the "
+                "sentinels cannot tell apart; inspect the raw sentinel "
+                "ratios above before trusting regressions_over_2x",
+                file=sys.stderr,
+            )
+        if fields["sentinel_spread_alert"]:
+            print(
+                f"-- WARNING: sentinels disagree {spread:.3f}x "
+                f"(band {SENTINEL_SPREAD_BOUND}) even after "
+                "re-measurement — a single session_ratio cannot "
+                "normalize this run; treat deltas_normalized as "
+                "untrusted and read the RAW ratios",
+                file=sys.stderr,
+            )
+        for name in sorted(deltas, key=deltas.get, reverse=True):
+            flag = "  << REGRESSION" if name in regressions else ""
+            print(
+                f"   {name}: {timings[name]:.3f}s vs {baseline[name]:.3f}s "
+                f"= {deltas[name]:.2f}x{flag}",
+                file=sys.stderr,
+            )
+    return timings, fields, report
+
+
+def load_baseline(name: str) -> dict:
+    """The baseline document ``name`` in the artifact dir ({} if absent)."""
+    path = os.path.join(HERE, name)
+    if not os.path.exists(path):
+        return {}
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
+
+
+def freeze(spark, name, doc, timings, sf, tag=None, stamp=None) -> bool:
+    """Write ``timings`` into the baseline ``doc`` (file ``name``) by the
+    append-only policy both baselines share; returns True when every
+    gated value was frozen this run (file created or re-frozen).
+
+    A query's gate value is frozen the FIRST time it is measured and
+    never refreshed, so the 2x gate compares against the oldest honest
+    number rather than one that drifts upward with each regression: a
+    plain run adds only the queries the baseline does not know yet.
+    ``tag`` (``--refreeze TAG``) is the one deliberate exception, for
+    baselines frozen under conditions the gate no longer runs in (a
+    different box, a different replica layout): every value is replaced
+    and the displaced ones are archived in-file under ``archive[TAG]``,
+    so re-freezing stays a flagged, manual, auditable act. ``stamp``
+    holds facts frozen together with the values (the x10 replica
+    layout); it is written when the file is created or re-frozen, never
+    retroactively. Each freeze records its tag, cpus and commit under
+    ``provenance`` and each value's tag under ``source``.
+
+    Refusals leave the file byte-identical: a run at another scale than
+    the baseline's (a local sf0.01 experiment would permanently
+    mis-calibrate every value it adds), a re-freeze from a run that
+    misses a baselined query (a partial run must not half-recalibrate),
+    and a re-freeze under a tag already archived (it would overwrite the
+    only record of the displaced values).
+    A refused re-freeze exits non-zero; a refused append only warns."""
+    stamp = stamp or {}
+    if doc.get("sf", sf) != sf:
+        msg = (
+            f"refusing to freeze {name}: run sf={sf} does not match "
+            f"baseline sf={doc['sf']} (rerun at the baseline scale)"
+        )
+        if tag:
+            raise SystemExit(msg)
+        print(f"-- {msg}", file=sys.stderr)
+        return False
+    frozen = doc.get("queries", {})
+    all_new = tag is not None or not doc
+    if tag:
+        missing = sorted(set(frozen) - set(timings))
+        if missing:
+            raise SystemExit(
+                f"refusing to refreeze {name} from a partial run: it "
+                f"misses {len(missing)} baselined queries (e.g. "
+                f"{missing[:5]}); run the full registry"
+            )
+        if tag in doc.get("archive", {}):
+            raise SystemExit(f"refusing to refreeze {name}: archive[{tag}] exists")
+        if doc:
+            doc.setdefault("archive", {})[tag] = {
+                k: doc[k] for k in ("queries", "source", *stamp) if k in doc
+            }
+        new = sorted(timings)
+    else:
+        new = sorted(set(timings) - set(frozen))
+        if not new:
+            return False
+    commit = subprocess.run(
+        ["git", "-C", os.path.dirname(os.path.abspath(__file__)),
+         "rev-parse", "--short", "HEAD"],
+        capture_output=True, text=True,
+    ).stdout.strip() or None
+    tag = tag or f"first-seen@{commit}"
+    doc.setdefault("sf", sf)
+    if all_new:
+        doc.update(stamp)
+    doc["queries"] = {**frozen, **{n: timings[n] for n in new}}
+    doc["source"] = {**doc.get("source", {}), **dict.fromkeys(new, tag)}
+    doc.setdefault("provenance", {})[tag] = {
+        "cpus": spark.sparkContext.defaultParallelism,
+        "commit": commit,
+    }
+    with open(os.path.join(HERE, name), "w", encoding="utf-8") as f:
+        json.dump(doc, f, indent=1)
+    return all_new
+
+
+def run_sf1(refreeze: str | None = None) -> None:
     import math
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    sys.path.insert(0, os.path.join(here, "tools"))
-    from scale_probe import build_scaled
-
-    from wiki_data_pipeline_spark.plans.registry import all_queries
-    from wiki_data_pipeline_spark.session import get_spark
 
     spark = get_spark("bench-sf1")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-    workdir = os.environ.get(
-        "SPARK_GRAFT_SF1_DIR", os.path.join(here, ".scale")
-    )
+    names = sorted(queries)
+    workdir = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(HERE, ".scale"))
     sf1_dir = build_scaled(spark, workdir, 10)
     # The 1x side of the scaling exponent is measured on a MULTI-FILE
     # re-layout of sf0.1 built by the same repartition(4*mult) formula
-    # at mult=1 (r15, verdict item 3): the r14 replica re-layout gave
-    # the x10 side 40-file scan parallelism while the driver's sf0.1
-    # source stayed single-file-single-row-group, so every scan-bound
-    # exponent carried a DOWNWARD layout bias. With
-    # both decades on the same layout formula the log-ratio measures
-    # the engine, not the file count. The sf0.1 GATE (main bench) is
-    # unaffected — it still times the driver's own source dir.
+    # at mult=1 (r15, verdict item 3): with both decades on the same
+    # layout formula the log-ratio measures the engine, not the file
+    # count. The sf0.1 GATE (main bench) is unaffected — it still times
+    # the driver's own source dir.
     sf01_dir = build_scaled(spark, workdir, 1)
 
-    t01 = _time_set(spark, queries, SF1_QUERIES, sf01_dir)
-    t1 = _time_set(spark, queries, SF1_QUERIES, sf1_dir)
-
-    base_path = os.path.join(here, SF1_BASELINE_PATH)
-    layout = replica_layout_fingerprint(sf1_dir)
-    frozen_now = False
-    if not os.path.exists(base_path):
-        # Freeze timings AND the layout fingerprint from the SAME run
-        # against the SAME replica, so the baseline's provenance is
-        # self-evident — no retroactive stamping (r13 ADVICE: a stamp
-        # written later than the freeze could bless a rebuilt replica
-        # the frozen timings never saw).
-        with open(base_path, "w", encoding="utf-8") as f:
-            json.dump(
-                {"sf": 1.0,
-                 "note": "timings and replica_layout frozen together "
-                         "at this file's creating --sf1 run "
-                         "(re-frozen r14: multi-file replica layout)",
-                 "replica_layout": layout,
-                 "queries": t1},
-                f, indent=1,
-            )
-        frozen_now = True
-    doc0 = json.load(open(base_path, encoding="utf-8"))
-    baseline = doc0["queries"]
-    # append-only: queries gated for the first time (tier widening /
-    # new registrations) freeze at their first measured median; existing
-    # values are NEVER refreshed here (same discipline as
-    # tools/freeze_baseline.py)
-    new_names = sorted(set(t1) - set(baseline))
+    t01 = medians(time_queries(spark, queries, names, sf01_dir, names))
+    base = load_baseline(SF1_BASELINE_PATH)
+    t1, fields, _ = gate(
+        spark, queries, sf1_dir,
+        time_queries(spark, queries, names, sf1_dir, names),
+        base.get("queries", {}), SF1_ABS_FLOOR_SEC,
+    )
     # replica-layout fingerprint (r13): flag drift from the layout the
-    # baselines were frozen against. The stamp-if-absent branch only
-    # exists for pre-r14 baseline files (fresh freezes above carry the
-    # fingerprint from birth); a stamp written after the freeze can
-    # bless a replica the frozen timings never saw.
-    layout_stamped = "replica_layout" not in doc0
-    if layout_stamped:
-        doc0["replica_layout"] = layout
-    layout_changed = doc0["replica_layout"] != layout
-    if new_names or layout_stamped:
-        baseline.update({n: t1[n] for n in new_names})
-        if new_names:
-            appended = doc0.setdefault("appended", {})
-            appended[f"append_{len(appended) + 1}"] = new_names
-        with open(base_path, "w", encoding="utf-8") as f:
-            json.dump(doc0, f, indent=1)
+    # baselines were frozen against
+    layout = replica_layout_fingerprint(sf1_dir)
+    layout_changed = base.get("replica_layout", layout) != layout
     if layout_changed:
         print(
             "-- WARNING: x10 replica layout differs from the one the "
             "sf1 baselines were frozen against — every scan-bound x10 "
             "timing shifted for non-code reasons; re-freeze "
-            f"{SF1_BASELINE_PATH} in the same commit that changed the "
-            "layout",
+            f"{SF1_BASELINE_PATH} (--sf1 --refreeze TAG) in the same "
+            "commit that changed the layout",
             file=sys.stderr,
         )
-    # sentinel agreement check (r13) — same retry/merge as the sf0.1
-    # gate; see SENTINEL_SPREAD_BOUND
-    raw_sentinels = sentinel_ratios(t1, baseline)
-    sentinels_remeasured = False
-    if sentinel_spread(raw_sentinels) > SENTINEL_SPREAD_BOUND:
-        fresh = _time_set(spark, queries, SENTINELS, sf1_dir)
-        t1 = merge_remeasured(t1, fresh)
-        raw_sentinels = sentinel_ratios(t1, baseline)
-        sentinels_remeasured = True
-    spread_val = sentinel_spread(raw_sentinels)
+    frozen_now = freeze(
+        spark, SF1_BASELINE_PATH, base, t1, 1.0, refreeze,
+        {"replica_layout": layout},
+    )
     # scaling exponent: 1.0 = linear in data size, <1 sublinear (fixed
     # costs amortizing), >1 superlinear (a finding). Self-normalized:
     # both scales timed in this session, so host load cancels.
-    # Computed AFTER the sentinel re-measure merge (r13 review fix):
-    # exponents from the pre-merge t1 could flag a superlinear finding
-    # the same run's re-measurement had just disproved, and would
-    # disagree with the queries_sf1 values shipped beside them.
     exponents = {
         n: round(math.log10(max(t1[n], 1e-3) / max(t01[n], 1e-3)), 2)
-        for n in SF1_QUERIES
+        for n in names
     }
-    raw_norm = session_ratio(t1, baseline)
-    norm = gate_norm(raw_norm)
-    regressions = compute_regressions(
-        t1, baseline, norm=norm, abs_floor_sec=SF1_ABS_FLOOR_SEC
-    )
     doc = {
         "metric": "sf1_total_wall",
         "value": round(sum(t1.values()), 3),
@@ -612,87 +612,25 @@ def run_sf1() -> None:
         "superlinear": {n: e for n, e in exponents.items() if e > 1.1},
         "baseline": SF1_BASELINE_PATH,
         "baseline_frozen_this_run": frozen_now,
-        "session_ratio": round(raw_norm, 3),
-        "session_ratio_applied": round(norm, 3),
-        "session_ratio_sentinels": raw_sentinels,
-        "session_ratio_alert": raw_norm > SESSION_RATIO_SANITY_BOUND,
-        "sentinel_spread": round(spread_val, 3),
-        "sentinel_spread_alert": spread_val > SENTINEL_SPREAD_BOUND,
-        "sentinels_remeasured": sentinels_remeasured,
         "replica_layout": layout,
         "replica_layout_changed": layout_changed,
-        "regressions_over_2x": regressions,
-        "regressions_over_2x_normalized": {
-            n: round(t1[n] / baseline[n] / norm, 2) for n in regressions
-        },
+        **fields,
     }
-    with open(os.path.join(here, "BENCH_SF1.json"), "w", encoding="utf-8") as f:
+    with open(os.path.join(HERE, "BENCH_SF1.json"), "w", encoding="utf-8") as f:
         json.dump(doc, f, indent=1)
     print(json.dumps(doc))
 
 
-def run_sf1_full() -> None:
-    """Full-registry x10 exponent sweep (r10 verdict item 4): every
-    registered query timed ONCE at sf0.1 and once at the 10x replica —
-    artifact-only (BENCH_SF1_FULL.json), no gate. Single-trial by
-    design: 2 x ~210 queries at two scales is the cost ceiling; the
-    gated 55-query set (--sf1) keeps the median-of-3 rigor, this sweep
-    exists so NO query's 10x wall behavior is merely inferred from the
-    shuffle-byte audit. Superlinear flags here feed the next round's
-    gate tier."""
-    import math
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    sys.path.insert(0, os.path.join(here, "tools"))
-    from scale_probe import build_scaled
-
-    from wiki_data_pipeline_spark.plans.registry import all_queries
-    from wiki_data_pipeline_spark.session import get_spark
-
-    spark = get_spark("bench-sf1-full")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-    workdir = os.environ.get(
-        "SPARK_GRAFT_SF1_DIR", os.path.join(here, ".scale")
-    )
-    sf1_dir = build_scaled(spark, workdir, 10)
-    # symmetric-layout 1x side (r15, verdict item 3 — see run_sf1)
-    sf01_dir = build_scaled(spark, workdir, 1)
-
-    names = sorted(queries)
-    t01 = _time_set(spark, queries, names, sf01_dir, trials=1)
-    t1 = _time_set(spark, queries, names, sf1_dir, trials=1)
-    exponents = {
-        n: round(math.log10(max(t1[n], 1e-3) / max(t01[n], 1e-3)), 2)
-        for n in names
-    }
-    doc = {
-        "metric": "sf1_full_total_wall",
-        "value": round(sum(t1.values()), 3),
-        "unit": "sec",
-        "sf": 1.0,
-        "trials": 1,
-        "note": "single-trial full-registry exponent sweep; gate rigor "
-        "lives in --sf1 (median-of-3 over the 55 heaviest)",
-        "queries_sf1": t1,
-        "queries_sf01": t01,
-        "scaling_exponents": exponents,
-        "superlinear": {n: e for n, e in exponents.items() if e > 1.1},
-    }
-    with open(
-        os.path.join(here, "BENCH_SF1_FULL.json"), "w", encoding="utf-8"
-    ) as f:
-        json.dump(doc, f, indent=1)
-    print(json.dumps({k: doc[k] for k in
-                      ("metric", "value", "unit", "superlinear")}))
-
-
 def main() -> None:
-    if "--sf1-full" in sys.argv:
-        run_sf1_full()
-        return
-    if "--sf1" in sys.argv:
-        run_sf1()
+    argv = sys.argv[1:]
+    refreeze = None
+    if "--refreeze" in argv:
+        i = argv.index("--refreeze") + 1
+        if i == len(argv) or argv[i].startswith("--"):
+            raise SystemExit("usage: bench.py [--sf1] [--refreeze TAG]")
+        refreeze = argv[i]
+    if "--sf1" in argv:
+        run_sf1(refreeze)
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
@@ -706,126 +644,28 @@ def main() -> None:
     # gated by nothing until a plan audit caught it). The headline set
     # still defines the stdout metric for cross-round continuity.
     gate_set = sorted(queries)
-
-    # Warmup pass (HEADLINE only): JIT/codegen + parquet footer cache,
-    # so the timed pass measures steady-state execution (what a
-    # long-running cluster job actually sees), not first-compile
-    # latency. Non-headline queries skip the extra warmup pass — their
-    # median-of-3 already discards the one cold (compile-bearing)
-    # trial, and a full-registry warmup adds ~2.5 min of driver-bench
-    # wall for no change in the reported statistic.
-    for name in HEADLINE:
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # Three timed passes, report the per-query MEDIAN: the fixture
-    # host's shared disk shows multi-second I/O stalls, and a median of
-    # three makes the 2x regression gate robust to one contended trial
-    # (a single-run outlier burned round 3's gate) without letting a
-    # lucky min hide a real slowdown. Per-query [min, max] spread ships
-    # alongside so a noisy trial is visible, not averaged away.
-    trials: dict[str, list[float]] = {name: [] for name in gate_set}
-    for _ in range(3):
-        for name in gate_set:
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            trials[name].append(round(time.perf_counter() - t0, 3))
-
-    all_timings = {name: sorted(ts)[1] for name, ts in trials.items()}
-
-    # Per-query regression gate vs the previous round's bench: flag
-    # anything slower than REGRESSION_FACTOR× its baseline (median-of-3
-    # already absorbs the host's disk noise). Delta table → stderr so
-    # stdout stays ONE JSON line; flagged names also ship in the JSON.
-    baseline = _load_baseline()
-    # sentinel agreement check (r13): if the three sentinels disagree
-    # past the band, re-measure them once — the common cause is a
-    # transient load spike during one sentinel's trials — and merge by
-    # per-sentinel min (strict-safe; see SENTINEL_SPREAD_BOUND)
-    raw_sentinels = sentinel_ratios(all_timings, baseline)
-    sentinels_remeasured = False
-    if sentinel_spread(raw_sentinels) > SENTINEL_SPREAD_BOUND:
-        fresh = _time_set(spark, queries, SENTINELS, sf_dir)
-        all_timings = merge_remeasured(all_timings, fresh)
-        raw_sentinels = sentinel_ratios(all_timings, baseline)
-        sentinels_remeasured = True
-        # the fresh medians join the trial record so the sidecar's
-        # per-query [min, max] stays consistent with the merged
-        # median (r13 review fix: a merged median below its own
-        # recorded min is an impossible artifact row)
-        for s, sec in fresh.items():
-            trials.setdefault(s, []).append(sec)
-    spread_val = sentinel_spread(raw_sentinels)
-    spread_alert = spread_val > SENTINEL_SPREAD_BOUND
-    spread = {name: [min(ts), max(ts)] for name, ts in trials.items()}
+    trials = time_queries(spark, queries, gate_set, sf_dir, HEADLINE)
+    base = load_baseline(BASELINE_BENCH)
+    baseline = base.get("queries", {})
+    all_timings, fields, report = gate(
+        spark, queries, sf_dir, trials, baseline, REGRESSION_ABS_FLOOR_SEC
+    )
+    freeze(spark, BASELINE_BENCH, base, all_timings, sf, refreeze)
     timings = {name: all_timings[name] for name in HEADLINE}
-    total = round(sum(timings.values()), 3)
-    deltas = {
-        name: round(all_timings[name] / baseline[name], 2)
-        for name in all_timings
-        if baseline.get(name)
-    }
-    raw_norm = session_ratio(all_timings, baseline)
-    norm = gate_norm(raw_norm)
-    session_alert = raw_norm > SESSION_RATIO_SANITY_BOUND
-    regressions = compute_regressions(all_timings, baseline, norm=norm)
-    if baseline:
-        print(
-            f"-- bench deltas vs {BASELINE_BENCH} (this/prev, >1 = "
-            f"slower; session_ratio={raw_norm:.3f}, gate divisor "
-            f"applied={norm:.3f} (capped at {GATE_NORM_CAP}), "
-            f"sentinels={raw_sentinels}):",
-            file=sys.stderr,
-        )
-        if session_alert:
-            print(
-                f"-- WARNING: session_ratio {norm:.3f} exceeds sanity "
-                f"bound {SESSION_RATIO_SANITY_BOUND} — either extreme "
-                "host load or a GENUINE uniform code-wide slowdown the "
-                "sentinels cannot tell apart; inspect the raw sentinel "
-                "ratios above before trusting regressions_over_2x",
-                file=sys.stderr,
-            )
-        if spread_alert:
-            print(
-                f"-- WARNING: sentinels disagree {spread_val:.3f}x "
-                f"(band {SENTINEL_SPREAD_BOUND}) even after "
-                "re-measurement — a single session_ratio cannot "
-                "normalize this run; treat deltas_normalized as "
-                "untrusted and read the RAW ratios",
-                file=sys.stderr,
-            )
-        for name in sorted(deltas, key=deltas.get, reverse=True):
-            flag = "  << REGRESSION" if name in regressions else ""
-            print(
-                f"   {name}: {all_timings[name]:.3f}s vs {baseline[name]:.3f}s "
-                f"= {deltas[name]:.2f}x{flag}",
-                file=sys.stderr,
-            )
 
     # Spread goes to a sidecar file, NOT stdout: the driver captures a
     # bounded tail of stdout and the r5 artifact became unparseable when
     # 70 per-query [min,max] arrays pushed the JSON head past the
     # capture window. stdout stays ONE compact JSON line.
-    sidecar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SPREAD.json"
-    )
-    with open(sidecar, "w", encoding="utf-8") as f:
+    gate_fields = {k: v for k, v in fields.items() if "regressions" not in k}
+    with open(os.path.join(HERE, "BENCH_SPREAD.json"), "w", encoding="utf-8") as f:
         json.dump(
             {
                 "sf": sf,
-                "session_ratio": round(raw_norm, 3),
-                "session_ratio_applied": round(norm, 3),
-                "session_ratio_sentinels": raw_sentinels,
-                "session_ratio_alert": session_alert,
-                "sentinel_spread": round(spread_val, 3),
-                "sentinel_spread_alert": spread_alert,
-                "sentinels_remeasured": sentinels_remeasured,
+                **gate_fields,
                 "all_timings": all_timings,
-                "spread": spread,
-                "deltas": deltas,
-                "deltas_normalized": {
-                    n: round(d / norm, 2) for n, d in deltas.items()
-                },
+                "spread": {name: [min(ts), max(ts)] for name, ts in trials.items()},
+                **report,
             },
             f,
             indent=1,
@@ -844,26 +684,15 @@ def main() -> None:
             {
                 "queries": timings,
                 "metric": "headline_total_wall",
-                "value": total,
+                "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "sf": sf,
                 "trials": 3,
                 "stat": "median",
                 "baseline_bench": BASELINE_BENCH if baseline else None,
-                "gated_queries": len(deltas),
+                "gated_queries": len(report["deltas"]),
                 "registered_queries": len(gate_set),
-                "session_ratio": round(raw_norm, 3),
-                "session_ratio_applied": round(norm, 3),
-                "session_ratio_sentinels": raw_sentinels,
-                "session_ratio_alert": session_alert,
-                "sentinel_spread": round(spread_val, 3),
-                "sentinel_spread_alert": spread_alert,
-                "sentinels_remeasured": sentinels_remeasured,
-                "regressions_over_2x": regressions,
-                "regressions_over_2x_normalized": {
-                    n: round(all_timings[n] / baseline[n] / norm, 2)
-                    for n in regressions
-                },
+                **fields,
             }
         )
     )

@@ -945,7 +945,8 @@ def test_bench_gate_covers_entire_registry():
     name must be registered). Registering a query without freezing its
     first-run median would silently exempt it from the 2x regression
     gate — the exact hole the round-7 gate widening closed; this test
-    makes the freeze step (tools/freeze_baseline.py) mandatory."""
+    makes the freeze step (the first-seen append at the end of a
+    bench.py run) mandatory."""
     import json
     import os
 
@@ -964,7 +965,7 @@ def test_bench_gate_covers_entire_registry():
     unfrozen = registered - set(baseline)
     assert not unfrozen, (
         f"queries registered but missing a frozen bench baseline "
-        f"(run bench.py then tools/freeze_baseline.py): {sorted(unfrozen)}"
+        f"(run bench.py, which freezes first-seen medians): {sorted(unfrozen)}"
     )
     # ...and the other direction (r14, verdict item 4): a baseline row
     # whose query was de-registered is dead weight that misstates the
@@ -984,6 +985,16 @@ def test_bench_gate_covers_entire_registry():
             f"stale={sorted(set(sf1) - registered)} "
             f"missing={sorted(registered - set(sf1))}"
         )
+    # a value's provenance row outlives its value only by mistake (the
+    # r14 drop of sketch_approx_distinct left its source tag behind)
+    for name in ("BENCH_BASELINE.json", "BENCH_SF1_BASELINE.json"):
+        path = os.path.join(root, name)
+        if os.path.exists(path):
+            doc = json.load(open(path, encoding="utf-8"))
+            orphans = set(doc.get("source", {})) - set(doc["queries"])
+            assert not orphans, (
+                f"{name} source rows without a value: {sorted(orphans)}"
+            )
     unknown_headline = set(bench.HEADLINE) - registered
     assert not unknown_headline, sorted(unknown_headline)
 
@@ -1179,12 +1190,17 @@ def test_replica_layout_fingerprint(tmp_path):
     assert bench.replica_layout_fingerprint(str(tmp_path)) != fp
 
 
-def test_sf1_gate_tier_membership():
-    """The gated sf1 tier (bench.py SF1_QUERIES) covers the ENTIRE
-    registry (r11 final widening — the sf1 gate has caught five
-    O(N²)-class defects, one per widening), contains no duplicates,
-    and references only registered queries — a registry rename must
-    fail HERE, not silently shrink the gate at the next --sf1 run."""
+def test_bench_runs_share_one_gate_and_freeze(
+    spark, sf_dir, tmp_path, monkeypatch, capsys
+):
+    """Both bench runs end to end over the three sentinels at sf0.001:
+    the sf0.1 run and the --sf1 run emit the same gate-field set, flag
+    a baseline planted 10x below their measured times, archive the
+    displaced values on --refreeze (once per tag), and leave a baseline
+    frozen at another scale byte-identical. The registry, the session, the x10
+    replica builder and the artifact dir are redirected; the absolute
+    floors are zeroed because sf0.001 queries run far below them."""
+    import json
     import os
     import sys
 
@@ -1195,15 +1211,73 @@ def test_sf1_gate_tier_membership():
 
     from wiki_data_pipeline_spark.plans.registry import all_queries
 
-    names = bench.SF1_QUERIES
-    assert len(names) >= 120, f"sf1 gate tier shrank to {len(names)}"
-    assert len(names) == len(set(names)), "duplicate sf1 gate entries"
-    missing = sorted(set(all_queries()) - set(names))
-    assert not missing, f"registered queries outside the sf1 gate: {missing}"
-    unregistered = sorted(set(names) - set(all_queries()))
-    assert not unregistered, f"sf1 gate names not in registry: {unregistered}"
-    for s in bench.SENTINELS:
-        assert s in names, f"sentinel {s} missing from sf1 gate tier"
+    sentinels = {n: all_queries()[n] for n in bench.SENTINELS}
+    monkeypatch.setattr(bench, "all_queries", lambda: dict(sentinels))
+    monkeypatch.setattr(bench, "HEADLINE", list(sentinels))
+    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(bench, "build_scaled", lambda *a: sf_dir)
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+    monkeypatch.setattr(bench, "REGRESSION_ABS_FLOOR_SEC", 0.0)
+    monkeypatch.setattr(bench, "SF1_ABS_FLOOR_SEC", 0.0)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    run_sf = float(os.path.basename(sf_dir.rstrip("/"))[2:])
+
+    def run(*args):
+        monkeypatch.setattr(sys, "argv", ["bench.py", *args])
+        bench.main()
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    gate_fields = {}
+    for args, name, sf in (
+        ((), bench.BASELINE_BENCH, run_sf),
+        (("--sf1",), bench.SF1_BASELINE_PATH, 1.0),
+    ):
+        path = tmp_path / name
+        run(*args)  # no baseline yet: every first-seen median is frozen
+        doc = json.loads(path.read_text())
+        assert doc["sf"] == sf and set(doc["queries"]) == set(sentinels)
+        assert set(doc["source"]) == set(sentinels)
+
+        planted = {n: t / 10 for n, t in doc["queries"].items()}
+        path.write_text(json.dumps({**doc, "queries": planted}))
+        out = run(*args, "--refreeze", "t2")
+        gate_fields[args] = {
+            k for k in out
+            if k.startswith(("session_ratio", "sentinel", "regressions"))
+        }
+        assert set(out["regressions_over_2x"]) == set(sentinels), (args, out)
+        doc = json.loads(path.read_text())
+        assert doc["archive"]["t2"]["queries"] == planted
+        assert doc["queries"] != planted
+        assert set(doc["source"].values()) == {"t2"}
+        assert doc["provenance"]["t2"]["cpus"] == (
+            spark.sparkContext.defaultParallelism
+        )
+        with pytest.raises(SystemExit):  # archive[t2] is never overwritten
+            bench.freeze(spark, name, doc, doc["queries"], sf, "t2")
+
+        # another scale: the dropped sentinel would be appended at sf
+        doc["sf"] = sf * 10
+        del doc["queries"][bench.SENTINELS[0]]
+        path.write_text(json.dumps(doc))
+        frozen = path.read_bytes()
+        run(*args)
+        assert path.read_bytes() == frozen
+        with pytest.raises(SystemExit):
+            bench.freeze(spark, name, doc, planted, sf, "t3")
+        assert path.read_bytes() == frozen
+
+    assert gate_fields[()] == gate_fields[("--sf1",)] == {
+        "session_ratio",
+        "session_ratio_applied",
+        "session_ratio_sentinels",
+        "session_ratio_alert",
+        "sentinel_spread",
+        "sentinel_spread_alert",
+        "sentinels_remeasured",
+        "regressions_over_2x",
+        "regressions_over_2x_normalized",
+    }
 
 
 def test_bench_gate_norm_is_capped():

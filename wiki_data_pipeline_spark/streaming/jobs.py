@@ -15,6 +15,7 @@ semantics, but with exactly-once bookkeeping for free)."""
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from typing import Iterator
 
 import pandas as pd
@@ -237,6 +238,28 @@ def run_stream_static_enrichment(
     q.awaitTermination()
 
 
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+@contextmanager
+def rocksdb_state_store(spark: SparkSession) -> Iterator[None]:
+    """Run the enclosed streaming query on the RocksDB state store. The
+    provider conf must be set before the query starts and is restored
+    after, so co-resident queries in the same session keep theirs."""
+    prev = spark.conf.get(_PROVIDER_KEY, None)
+    spark.conf.set(_PROVIDER_KEY, ROCKSDB_PROVIDER)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_PROVIDER_KEY)
+        else:
+            spark.conf.set(_PROVIDER_KEY, prev)
+
+
 def run_stateful_user_counts_tws(
     spark: SparkSession,
     source_dir: str,
@@ -266,9 +289,7 @@ def run_stateful_user_counts_tws(
             "(pyspark's TWS state protocol); use run_stateful_user_counts "
             "(applyInPandasWithState) where it is unavailable"
         ) from e
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
+    with rocksdb_state_store(spark):
         from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
         class UserCountProcessor(StatefulProcessor):
@@ -309,11 +330,6 @@ def run_stateful_user_counts_tws(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def run_streaming_session_agg(
@@ -357,18 +373,12 @@ def run_streaming_session_agg(
     q.awaitTermination()
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
 def run_stream_stream_attribution_join(
     spark: SparkSession,
     source_dir: str,
     checkpoint_dir: str,
     query_name: str = "stream_attribution",
     watermark: str = "2 hours",
-    use_rocksdb: bool = True,
 ) -> None:
     """Stream-stream inner join with watermarks on BOTH sides: views
     attributed to purchases by the same user within the preceding hour
@@ -382,16 +392,10 @@ def run_stream_stream_attribution_join(
     length. That bound is what makes this run forever at 100 TB; an
     un-watermarked stream-stream join buffers both streams in full.
 
-    State store: RocksDB provider (``use_rocksdb=True``) keeps join
-    state off-heap and spillable — at large state (wide watermark ×
+    State store: the RocksDB provider keeps join state off-heap and spillable — at large state (wide watermark ×
     hot users) the default in-memory HDFS-backed store OOMs executors,
-    RocksDB does not. The conf must be set before the query starts and
-    is restored after, so co-resident queries in the same session keep
-    their provider."""
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    if use_rocksdb:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
+    RocksDB does not (see :func:`rocksdb_state_store`)."""
+    with rocksdb_state_store(spark):
         events = read_event_stream(spark, source_dir, max_files_per_trigger=16)
         views = (
             events.filter(F.col("event_type") == "view")
@@ -426,11 +430,6 @@ def run_stream_stream_attribution_join(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def run_streaming_dedup(
