@@ -20,7 +20,7 @@ introduction (all six reliably red before their fixes):
   byte parsing — the audio_stats ADVICE-fix class).
 
 The full-registry adversarial sweep stays a tool run
-(python tools/check_parity.py /tmp/adversarial_sf — ~18 min); this
+(python tools/check_parity.py --sf-dir /tmp/adversarial_sf — ~18 min); this
 test keeps the known-divergence-prone subset in the suite (~1 min).
 """
 

@@ -31,7 +31,7 @@ sys.path.insert(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
     ),
 )
-from metamorphic_sweep import PARTITIONS, result_hash  # noqa: E402
+from metamorphic_sweep import partition_hashes  # noqa: E402
 
 from wiki_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
 
@@ -73,17 +73,11 @@ def queries():
 
 
 @pytest.mark.parametrize("name", SAMPLE)
-def test_partition_count_invariance(spark, sf_dir, queries, name):
-    original = spark.conf.get("spark.sql.shuffle.partitions")
-    hashes = {}
-    try:
-        for p in PARTITIONS:
-            spark.conf.set("spark.sql.shuffle.partitions", str(p))
-            hashes[p] = result_hash(queries[name](spark, sf_dir))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", original)
-    assert len(set(hashes.values())) == 1, (
-        f"{name}: result depends on shuffle partitioning — {hashes}. "
+def test_partition_count_invariance(spark, sf_dir, name):
+    hashes, errors = partition_hashes(spark, [name], sf_dir)
+    assert not errors, errors
+    assert len(set(hashes[name].values())) == 1, (
+        f"{name}: result depends on shuffle partitioning — {hashes[name]}. "
         "Likely an order-sensitive expression (first/last without "
         "ordering, float accumulation, or an unpinned tie-break)."
     )

@@ -1369,7 +1369,7 @@ def test_plan_audit_counters():
     a = audit_plan(plan)
     assert a["cartesian"] == 1 and a["row_python"] == 1
     assert a["scans_per_table"] == {"documents": 3}
-    fl = flags_for("q", a)
+    fl = flags_for(a)
     assert "CARTESIAN" in fl and "ROW_PYTHON" in fl
 
     benign = (
@@ -1381,7 +1381,7 @@ def test_plan_audit_counters():
     )
     b = audit_plan(benign)
     assert b["arrow_python"] == 1 and b["row_python"] == 0
-    assert flags_for("q", b) == []
+    assert flags_for(b) == []
 
     # Exchange counting is per node NAME: ReusedExchange (whose line
     # embeds its child's "Exchange hashpartitioning" text) and

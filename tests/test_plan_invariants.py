@@ -240,7 +240,6 @@ DUPLICATE_WORK_ALLOWED: dict[str, str] = {
     "funnel_view_click_purchase": "per-user shuffle with and without min(ts)",
     "mixture_token_budget": "per-source shuffle with and without count",
     "q15_top_supplier": "revenue view twice; isnotnull(l_suppkey) one side",
-    "sample_domain_temperature": "source counts x3; isnotnull on one side",
     "skew_salted_join_planned": "per-user shuffle as [count], [count, sum]",
     "text_vocab_oov_rate": "corpus _spread as [doc_id, text] and [text]",
 }

@@ -8,7 +8,7 @@ the tier between rounds. The sweep is now a committed artifact
 produced by::
 
     python tools/check_parity.py --json RELIABLE_PARITY.json \
-        --pin-mode reliable --pin-sites /root/testdata/sf0.001
+        --pin-mode reliable --pin-sites --sf-dir /root/testdata/sf0.001
 
 and these tests make it load-bearing: the artifact must be all-green,
 and its query set must equal the LIVE set of pin-routed queries —
@@ -33,7 +33,7 @@ def _load() -> dict:
     assert os.path.exists(ARTIFACT), (
         "RELIABLE_PARITY.json missing — regenerate with "
         "tools/check_parity.py --json RELIABLE_PARITY.json "
-        "--pin-mode reliable --pin-sites"
+        "--pin-mode reliable --pin-sites --sf-dir /root/testdata/sf0.001"
     )
     with open(ARTIFACT, encoding="utf-8") as fh:
         return json.load(fh)

@@ -22,7 +22,7 @@ on user, growth tracks events).
 
 Runs in the shared test session with its shuffle partition count; the
 bytes come from the driver's status store, which Spark keeps with the
-UI off (tools/shuffle_audit.py's _run_measured).
+UI off (tools/sweep.py, the sweep shuffle_audit runs on).
 """
 
 from __future__ import annotations
@@ -35,9 +35,7 @@ import pytest
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(HERE, "tools"))
 
-from shuffle_audit import _run_measured  # noqa: E402
-
-from wiki_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
+from sweep import noop, sweep  # noqa: E402
 
 SMALL = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 BIG = "/root/testdata/sf0.01"
@@ -51,16 +49,19 @@ SAMPLE = [
 GROWTH_CEILING = 20.0  # 10x rows; 2x margin on linear
 
 
+def _shuffle_write_bytes(spark, sf_dir: str) -> dict[str, int]:
+    out = {}
+    for r in sweep(spark, SAMPLE, sf_dir, noop):
+        assert r.error is None, f"{r.name}: {r.error}"
+        out[r.name] = sum(s.shuffle_write_bytes for s in r.stages)
+    return out
+
+
 @pytest.fixture(scope="module")
 def shuffle_bytes(spark) -> dict[str, dict[str, int]]:
-    queries = all_queries()
-    return {
-        name: {
-            "small": _run_measured(spark, queries[name], SMALL)[0],
-            "big": _run_measured(spark, queries[name], BIG)[0],
-        }
-        for name in SAMPLE
-    }
+    small = _shuffle_write_bytes(spark, SMALL)
+    big = _shuffle_write_bytes(spark, BIG)
+    return {name: {"small": small[name], "big": big[name]} for name in SAMPLE}
 
 
 @pytest.mark.parametrize("name", SAMPLE)

@@ -1,0 +1,87 @@
+"""The registry sweep under the audit tools (tools/sweep.py), on
+`spark.range` frames and a fake registry: construction stages are
+attributed to the query that ran them, a failing builder becomes an
+error record without ending the sweep, unknown names are rejected
+before a session starts, and every tool answers ``--help``."""
+
+from __future__ import annotations
+
+import glob
+import os
+import subprocess
+import sys
+
+import pytest
+
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(HERE, "tools"))
+
+import sweep  # noqa: E402
+
+
+def _boom(spark, sf_dir):
+    raise ValueError("builder failed")
+
+
+FAKE = {
+    # the eager checkpoint runs the repartition's shuffle while the
+    # frame is built; collecting it afterwards shuffles nothing
+    "pinned": lambda spark, sf_dir: spark.range(2000).repartition(4)
+    .localCheckpoint(eager=True),
+    "plain": lambda spark, sf_dir: spark.range(10),
+    "boom": _boom,
+}
+
+
+def _count(df) -> int:
+    return len(df.collect())  # no shuffle, unlike df.count()
+
+
+def test_construction_stages_belong_to_their_query(spark):
+    pinned, plain = sweep.sweep(spark, ["pinned", "plain"], "", _count, FAKE)
+    assert pinned.error is None and pinned.value == 2000
+    assert sum(s.shuffle_write_bytes for s in pinned.stages) > 0, pinned.stages
+    assert plain.value == 10
+    assert sum(s.shuffle_write_bytes for s in plain.stages) == 0, plain.stages
+
+
+def test_failing_builder_is_recorded_and_the_sweep_goes_on(spark):
+    boom, plain = sweep.sweep(spark, ["boom", "plain"], "", _count, FAKE)
+    assert boom.value is None
+    assert boom.error == "ValueError: builder failed"
+    assert plain.error is None and plain.value == 10
+
+
+@pytest.mark.parametrize(
+    "tool, argv",
+    [
+        ("check_parity", []),
+        ("plan_audit", []),
+        ("shuffle_audit", []),
+        ("metamorphic_sweep", []),
+        ("dump_plans", ["out_dir", "before"]),
+    ],
+)
+def test_unknown_name_is_rejected_before_a_session(monkeypatch, tool, argv):
+    def no_session(*a, **k):
+        raise AssertionError("a session was started")
+
+    monkeypatch.setattr(sweep, "get_spark", no_session)
+    mod = __import__(tool)
+    with pytest.raises(SystemExit) as exc:
+        mod.main([*argv, "dedup_exact", "not_a_query"])
+    assert exc.value.code == 2
+
+
+@pytest.mark.parametrize(
+    "tool", sorted(os.path.basename(p) for p in glob.glob(f"{HERE}/tools/*.py"))
+)
+def test_every_tool_answers_help(tool):
+    tool = os.path.join(HERE, "tools", tool)
+    proc = subprocess.run(
+        [sys.executable, tool, "--help"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    if "__main__" in open(tool, encoding="utf-8").read():
+        assert proc.stdout.startswith("usage:"), proc.stdout

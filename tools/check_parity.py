@@ -1,5 +1,5 @@
 """Dev parity runner:
-`python tools/check_parity.py [--json OUT] [sf_dir] [name ...]`.
+`python tools/check_parity.py [--json OUT] [--sf-dir DIR] [name ...]`.
 
 Runs every registered query (or the named subset) against its DuckDB
 oracle and prints a pass/fail line each. With ``--json OUT`` it also
@@ -9,31 +9,30 @@ is produced:
 
     python tools/make_adversarial_sf.py /tmp/adversarial_sf
     python tools/check_parity.py --json ADVERSARIAL_PARITY.json \
-        /tmp/adversarial_sf
+        --sf-dir /tmp/adversarial_sf
 
-``--pin-mode reliable [--pin-dir DIR]`` runs the sweep with the
-configurable pin durability tier flipped to reliable checkpoints
-(operators/pin.py), and ``--pin-sites`` restricts the sweep to the
-queries that actually route through pin() (discovered live via the
-pin observer, not a hand-kept list) — together they regenerate the
-per-round RELIABLE_PARITY.json (r13, verdict item 2):
+``--pin-mode reliable`` runs the sweep with the configurable pin
+durability tier flipped to reliable checkpoints (operators/pin.py),
+written to a temporary directory removed at exit, and ``--pin-sites``
+restricts the sweep to the queries that actually route through pin()
+(discovered live via the pin observer, not a hand-kept list) —
+together they regenerate the per-round RELIABLE_PARITY.json:
 
     python tools/check_parity.py --json RELIABLE_PARITY.json \
-        --pin-mode reliable --pin-sites /root/testdata/sf0.001
+        --pin-mode reliable --pin-sites --sf-dir /root/testdata/sf0.001
 """
 
 from __future__ import annotations
 
 import json
-import os
 import sys
-import time
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from sweep import conf, parse, parser, session, sweep
 
-from wiki_data_pipeline_spark.plans.registry import all_oracles, all_queries
-from wiki_data_pipeline_spark.session import get_spark
-from wiki_data_pipeline_spark.testing import compare_query
+from wiki_data_pipeline_spark.operators.pin import PIN_DIR_KEY, PIN_MODE_KEY
+from wiki_data_pipeline_spark.plans.registry import all_queries
+from wiki_data_pipeline_spark.testing import compare_query, pin_using_queries
 
 
 def _row(
@@ -50,121 +49,78 @@ def _row(
     }
 
 
-def _flag_value(args: list[str], flag: str) -> tuple[str | None, list[str]]:
-    if flag not in args:
-        return None, args
-    i = args.index(flag)
-    if i + 1 >= len(args):
-        raise SystemExit(f"{flag} needs a value")
-    return args[i + 1], args[:i] + args[i + 2 :]
+def _compare(name: str):
+    """What the sweep builds for ``name``: its oracle comparison, which
+    builds the frame itself. Every query has an oracle
+    (tests/test_oracle_parity.py::test_oracle_coverage_total)."""
+    return lambda spark, sf_dir: compare_query(spark, name, sf_dir)
 
 
-def main() -> int:
-    args = sys.argv[1:]
-    json_out, args = _flag_value(args, "--json")
-    pin_mode, args = _flag_value(args, "--pin-mode")
-    pin_dir, args = _flag_value(args, "--pin-dir")
-    pin_sites = "--pin-sites" in args
-    if pin_sites:
-        args.remove("--pin-sites")
-    sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.001"
-    names = args[1:] if args and os.path.isdir(args[0]) else args
-
-    spark = get_spark("parity-check")
-    queries = all_queries()
-    oracles = all_oracles()
-    selected = names or list(queries)
-    if pin_sites:
+def main(argv=None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    p = parser(__doc__, json=True)
+    p.add_argument("--pin-mode", choices=("local", "reliable"),
+                   help="pin durability tier for the sweep")
+    p.add_argument("--pin-sites", action="store_true",
+                   help="sweep only the queries that route through pin()")
+    args = parse(p, argv)
+    (sf_dir,) = args.sf_dir
+    spark = session("parity-check")
+    selected = args.names or sorted(all_queries())
+    if args.pin_sites:
         # discovery runs under the DEFAULT pin tier (cheap local
         # checkpoints); only the measured sweep below pays for the
-        # reliable tier's DFS writes
-        from wiki_data_pipeline_spark.testing import pin_using_queries
-
-        build_errors: dict[str, str] = {}
-        live = pin_using_queries(
-            spark, sf_dir, selected, strict=False, errors=build_errors
-        )
+        # reliable tier's DFS writes. A query that fails to build is
+        # kept, so the sweep records its error row.
+        live = pin_using_queries(spark, sf_dir, selected, strict=False)
         selected = [n for n in selected if n in live]
         print(f"-- pin-sites: {len(selected)} queries route through pin()")
-        for n, err in build_errors.items():
-            # conservatively swept (included): the main loop below
-            # records the honest err row instead of discovery dying
-            print(f"-- pin-sites: {n} failed to build during discovery: {err}")
-    if pin_mode is not None:
-        from wiki_data_pipeline_spark.operators.pin import (
-            PIN_DIR_KEY,
-            PIN_MODE_KEY,
-        )
-
-        if pin_mode == "reliable" and pin_dir is None:
-            import tempfile
-
-            pin_dir = tempfile.mkdtemp(prefix="reliable_pins_")
-        spark.conf.set(PIN_MODE_KEY, pin_mode)
-        if pin_dir is not None:
-            spark.conf.set(PIN_DIR_KEY, pin_dir)
 
     report: dict[str, dict] = {}
     failures = 0
-    for name in selected:
-        if name not in queries:
-            print(f"?? {name}: not registered")
-            failures += 1
-            continue
-        t0 = time.time()
-        if name not in oracles:
-            try:
-                n = queries[name](spark, sf_dir).count()
-                print(f"-- {name}: rows-only, {n} rows ({time.time()-t0:.1f}s)")
-                report[name] = _row(None, None, None, n, None, "no_oracle")
-            except Exception as e:  # noqa: BLE001
-                print(f"XX {name}: EXECUTION FAILED: {e}")
-                report[name] = _row(
-                    False, False, False, None, None,
-                    f"{type(e).__name__}: {e}"[:500],
-                )
+    with tempfile.TemporaryDirectory(prefix="reliable_pins_") as pin_dir, conf(
+        spark,
+        {} if args.pin_mode is None
+        else {PIN_MODE_KEY: args.pin_mode, PIN_DIR_KEY: pin_dir},
+    ):
+        checks = {n: _compare(n) for n in all_queries()}
+        for r in sweep(spark, selected, sf_dir, lambda res: res, checks):
+            res = r.value
+            if r.error is not None:
+                print(f"XX {r.name}: EXECUTION FAILED: {r.error}")
+                report[r.name] = _row(False, False, False, None, None, r.error[:500])
                 failures += 1
-            continue
-        try:
-            res = compare_query(spark, name, sf_dir)
-        except Exception as e:  # noqa: BLE001
-            print(f"XX {name}: EXECUTION FAILED: {type(e).__name__}: {e}")
-            report[name] = _row(
-                False, False, False, None, None,
-                f"{type(e).__name__}: {e}"[:500],
+                continue
+            print(
+                f"{'OK' if res.ok else 'XX'} {r.name}: "
+                f"{'OK' if res.ok else 'MISMATCH'} "
+                f"spark={res.spark_rows} duck={res.duck_rows} ({r.wall_s:.1f}s)"
             )
-            failures += 1
-            continue
-        status = "OK" if res.ok else "MISMATCH"
-        print(
-            f"{'OK' if res.ok else 'XX'} {name}: {status} "
-            f"spark={res.spark_rows} duck={res.duck_rows} ({time.time()-t0:.1f}s)"
-        )
-        for d in res.details:
-            print(f"     {d}")
-        report[name] = _row(
-            res.spark_rows == res.duck_rows,
-            res.schema_ok,
-            res.ok,
-            res.spark_rows,
-            res.duck_rows,
-            None if res.ok else "; ".join(res.details)[:500] or "mismatch",
-        )
-        failures += 0 if res.ok else 1
+            for d in res.details:
+                print(f"     {d}")
+            report[r.name] = _row(
+                res.spark_rows == res.duck_rows,
+                res.schema_ok,
+                res.ok,
+                res.spark_rows,
+                res.duck_rows,
+                None if res.ok else "; ".join(res.details)[:500] or "mismatch",
+            )
+            failures += 0 if res.ok else 1
     print(f"\n{len(selected) - failures}/{len(selected)} passed")
-    if json_out:
+    if args.json:
         report["_meta"] = {
             "sf_dir": sf_dir,
             "n_queries": len(selected),
             "n_pass": len(selected) - failures,
-            "generated_by": "tools/check_parity.py --json",
-            "pin_mode": pin_mode,
-            "pin_sites_only": pin_sites,
+            "generated_by": " ".join(["tools/check_parity.py", *argv]),
+            "pin_mode": args.pin_mode,
+            "pin_sites_only": args.pin_sites,
         }
-        with open(json_out, "w") as fh:
+        with open(args.json, "w") as fh:
             json.dump(report, fh, indent=2, sort_keys=True)
             fh.write("\n")
-        print(f"wrote {json_out}")
+        print(f"wrote {args.json}")
     return 1 if failures else 0
 
 

@@ -27,7 +27,7 @@ exercises the boundary shapes the generator never produces:
   balances, zero retail price.
 
 Usage: python tools/make_adversarial_sf.py [out_dir]   (default
-/tmp/adversarial_sf). Then: python tools/check_parity.py <out_dir>.
+/tmp/adversarial_sf). Then: python tools/check_parity.py --sf-dir <out_dir>.
 
 Deterministic (no RNG) — every injected row is hand-picked; re-running
 overwrites in place. The driver fixtures stay untouched.
@@ -37,10 +37,10 @@ from __future__ import annotations
 
 import os
 import shutil
-import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from sweep import parse, parser
 
 SRC = "/root/testdata/sf0.001"
 
@@ -49,7 +49,6 @@ SRC = "/root/testdata/sf0.001"
 _CHUNK = 64
 _PACK = 512
 
-_TS = lambda s: pa.scalar(s, pa.timestamp("us"))  # noqa: E731
 
 
 def _append(src_path: str, dst_path: str, new_rows: dict) -> None:
@@ -300,5 +299,6 @@ def build(out_dir: str) -> str:
 
 
 if __name__ == "__main__":
-    out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/adversarial_sf"
-    print(build(out))
+    p = parser(__doc__, sf_dirs=())
+    p.add_argument("out_dir", nargs="?", default="/tmp/adversarial_sf")
+    print(build(parse(p, names=False).out_dir))

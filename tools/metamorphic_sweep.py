@@ -8,15 +8,14 @@ the registry under different physical configurations and asserting the
 canonical result hash of every query is configuration-invariant.
 
 Usage:
-  python tools/metamorphic_sweep.py [sf_dir] [names...]
+  python tools/metamorphic_sweep.py [--sf-dir DIR] [names...]
       in-process sweep: shuffle.partitions in {4, 64, 200}; exits 1 on
-      any hash divergence, prints one line per query.
-  python tools/metamorphic_sweep.py [sf_dir] --dump OUT.json [names...]
+      any hash divergence or failed query, prints one line per query.
+  python tools/metamorphic_sweep.py [--sf-dir DIR] --json OUT [names...]
       hash every query once under the CURRENT session config (honors
       SPARK_GRAFT_CPUS — run twice with 4 and 32 for the cross-master
-      comparison) and write {name: hash} JSON.
-  python tools/metamorphic_sweep.py --compare A.json B.json
-      offline diff of two dump files.
+      comparison) and write {name: hash} JSON, one sorted line per
+      query, so `diff A.json B.json` compares two runs.
 
 The canonical hash is over the SORTED multiset of normalized row
 tuples with columns sorted by name (same normalization as the parity
@@ -30,12 +29,10 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from sweep import conf, parse, parser, session, sweep
 
-from wiki_data_pipeline_spark.testing import _norm  # noqa: E402
+from wiki_data_pipeline_spark.testing import _norm
 
 PARTITIONS = (4, 64, 200)
 
@@ -49,82 +46,52 @@ def result_hash(df) -> str:
     return h.hexdigest()[:16]
 
 
-def sweep(spark, queries, names, sf_dir, partitions=PARTITIONS) -> dict:
-    """{name: {n_partitions: hash}} — rebuilds each query per setting
-    (conf is read at plan/execution time, and eager fixpoint queries
-    re-run their rounds under the new setting, which is the point)."""
-    out: dict[str, dict[int, str]] = {}
-    original = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        for p in partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", str(p))
-            for name in names:
-                df = queries[name](spark, sf_dir)
-                out.setdefault(name, {})[p] = result_hash(df)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", original)
-    return out
+def partition_hashes(spark, names, sf_dir) -> tuple[dict, dict]:
+    """({name: {n_partitions: hash}}, {name: error}) — rebuilds each
+    query per setting (conf is read at plan/execution time, and eager
+    fixpoint queries re-run their rounds under the new setting, which
+    is the point)."""
+    hashes: dict[str, dict[int, str]] = {}
+    errors: dict[str, str] = {}
+    for p in PARTITIONS:
+        with conf(spark, {"spark.sql.shuffle.partitions": str(p)}):
+            for r in sweep(spark, names, sf_dir, result_hash):
+                if r.error is not None:
+                    errors[r.name] = r.error
+                else:
+                    hashes.setdefault(r.name, {})[p] = r.value
+    return hashes, errors
 
 
-def main() -> int:
-    args = sys.argv[1:]
-    if args and args[0] == "--compare":
-        a = json.load(open(args[1], encoding="utf-8"))
-        b = json.load(open(args[2], encoding="utf-8"))
-        bad = {
-            n: (a[n], b[n])
-            for n in sorted(set(a) & set(b))
-            if a[n] != b[n]
-        }
-        only = sorted(set(a) ^ set(b))
-        for n, (ha, hb) in bad.items():
-            print(f"XX {n}: {ha} != {hb}")
-        print(
-            f"{len(set(a) & set(b)) - len(bad)}/{len(set(a) & set(b))} "
-            f"hashes identical; {len(only)} names unmatched"
-        )
-        return 1 if bad else 0
+def main(argv=None) -> int:
+    p = parser(__doc__, sf_dirs=("/root/testdata/sf0.01",), json=True)
+    args = parse(p, argv)
+    (sf_dir,) = args.sf_dir
+    spark = session("metamorphic-sweep")
 
-    sf_dir = (
-        args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
-    )
-    rest = args[1:] if args and os.path.isdir(args[0]) else args
-    dump_path = None
-    if "--dump" in rest:
-        i = rest.index("--dump")
-        dump_path = rest[i + 1]
-        rest = rest[:i] + rest[i + 2 :]
-
-    from wiki_data_pipeline_spark.plans.registry import all_queries
-    from wiki_data_pipeline_spark.session import get_spark
-
-    spark = get_spark("metamorphic-sweep")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-    names = rest or sorted(queries)
-
-    if dump_path:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        hashes = {}
-        for name in names:
-            t0 = time.time()
-            hashes[name] = result_hash(queries[name](spark, sf_dir))
-            print(f"-- {name}: {hashes[name]} ({time.time()-t0:.1f}s)")
-        with open(dump_path, "w", encoding="utf-8") as f:
+    if args.json:
+        hashes, failed = {}, 0
+        for r in sweep(spark, args.names, sf_dir, result_hash):
+            print(f"-- {r.name}: {r.value or 'XX ' + r.error} ({r.wall_s:.1f}s)")
+            if r.error is None:
+                hashes[r.name] = r.value
+            failed += r.error is not None
+        with open(args.json, "w", encoding="utf-8") as f:
             json.dump(hashes, f, indent=0, sort_keys=True)
-        print(f"dumped {len(hashes)} hashes (local[{cpus}]) -> {dump_path}")
-        return 0
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        print(f"dumped {len(hashes)} hashes (local[{cpus}]) -> {args.json}")
+        return 1 if failed else 0
 
-    table = sweep(spark, queries, names, sf_dir)
+    table, errors = partition_hashes(spark, args.names, sf_dir)
+    names = sorted(set(table) | set(errors))
     bad = 0
-    for name, hs in table.items():
-        vals = set(hs.values())
-        ok = len(vals) == 1
-        bad += 0 if ok else 1
-        mark = "OK" if ok else "XX"
-        print(f"{mark} {name}: {hs}")
+    for name in names:
+        hs = table.get(name, {})
+        ok = name not in errors and len(set(hs.values())) == 1
+        bad += not ok
+        print(f"{'OK' if ok else 'XX'} {name}: {errors.get(name, hs)}")
     print(
-        f"\n{len(table) - bad}/{len(table)} partition-invariant "
+        f"\n{len(names) - bad}/{len(names)} partition-invariant "
         f"(shuffle.partitions in {list(PARTITIONS)})"
     )
     return 1 if bad else 0

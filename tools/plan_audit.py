@@ -1,5 +1,5 @@
 """Physical-plan audit over the whole registry: `python
-tools/plan_audit.py [sf_dir] [name ...]`.
+tools/plan_audit.py [--sf-dir DIR] [name ...]`.
 
 For every registered query, compiles the physical plan (no execution)
 and counts the structures that matter at 100 TB: parquet scans (and
@@ -21,11 +21,10 @@ accident.
 from __future__ import annotations
 
 import json
-import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from sweep import parse, parser, session, sweep
 
 
 def _count_exchanges(plan: str) -> tuple[int, int, int]:
@@ -47,6 +46,11 @@ def _count_exchanges(plan: str) -> tuple[int, int, int]:
         elif node.startswith("Exchange"):
             shuffle += 1
     return shuffle, broadcast, reused
+
+
+def audit_frame(df) -> dict:
+    """``audit_plan`` over the frame's compiled physical plan."""
+    return audit_plan(df._jdf.queryExecution().executedPlan().toString())
 
 
 def audit_plan(plan: str) -> dict:
@@ -306,7 +310,7 @@ def duplicate_exchanges(df) -> list[str]:
     return out
 
 
-def flags_for(name: str, a: dict) -> list[str]:
+def flags_for(a: dict) -> list[str]:
     out = []
     if a["cartesian"]:
         out.append("CARTESIAN")
@@ -317,45 +321,30 @@ def flags_for(name: str, a: dict) -> list[str]:
     return out
 
 
-def main() -> None:
-    args = sys.argv[1:]
-    sf_dir = (
-        args[0]
-        if args and os.path.isdir(args[0])
-        else "/root/testdata/sf0.001"
-    )
-    names = args[1:] if args and os.path.isdir(args[0]) else args
+def _audit(df) -> tuple[dict, list[str]]:
+    a = audit_frame(df)
+    fl = flags_for(a)
+    for v in unbounded_global_windows(df):
+        fl.append(f"UNBOUNDED_GLOBAL_WINDOW: {v[:120]}")
+    for v in duplicate_exchanges(df):
+        fl.append(f"DUPLICATE_EXCHANGE: {v[:160]}")
+    return a, fl
 
-    from wiki_data_pipeline_spark.plans.registry import all_queries
-    from wiki_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("plan-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-    selected = names or list(queries)
-
+def main(argv=None) -> None:
+    args = parse(parser(__doc__), argv)
+    (sf_dir,) = args.sf_dir
+    spark = session("plan-audit")
     flagged: dict[str, list[str]] = {}
-    for name in selected:
-        spark.catalog.clearCache()  # a cached leaf would hide its subtree
-        try:
-            df = queries[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as e:  # noqa: BLE001
-            print(json.dumps({"name": name, "error": str(e)[:200]}))
-            flagged[name] = ["COMPILE_ERROR"]
+    for r in sweep(spark, args.names, sf_dir, _audit):
+        if r.error is not None:
+            print(json.dumps({"name": r.name, "error": r.error[:200]}))
+            flagged[r.name] = ["ERROR"]
             continue
-        a = audit_plan(plan)
-        fl = flags_for(name, a)
-        try:
-            for v in unbounded_global_windows(df):
-                fl.append(f"UNBOUNDED_GLOBAL_WINDOW: {v[:120]}")
-            for v in duplicate_exchanges(df):
-                fl.append(f"DUPLICATE_EXCHANGE: {v[:160]}")
-        except Exception as e:  # noqa: BLE001
-            fl.append(f"TREE_AUDIT_ERROR: {str(e)[:120]}")
+        a, fl = r.value
         if fl:
-            flagged[name] = fl
-        print(json.dumps({"name": name, **a, "flags": fl}))
+            flagged[r.name] = fl
+        print(json.dumps({"name": r.name, **a, "flags": fl}))
 
     print(
         json.dumps(

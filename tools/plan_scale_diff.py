@@ -17,7 +17,7 @@ or an explicit hint on a provably-small frame) or an intentional
 shuffle join at scale (document it where the query is defined).
 
 Usage:
-    python tools/plan_scale_diff.py [fixture_dir] [x10_dir]
+    python tools/plan_scale_diff.py [--sf-dir FIXTURE_DIR X10_DIR]
     # defaults: /root/testdata/sf0.001  and  .scale/x10
 
 Exit 0 when no query degrades AND no EXPECTED_SHUFFLE_AT_SCALE entry
@@ -28,23 +28,19 @@ no join nodes — are audited through their ROUND PLANS (one
 un-checkpointed iteration, plans/scale_audit.py: the plan that
 actually repeats at scale), and the bucketed-warehouse query builds
 its layout at the replica and audits the un-checkpointed bucketed
-join. The former SKIP set is empty.
+join.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import sys
-import time
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, HERE)
-sys.path.insert(0, os.path.join(HERE, "tools"))
+from plan_audit import audit_frame
+from sweep import REPO, SF_DIR, parse, parser, session, sweep
 
-from plan_audit import audit_plan  # noqa: E402
-
-SKIP: set[str] = set()
+from wiki_data_pipeline_spark.plans.registry import all_queries
+from wiki_data_pipeline_spark.plans.scale_audit import round_plan_variants
 
 # Queries whose join strategy is DESIGNED to leave broadcast as data
 # grows — both join sides scale with the data (key-bounded, not
@@ -64,12 +60,6 @@ EXPECTED_SHUFFLE_AT_SCALE: dict[str, str] = {
         "the broadcast threshold, which is the planner doing its job"
     ),
 }
-
-
-def compile_audit(spark, fn, sf_dir: str) -> dict:
-    df = fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return audit_plan(plan)
 
 
 def classify(name: str, a: dict, b: dict) -> tuple[list[str], list[str]]:
@@ -105,34 +95,30 @@ def classify(name: str, a: dict, b: dict) -> tuple[list[str], list[str]]:
     return probs, []
 
 
-def main() -> int:
-    fixture = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    x10 = sys.argv[2] if len(sys.argv) > 2 else os.path.join(HERE, ".scale", "x10")
+def main(argv=None) -> int:
+    p = parser(__doc__, sf_dirs=(SF_DIR, os.path.join(REPO, ".scale", "x10")))
+    fixture, x10 = parse(p, argv, names=False).sf_dir
     if not os.path.exists(os.path.join(x10, "_DONE")):
         print(f"10x replica missing at {x10} (python bench.py --sf1 builds it)")
         return 2
 
-    from wiki_data_pipeline_spark.plans.registry import all_queries
-    from wiki_data_pipeline_spark.plans.scale_audit import round_plan_variants
-    from wiki_data_pipeline_spark.session import get_spark
-
-    spark = get_spark("plan-scale-diff")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
+    spark = session("plan-scale-diff")
     # iterative/bucketed queries audit through their round-plan stand-ins
-    queries.update(round_plan_variants())
+    queries = {**all_queries(), **round_plan_variants()}
+    names = sorted(queries)
 
     degraded: dict[str, dict] = {}
     expected: dict[str, dict] = {}
     errors: dict[str, str] = {}
-    t0 = time.time()
-    names = sorted(set(queries) - SKIP)
-    for i, name in enumerate(names):
-        try:
-            a = compile_audit(spark, queries[name], fixture)
-            b = compile_audit(spark, queries[name], x10)
-        except Exception as e:  # noqa: BLE001
-            errors[name] = str(e)[:200]
+    # zip pulls one record from each sweep in turn: a query compiles
+    # at the fixture, then at x10, before the next one starts
+    for ra, rb in zip(
+        sweep(spark, names, fixture, audit_frame, queries),
+        sweep(spark, names, x10, audit_frame, queries),
+    ):
+        name, a, b = ra.name, ra.value, rb.value
+        if ra.error or rb.error:
+            errors[name] = (ra.error or rb.error)[:200]
             continue
         probs, excused = classify(name, a, b)
         if excused:
@@ -145,8 +131,6 @@ def main() -> int:
         if probs:
             degraded[name] = {"fixture": a, "x10": b, "probs": probs}
             print(f"XX {name}: {'; '.join(probs)}")
-        if (i + 1) % 40 == 0:
-            print(f"-- {i + 1}/{len(names)} ({time.time() - t0:.0f}s)")
 
     stale_expectations = sorted(
         set(EXPECTED_SHUFFLE_AT_SCALE) - set(expected) - set(errors)
@@ -155,7 +139,7 @@ def main() -> int:
         f"\n{len(names) - len(degraded) - len(errors)}/{len(names)} "
         f"scale-stable; {len(degraded)} degraded; "
         f"{len(expected)} expected designed-shuffle flips; "
-        f"{len(errors)} compile errors; skipped {sorted(SKIP)}"
+        f"{len(errors)} compile errors"
     )
     if stale_expectations:
         print(
@@ -164,13 +148,13 @@ def main() -> int:
         )
     for n, e in errors.items():
         print(f"ERR {n}: {e}")
-    out = os.path.join(HERE, "PLAN_SCALE_DIFF.json")
+    out = os.path.join(REPO, "PLAN_SCALE_DIFF.json")
     with open(out, "w", encoding="utf-8") as f:
         json.dump(
             {"fixture": fixture, "x10": x10, "degraded": degraded,
              "expected_designed_shuffle": expected,
              "stale_expectations": stale_expectations,
-             "errors": errors, "skipped": sorted(SKIP),
+             "errors": errors,
              "round_plan_variants": sorted(round_plan_variants())},
             f, indent=1,
         )

@@ -24,11 +24,11 @@ cd "$(dirname "$0")/.."
 
 echo "== 1/7 adversarial fixture + full-registry sweep"
 python tools/make_adversarial_sf.py /tmp/adversarial_sf
-python tools/check_parity.py --json ADVERSARIAL_PARITY.json /tmp/adversarial_sf
+python tools/check_parity.py --json ADVERSARIAL_PARITY.json --sf-dir /tmp/adversarial_sf
 
 echo "== 2/7 reliable-pin sweep (pin-routed queries only)"
 python tools/check_parity.py --json RELIABLE_PARITY.json \
-    --pin-mode reliable --pin-sites /root/testdata/sf0.001
+    --pin-mode reliable --pin-sites --sf-dir /root/testdata/sf0.001
 
 echo "== 3/7 sf0.1 bench (writes BENCH_SPREAD.json sidecar)"
 python bench.py

@@ -1,14 +1,14 @@
-"""Scaling probe: run the dedup/ANN family at 1x / 3x / 10x of sf0.1
-and check wall-time growth is ~linear (no shuffle-volume mistakes that
-sub-second sf0.1 numbers can't expose).
+"""Scaled replicas and the constrained-heap probe.
 
-`python tools/scale_probe.py [workdir]` — generates scaled copies of
-sf0.1 documents/embeddings under workdir (default /tmp/scale_probe),
-runs the probed queries at each scale, and prints one JSON line per
-scale plus a growth summary. `--deep` probes the steepest growers at
-30x; `--heap <size> [--cpus N]` runs the constrained-heap degradation
-probe instead (5 heaviest queries at 10x under a small driver heap,
-spill metrics from the driver's status store — see HEAP_PROBED).
+`build_scaled(spark, workdir, mult)` writes a decorrelated mult-times
+copy of sf0.1 under workdir/x<mult>; `bench.py --sf1` times the whole
+registry on its x1 and x10 replicas and reports each query's wall
+growth (`scaling_exponents`, `superlinear`).
+
+`python tools/scale_probe.py --heap SIZE [--cpus N] [workdir]` runs
+the constrained-heap probe: the heaviest queries (HEAP_PROBED) at 10x
+data under a small driver heap, with each query's spill read from the
+driver's status store (default workdir /tmp/scale_probe).
 
 Replica construction matters: naive replication would make every doc a
 10-way near-duplicate, inflating candidate pairs quadratically and
@@ -25,67 +25,17 @@ from __future__ import annotations
 
 import json
 import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from sweep import noop, parse, parser, session, sweep
 
 SRC = "/root/testdata/sf0.1"
-PROBED = [
-    "dedup_minhash_lsh",
-    "dedup_substring_spans",
-    "sim_ann_pq_adc",
-    "graph_pagerank_dedup",
-    # round-5 additions (documents/embeddings family)
-    "sim_ann_pq_rerank",
-    "dedup_paragraph_chunks",
-    "dedup_minhash_calibration",
-    "sample_dsir_importance",
-    "text_shingle_novelty",
-    "text_char_entropy",
-    # round-5 event-family additions (events scaled with offset users)
-    "join_cogrouped_asof",
-    "window_range_interval",
-    "sessionize_events",
-    "path_markov_transitions",
-    "streaming_lateness_profile",
-    # round-6: star-schema join family (lineitem/orders scaled with
-    # offset orderkeys, dims fixed — the shape real fact growth takes)
-    "q5_star_join_revenue",
-    "q9_product_profit",
-    "q18_large_orders",
-    "q21_sole_blame_suppliers",
-    # round-6: rewritten this round (narrow fold / one-pass aggregate)
-    "text_repetition_metrics",
-    "pipeline_quality_gate",
-    "pipeline_yield_report",
-]
-SCALES = [1, 3, 10]
 
-# Deep probe (--deep): one more decade on the steepest 10x growers, to
-# confirm the near-linear asymptote holds beyond one decade and that
-# the 30x shuffle volumes survive 128 GiB (round-6 verdict item 5).
-PROBED_DEEP = [
-    "q18_large_orders",
-    "q21_sole_blame_suppliers",
-    "text_shingle_novelty",
-    "dedup_minhash_lsh",
-    # r15: the de-hinted keep-best join — its components join is now
-    # a stats-owned shuffle join, so the 30x decade directly measures
-    # THAT plan's growth instead of the removed broadcast's
-    "dedup_keep_best",
-]
-SCALES_DEEP = [1, 30]
-
-# Constrained-heap probe (--heap <size>, round-7 verdict item 5): the
-# 1x/3x/10x/30x linearity claims were proven on a roomy heap with zero
-# spill; this mode proves graceful DEGRADATION — the 5 heaviest
+# Constrained-heap probe (round-7 verdict item 5): the heaviest
 # queries at 10x data under a deliberately small driver heap and few
 # cores (local[8] by default), recording the spill of each query's own
-# stages (from the driver's status store, tools/stage_metrics.py) and
-# wall time. The pass criterion is "spills and finishes", not "fast":
-# an OOM here is a real scale finding (memory footprint not bounded
-# per-partition), spill is the designed behavior.
+# stages and wall time. The pass criterion is "spills and finishes",
+# not "fast": an OOM here is a real scale finding (memory footprint
+# not bounded per-partition), spill is the designed behavior.
 HEAP_PROBED = [
     "dedup_minhash_verified",
     "dedup_minhash_calibration",
@@ -100,86 +50,19 @@ HEAP_PROBED = [
 ]
 
 
-def run_heap_probe(workdir: str, heap: str, cpus: str) -> None:
-    # env must land before the JVM starts — get_spark reads both
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = heap
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
-    from stage_metrics import snapshot, stages_since
-
-    from wiki_data_pipeline_spark.plans.registry import all_queries
-    from wiki_data_pipeline_spark.session import get_spark
-
-    spark = get_spark("scale-probe-heap")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-    sf_dir = build_scaled(spark, workdir, 10)
-    results = []
-    for name in HEAP_PROBED:
-        snap = snapshot(spark)
-        t0 = time.perf_counter()
-        try:
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            status = "ok"
-        except Exception as e:  # OOM lands here as a Py4J error
-            status = f"failed: {type(e).__name__}: {str(e)[:200]}"
-        wall = round(time.perf_counter() - t0, 2)
-        new = stages_since(spark, snap)
-        row = {
-            "query": name,
-            "heap": heap,
-            "cpus": int(cpus),
-            "scale": 10,
-            "wall_sec": wall,
-            "memory_spilled_mb": round(
-                sum(s.memory_spilled for s in new) / 1e6, 1
-            ),
-            "disk_spilled_mb": round(
-                sum(s.disk_spilled for s in new) / 1e6, 1
-            ),
-            "status": status,
-        }
-        results.append(row)
-        print(json.dumps(row))
-    print(
-        json.dumps(
-            {
-                "metric": "constrained_heap_probe",
-                "oom_count": sum(
-                    1 for r in results if r["status"] != "ok"
-                ),
-                "total_wall_sec": round(
-                    sum(r["wall_sec"] for r in results), 1
-                ),
-            }
-        )
-    )
-
-# Every table build_scaled materializes (scaled copies + dim symlinks).
-# A workdir from an older probe version can carry a stale _DONE marker
-# while missing newer tables, so completeness is verified structurally
+# The tables build_scaled replicates, and the dims it links. A workdir
+# from an older probe version can carry a stale _DONE marker while
+# missing newer tables, so completeness is verified structurally
 # instead of trusting the marker alone.
-EXPECTED_TABLES = [
-    "documents",
-    "embeddings",
-    "events",
-    "orders",
-    "lineitem",
-    "customer",
-    "supplier",
-    "part",
-    "nation",
-    "region",
-]
+FACTS = ("documents", "embeddings", "events", "orders", "lineitem")
+DIMS = ("customer", "supplier", "part", "nation", "region")
 
 
 def _complete(out: str) -> bool:
     # os.path.exists follows symlinks → False for a broken dim link
     # (e.g. SRC moved/regenerated), which correctly forces a rebuild.
     return all(
-        os.path.exists(os.path.join(out, f"{t}.parquet"))
-        for t in EXPECTED_TABLES
+        os.path.exists(os.path.join(out, f"{t}.parquet")) for t in FACTS + DIMS
     )
 
 
@@ -208,78 +91,53 @@ def build_scaled(spark, workdir: str, mult: int) -> str:
     n_files = 4 * mult
     from wiki_data_pipeline_spark.io import read_table
 
-    docs = read_table(spark, SRC, "documents")
-    emb = read_table(spark, SRC, "embeddings")
-    max_doc = docs.agg(F.max("doc_id")).first()[0] + 1
-    max_vec = emb.agg(F.max("vec_id")).first()[0] + 1
-
+    tables = {t: read_table(spark, SRC, t) for t in FACTS}
     reps = spark.range(mult).withColumnRenamed("id", "k")
-    scaled_docs = (
-        docs.crossJoin(reps)
-        .select(
-            (F.col("doc_id") + F.col("k") * max_doc).alias("doc_id"),
-            # tag every token with the replica id: disjoint shingle
-            # space per replica, so dup structure scales linearly
-            F.when(F.col("k") == 0, F.col("text"))
-            .otherwise(
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.split(F.trim(F.col("text")), r"\s+"),
-                        lambda t: F.concat(
-                            F.col("k").cast("string"), F.lit("_"), t
-                        ),
-                    ),
-                )
-            )
-            .alias("text"),
-            *[
-                c
-                for c in docs.columns
-                if c not in ("doc_id", "text")
-            ],
+    k = F.col("k")
+
+    def span(table: str, key: str) -> int:
+        """Replica k shifts ``key`` by k * span: keys never collide."""
+        return tables[table].agg(F.max(key)).first()[0] + 1
+
+    def write(table: str, **rebuilt) -> None:
+        df = tables[table]
+        df.crossJoin(reps).select(
+            *[rebuilt.get(c, F.col(c)).alias(c) for c in df.columns]
+        ).repartition(n_files).write.mode("overwrite").parquet(
+            os.path.join(out, f"{table}.parquet")
         )
+
+    write(
+        "documents",
+        doc_id=F.col("doc_id") + k * span("documents", "doc_id"),
+        # tag every token with the replica id: disjoint shingle
+        # space per replica, so dup structure scales linearly
+        text=F.when(k == 0, F.col("text")).otherwise(
+            F.concat_ws(" ", F.transform(
+                F.split(F.trim(F.col("text")), r"\s+"),
+                lambda t: F.concat(k.cast("string"), F.lit("_"), t),
+            ))
+        ),
     )
-    n_dim = len(emb.select("embedding").first()[0])
-    scaled_emb = (
-        emb.crossJoin(reps)
-        .select(
-            (F.col("vec_id") + F.col("k") * max_vec).alias("vec_id"),
-            # circular shift by k dims: norm-preserving decorrelation
-            F.concat(
-                F.slice(
-                    F.col("embedding"),
-                    (F.col("k") % n_dim) + 1,
-                    F.lit(n_dim) - (F.col("k") % n_dim),
-                ),
-                F.slice(F.col("embedding"), F.lit(1), F.col("k") % n_dim),
-            ).alias("embedding"),
-            *[c for c in emb.columns if c not in ("vec_id", "embedding")],
-        )
-    )
-    scaled_docs.repartition(n_files).write.mode("overwrite").parquet(
-        os.path.join(out, "documents.parquet")
-    )
-    scaled_emb.repartition(n_files).write.mode("overwrite").parquet(
-        os.path.join(out, "embeddings.parquet")
+    n_dim = len(tables["embeddings"].select("embedding").first()[0])
+    shift = k % n_dim
+    write(
+        "embeddings",
+        vec_id=F.col("vec_id") + k * span("embeddings", "vec_id"),
+        # circular shift by k dims: norm-preserving decorrelation
+        embedding=F.concat(
+            F.slice(F.col("embedding"), shift + 1, F.lit(n_dim) - shift),
+            F.slice(F.col("embedding"), F.lit(1), shift),
+        ),
     )
     # events: replicate with offset user/event ids (decorrelated users —
     # per-user session/sequence structure is preserved within a replica
     # and users never collide across replicas, so per-key costs are
     # constant and totals scale linearly by construction)
-    events = read_table(spark, SRC, "events")
-    max_user = events.agg(F.max("user_id")).first()[0] + 1
-    max_event = events.agg(F.max("event_id")).first()[0] + 1
-    scaled_events = events.crossJoin(reps).select(
-        (F.col("event_id") + F.col("k") * max_event).alias("event_id"),
-        "ts",
-        (F.col("user_id") + F.col("k") * max_user).alias("user_id"),
-        "event_type",
-        "value",
-        "props",
-    )
-    scaled_events.repartition(n_files).write.mode("overwrite").parquet(
-        os.path.join(out, "events.parquet")
+    write(
+        "events",
+        event_id=F.col("event_id") + k * span("events", "event_id"),
+        user_id=F.col("user_id") + k * span("events", "user_id"),
     )
     # star-schema facts: lineitem + orders replicate with offset
     # orderkeys (per-order line structure preserved within a replica,
@@ -287,22 +145,10 @@ def build_scaled(spark, workdir: str, mult: int) -> str:
     # construction). Dims stay FIXED — that is what fact growth looks
     # like in production: per-dim-key fan-in grows 10×, which is
     # exactly the aggregation/join pressure the probe should measure.
-    orders = read_table(spark, SRC, "orders")
-    max_ok = orders.agg(F.max("o_orderkey")).first()[0] + 1
-    orders.crossJoin(reps).select(
-        (F.col("o_orderkey") + F.col("k") * max_ok).alias("o_orderkey"),
-        *[c for c in orders.columns if c != "o_orderkey"],
-    ).repartition(n_files).write.mode("overwrite").parquet(
-        os.path.join(out, "orders.parquet")
-    )
-    lineitem = read_table(spark, SRC, "lineitem")
-    lineitem.crossJoin(reps).select(
-        (F.col("l_orderkey") + F.col("k") * max_ok).alias("l_orderkey"),
-        *[c for c in lineitem.columns if c != "l_orderkey"],
-    ).repartition(n_files).write.mode("overwrite").parquet(
-        os.path.join(out, "lineitem.parquet")
-    )
-    for dim in ("customer", "supplier", "part", "nation", "region"):
+    max_ok = span("orders", "o_orderkey")
+    write("orders", o_orderkey=F.col("o_orderkey") + k * max_ok)
+    write("lineitem", l_orderkey=F.col("l_orderkey") + k * max_ok)
+    for dim in DIMS:
         link = os.path.join(out, f"{dim}.parquet")
         # lexists, not exists: a BROKEN symlink (SRC moved) fails the
         # exists() check but still blocks os.symlink → unlink first.
@@ -313,67 +159,42 @@ def build_scaled(spark, workdir: str, mult: int) -> str:
     return out
 
 
-def main() -> None:
-    argv = sys.argv[1:]
-    heap = None
-    cpus = "8"
-    if "--heap" in argv:
-        i = argv.index("--heap")
-        heap = argv[i + 1]
-        del argv[i : i + 2]
-    if "--cpus" in argv:
-        i = argv.index("--cpus")
-        cpus = argv[i + 1]
-        del argv[i : i + 2]
-    deep = "--deep" in argv
-    argv = [a for a in argv if a != "--deep"]
-    workdir = argv[0] if argv else "/tmp/scale_probe"
-    if heap is not None:
-        run_heap_probe(workdir, heap, cpus)
-        return
-    probed = PROBED_DEEP if deep else PROBED
-    scales = SCALES_DEEP if deep else SCALES
-    from wiki_data_pipeline_spark.plans.registry import all_queries
-    from wiki_data_pipeline_spark.session import get_spark
-
-    spark = get_spark("scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-
-    results: dict[int, dict[str, float]] = {}
-    for mult in scales:
-        sf_dir = build_scaled(spark, workdir, mult)
-        timings: dict[str, float] = {}
-        for name in probed:
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()  # warmup
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            timings[name] = round(time.perf_counter() - t0, 2)
-        results[mult] = timings
-        print(json.dumps({"scale": mult, "timings": timings}))
-
-    top = scales[-1]
-    growth = {
-        name: round(results[top][name] / results[scales[0]][name], 2)
-        for name in probed
-    }
-    print(
-        json.dumps(
-            {
-                "metric": f"wall_growth_at_{top}x",
-                "growth": growth,
-                # linear bound scales with the data multiplier (1.5x
-                # headroom for fixed costs + shuffle constant factors)
-                "linear_bound_ok": {
-                    n: g <= 1.5 * top for n, g in growth.items()
-                },
-            }
-        )
-    )
+def main(argv=None) -> None:
+    p = parser(__doc__, sf_dirs=())
+    p.add_argument("workdir", nargs="?", default="/tmp/scale_probe")
+    p.add_argument("--heap", required=True, metavar="SIZE",
+                   help="driver heap for the probe, e.g. 2g")
+    p.add_argument("--cpus", default="8", help="local cores (default 8)")
+    args = parse(p, argv, names=False)
+    # env must land before the JVM starts — get_spark reads both
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = args.heap
+    os.environ["SPARK_GRAFT_CPUS"] = args.cpus
+    spark = session("scale-probe-heap")
+    sf_dir = build_scaled(spark, args.workdir, 10)
+    results = []
+    for r in sweep(spark, HEAP_PROBED, sf_dir, noop):
+        row = {
+            "query": r.name,
+            "heap": args.heap,
+            "cpus": int(args.cpus),
+            "scale": 10,
+            "wall_sec": round(r.wall_s, 2),
+            "memory_spilled_mb": round(
+                sum(s.memory_spilled for s in r.stages) / 1e6, 1
+            ),
+            "disk_spilled_mb": round(
+                sum(s.disk_spilled for s in r.stages) / 1e6, 1
+            ),
+            # an OOM lands here as a Py4J error
+            "status": "ok" if r.error is None else f"failed: {r.error[:200]}",
+        }
+        results.append(row)
+        print(json.dumps(row))
+    print(json.dumps({
+        "metric": "constrained_heap_probe",
+        "oom_count": sum(r["status"] != "ok" for r in results),
+        "total_wall_sec": round(sum(r["wall_sec"] for r in results), 1),
+    }))
 
 
 if __name__ == "__main__":

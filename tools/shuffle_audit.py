@@ -32,11 +32,11 @@ Report, per query:
 Zero-shuffle queries (broadcast-only plans like j1_enrichment_join)
 report growth 1.0 by convention (0 -> 0 bytes).
 
-Usage: python tools/shuffle_audit.py [small_dir] [big_dir] [--names a,b]
+Usage: python tools/shuffle_audit.py [--sf-dir SMALL_DIR BIG_DIR] [name ...]
        defaults /root/testdata/sf0.01 and /root/testdata/sf0.1;
-       --names measures only the listed queries and prints their rows
-       WITHOUT touching the registry-wide artifact (for before/after
-       fix comparisons).
+       named queries are measured and their rows printed WITHOUT
+       touching the registry-wide artifact (for before/after fix
+       comparisons).
 Artifact: SHUFFLE_SCALING.json. Exit 1 if any query is flagged.
 """
 
@@ -45,13 +45,8 @@ from __future__ import annotations
 import json
 import os
 import re
-import sys
-import time
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, HERE)
-
-from stage_metrics import snapshot, stages_since  # noqa: E402
+from sweep import REPO, noop, parse, parser, session, sweep
 
 GROWTH_FLAG = 20.0  # 10x data; 2x margin on linear
 ABS_FLOOR_BYTES = 10 * 1024 * 1024  # ignore sub-10MB shuffles at sf0.1
@@ -67,12 +62,11 @@ def _scan_bytes(df) -> int:
     every file path named by the plan's scan nodes, deduplicated, summed
     at its on-disk (compressed) size. Column pruning means the true
     bytes read are <= this, i.e. reported amplification is a LOWER
-    bound — fine for a design-review ranking.
+    bound — fine for a design-review ranking. A plan that cannot be
+    read raises, so the sweep records an error instead of an
+    amplification of 0.
     """
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:
-        return 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
     total, seen = 0, set()
     for m in re.finditer(r"file:(/[^\s\],)\x00]+)", plan):
         path = m.group(1).rstrip(".")
@@ -91,53 +85,33 @@ def _scan_bytes(df) -> int:
     return total
 
 
-def _run_measured(spark, fn, sf_dir: str) -> tuple[int, int, float]:
-    # Snapshot BEFORE plan construction (r12): iterative queries
-    # (fixpoints, pagerank, BPE training) run jobs — including their
-    # shuffles — inside fn() via per-round pins and driver scalars;
-    # snapshotting after fn() attributed 0 bytes to exactly the
-    # queries whose shuffle growth most needs watching.
-    snap = snapshot(spark)
-    t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
-    return (
-        sum(s.shuffle_write_bytes for s in stages_since(spark, snap)),
-        _scan_bytes(df),
-        wall,
-    )
+def _run_and_scan(df) -> int:
+    noop(df)
+    return _scan_bytes(df)
 
 
-def main() -> int:
-    argv = list(sys.argv[1:])
-    only: list[str] | None = None
-    if "--names" in argv:
-        i = argv.index("--names")
-        only = argv[i + 1].split(",")
-        del argv[i:i + 2]
-    small = argv[0] if len(argv) > 0 else "/root/testdata/sf0.01"
-    big = argv[1] if len(argv) > 1 else "/root/testdata/sf0.1"
-
-    from wiki_data_pipeline_spark.plans.registry import all_queries
-    from wiki_data_pipeline_spark.session import get_spark
-
-    spark = get_spark("shuffle-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
+def main(argv=None) -> int:
+    p = parser(__doc__, sf_dirs=("/root/testdata/sf0.01", "/root/testdata/sf0.1"))
+    args = parse(p, argv)
+    small, big = args.sf_dir
+    spark = session("shuffle-audit")
 
     rows: dict[str, dict] = {}
     flagged: dict[str, dict] = {}
     errors: dict[str, str] = {}
-    t0 = time.time()
-    names = only if only is not None else sorted(queries)
-    for n, name in enumerate(names):
-        try:
-            w_s, i_s, _ = _run_measured(spark, queries[name], small)
-            w_b, i_b, wall_b = _run_measured(spark, queries[name], big)
-        except Exception as e:  # noqa: BLE001
-            errors[name] = str(e)[:200]
+    # zip pulls one record from each sweep in turn: a query runs at
+    # the small scale, then at the big one, before the next starts
+    for rs, rb in zip(
+        sweep(spark, args.names, small, noop),
+        sweep(spark, args.names, big, _run_and_scan),
+    ):
+        name = rs.name
+        if rs.error or rb.error:
+            errors[name] = (rs.error or rb.error)[:200]
             continue
+        w_s = sum(s.shuffle_write_bytes for s in rs.stages)
+        w_b = sum(s.shuffle_write_bytes for s in rb.stages)
+        i_b = rb.value
         growth = round(w_b / w_s, 2) if w_s else (1.0 if not w_b else float("inf"))
         amp = round(w_b / i_b, 3) if i_b else 0.0
         rows[name] = {
@@ -146,30 +120,31 @@ def main() -> int:
             "scan_disk_big": i_b,
             "shuffle_growth": growth,
             "amplification": amp,
-            "wall_big": round(wall_b, 2),
+            "wall_big": round(rb.wall_s, 2),
         }
         if growth > GROWTH_FLAG and w_b > ABS_FLOOR_BYTES:
             flagged[name] = rows[name]
             print(f"XX {name}: growth {growth}x, {w_b/1e6:.1f} MB at sf0.1")
-        if (n + 1) % 25 == 0:
-            print(f"-- {n + 1}/{len(names)} ({time.time() - t0:.0f}s)")
+        if len(rows) % 25 == 0:
+            print(f"-- {len(rows)} measured")
 
     top_amp = sorted(
         ((r["amplification"], k) for k, r in rows.items()
          if r["shuffle_big"] > ABS_FLOOR_BYTES),
         reverse=True,
     )[:10]
-    print(f"\n{len(rows)}/{len(names)} measured; {len(flagged)} flagged "
+    n = len(rows) + len(errors)
+    print(f"\n{len(rows)}/{n} measured; {len(flagged)} flagged "
           f"superlinear; {len(errors)} errors")
     print("top amplification (shuffle/scanned-disk at sf0.1, >10MB shuffles):")
     for a, k in top_amp:
         print(f"  {k}: {a}x ({rows[k]['shuffle_big']/1e6:.1f} MB)")
 
-    if only is not None:
+    if args.names:
         for k, r in rows.items():
             print(f"{k}: {json.dumps(r)}")
     else:
-        with open(os.path.join(HERE, "SHUFFLE_SCALING.json"), "w",
+        with open(os.path.join(REPO, "SHUFFLE_SCALING.json"), "w",
                   encoding="utf-8") as f:
             json.dump(
                 {"small": small, "big": big, "growth_flag": GROWTH_FLAG,

@@ -25,14 +25,11 @@ table into SCALE.md.
 from __future__ import annotations
 
 import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F  # noqa: E402
-from stage_metrics import snapshot, stages_since  # noqa: E402
+from pyspark.sql import functions as F
+from stage_metrics import snapshot, stages_since
+from sweep import conf, parse, parser, session
 
 HOT_SHARE = 0.30
 N_DIM_KEYS = 200_000
@@ -40,8 +37,10 @@ TARGET_ROWS = 20_000  # rows per (key, salt) slice the plan aims for
 N_SALTS_UNIFORM = 32
 
 
-def main() -> None:
-    n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
+def main(argv=None) -> None:
+    p = parser(__doc__, sf_dirs=())
+    p.add_argument("n_rows", nargs="?", type=int, default=4_000_000)
+    n_rows = parse(p, argv, names=False).n_rows
     from wiki_data_pipeline_spark.operators.skew import (
         GINI_SALT_TRIGGER_MICRO,
         gini_micro,
@@ -50,10 +49,8 @@ def main() -> None:
         salted_join,
         salted_join_planned,
     )
-    from wiki_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("skew-probe")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("skew-probe")
     n_hot = int(n_rows * HOT_SHARE)
     fact = (
         spark.range(n_rows)
@@ -112,29 +109,25 @@ def main() -> None:
             ),
         ),
     }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     results = {}
-    try:
+    with conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         for name, v in variants.items():
-            spark.conf.set("spark.sql.adaptive.skewJoin.enabled", v["skew"])
-            agg_out(v["fn"]())  # warmup (codegen; also primes checkpts)
-            snap = snapshot(spark)
-            t0 = time.perf_counter()
-            agg_out(v["fn"]())
-            wall = round(time.perf_counter() - t0, 2)
-            # the dominating task of the dominating stage
-            mx = max(
-                s.max_task_ms
-                for s in stages_since(spark, snap, max_task=True)
-            )
+            with conf(spark, {"spark.sql.adaptive.skewJoin.enabled": v["skew"]}):
+                agg_out(v["fn"]())  # warmup (codegen; also primes checkpts)
+                snap = snapshot(spark)
+                t0 = time.perf_counter()
+                agg_out(v["fn"]())
+                wall = round(time.perf_counter() - t0, 2)
+                # the dominating task of the dominating stage
+                mx = max(
+                    s.max_task_ms
+                    for s in stages_since(spark, snap, max_task=True)
+                )
             results[name] = {
                 "wall_sec": wall,
                 "max_task_runtime_ms": round(mx, 0),
             }
             print(json.dumps({"variant": name, **results[name]}))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     plain_mx = results["plain"]["max_task_runtime_ms"] or 1
     print(
         json.dumps(

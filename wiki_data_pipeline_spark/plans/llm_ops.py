@@ -3800,14 +3800,18 @@ def sample_domain_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map over the scan. One small shuffle + one broadcast join
     at any corpus size."""
     docs = read_table(spark, sf_dir, "documents")
-    n = docs.groupBy("source").agg(F.count("*").alias("ns"))
-    tot = n.agg(F.sum("ns").alias("total"))
-    w = n.crossJoin(F.broadcast(tot)).withColumn(
+    n = docs.groupBy("source").agg(F.count("*").alias("ns")).withColumn(
         "sq", F.round(F.sqrt(F.col("ns").cast("double")), 6).cast("decimal(28,6)")
     )
-    ssum = w.agg(F.sum("sq").alias("ssum"))
+    # one aggregate over n: the per-source rows ride along as a one-row
+    # list next to both totals, so the count aggregate runs once
     rate = (
-        w.crossJoin(F.broadcast(ssum))
+        n.agg(
+            F.collect_list(F.struct("source", "ns", "sq")).alias("rows"),
+            F.sum("ns").alias("total"),
+            F.sum("sq").alias("ssum"),
+        )
+        .select(F.inline("rows"), "total", "ssum")
         .select(
             "source",
             F.round(

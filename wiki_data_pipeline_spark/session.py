@@ -1,12 +1,13 @@
 """SparkSession builder.
 
-Defaults are tuned for the local[32] test harness but every setting is
-chosen to also be the right default on a large cluster:
+Locally the session runs on local[N], N = $SPARK_GRAFT_CPUS (32 when
+unset), but every setting is chosen to also be the right default on a
+large cluster:
 
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
   and dynamic join-strategy switching are exactly what keeps the same
   logical plans healthy at 100 TB.
-- shuffle.partitions small locally (32) — on a real cluster this is
+- shuffle.partitions = N locally — on a real cluster this is
   overridden by AQE's coalescing from an intentionally high initial
   number, so plans are written to not depend on the exact value.
 - Arrow enabled: every pandas_udf / mapInPandas crossing is
