@@ -4,16 +4,18 @@ conf/spark-cluster-profile.conf turns SCALE.md's deployment
 recommendations into a runnable artifact: loadable natively by
 ``spark-submit --properties-file`` and overlaid by
 ``get_spark(profile=...)`` / ``SPARK_GRAFT_PROFILE``. These tests keep
-it well-formed and keep the overlay path honest.
+it well-formed and keep the overlay path honest. The last test covers
+``scoped_conf``, the session's one conf set-and-restore.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
 
-from wiki_data_pipeline_spark.session import get_spark, load_profile
+from wiki_data_pipeline_spark.session import get_spark, load_profile, scoped_conf
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PROFILE = os.path.join(REPO, "conf", "spark-cluster-profile.conf")
@@ -147,3 +149,23 @@ def test_bucketed_ddl_script_matches_live_layout():
     assert (k1, s1) == ("l_orderkey", "l_orderkey")
     assert (k2, s2) == ("o_orderkey", "o_orderkey")
     assert n1 == n2, "fact tables must share one bucket count"
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    """A key set before the block gets its old value back, an unset key
+    is unset again, and both hold when the block raises."""
+    was_set = "spark.wiki_data_pipeline.scoped.was_set"
+    was_unset = "spark.wiki_data_pipeline.scoped.was_unset"
+    spark.conf.set(was_set, "old")
+    try:
+        for fail in (False, True):
+            with pytest.raises(RuntimeError) if fail else contextlib.nullcontext():
+                with scoped_conf(spark, {was_set: "new", was_unset: "new"}):
+                    assert spark.conf.get(was_set) == "new"
+                    assert spark.conf.get(was_unset) == "new"
+                    if fail:
+                        raise RuntimeError("block failed")
+            assert spark.conf.get(was_set) == "old"
+            assert spark.conf.get(was_unset, None) is None
+    finally:
+        spark.conf.unset(was_set)

@@ -483,7 +483,7 @@ def test_pipeline_cli(sf_dir, tmp_path):
 
 
 def test_pipeline_cli_streaming_mode(spark, tmp_path):
-    """--stream-source runs the streaming twin from the CLI: drains
+    """--stream DIR runs the streaming twin from the CLI: drains
     the source as micro-batches, sinks per-record JSON, prints a
     one-line summary."""
     import subprocess
@@ -502,7 +502,7 @@ def test_pipeline_cli_streaming_mode(spark, tmp_path):
             sys.executable,
             "-m",
             "wiki_data_pipeline_spark",
-            "--stream-source",
+            "--stream",
             src,
             "--out",
             out,
@@ -525,7 +525,7 @@ def test_pipeline_cli_streaming_mode(spark, tmp_path):
             sys.executable,
             "-m",
             "wiki_data_pipeline_spark",
-            "--stream-source",
+            "--stream",
             src,
             "--out",
             out,
@@ -564,7 +564,7 @@ def test_pipeline_cli_streaming_reset_and_limit(spark, tmp_path):
         sys.executable,
         "-m",
         "wiki_data_pipeline_spark",
-        "--stream-source",
+        "--stream",
         src,
         "--out",
         out,

@@ -23,7 +23,7 @@ def test_tumbling_agg_stream_matches_batch(spark, sf_dir, tmp_path):
     n = stage_events_as_stream_source(spark, sf_dir, src, n_files=3)
     assert n >= 3
     run_tumbling_agg(
-        spark, src, str(tmp_path / "ckpt"), query_name="t_tumbling", watermark="2 hours"
+        spark, src, str(tmp_path / "ckpt"), query_name="t_tumbling"
     )
     emitted = spark.table("t_tumbling")
     assert set(emitted.columns) == {
@@ -55,7 +55,7 @@ def test_dead_letter_split_and_resume(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     stage_events_as_stream_source(spark, sf_dir, src, n_files=3)
 
-    run_dead_letter_split(spark, src, ckpt, ok_dir, dlq_dir, min_value=10.0)
+    run_dead_letter_split(spark, src, ckpt, ok_dir, dlq_dir)
     events = read_table(spark, sf_dir, "events")
     n_ok = spark.read.parquet(ok_dir).count()
     n_dlq = spark.read.parquet(dlq_dir).count()
@@ -70,7 +70,7 @@ def test_dead_letter_split_and_resume(spark, sf_dir, tmp_path):
         "event_id", F.col("event_id") + 1_000_000
     )
     extra.coalesce(1).write.mode("append").parquet(src)
-    run_dead_letter_split(spark, src, ckpt, ok_dir, dlq_dir, min_value=10.0)
+    run_dead_letter_split(spark, src, ckpt, ok_dir, dlq_dir)
     n_ok2 = spark.read.parquet(ok_dir).count()
     n_dlq2 = spark.read.parquet(dlq_dir).count()
     assert (n_ok2 + n_dlq2) - (n_ok + n_dlq) == extra.count()
@@ -197,13 +197,13 @@ def test_watermark_drops_late_rows_across_restarts(spark, sf_dir, tmp_path):
 
     out = str(tmp_path / "late_out")
     recent.coalesce(1).write.mode("append").parquet(src)
-    run_tumbling_agg(spark, src, ckpt, watermark="2 hours", sink_dir=out)
+    run_tumbling_agg(spark, src, ckpt, sink_dir=out)
     n_after_first = spark.read.parquet(out).agg(F.sum("n_events")).first()[0] or 0
 
     # second drain, SAME checkpoint: only ancient rows arrive — all
     # beyond the persisted watermark → dropped, no new output rows
     old.coalesce(1).write.mode("append").parquet(src)
-    run_tumbling_agg(spark, src, ckpt, watermark="2 hours", sink_dir=out)
+    run_tumbling_agg(spark, src, ckpt, sink_dir=out)
     n_after_second = spark.read.parquet(out).agg(F.sum("n_events")).first()[0] or 0
     assert n_after_second == n_after_first, (
         "rows older than the persisted watermark must be dropped"
@@ -530,7 +530,6 @@ def test_progress_listener_records_batches(spark, sf_dir, tmp_path):
             src,
             str(tmp_path / "ckpt"),
             query_name="t_progress",
-            watermark="2 hours",
             max_files_per_trigger=1,
         )
         # delivery is async: all 3 file-batches must land before the

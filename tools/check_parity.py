@@ -28,10 +28,11 @@ import json
 import sys
 import tempfile
 
-from sweep import conf, parse, parser, session, sweep
+from sweep import parse, parser, session, sweep
 
 from wiki_data_pipeline_spark.operators.pin import PIN_DIR_KEY, PIN_MODE_KEY
 from wiki_data_pipeline_spark.plans.registry import all_queries
+from wiki_data_pipeline_spark.session import scoped_conf
 from wiki_data_pipeline_spark.testing import compare_query, pin_using_queries
 
 
@@ -78,7 +79,7 @@ def main(argv=None) -> int:
 
     report: dict[str, dict] = {}
     failures = 0
-    with tempfile.TemporaryDirectory(prefix="reliable_pins_") as pin_dir, conf(
+    with tempfile.TemporaryDirectory(prefix="reliable_pins_") as pin_dir, scoped_conf(
         spark,
         {} if args.pin_mode is None
         else {PIN_MODE_KEY: args.pin_mode, PIN_DIR_KEY: pin_dir},

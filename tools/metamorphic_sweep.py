@@ -30,8 +30,9 @@ import hashlib
 import json
 import os
 
-from sweep import conf, parse, parser, session, sweep
+from sweep import parse, parser, session, sweep
 
+from wiki_data_pipeline_spark.session import scoped_conf
 from wiki_data_pipeline_spark.testing import _norm
 
 PARTITIONS = (4, 64, 200)
@@ -54,7 +55,7 @@ def partition_hashes(spark, names, sf_dir) -> tuple[dict, dict]:
     hashes: dict[str, dict[int, str]] = {}
     errors: dict[str, str] = {}
     for p in PARTITIONS:
-        with conf(spark, {"spark.sql.shuffle.partitions": str(p)}):
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(p)}):
             for r in sweep(spark, names, sf_dir, result_hash):
                 if r.error is not None:
                     errors[r.name] = r.error

@@ -29,7 +29,9 @@ import time
 
 from pyspark.sql import functions as F
 from stage_metrics import snapshot, stages_since
-from sweep import conf, parse, parser, session
+from sweep import parse, parser, session
+
+from wiki_data_pipeline_spark.session import scoped_conf
 
 HOT_SHARE = 0.30
 N_DIM_KEYS = 200_000
@@ -110,9 +112,10 @@ def main(argv=None) -> None:
         ),
     }
     results = {}
-    with conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         for name, v in variants.items():
-            with conf(spark, {"spark.sql.adaptive.skewJoin.enabled": v["skew"]}):
+            skew = {"spark.sql.adaptive.skewJoin.enabled": v["skew"]}
+            with scoped_conf(spark, skew):
                 agg_out(v["fn"]())  # warmup (codegen; also primes checkpts)
                 snap = snapshot(spark)
                 t0 = time.perf_counter()

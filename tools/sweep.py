@@ -8,7 +8,6 @@ with ``session`` and reduces the ``Record``s that ``sweep`` yields.
 from __future__ import annotations
 
 import argparse
-import contextlib
 import os
 import sys
 import time
@@ -62,22 +61,6 @@ def session(app: str):
     spark = get_spark(app)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-@contextlib.contextmanager
-def conf(spark, settings: dict[str, str]):
-    """Set ``settings`` for the block, then restore each saved value."""
-    saved = {k: spark.conf.get(k, None) for k in settings}
-    try:
-        for k, v in settings.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def noop(df) -> None:

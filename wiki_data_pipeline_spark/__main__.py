@@ -4,6 +4,7 @@
     python -m wiki_data_pipeline_spark --out /tmp/wdps_out --limit 100
     python -m wiki_data_pipeline_spark --config pipeline.yaml
     python -m wiki_data_pipeline_spark --config pipeline.yaml --limit 10
+    python -m wiki_data_pipeline_spark --out /tmp/wdps_out --stream DIR
 
 Precedence matches the reference: YAML config (``config.py``, the
 src/config_manager.py analog) supplies defaults; explicit CLI flags
@@ -45,21 +46,16 @@ def main() -> int:
         "config's enrichment knobs (QPS/retry/backoff)",
     )
     p.add_argument(
-        "--stream-source",
-        default=None,
-        help="run the STREAMING twin instead: drain this parquet "
-        "source dir as file micro-batches (availableNow), sink to "
-        "--out; reruns process only newly arrived files (ST2). Sink "
-        "naming is doc_id-derived by design (replay idempotence), so "
-        "the naming config section does not apply",
-    )
-    p.add_argument(
         "--stream",
-        action="store_true",
-        help="run the streaming twin using the config's "
-        "streaming.source_dir (mode selection stays on the CLI: a "
-        "config file alone never switches a batch invocation to "
-        "streaming)",
+        nargs="?",
+        const="",
+        default=None,
+        metavar="DIR",
+        help="run the STREAMING twin instead: drain the parquet source "
+        "DIR (default: the config's streaming.source_dir) as file "
+        "micro-batches, sink to --out; reruns process only new files "
+        "(ST2). Sink naming is doc_id-derived (replay idempotence), so "
+        "the naming config section does not apply",
     )
     p.add_argument(
         "--metrics",
@@ -97,14 +93,14 @@ def main() -> int:
         shuffle_partitions=cfg.spark.shuffle_partitions,
         extra_conf=cfg.spark.extra_conf,
     )
-    if args.stream_source is not None or args.stream:
+    if args.stream is not None:
         import glob
 
-        stream_source = args.stream_source or cfg.streaming.source_dir
-        if stream_source is None:
+        stream_source = args.stream or cfg.streaming.source_dir
+        if not stream_source:
             p.error(
-                "--stream requires streaming.source_dir in the config "
-                "(or pass --stream-source <dir>)"
+                "--stream requires a DIR or streaming.source_dir in the "
+                "config"
             )
         # --limit is a batch-queue knob (L1 pushdown); the streaming
         # twin bounds intake with max_files_per_trigger instead.

@@ -49,13 +49,14 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from wiki_data_pipeline_spark.functions.text import build_url, is_valid_content
-from wiki_data_pipeline_spark.io import read_table
+from wiki_data_pipeline_spark.io import read_stream, read_table
 from wiki_data_pipeline_spark.sinks.per_record_json import (
     DIRECTORY_PATTERN,
     FILE_PATTERN,
     _make_writer,
     write_per_record_json_with_watermark,
 )
+from wiki_data_pipeline_spark.streaming import drain
 from wiki_data_pipeline_spark.streaming.checkpoint import HighWatermarkCheckpoint
 
 
@@ -282,8 +283,9 @@ def run_pipeline_streaming(
     reset: bool = False,
 ) -> None:
     """Streaming twin of ``run_pipeline`` — ST1–ST4 composed as ONE
-    Structured Streaming job: file-source micro-batches (ST1 ≡ the
-    reference's gapcontinue pages), then per micro-batch the same
+    Structured Streaming job: file-source micro-batches
+    (``io.read_stream``; ST1 ≡ the reference's gapcontinue pages),
+    drained by ``streaming.drain``, then per micro-batch the same
     :func:`_article_records` path and the same per-record JSON writer
     as the batch runner, plus a dead-letter sink, inside
     ``foreachBatch``; offsets live in ``checkpointLocation`` (ST2 —
@@ -298,7 +300,7 @@ def run_pipeline_streaming(
     fence two concurrent ``availableNow`` queries on one
     checkpointLocation — they race the offset log. ``reset`` drops the
     offset log + streaming dead-letter history INSIDE the lease, so a
-    ``--stream --reset`` invocation that loses the lease race fails
+    ``--stream [DIR] --reset`` invocation that loses the lease race fails
     fast WITHOUT having deleted a live run's offset log first.
 
     Sink naming differs from the batch runner BY DESIGN: the writer's
@@ -346,12 +348,7 @@ def run_pipeline_streaming(
                 if os.path.exists(path):
                     shutil.rmtree(path)
 
-        schema = spark.read.parquet(source_dir).schema
-        docs = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(source_dir)
-        )
+        docs = read_stream(spark, source_dir, max_files_per_trigger)
         # Mode-distinct dead-letter root: the batch runner owns
         # out_dir/_dead_letter (partitioned since=<watermark>); the
         # streaming twin partitions by batch_id, and sharing one root
@@ -404,17 +401,12 @@ def run_pipeline_streaming(
             recorder = ProgressRecorder(metrics_path=metrics_path)
             spark.streams.addListener(recorder)
         try:
-            q = (
-                docs.writeStream.foreachBatch(_write_batch)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(out_dir, "_stream_checkpoint"),
-                )
-                .queryName("pipeline_streaming")
-                .trigger(availableNow=True)
-                .start()
+            q = drain(
+                docs,
+                os.path.join(out_dir, "_stream_checkpoint"),
+                query_name="pipeline_streaming",
+                foreach_batch=_write_batch,
             )
-            q.awaitTermination()
             if recorder is not None:
                 # listener delivery is async — the terminated event
                 # lands AFTER all progress events for this query, so

@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 from wiki_data_pipeline_spark.io import read_table
 from wiki_data_pipeline_spark.operators.pin import pin
 from wiki_data_pipeline_spark.plans.registry import query
+from wiki_data_pipeline_spark.session import scoped_conf
 
 
 def dsum(expr: Column, alias: str) -> Column:
@@ -1863,6 +1864,9 @@ def q21_sole_blame_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+_NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+
+
 @query(
     "join_bucketed_orderkey",
     oracle=f"""
@@ -1898,14 +1902,8 @@ def join_bucketed_orderkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     the write; any source change invalidates the fingerprint and
     rebuilds."""
     li_name, ord_name = _ensure_bucketed_orderkey_layout(spark, sf_dir)
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = _bucketed_orderkey_frame(spark, li_name, ord_name)
-        joined = joined.transform(pin)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-    return joined
+    with scoped_conf(spark, _NO_BROADCAST):
+        return _bucketed_orderkey_frame(spark, li_name, ord_name).transform(pin)
 
 
 def _ensure_bucketed_orderkey_layout(
@@ -2027,15 +2025,11 @@ def join_bucketed_orderkey_audit_plan(
     SMJ riding the layout) at any scale instead of a checkpoint
     scan."""
     li_name, ord_name = _ensure_bucketed_orderkey_layout(spark, sf_dir)
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, _NO_BROADCAST):
         joined = _bucketed_orderkey_frame(spark, li_name, ord_name)
         # force the cached physical plan under the pinned conf; the
         # audit's later toString() reuses it
         joined._jdf.queryExecution().executedPlan()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     return joined
 
 

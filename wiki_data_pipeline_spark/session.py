@@ -16,7 +16,9 @@ large cluster:
 
 from __future__ import annotations
 
+import contextlib
 import os
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -109,3 +111,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
+    """Set ``settings`` for the block, then restore each key's saved
+    value (unsetting a key that was unset), also when the block raises."""
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

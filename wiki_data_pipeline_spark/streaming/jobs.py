@@ -7,46 +7,38 @@ src/mediawiki_client.py:71-110) ≡ a file-source stream with
 ``checkpointLocation`` offset/commit logs; its dead-letter list ≡ a
 filtered side sink inside ``foreachBatch``.
 
-All jobs use ``trigger(availableNow=True)`` so tests are hermetic:
-process everything pending, then stop — re-running after new files
-arrive processes ONLY the delta (exactly the reference's resume
-semantics, but with exactly-once bookkeeping for free)."""
+Each runner is a transform over ``io.read_stream`` plus ``drain``
+(``trigger(availableNow=True)``: process everything pending, then stop;
+a rerun processes ONLY new files — the reference's resume semantics).
+Admission is fixed per runner because the watermark drops rows of
+later batches as late data: 16 files (one batch) for the watermarked,
+stream-static and transformWithState runners, 1 file per batch for the
+dead-letter, stateful, EWMA, CMS and incremental-dedup runners, whose
+state and per-batch sinks must cross batch boundaries."""
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from wiki_data_pipeline_spark.io import read_stream, read_table
+from wiki_data_pipeline_spark.session import scoped_conf
+from wiki_data_pipeline_spark.streaming import drain
 
-def read_event_stream(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream of event rows (ST1). The source dir holds
-    parquet files written by tests from the fixture ``events`` table;
-    each arriving file is a micro-batch page.
-
-    ``ts`` is normalized to TIMESTAMP (LTZ) here, mirroring
-    ``io.read_table``: ``withWatermark`` refuses TIMESTAMP_NTZ
-    (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE), and staged dirs may carry
-    either type depending on when they were written."""
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+WATERMARK = "2 hours"
+SESSION_GAP = "30 minutes"
+EWMA_LAGS = 8
+DLQ_MIN_VALUE = 10.0
+ROCKSDB_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
-    if "ts" in stream.columns and isinstance(
-        stream.schema["ts"].dataType, T.TimestampNTZType
-    ):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+}
 
 
 def run_tumbling_agg(
@@ -54,7 +46,6 @@ def run_tumbling_agg(
     source_dir: str,
     checkpoint_dir: str,
     query_name: str = "stream_tumbling",
-    watermark: str = "2 hours",
     max_files_per_trigger: int = 16,
     sink_dir: str | None = None,
 ) -> None:
@@ -70,9 +61,9 @@ def run_tumbling_agg(
     most of the later files as late data — that's correct streaming
     semantics. Callers staging unordered files should admit them in
     one batch (default here) or stage in event-time order."""
-    events = read_event_stream(spark, source_dir, max_files_per_trigger)
+    events = read_stream(spark, source_dir, max_files_per_trigger)
     agg = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
         .select(
@@ -82,14 +73,10 @@ def run_tumbling_agg(
             "total_value",
         )
     )
-    writer = agg.writeStream.outputMode("append").option(
-        "checkpointLocation", checkpoint_dir
-    ).trigger(availableNow=True)
     if sink_dir is not None:
-        q = writer.format("parquet").option("path", sink_dir).start()
+        drain(agg, checkpoint_dir, path=sink_dir)
     else:
-        q = writer.format("memory").queryName(query_name).start()
-    q.awaitTermination()
+        drain(agg, checkpoint_dir, query_name=query_name)
 
 
 def run_dead_letter_split(
@@ -98,7 +85,6 @@ def run_dead_letter_split(
     checkpoint_dir: str,
     ok_dir: str,
     dlq_dir: str,
-    min_value: float = 10.0,
 ) -> None:
     """Dead-letter routing on a stream (ST4): one foreachBatch splits
     each micro-batch into an ok sink and an error-tagged DLQ sink —
@@ -111,7 +97,7 @@ def run_dead_letter_split(
     same directory instead of appending duplicates, making the
     composition effectively exactly-once. Readers use the sink root;
     parquet partition discovery surfaces batch_id as a column."""
-    events = read_event_stream(spark, source_dir)
+    events = read_stream(spark, source_dir, 1)
 
     def _split(batch: DataFrame, batch_id: int) -> None:
         # Two sink actions on one micro-batch: cache so the source is
@@ -120,8 +106,8 @@ def run_dead_letter_split(
         # failed write must not leak the cache into the session.
         batch = batch.cache()
         try:
-            ok = batch.filter(F.col("value") >= min_value)
-            dlq = batch.filter(F.col("value") < min_value).withColumn(
+            ok = batch.filter(F.col("value") >= DLQ_MIN_VALUE)
+            dlq = batch.filter(F.col("value") < DLQ_MIN_VALUE).withColumn(
                 "error",
                 F.concat(
                     F.lit("value_below_threshold: "), F.col("value").cast("string")
@@ -136,13 +122,7 @@ def run_dead_letter_split(
         finally:
             batch.unpersist()
 
-    q = (
-        events.writeStream.foreachBatch(_split)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(events, checkpoint_dir, foreach_batch=_split)
 
 
 USER_STATE_SCHEMA = "user_id bigint, n_events bigint, total_value double"
@@ -160,7 +140,7 @@ def run_stateful_user_counts(
     the reference kept comparable running counters driver-side, A4).
 
     The update function is self-contained (pickled by value)."""
-    events = read_event_stream(spark, source_dir)
+    events = read_stream(spark, source_dir, 1)
 
     def _update(
         key: tuple,
@@ -183,15 +163,7 @@ def run_stateful_user_counts(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        result.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(result, checkpoint_dir, query_name=query_name, output_mode="update")
 
 
 def stage_events_as_stream_source(
@@ -199,8 +171,6 @@ def stage_events_as_stream_source(
 ) -> int:
     """Test helper: materialize the fixture events table into N parquet
     files (the 'pages' the stream will admit one per trigger)."""
-    from wiki_data_pipeline_spark.io import read_table
-
     events = read_table(spark, sf_dir, "events")
     events.repartitionByRange(n_files, "event_id").write.mode("overwrite").parquet(
         source_dir
@@ -220,44 +190,14 @@ def run_stream_static_enrichment(
     table). The static dim is broadcast to every micro-batch; no state,
     no watermark needed — at scale this is the standard pattern for
     joining a 100 TB event stream against slowly-changing dimensions."""
-    events = read_event_stream(spark, source_dir, max_files_per_trigger=16)
+    events = read_stream(spark, source_dir, 16)
     enriched = events.join(F.broadcast(static_dim), on="user_id", how="left").select(
         "event_id",
         "user_id",
         "event_type",
         F.coalesce("user_rank", F.lit(-1)).alias("user_rank"),
     )
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-@contextmanager
-def rocksdb_state_store(spark: SparkSession) -> Iterator[None]:
-    """Run the enclosed streaming query on the RocksDB state store. The
-    provider conf must be set before the query starts and is restored
-    after, so co-resident queries in the same session keep theirs."""
-    prev = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(_PROVIDER_KEY, ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prev)
+    drain(enriched, checkpoint_dir, query_name=query_name)
 
 
 def run_stateful_user_counts_tws(
@@ -289,7 +229,7 @@ def run_stateful_user_counts_tws(
             "(pyspark's TWS state protocol); use run_stateful_user_counts "
             "(applyInPandasWithState) where it is unavailable"
         ) from e
-    with rocksdb_state_store(spark):
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
         from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
         class UserCountProcessor(StatefulProcessor):
@@ -314,22 +254,14 @@ def run_stateful_user_counts_tws(
             def close(self):
                 pass
 
-        events = read_event_stream(spark, source_dir, max_files_per_trigger=16)
+        events = read_stream(spark, source_dir, 16)
         result = events.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=UserCountProcessor(),
             outputStructType=USER_STATE_SCHEMA,
             outputMode="Update",
             timeMode="None",
         )
-        q = (
-            result.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(result, checkpoint_dir, query_name=query_name, output_mode="update")
 
 
 def run_streaming_session_agg(
@@ -337,22 +269,20 @@ def run_streaming_session_agg(
     source_dir: str,
     checkpoint_dir: str,
     query_name: str = "stream_sessions",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
 ) -> None:
     """Session-window aggregation on a stream (the streaming twin of
     the batch ``window_session_30m`` query): per-user sessions close
-    after a ``gap`` of inactivity; a session is emitted once the
+    after ``SESSION_GAP`` of inactivity; a session is emitted once the
     watermark passes its end, so output is append-mode and final — no
     retractions. Session state is MERGING state (windows coalesce as
     late-but-in-watermark rows arrive) and is evicted at the
     watermark, so state size tracks active sessions only — the
     unbounded-session-table problem the reference's driver-side
     sessionization would hit at 100 TB never materializes."""
-    events = read_event_stream(spark, source_dir, max_files_per_trigger=16)
+    events = read_stream(spark, source_dir, 16)
     sessions = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), F.col("user_id"))
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("session_start"),
@@ -362,15 +292,7 @@ def run_streaming_session_agg(
             "total_value",
         )
     )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(sessions, checkpoint_dir, query_name=query_name)
 
 
 def run_stream_stream_attribution_join(
@@ -378,7 +300,6 @@ def run_stream_stream_attribution_join(
     source_dir: str,
     checkpoint_dir: str,
     query_name: str = "stream_attribution",
-    watermark: str = "2 hours",
 ) -> None:
     """Stream-stream inner join with watermarks on BOTH sides: views
     attributed to purchases by the same user within the preceding hour
@@ -392,11 +313,12 @@ def run_stream_stream_attribution_join(
     length. That bound is what makes this run forever at 100 TB; an
     un-watermarked stream-stream join buffers both streams in full.
 
-    State store: the RocksDB provider keeps join state off-heap and spillable — at large state (wide watermark ×
-    hot users) the default in-memory HDFS-backed store OOMs executors,
-    RocksDB does not (see :func:`rocksdb_state_store`)."""
-    with rocksdb_state_store(spark):
-        events = read_event_stream(spark, source_dir, max_files_per_trigger=16)
+    State store: the RocksDB provider keeps join state off-heap and
+    spillable — at large state (wide watermark × hot users) the default
+    in-memory HDFS-backed store OOMs executors, RocksDB does not
+    (``ROCKSDB_STATE_STORE``, set for this query only)."""
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
+        events = read_stream(spark, source_dir, 16)
         views = (
             events.filter(F.col("event_type") == "view")
             .select(
@@ -404,7 +326,7 @@ def run_stream_stream_attribution_join(
                 F.col("user_id").alias("v_user"),
                 F.col("ts").alias("v_ts"),
             )
-            .withWatermark("v_ts", watermark)
+            .withWatermark("v_ts", WATERMARK)
         )
         purchases = (
             events.filter(F.col("event_type") == "purchase")
@@ -413,7 +335,7 @@ def run_stream_stream_attribution_join(
                 F.col("user_id").alias("p_user"),
                 F.col("ts").alias("p_ts"),
             )
-            .withWatermark("p_ts", watermark)
+            .withWatermark("p_ts", WATERMARK)
         )
         joined = views.join(
             purchases,
@@ -421,15 +343,7 @@ def run_stream_stream_attribution_join(
             & (F.col("v_ts") > F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
             & (F.col("v_ts") <= F.col("p_ts")),
         ).select("view_id", "purchase_id")
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(joined, checkpoint_dir, query_name=query_name)
 
 
 def run_streaming_dedup(
@@ -437,7 +351,6 @@ def run_streaming_dedup(
     source_dir: str,
     checkpoint_dir: str,
     query_name: str = "stream_dedup",
-    watermark: str = "2 hours",
 ) -> None:
     """Streaming exact-dedup (the F9/dedup_exact family applied to a
     live stream): dropDuplicatesWithinWatermark keys on event_id and
@@ -445,19 +358,11 @@ def run_streaming_dedup(
     state at 100 TB, unlike an ever-growing seen-set. Duplicates
     arriving across micro-batches (or replayed files) are emitted
     exactly once."""
-    events = read_event_stream(spark, source_dir, max_files_per_trigger=16)
-    deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    events = read_stream(spark, source_dir, 16)
+    deduped = events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(deduped, checkpoint_dir, query_name=query_name)
 
 
 def run_streaming_minute_ohlc(
@@ -465,8 +370,6 @@ def run_streaming_minute_ohlc(
     source_dir: str,
     checkpoint_dir: str,
     query_name: str = "stream_ohlc",
-    watermark: str = "2 hours",
-    max_files_per_trigger: int = 16,
 ) -> None:
     """Streaming twin of the ``events_minute_ohlc`` batch query:
     watermarked per-minute OHLC bars per event_type. open/close use
@@ -477,13 +380,13 @@ def run_streaming_minute_ohlc(
     min_by/max_by are ordinary declarative aggregates, so they carry
     O(1) per-group streaming state like count/sum (no
     flatMapGroupsWithState needed for first/last-in-window)."""
-    events = read_event_stream(spark, source_dir, max_files_per_trigger)
+    events = read_stream(spark, source_dir, 16)
     key = F.concat(
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
     agg = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 minute").alias("w"), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
@@ -502,15 +405,7 @@ def run_streaming_minute_ohlc(
             "low_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.awaitTermination()
+    drain(agg, checkpoint_dir, query_name=query_name)
 
 
 def run_streaming_incremental_dedup(
@@ -540,12 +435,7 @@ def run_streaming_incremental_dedup(
     signatures (m hashes/doc), not text."""
     from wiki_data_pipeline_spark.plans.llm_ops import _minhash_bands
 
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
+    stream = read_stream(spark, source_dir, 1)
 
     def _probe(batch: DataFrame, batch_id: int) -> None:
         from pyspark.errors.exceptions.captured import AnalysisException
@@ -600,13 +490,7 @@ def run_streaming_incremental_dedup(
             # a failed write must not leak the cache into the session
             bands.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint_dir, foreach_batch=_probe)
 
 
 EWMA_OUT_SCHEMA = (
@@ -620,7 +504,6 @@ def run_streaming_daily_ewma(
     source_dir: str,
     checkpoint_dir: str,
     query_name: str = "stream_daily_ewma",
-    lags: int = 8,
 ) -> None:
     """Streaming twin of the batch ``ts_ewma_daily`` query (§2.9 +
     §2.10 stateful-UDAF surface): per event_type, GroupState holds the
@@ -635,7 +518,7 @@ def run_streaming_daily_ewma(
     history is the point of the twin). Each emission carries n_total
     (monotone per key) so readers of the update-mode sink can select
     the final emission per (type, day)."""
-    events = read_event_stream(spark, source_dir)
+    events = read_stream(spark, source_dir, 1)
 
     def _update(
         key: tuple,
@@ -660,7 +543,7 @@ def run_streaming_daily_ewma(
         n_total = sum(acc.values())
         rows = []
         for i, (day, cnt) in enumerate(ordered):
-            window = [c for _, c in ordered[max(0, i - (lags - 1)): i + 1]]
+            window = [c for _, c in ordered[max(0, i - (EWMA_LAGS - 1)): i + 1]]
             num = sum(c << p for p, c in enumerate(window))
             den = (1 << len(window)) - 1
             rows.append(
@@ -684,15 +567,7 @@ def run_streaming_daily_ewma(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        result.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(result, checkpoint_dir, query_name=query_name, output_mode="update")
 
 
 def run_streaming_cms_maintenance(
@@ -714,7 +589,7 @@ def run_streaming_cms_maintenance(
     ``sketch_count_min_heavy_hitters`` output row-for-row."""
     from pyspark.sql.functions import concat, conv, count, lit, substring
 
-    events = read_event_stream(spark, source_dir)
+    events = read_stream(spark, source_dir, 1)
 
     def _bucket(col, r: int):
         return (
@@ -747,14 +622,7 @@ def run_streaming_cms_maintenance(
         finally:
             batch_df.unpersist()
 
-    q = (
-        events.writeStream.foreachBatch(_sink)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(events, checkpoint_dir, query_name=query_name, foreach_batch=_sink)
 
 
 def read_merged_cms(spark: SparkSession, store_dir: str) -> DataFrame:
