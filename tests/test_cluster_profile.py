@@ -4,8 +4,9 @@ conf/spark-cluster-profile.conf turns SCALE.md's deployment
 recommendations into a runnable artifact: loadable natively by
 ``spark-submit --properties-file`` and overlaid by
 ``get_spark(profile=...)`` / ``SPARK_GRAFT_PROFILE``. These tests keep
-it well-formed and keep the overlay path honest. The last test covers
-``scoped_conf``, the session's one conf set-and-restore.
+it well-formed and keep the overlay path honest. The last two tests
+cover ``scoped_conf``, the session's one conf set-and-restore, and
+``worker_zip_guard``, the zip re-read guard shipped to Python workers.
 """
 
 from __future__ import annotations
@@ -15,7 +16,12 @@ import os
 
 import pytest
 
-from wiki_data_pipeline_spark.session import get_spark, load_profile, scoped_conf
+from wiki_data_pipeline_spark.session import (
+    get_spark,
+    load_profile,
+    scoped_conf,
+    worker_zip_guard,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PROFILE = os.path.join(REPO, "conf", "spark-cluster-profile.conf")
@@ -169,3 +175,57 @@ def test_scoped_conf_restores_set_and_unset_keys(spark):
             assert spark.conf.get(was_unset, None) is None
     finally:
         spark.conf.unset(was_set)
+
+
+def test_worker_zip_guard_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """In this process, no Spark: an archive rewritten with a new module
+    is re-read, so the module imports; an unchanged archive is not
+    re-read; a stat error falls back to the re-read; and a second
+    install leaves exactly one wrapper."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    archive = str(tmp_path / "mods.zip")
+    reread = zipimport.zipimporter.invalidate_caches
+    calls = []
+
+    def counting(self):
+        if self.archive == archive:
+            calls.append(self)
+        return reread(self)
+
+    # teardown puts the original method back
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", counting)
+    install = worker_zip_guard()
+    install()
+    install()
+    assert zipimport.zipimporter.invalidate_caches.__wrapped__ is counting
+
+    def build(*names):
+        with zipfile.ZipFile(archive, "w") as zf:
+            for name in names:
+                zf.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+    a, b = "zip_guard_probe_a", "zip_guard_probe_b"
+    build(a)
+    sys.path.insert(0, archive)
+    try:
+        assert importlib.import_module(a).NAME == a
+        importlib.invalidate_caches()  # this importer's first key: re-read
+        assert len(calls) == 1
+        importlib.invalidate_caches()
+        assert len(calls) == 1  # unchanged: no re-read
+        build(a, b)
+        importlib.invalidate_caches()
+        assert len(calls) == 2
+        assert importlib.import_module(b).NAME == b
+        os.remove(archive)
+        importlib.invalidate_caches()  # stat fails: plain re-read
+        assert len(calls) == 3
+    finally:
+        sys.path.remove(archive)
+        sys.path_importer_cache.pop(archive, None)
+        for name in (a, b):
+            sys.modules.pop(name, None)

@@ -9,6 +9,7 @@ import json
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from wiki_data_pipeline_spark.io import read_table
@@ -76,40 +77,74 @@ def test_per_record_json_indices_over_many_partitions(spark, tmp_path):
     assert [by_index[i] for i in range(2000)] == sorted(ids)
 
 
-def test_partition_writer_pickles_by_value(tmp_path):
-    """Both runners ship ``_make_writer``'s closure to Python workers,
-    which cannot import this package: the pickled writer must load and
-    write in a process with no repo on ``sys.path`` and never pull
-    ``wiki_data_pipeline_spark`` into ``sys.modules``."""
+def _shipped_writer(tmp_path):
+    from wiki_data_pipeline_spark.sinks.per_record_json import _make_writer
+
+    out = str(tmp_path / "out")
+
+    def check_output():
+        with open(os.path.join(out, "batch_001", "article_000013.json")) as f:
+            assert json.load(f) == {"doc_id": 13, "title": "Doc 13"}
+
+    call = "list(fn([(Row(doc_id=13, title='Doc 13'), 13)]))"
+    return _make_writer(out, 10, 0, "doc_id"), call, "[(1, 13)]", check_output
+
+
+def _shipped_fetcher(tmp_path):
+    import hashlib
+
+    from wiki_data_pipeline_spark.operators.enrichment import _make_fetcher
+
+    call = (
+        "[b.to_pylist() for b in fn([pa.RecordBatch.from_pydict({"
+        "'doc_id': pa.array([13], pa.int64()), 'title': ['Doc 13'],"
+        " 'error': pa.array([None], pa.string())})])]"
+    )
+    content = f"content[{hashlib.md5(b'13:Doc 13').hexdigest()}]"
+    row = {
+        "doc_id": 13, "title": "Doc 13", "api_content": content,
+        "attempts": 1, "error": None,
+    }
+    fetch = _make_fetcher(["doc_id", "title"], None, 3, 0.01, 1.0, 0, None)
+    return fetch, call, repr([[row]]), lambda: None
+
+
+@pytest.mark.parametrize(
+    "shipped", [_shipped_writer, _shipped_fetcher], ids=["writer", "fetcher"]
+)
+def test_partition_writer_pickles_by_value(tmp_path, shipped):
+    """Both runners ship ``_make_writer``'s closure, and ``fetch_records``
+    ships ``_make_fetcher``'s, to Python workers, which cannot import
+    this package: each pickled closure must load and run in a process
+    with no repo on ``sys.path``, install the zip re-read guard there,
+    and never pull ``wiki_data_pipeline_spark`` into ``sys.modules``."""
     import subprocess
     import sys
 
     from pyspark import cloudpickle
 
-    from wiki_data_pipeline_spark.sinks.per_record_json import _make_writer
-
-    out = str(tmp_path / "out")
-    blob = cloudpickle.dumps(_make_writer(out, 10, 0, "doc_id"))
+    fn, call, expected, check_output = shipped(tmp_path)
     child = (
-        "import pickle, sys\n"
+        "import pickle, sys, zipimport\n"
+        "import pyarrow as pa\n"
         "from pyspark.sql import Row\n"
-        "write = pickle.loads(sys.stdin.buffer.read())\n"
-        "print(list(write([(Row(doc_id=13, title='Doc 13'), 13)])))\n"
+        "fn = pickle.loads(sys.stdin.buffer.read())\n"
+        f"print({call})\n"
+        "assert hasattr(zipimport.zipimporter.invalidate_caches, '__wrapped__')\n"
         "assert 'wiki_data_pipeline_spark' not in sys.modules\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     res = subprocess.run(
         [sys.executable, "-c", child],
-        input=blob,
+        input=cloudpickle.dumps(fn),
         capture_output=True,
         cwd="/tmp",
         env=env,
         timeout=120,
     )
     assert res.returncode == 0, res.stderr.decode()[-2000:]
-    assert res.stdout.decode().strip() == "[(1, 13)]"
-    with open(os.path.join(out, "batch_001", "article_000013.json")) as f:
-        assert json.load(f) == {"doc_id": 13, "title": "Doc 13"}
+    assert res.stdout.decode().strip() == expected
+    check_output()
 
 
 def test_enrichment_happy_path(spark, sf_dir):

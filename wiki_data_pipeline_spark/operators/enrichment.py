@@ -6,12 +6,12 @@ src/mediawiki_client.py:22-64).
 Spark mapping: the reference's ThreadPoolExecutor over 100-article
 chunks IS partition parallelism; the per-request machinery (token
 bucket, retry with exponential backoff, dead-letter on exhaustion)
-lives inside one mapInArrow closure, ``fetch_records``, which carries
-whole record frames through; ``fetch_enrich`` is a projection over it
-for stub tables. Each partition gets a local QPS budget of
-global_qps / num_partitions — the distributed analog of one shared
-limiter (no cross-executor coordination needed, which would never
-scale anyway).
+lives inside one mapInArrow closure (built by ``_make_fetcher``)
+under ``fetch_records``, which carries whole record frames through;
+``fetch_enrich`` is a projection over it for stub tables. Each
+partition gets a local QPS budget of global_qps / num_partitions — the
+distributed analog of one shared limiter (no cross-executor
+coordination needed, which would never scale anyway).
 
 The closure is fully self-contained (cloudpickle by value — workers
 don't have this package importable), and the default "fetcher" is a
@@ -25,6 +25,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from wiki_data_pipeline_spark.session import worker_zip_guard
 
 
 def resolve_fetcher(spec):
@@ -96,8 +98,29 @@ def fetch_records(
             StructField("error", StringType()),
         ]
     )
+    fetch = _make_fetcher(
+        keep, part_qps, max_retries, initial_delay, max_delay, fail_every, fetcher
+    )
+    return records.mapInArrow(fetch, schema)
+
+
+def _make_fetcher(
+    keep: list[str],
+    part_qps: float | None,
+    max_retries: int,
+    initial_delay: float,
+    max_delay: float,
+    fail_every: int,
+    fetcher: Callable[[str], str] | None,
+):
+    """Build ``fetch_records``' Arrow-batch mapper as a self-contained
+    closure (cloudpickle by value — workers can't import this
+    package): each output batch holds the input's ``keep`` columns,
+    then ``api_content``, ``attempts`` and ``error``."""
+    guard = worker_zip_guard()
 
     def _fetch(batches):
+        guard()
         import hashlib
         import time as _time
 
@@ -183,7 +206,7 @@ def fetch_records(
                 names=keep + ["api_content", "attempts", "error"],
             )
 
-    return records.mapInArrow(_fetch, schema)
+    return _fetch
 
 
 def fetch_enrich(

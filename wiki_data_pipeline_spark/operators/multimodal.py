@@ -25,6 +25,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from wiki_data_pipeline_spark.session import worker_zip_guard
+
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, mean_byte double, first_byte int, media_type string"
 )
@@ -117,8 +119,11 @@ def extract_features(media: DataFrame) -> DataFrame:
     the driver was launched from the repo root.
     """
     stub_types = frozenset(_STUB_TYPES)
+    guard = worker_zip_guard()
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard()
+
         def _decode(payload: bytes, media_type: str) -> bytes | None:
             if payload is None:
                 return None  # missing media → NULL features, not a crash
@@ -193,8 +198,11 @@ def resize_media(media: DataFrame, target_bytes: int = 64) -> DataFrame:
     exchange). Self-contained closure — workers never import this
     package."""
     stub_types = frozenset(_STUB_TYPES)
+    guard = worker_zip_guard()
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard()
+
         def _decode_resize(
             payload: bytes, media_type: str
         ) -> tuple[bytes | None, bytes | None]:
@@ -273,8 +281,11 @@ def sample_frames(
     no shuffle; downstream per-frame feature extraction composes as
     another map. Self-contained closure."""
     stub_types = frozenset(_STUB_TYPES)
+    guard = worker_zip_guard()
 
     def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard()
+
         def _decode(
             payload: bytes, media_type: str
         ) -> list[tuple[int, bytes]]:
@@ -349,7 +360,10 @@ def synthesize_wav_corpus(
     batches, no shuffle); self-contained closure — workers never
     import this package."""
 
+    guard = worker_zip_guard()
+
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard()
         import io
         import struct
         import wave
@@ -395,7 +409,10 @@ def audio_stats(media: DataFrame) -> DataFrame:
     and IEEE sqrt are bitwise-reproducible across engines — so a SQL
     oracle hash-matches the decoded output exactly."""
 
+    guard = worker_zip_guard()
+
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard()
         import io
         import struct
         import wave
@@ -462,8 +479,10 @@ def label_centroid_residuals(emb_df):
     schema = (
         "label int, vec_id bigint, residual double, group_size bigint"
     )
+    guard = worker_zip_guard()
 
     def _residuals(pdf):
+        guard()
         import numpy as np
         import pandas as pd
 
@@ -602,7 +621,10 @@ def synthesize_png_corpus(
     (Arrow batches, no shuffle); self-contained closure — workers
     never import this package."""
 
+    guard = worker_zip_guard()
+
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard()
         import struct
         import zlib
 
@@ -657,7 +679,10 @@ def image_dhash(media: DataFrame, width: int = 9, height: int = 8) -> DataFrame:
     bucketing. NULL payload → NULL hash (missing media never crashes
     the pass). Map-only, Arrow-batched, self-contained closure."""
 
+    guard = worker_zip_guard()
+
     def _dhash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard()
         import struct
         import zlib
 

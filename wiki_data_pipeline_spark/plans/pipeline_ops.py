@@ -51,6 +51,7 @@ from wiki_data_pipeline_spark.plans.llm_ops import (
     pq_adc_distances,
 )
 from wiki_data_pipeline_spark.plans.registry import query
+from wiki_data_pipeline_spark.session import worker_zip_guard
 
 # ---------------------------------------------------------------------------
 # Two-stage ANN serving: PQ-ADC candidate generation → exact rerank.
@@ -3337,7 +3338,10 @@ def join_cogrouped_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "user_id") preserves exact per-user semantics inside each bucket;
     # the asof key is a dense (ts, event_id) rank so tied timestamps
     # resolve lexicographically (see docstring, r13).
+    guard = worker_zip_guard()
+
     def _align(pdfs, vdfs):
+        guard()
         import numpy as np
         import pandas as pd
 

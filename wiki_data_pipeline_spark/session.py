@@ -12,6 +12,14 @@ large cluster:
   number, so plans are written to not depend on the exact value.
 - Arrow enabled: every pandas_udf / mapInPandas crossing is
   Arrow-batched, never row-at-a-time pickling.
+- Python workers re-read a zip archive only when it changed
+  (``worker_zip_guard``). PySpark calls ``importlib.invalidate_caches()``
+  before every Python task, and CPython 3.11 then makes each of the
+  worker's ``zipimporter``s re-read its archive's whole central
+  directory (pyspark.zip: 1,328 entries, 16 importers). Measured on
+  4 cores, a reused worker spent 239 ms of CPU per one-row task with
+  the re-read and 34 ms without it. The guarded hook stats the archive
+  and re-reads only when its mtime, size or inode moved.
 """
 
 from __future__ import annotations
@@ -111,6 +119,40 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def worker_zip_guard():
+    """Return ``install()``, which makes ``zipimporter.invalidate_caches``
+    re-read an archive only when its ``(st_mtime_ns, st_size, st_ino)``
+    differs from what that same importer last read. Call it first in a
+    closure shipped to Python workers: it is nested, so cloudpickle
+    ships it by value, and a reused worker keeps the hook for every
+    later task. An ``os.stat`` error falls back to the plain re-read;
+    a second install is a no-op."""
+
+    def install() -> None:
+        import os
+        import zipimport
+
+        reread = zipimport.zipimporter.invalidate_caches
+        if hasattr(reread, "__wrapped__"):
+            return
+
+        def invalidate_caches(self):
+            try:
+                st = os.stat(self.archive)
+            except OSError:
+                return reread(self)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+            # per importer: two importers of one archive each re-read
+            if self.__dict__.get("_read_key") != key:
+                reread(self)
+                self._read_key = key
+
+        invalidate_caches.__wrapped__ = reread
+        zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+    return install
 
 
 @contextlib.contextmanager

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from wiki_data_pipeline_spark.session import worker_zip_guard
 
 FILE_PATTERN = "article_{index:06d}.json"
 DIRECTORY_PATTERN = "batch_{batch_num:03d}"
@@ -110,8 +111,10 @@ def _make_writer(
     import this package). Yields one ``(count, max_order_value)`` pair
     per partition so the caller gets its checkpoint watermark from the
     write job itself."""
+    guard = worker_zip_guard()
 
     def _write(rows):
+        guard()
         import json
         import os
 

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from wiki_data_pipeline_spark.io import read_stream, read_table
-from wiki_data_pipeline_spark.session import scoped_conf
+from wiki_data_pipeline_spark.session import scoped_conf, worker_zip_guard
 from wiki_data_pipeline_spark.streaming import drain
 
 WATERMARK = "2 hours"
@@ -141,12 +141,14 @@ def run_stateful_user_counts(
 
     The update function is self-contained (pickled by value)."""
     events = read_stream(spark, source_dir, 1)
+    guard = worker_zip_guard()
 
     def _update(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        guard()
         n, total = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += len(pdf)
@@ -519,12 +521,14 @@ def run_streaming_daily_ewma(
     (monotone per key) so readers of the update-mode sink can select
     the final emission per (type, day)."""
     events = read_stream(spark, source_dir, 1)
+    guard = worker_zip_guard()
 
     def _update(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        guard()
         days, counts = ([], []) if not state.exists else [
             list(x) for x in state.get
         ]
