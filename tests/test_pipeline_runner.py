@@ -545,8 +545,9 @@ def test_pipeline_cli_streaming_reset_and_limit(spark, tmp_path):
     """Streaming-mode flag semantics: --reset drops the stream offset
     checkpoint (next drain reprocesses from scratch instead of a
     silent delta-only no-op) and the batch_id-keyed stream dead-letter
-    history; --limit is a batch-queue knob and errors instead of being
-    silently ignored."""
+    history; a limit is a batch-queue knob and errors instead of being
+    silently ignored, whether it comes from --limit or from the config
+    file's processing.limit."""
     import subprocess
     import sys
 
@@ -595,16 +596,19 @@ def test_pipeline_cli_streaming_reset_and_limit(spark, tmp_path):
     dlq = spark.read.parquet(os.path.join(out, "_dead_letter_stream"))
     assert dlq.count() == 1  # history cleared, re-dead-lettered once
 
-    # --limit in streaming mode: argparse error, exit code 2
-    res3 = subprocess.run(
-        base_cmd + ["--limit", "5"],
-        capture_output=True,
-        text=True,
-        cwd=repo,
-        timeout=300,
-    )
-    assert res3.returncode == 2
-    assert "not supported in streaming mode" in res3.stderr
+    # a limit in streaming mode: argparse error, exit code 2
+    cfg = tmp_path / "limit.yaml"
+    cfg.write_text("processing:\n  limit: 5\n")
+    for extra in (["--limit", "5"], ["--config", str(cfg)]):
+        res3 = subprocess.run(
+            base_cmd + extra,
+            capture_output=True,
+            text=True,
+            cwd=repo,
+            timeout=300,
+        )
+        assert res3.returncode == 2, (extra, res3.stderr[-2000:])
+        assert "not supported in streaming mode" in res3.stderr
 
 
 def test_pipeline_naming_patterns(spark, sf_dir, tmp_path):

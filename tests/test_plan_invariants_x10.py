@@ -5,8 +5,8 @@ that is really an accident of small files (a fact-side branch under
 spark.sql.autoBroadcastJoinThreshold at the fixture SF) silently
 degrades to a SortMergeJoin once the table outgrows the threshold, and
 no fixture-SF test can see it. This module recompiles the manifest of
-test_plan_invariants.py against the 10x replica that `bench.py --sf1` /
-`tools/scale_probe.py build_scaled` materialize under `.scale/x10`
+test_plan_invariants.py against the 10x replica that `bench.py --sf1`
+(`bench.build_scaled`) materializes under `.scale/x10`
 (facts 10x, dims fixed — the shape a real scale-up has), asserting the
 scale-critical subset of each entry's invariants:
 

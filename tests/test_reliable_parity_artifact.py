@@ -12,20 +12,26 @@ produced by::
 
 and these tests make it load-bearing: the artifact must be all-green,
 and its query set must equal the LIVE set of pin-routed queries —
-discovered by instrumenting pin() itself (operators/pin.py
-``_observer``), not a hand-kept list, so a new ``.transform(pin)``
-call site anywhere in the package flips the set and fails the test
-until the sweep is regenerated over it.
+the queries whose build calls pin() in the registry sweep
+(tools/sweep.py ``Record.pins``, counted by instrumenting pin()
+itself), not a hand-kept list, so a new ``.transform(pin)`` call site
+anywhere in the package flips the set and fails the test until the
+sweep is regenerated over it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import sys
 
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
+
+from sweep import sweep  # noqa: E402
+
 ARTIFACT = os.path.join(REPO, "RELIABLE_PARITY.json")
 
 
@@ -64,13 +70,15 @@ def test_reliable_parity_artifact_is_green():
 # — the cheap artifact-shape tests above stay in the default tier
 def test_reliable_parity_covers_every_live_pin_site(spark, sf_dir):
     """The artifact's query set == the live pin-routed set. Discovery
-    builds all 200+ query plans with the pin observer installed (the
-    eager pins run at fixture scale), so this is one of the suite's
-    slower tests — deliberately: it is the guard that makes the
-    committed sweep trustworthy."""
-    from wiki_data_pipeline_spark.testing import pin_using_queries
-
-    live = pin_using_queries(spark, sf_dir)
+    builds all 200+ query plans in the registry sweep, which counts
+    each build's pin() calls (the eager pins run at fixture scale), so
+    this is one of the suite's slower tests — deliberately: it is the
+    guard that makes the committed sweep trustworthy. A builder that
+    fails here fails the test: its pin sites would go unseen."""
+    records = list(sweep(spark, (), sf_dir, lambda df: None))
+    errors = {r.name: r.error for r in records if r.error}
+    assert not errors, f"query builders failed: {errors}"
+    live = {r.name for r in records if r.pins}
     assert live, "no pin-routed queries discovered — observer broken?"
     swept = {k for k in _load() if k != "_meta"}
     missing = live - swept
@@ -83,40 +91,3 @@ def test_reliable_parity_covers_every_live_pin_site(spark, sf_dir):
         f"RELIABLE_PARITY.json contains queries that no longer route "
         f"through pin(): {sorted(stale)}"
     )
-
-
-def test_pin_observer_records_and_detaches(spark):
-    """The discovery hook itself: observer fires per pin() call and
-    is always detached afterwards (even on a failing query)."""
-    from wiki_data_pipeline_spark.operators import pin as pin_mod
-
-    calls = []
-    pin_mod._observer = lambda: calls.append(1)
-    try:
-        pin_mod.pin(spark.range(3))
-    finally:
-        pin_mod._observer = None
-    assert calls, "observer did not fire on a direct pin() call"
-
-    # pin_using_queries detaches on exceptions too (strict mode raises)
-    from wiki_data_pipeline_spark import testing as t
-
-    with pytest.raises(KeyError):
-        t.pin_using_queries(spark, "/nonexistent", names=["not_a_query"])
-    assert pin_mod._observer is None
-
-    # tool mode (strict=False): a failing builder is recorded and
-    # conservatively INCLUDED instead of aborting discovery (r13
-    # review fix — one broken builder must not block the whole
-    # RELIABLE_PARITY regeneration)
-    errs: dict = {}
-    got = t.pin_using_queries(
-        spark,
-        "/nonexistent",
-        names=["dedup_exact"],
-        strict=False,
-        errors=errs,
-    )
-    assert got == {"dedup_exact"}
-    assert "dedup_exact" in errs
-    assert pin_mod._observer is None

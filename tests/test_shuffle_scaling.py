@@ -1,11 +1,10 @@
-"""Shuffle-volume scaling sample (r9): pin the mechanism and the
-linearity bound for representative shuffle-bearing queries.
+"""The shuffle-growth check: pin the mechanism and the linearity
+bound for representative shuffle-bearing queries.
 
-tools/shuffle_audit.py measures, registry-wide, how each query's
-shuffle-write bytes grow when the data grows 10x — the axis neither
-the plan manifest (same Exchange count, any byte volume) nor the
-wall-clock gates (small-SF shuffles hide in page cache) can see. This
-test keeps a 4-query sample wired into the default suite at
+How a query's shuffle-write bytes grow when the data grows 10x is the
+axis neither the plan manifest (same Exchange count, any byte volume)
+nor the wall-clock gates (small-SF shuffles hide in page cache) can
+see. This test runs a 4-query sample in the default suite at
 sf0.001 -> sf0.01 (10x rows), asserting:
 
 - growth ≤ 20x (linear in data with 2x margin) for every sample —
@@ -22,7 +21,7 @@ on user, growth tracks events).
 
 Runs in the shared test session with its shuffle partition count; the
 bytes come from the driver's status store, which Spark keeps with the
-UI off (tools/sweep.py, the sweep shuffle_audit runs on).
+UI off, read through the registry sweep (tools/sweep.py).
 """
 
 from __future__ import annotations

@@ -1,6 +1,7 @@
 """The status-store stage reader (tools/stage_metrics.py) in the shared,
-UI-off session: the spill and task-runtime fields the heap probe and
-skew_probe read, and the snapshot boundary every caller diffs on. An
+UI-off session: the spill fields each sweep Record's stages carry, the
+task-runtime field skew_probe reads, and the snapshot boundary every
+caller diffs on. An
 unbounded window frame buffers each ~28k-row key partition whole;
 lowering both buffer thresholds forces that buffer to spill."""
 

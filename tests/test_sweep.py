@@ -1,8 +1,9 @@
 """The registry sweep under the audit tools (tools/sweep.py), on
-`spark.range` frames and a fake registry: construction stages are
-attributed to the query that ran them, a failing builder becomes an
-error record without ending the sweep, unknown names are rejected
-before a session starts, and every tool answers ``--help``."""
+`spark.range` frames and a fake registry: construction stages and
+pin() calls are attributed to the query that ran them, a failing
+builder becomes an error record without ending the sweep, unknown
+names are rejected before a session starts, and every tool answers
+``--help``."""
 
 from __future__ import annotations
 
@@ -18,9 +19,20 @@ sys.path.insert(0, os.path.join(HERE, "tools"))
 
 import sweep  # noqa: E402
 
+from wiki_data_pipeline_spark.operators import pin  # noqa: E402
+
 
 def _boom(spark, sf_dir):
     raise ValueError("builder failed")
+
+
+def _pin_twice(spark, sf_dir):
+    return pin.pin(pin.pin(spark.range(10)))
+
+
+def _pin_then_boom(spark, sf_dir):
+    pin.pin(spark.range(10))
+    raise ValueError("builder failed after a pin")
 
 
 FAKE = {
@@ -30,6 +42,8 @@ FAKE = {
     .localCheckpoint(eager=True),
     "plain": lambda spark, sf_dir: spark.range(10),
     "boom": _boom,
+    "pin_twice": _pin_twice,
+    "pin_then_boom": _pin_then_boom,
 }
 
 
@@ -52,14 +66,27 @@ def test_failing_builder_is_recorded_and_the_sweep_goes_on(spark):
     assert plain.error is None and plain.value == 10
 
 
+def test_pin_observer_records_and_detaches(spark):
+    """Each record counts its own build's pin() calls, a builder that
+    pins and then fails still reports the pin beside its error, and
+    the observer is detached once the sweep is done."""
+    twice, boom, plain = sweep.sweep(
+        spark, ["pin_twice", "pin_then_boom", "plain"], "", _count, FAKE
+    )
+    assert (twice.pins, twice.error, twice.value) == (2, None, 10)
+    assert boom.pins == 1
+    assert boom.error == "ValueError: builder failed after a pin"
+    assert (plain.pins, plain.error) == (0, None)
+    assert pin._observer is None
+
+
 @pytest.mark.parametrize(
     "tool, argv",
     [
         ("check_parity", []),
         ("plan_audit", []),
-        ("shuffle_audit", []),
-        ("metamorphic_sweep", []),
         ("dump_plans", ["out_dir", "before"]),
+        ("metamorphic_sweep", []),
     ],
 )
 def test_unknown_name_is_rejected_before_a_session(monkeypatch, tool, argv):

@@ -15,7 +15,8 @@ is produced:
 durability tier flipped to reliable checkpoints (operators/pin.py),
 written to a temporary directory removed at exit, and ``--pin-sites``
 restricts the sweep to the queries that actually route through pin()
-(discovered live via the pin observer, not a hand-kept list) —
+(discovered live by a build-only sweep that counts each query's pin()
+calls, not a hand-kept list) —
 together they regenerate the per-round RELIABLE_PARITY.json:
 
     python tools/check_parity.py --json RELIABLE_PARITY.json \
@@ -33,7 +34,7 @@ from sweep import parse, parser, session, sweep
 from wiki_data_pipeline_spark.operators.pin import PIN_DIR_KEY, PIN_MODE_KEY
 from wiki_data_pipeline_spark.plans.registry import all_queries
 from wiki_data_pipeline_spark.session import scoped_conf
-from wiki_data_pipeline_spark.testing import compare_query, pin_using_queries
+from wiki_data_pipeline_spark.testing import compare_query
 
 
 def _row(
@@ -69,11 +70,15 @@ def main(argv=None) -> int:
     spark = session("parity-check")
     selected = args.names or sorted(all_queries())
     if args.pin_sites:
-        # discovery runs under the DEFAULT pin tier (cheap local
-        # checkpoints); only the measured sweep below pays for the
-        # reliable tier's DFS writes. A query that fails to build is
-        # kept, so the sweep records its error row.
-        live = pin_using_queries(spark, sf_dir, selected, strict=False)
+        # discovery builds each query once under the DEFAULT pin tier
+        # (cheap local checkpoints); only the measured sweep below pays
+        # for the reliable tier's DFS writes. A query that fails to
+        # build is kept, so the sweep records its error row.
+        live = {
+            r.name
+            for r in sweep(spark, selected, sf_dir, lambda df: None)
+            if r.pins or r.error
+        }
         selected = [n for n in selected if n in live]
         print(f"-- pin-sites: {len(selected)} queries route through pin()")
 

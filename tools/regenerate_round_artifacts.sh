@@ -16,33 +16,29 @@
 #                            trial spreads, sentinel verdicts)
 #   BENCH_SF1.json           gated x10 run: exponents + regressions
 #   PLAN_SCALE_DIFF.json     registry-wide join-strategy diff at x10
-#   SHUFFLE_SCALING.json     shuffle-byte growth sf0.01 -> sf0.1
 # (Step 5, the heavy test tier, writes none; it needs step 4's replica.)
 
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/7 adversarial fixture + full-registry sweep"
+echo "== 1/6 adversarial fixture + full-registry sweep"
 python tools/make_adversarial_sf.py /tmp/adversarial_sf
 python tools/check_parity.py --json ADVERSARIAL_PARITY.json --sf-dir /tmp/adversarial_sf
 
-echo "== 2/7 reliable-pin sweep (pin-routed queries only)"
+echo "== 2/6 reliable-pin sweep (pin-routed queries only)"
 python tools/check_parity.py --json RELIABLE_PARITY.json \
     --pin-mode reliable --pin-sites --sf-dir /root/testdata/sf0.001
 
-echo "== 3/7 sf0.1 bench (writes BENCH_SPREAD.json sidecar)"
+echo "== 3/6 sf0.1 bench (writes BENCH_SPREAD.json sidecar)"
 python bench.py
 
-echo "== 4/7 gated x10 bench (builds .scale/x10 if absent)"
+echo "== 4/6 gated x10 bench (builds .scale/x10 if absent)"
 python bench.py --sf1
 
-echo "== 5/7 heavy test tier (x10 plan invariants, reliable-pin sites)"
+echo "== 5/6 heavy test tier (x10 plan invariants, reliable-pin sites)"
 python -m pytest tests/ -q -m heavy
 
-echo "== 6/7 registry-wide x10 join-strategy diff"
+echo "== 6/6 registry-wide x10 join-strategy diff"
 python tools/plan_scale_diff.py
-
-echo "== 7/7 shuffle-byte scaling audit"
-python tools/shuffle_audit.py
 
 echo "all artifacts regenerated — review git diff, then commit"

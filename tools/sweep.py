@@ -18,6 +18,7 @@ sys.path.insert(0, REPO)
 
 from stage_metrics import StageMetrics, snapshot, stages_since  # noqa: E402
 
+from wiki_data_pipeline_spark.operators import pin  # noqa: E402
 from wiki_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
 from wiki_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -30,6 +31,7 @@ class Record(NamedTuple):
     error: str | None  # "ExceptionType: message"
     wall_s: float  # build plus action
     stages: list[StageMetrics]  # completed since the build began
+    pins: int  # pin() calls during the build and action
 
 
 def parser(doc: str, sf_dirs: tuple[str, ...] = (SF_DIR,), json: bool = False):
@@ -75,11 +77,17 @@ def sweep(spark, names, sf_dir: str, action, registry=None):
     for name in names or sorted(queries):
         spark.catalog.clearCache()  # a cached leaf would hide its subtree
         snap = snapshot(spark)
+        pins = []
+        pin._observer = lambda: pins.append(1)
         t0 = time.perf_counter()
         value = error = None
         try:
             value = action(queries[name](spark, sf_dir))
         except Exception as e:  # noqa: BLE001 - recorded; the sweep goes on
             error = f"{type(e).__name__}: {e}"
+        finally:
+            pin._observer = None
         wall = time.perf_counter() - t0
-        yield Record(name, value, error, wall, stages_since(spark, snap))
+        yield Record(
+            name, value, error, wall, stages_since(spark, snap), len(pins)
+        )

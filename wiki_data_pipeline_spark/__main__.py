@@ -86,6 +86,22 @@ def main() -> int:
         args.batch_size if args.batch_size is not None else cfg.processing.batch_size
     )
     reset = args.reset or cfg.processing.reset
+    if args.stream is not None:
+        stream_source = args.stream or cfg.streaming.source_dir
+        if not stream_source:
+            p.error(
+                "--stream requires a DIR or streaming.source_dir in the "
+                "config"
+            )
+        # a limit (--limit or processing.limit) is a batch-queue knob
+        # (L1 pushdown); the streaming twin bounds intake with
+        # max_files_per_trigger instead. Erroring beats silently
+        # draining everything.
+        if limit is not None:
+            p.error(
+                "--limit / processing.limit is not supported in streaming "
+                "mode (bound intake with streaming.max_files_per_trigger)"
+            )
 
     spark = get_spark(
         app_name=cfg.spark.app_name,
@@ -96,20 +112,6 @@ def main() -> int:
     if args.stream is not None:
         import glob
 
-        stream_source = args.stream or cfg.streaming.source_dir
-        if not stream_source:
-            p.error(
-                "--stream requires a DIR or streaming.source_dir in the "
-                "config"
-            )
-        # --limit is a batch-queue knob (L1 pushdown); the streaming
-        # twin bounds intake with max_files_per_trigger instead.
-        # Erroring beats silently draining everything.
-        if args.limit is not None:
-            p.error(
-                "--limit is not supported in streaming mode (bound "
-                "intake with streaming.max_files_per_trigger)"
-            )
         def _count_sink_files() -> int:
             return len(
                 glob.glob(os.path.join(out_dir, "batch_*", "article_*.json"))
@@ -132,7 +134,7 @@ def main() -> int:
             # the single-writer lease by run_pipeline_streaming: a
             # concurrent `--stream --reset` that loses the race fails
             # fast without having deleted a live run's offset log.
-            reset=args.reset or cfg.processing.reset,
+            reset=reset,
         )
         n_after = _count_sink_files()
         # sink_files_new is THIS run's delta (a resume that drains

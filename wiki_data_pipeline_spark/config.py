@@ -115,7 +115,9 @@ class PipelineConfig:
         return obj
 
 
-_SECTIONS = {f.name: f.type for f in fields(PipelineConfig)}
+# section name -> its dataclass, resolved from PipelineConfig's
+# annotations (strings under ``from __future__ import annotations``)
+_SECTIONS = get_type_hints(PipelineConfig)
 
 
 def _resolve_env(value: Any) -> Any:
@@ -232,16 +234,8 @@ def load_config(path: str | None = None) -> PipelineConfig:
             f"(known: {sorted(_SECTIONS)})"
         )
 
-    section_cls = {
-        "storage": StorageConfig,
-        "naming": NamingConfig,
-        "processing": ProcessingConfig,
-        "enrichment": EnrichmentConfig,
-        "streaming": StreamingConfig,
-        "spark": SparkConfig,
-    }
     kwargs = {
         name: _build_section(cls, raw.get(name) or {}, name)
-        for name, cls in section_cls.items()
+        for name, cls in _SECTIONS.items()
     }
     return PipelineConfig(**kwargs)

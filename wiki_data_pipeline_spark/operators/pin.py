@@ -44,14 +44,13 @@ from pyspark.sql import DataFrame
 PIN_MODE_KEY = "spark.wiki_data_pipeline.pin.mode"
 PIN_DIR_KEY = "spark.wiki_data_pipeline.pin.checkpointDir"
 
-# Observation hook for the reliable-tier sweep tooling (r13, verdict
-# item 2): when set, called (no args) on EVERY pin() invocation. Call
-# sites import ``pin`` by name, so patching any module attribute can
-# miss one — instrumenting the single shared implementation cannot.
-# Used by testing.pin_using_queries to derive the live set of
-# pin-routed queries; the RELIABLE_PARITY meta-test compares that set
-# against the committed artifact so a new pin site can't dodge the
-# per-round reliable-mode sweep.
+# Observation hook: when set, called (no args) on EVERY pin()
+# invocation. Call sites import ``pin`` by name, so patching any module
+# attribute can miss one — instrumenting the single shared
+# implementation cannot. The registry sweep (tools/sweep.py) sets it
+# around each query to count its pin() calls (``Record.pins``); the
+# pin-using queries found that way are the set RELIABLE_PARITY.json
+# must cover, so a new pin site can't dodge the reliable-tier sweep.
 _observer = None
 
 

@@ -100,57 +100,3 @@ def compare_query(
             res.details.append("row multiset mismatch (length tail)")
     return res
 
-
-def pin_using_queries(
-    spark,
-    sf_dir: str,
-    names: list[str] | None = None,
-    strict: bool = True,
-    errors: dict[str, str] | None = None,
-) -> set[str]:
-    """The LIVE set of registered queries that route through
-    ``operators.pin.pin`` (r13, verdict item 2). Builds every query's
-    DataFrame with the pin observer installed — pin() is invoked at
-    plan-construction time at every site (eager pins materialize
-    there; lazy ones still CALL pin() to wrap the frame), so building
-    the frame is sufficient and no query result is consumed. Because
-    the hook sits inside the single shared pin() implementation, a new
-    call site anywhere in the package is discovered automatically —
-    this is what the RELIABLE_PARITY meta-test compares the committed
-    artifact against, so a new pin site cannot dodge the per-round
-    reliable-tier sweep.
-
-    ``strict=True`` (the meta-test's mode) propagates a query-builder
-    exception — a broken builder should fail the test loudly.
-    ``strict=False`` (the check_parity --pin-sites tool mode, r13
-    review fix) records the error in ``errors`` and CONSERVATIVELY
-    includes the failing query in the returned set instead of letting
-    one unrelated builder regression block the whole artifact
-    regeneration: the sweep then runs it and records the honest err
-    row."""
-    from wiki_data_pipeline_spark.operators import pin as pin_mod
-    from wiki_data_pipeline_spark.plans.registry import all_queries
-
-    queries = all_queries()
-    selected = names or list(queries)
-    hits: set[str] = set()
-    current: dict[str, str] = {}
-
-    def _observe() -> None:
-        hits.add(current["name"])
-
-    pin_mod._observer = _observe
-    try:
-        for name in selected:
-            current["name"] = name
-            try:
-                queries[name](spark, sf_dir)
-            except Exception as e:  # noqa: BLE001
-                if strict:
-                    raise
-                if errors is not None:
-                    errors[name] = f"{type(e).__name__}: {e}"[:200]
-                hits.add(name)
-    finally:
-        pin_mod._observer = None
-    return hits
