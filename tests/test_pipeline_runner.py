@@ -18,6 +18,40 @@ def _json_files(out_dir: str) -> list[str]:
     return sorted(glob.glob(os.path.join(out_dir, "batch_*", "article_*.json")))
 
 
+def _assert_lease_free(path: str) -> None:
+    """A fresh acquire() of the lease on ``path`` succeeds."""
+    from wiki_data_pipeline_spark.streaming.checkpoint import (
+        HighWatermarkCheckpoint,
+    )
+
+    ckpt = HighWatermarkCheckpoint(path)
+    ckpt.acquire()
+    ckpt.release()
+
+
+def _lease_holder(path: str):
+    """A child python process (no JVM) holding the lease on ``path``;
+    returns once the child has acquired it."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, time\n"
+        "from wiki_data_pipeline_spark.streaming.checkpoint import "
+        "HighWatermarkCheckpoint\n"
+        "HighWatermarkCheckpoint(sys.argv[1]).acquire()\n"
+        "print('held', flush=True)\n"
+        "time.sleep(600)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.Popen(
+        [sys.executable, "-c", code, path],
+        cwd=repo, stdout=subprocess.PIPE, text=True,
+    )
+    assert proc.stdout.readline().strip() == "held"
+    return proc
+
+
 def test_pipeline_run_resume_and_reset(spark, sf_dir, tmp_path):
     out = str(tmp_path / "out")
 
@@ -726,54 +760,41 @@ def test_pipeline_concurrent_runners_fenced(spark, sf_dir, tmp_path):
     # the lease is released after the run: a sequential rerun resumes
     s2 = run_pipeline(spark, sf_dir, out, limit=40, batch_size=10)
     assert s2["processed"] == 10
-    lock = os.path.join(out, "_checkpoint", "progress.json.lock")
-    assert not os.path.exists(lock)
+    _assert_lease_free(os.path.join(out, "_checkpoint", "progress.json"))
 
 
 def test_pipeline_stale_lease_reaped(spark, sf_dir, tmp_path):
-    """A lock file left by a CRASHED holder (dead pid) must not wedge
-    the checkpoint: the next run reaps it and proceeds. A lock with a
-    LIVE holder pid is honored even if that process is unrelated —
-    liveness is the only signal the lease carries."""
-    import subprocess
-
+    """The lease is the kernel's lock on the lock file, held by a live
+    process: while another process holds it, run_pipeline fails fast
+    and writes nothing; once that holder is SIGKILLed the next run
+    proceeds with nothing to clean up. The lock file's contents carry
+    no signal, so one naming the caller's own pid (a crashed driver
+    restarted under a reused pid) does not wedge the checkpoint, and a
+    run that crashes inside the lease still releases it."""
     from wiki_data_pipeline_spark.streaming.checkpoint import (
         CheckpointLeaseError,
-        HighWatermarkCheckpoint,
     )
 
     out = str(tmp_path / "out")
-    lock = os.path.join(out, "_checkpoint", "progress.json.lock")
-    os.makedirs(os.path.dirname(lock))
+    path = os.path.join(out, "_checkpoint", "progress.json")
 
-    # dead-pid lock: run a real process to completion so the pid is
-    # genuinely unused, then plant it
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    with open(lock, "w", encoding="utf-8") as f:
-        f.write(str(proc.pid))
+    holder = _lease_holder(path)
+    try:
+        with pytest.raises(CheckpointLeaseError, match="progress.json.lock"):
+            run_pipeline(spark, sf_dir, out, limit=5)
+        assert not _json_files(out)
+        assert not os.path.exists(path)  # no watermark
+    finally:
+        holder.kill()
+        holder.wait()
     s = run_pipeline(spark, sf_dir, out, limit=5)
     assert s["processed"] == 5
-    assert not os.path.exists(lock)
 
-    # garbage-content lock: r10 flips this to CONSERVATIVE (ADVICE r9)
-    # — lock creation is now atomic-with-content, so an unparseable
-    # lock cannot be a mid-acquire crash; treat it as alive and fail
-    # fast instead of reaping on a guess
-    with open(lock, "w", encoding="utf-8") as f:
-        f.write("not-a-pid")
-    with pytest.raises(CheckpointLeaseError):
-        run_pipeline(spark, sf_dir, out, limit=10)
-    assert os.path.exists(lock)
-    os.unlink(lock)
-
-    # live-pid lock (our own pid): honored, not reaped
-    with open(lock, "w", encoding="utf-8") as f:
+    # pid reuse: a lock file naming our own pid is just a file
+    with open(path + ".lock", "w", encoding="utf-8") as f:
         f.write(str(os.getpid()))
-    with pytest.raises(CheckpointLeaseError):
-        run_pipeline(spark, sf_dir, out, limit=15)
-    assert os.path.exists(lock)
-    os.unlink(lock)
+    s = run_pipeline(spark, sf_dir, out, limit=10)
+    assert s["processed"] == 5 and s["watermark"] == 9
 
     # a run that CRASHES inside the leased section still releases: the
     # lease lives in a finally, crash-retry needs no manual rm
@@ -782,142 +803,18 @@ def test_pipeline_stale_lease_reaped(spark, sf_dir, tmp_path):
 
     with pytest.raises(RuntimeError, match="inside the lease"):
         run_pipeline(spark, sf_dir, out, limit=15, fault_injector=boom)
-    assert not os.path.exists(lock)
-    ckpt = HighWatermarkCheckpoint(
-        os.path.join(out, "_checkpoint", "progress.json")
-    )
-    with ckpt.lease():
-        assert os.path.exists(lock)
-    assert not os.path.exists(lock)
-
-
-def test_stale_lease_reap_is_race_safe(tmp_path):
-    """Pin the r10 link-first reap protocol (ADVICE r9: the r8 rename
-    protocol's restore path left lock_path briefly missing): (a) a
-    contender whose lock vanished reports contention; (b) a lock
-    replaced by a LIVE holder between the dead-pid check and the claim
-    is left untouched — the original never leaves its place; (c) the
-    clean reap works end-to-end; (d) a claim orphaned by a crashed
-    reaper blocks reaps while fresh-and-matching but is cleaned up
-    once it no longer matches the current lock inode."""
-    import subprocess
-
-    from wiki_data_pipeline_spark.streaming.checkpoint import (
-        CheckpointLeaseError,
-        HighWatermarkCheckpoint,
-    )
-
-    ckpt = HighWatermarkCheckpoint(str(tmp_path / "progress.json"))
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    dead_pid = proc.pid
-
-    # (a) lock already gone -> contention, and acquire() then
-    # succeeds cleanly on the now-free path
-    assert ckpt._reap_stale(dead_pid) is False
-    ckpt.acquire()
-    ckpt.release()
-
-    # (b) observed-dead lock replaced by a LIVE one between the check
-    # and the claim: reap must leave the live lock in place and yield
-    with open(ckpt.lock_path, "w", encoding="utf-8") as f:
-        f.write(str(os.getpid()))  # the "new holder" (alive)
-    assert ckpt._reap_stale(dead_pid) is False
-    assert not os.path.exists(ckpt.lock_path + ".reap")  # claim cleaned
-    with open(ckpt.lock_path, encoding="utf-8") as f:
-        assert f.read().strip() == str(os.getpid())  # holder intact
-    with pytest.raises(CheckpointLeaseError):
-        ckpt.acquire()
-    os.unlink(ckpt.lock_path)
-
-    # (c) the clean reap still works end-to-end: dead-pid lock ->
-    # link-claimed, verified, reaped -> acquired
-    with open(ckpt.lock_path, "w", encoding="utf-8") as f:
-        f.write(str(dead_pid))
-    ckpt.acquire()
-    with open(ckpt.lock_path, encoding="utf-8") as f:
-        assert f.read().strip() == str(os.getpid())
-    ckpt.release()
-
-    # (d) orphaned claim from a crashed reaper: while it matches the
-    # current lock inode and is fresh, contenders yield (no double
-    # reap); once the lock it claimed is gone, the next contender
-    # clears it and the path un-wedges
-    with open(ckpt.lock_path, "w", encoding="utf-8") as f:
-        f.write(str(dead_pid))
-    claim = ckpt.lock_path + ".reap"
-    os.link(ckpt.lock_path, claim)  # simulated crash mid-reap
-    assert ckpt._reap_stale(dead_pid) is False  # blocked, nothing broken
-    assert os.path.exists(ckpt.lock_path) and os.path.exists(claim)
-    os.unlink(ckpt.lock_path)  # the claimed lock goes away
-    assert ckpt._reap_stale(dead_pid) is False  # cleans the stale claim
-    assert not os.path.exists(claim)
-    ckpt.acquire()  # and the lease is takeable again
-    ckpt.release()
-
-
-def test_live_reap_claim_survives_old_pid_write(tmp_path):
-    """Pin the r11 ADVICE fix: the claim is a hard link of the lock,
-    so its st_mtime is when the DEAD HOLDER wrote its pid — in
-    production always long before the reap starts. The orphan age-out
-    must clock from the link(2) itself (st_ctime, bumped by link),
-    never from the pid write: otherwise every live reap's claim reads
-    as aged-out and any contender deletes it, voiding the reap
-    critical section (and, three-way, letting a second reaper unlink
-    a freshly re-acquired live lock)."""
-    import subprocess
-    import time
-
-    from wiki_data_pipeline_spark.streaming.checkpoint import (
-        HighWatermarkCheckpoint,
-    )
-
-    ckpt = HighWatermarkCheckpoint(str(tmp_path / "progress.json"))
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    dead_pid = proc.pid
-
-    # the dead holder's lock, pid WRITTEN LONG AGO (mtime backdated;
-    # note utime bumps ctime to now, exactly like the real timeline:
-    # content old, inode metadata fresh at claim time)
-    with open(ckpt.lock_path, "w", encoding="utf-8") as f:
-        f.write(str(dead_pid))
-    old = time.time() - 3600
-    os.utime(ckpt.lock_path, (old, old))
-
-    # a live reaper links its claim NOW (simulating mid-reap, between
-    # steps 1 and 3); a contender's orphan cleanup runs concurrently
-    claim = ckpt.lock_path + ".reap"
-    os.link(ckpt.lock_path, claim)
-    ckpt._cleanup_orphaned_claim(claim)
-    assert os.path.exists(claim), (
-        "live reap claim with an old pid-write mtime was deleted — "
-        "age-out is clocking the wrong timestamp"
-    )
-    # and the contender's full reap attempt yields without breaking in
-    assert ckpt._reap_stale(dead_pid) is False
-    assert os.path.exists(ckpt.lock_path) and os.path.exists(claim)
-
-    # genuine age-out (claim link itself older than the horizon) still
-    # clears: shrink the horizon instead of waiting
-    orig = HighWatermarkCheckpoint._REAP_CLAIM_MAX_AGE_S
-    try:
-        HighWatermarkCheckpoint._REAP_CLAIM_MAX_AGE_S = -1.0
-        ckpt._cleanup_orphaned_claim(claim)
-    finally:
-        HighWatermarkCheckpoint._REAP_CLAIM_MAX_AGE_S = orig
-    assert not os.path.exists(claim)
-    os.unlink(ckpt.lock_path)
+    _assert_lease_free(path)
 
 
 def test_streaming_reset_inside_lease(spark, tmp_path):
     """Pin the r8-advice fix: `--stream --reset` must NOT delete a
     live run's offset log before losing the lease race. With the lease
-    held by a live pid, a reset invocation fails fast AND the
+    held by a live holder, a reset invocation fails fast AND the
     _stream_checkpoint / _dead_letter_stream dirs survive untouched."""
     from wiki_data_pipeline_spark.pipeline import run_pipeline_streaming
     from wiki_data_pipeline_spark.streaming.checkpoint import (
         CheckpointLeaseError,
+        HighWatermarkCheckpoint,
     )
 
     src = str(tmp_path / "src")
@@ -932,16 +829,16 @@ def test_streaming_reset_inside_lease(spark, tmp_path):
         f.write("live-run-offset-log")
 
     # live holder on the stream-runner lease
-    lock = os.path.join(out, "_stream_runner.lock")
-    with open(lock, "w", encoding="utf-8") as f:
-        f.write(str(os.getpid()))
-
-    with pytest.raises(CheckpointLeaseError):
-        run_pipeline_streaming(spark, src, out, reset=True)
+    holder = HighWatermarkCheckpoint(os.path.join(out, "_stream_runner"))
+    holder.acquire()
+    try:
+        with pytest.raises(CheckpointLeaseError):
+            run_pipeline_streaming(spark, src, out, reset=True)
+    finally:
+        holder.release()
     # the live run's state survived the failed reset attempt
     assert os.path.exists(sentinel)
     assert os.path.exists(dls_dir)
-    os.unlink(lock)
 
 
 def test_task_retry_exactly_once_both_runners(tmp_path):
@@ -985,7 +882,7 @@ def test_pipeline_streaming_concurrent_runners_fenced(spark, tmp_path):
     """Streaming twin of the fencing test: Structured Streaming's own
     checkpoint log does not fence two concurrent availableNow drains
     of one out_dir (they race the offset log), so the runner holds the
-    same pid-liveness lease as the batch twin — the loser fails fast
+    same kernel-lock lease as the batch twin — the loser fails fast
     with CheckpointLeaseError while the winner is parked mid-batch."""
     import threading
 
@@ -1032,7 +929,7 @@ def test_pipeline_streaming_concurrent_runners_fenced(spark, tmp_path):
     # lease released -> a sequential resume works and is a no-op
     run_pipeline_streaming(spark, src, out)
     assert len(_json_files(out)) == 20
-    assert not os.path.exists(os.path.join(out, "_stream_runner.lock"))
+    _assert_lease_free(os.path.join(out, "_stream_runner"))
 
 
 def _write_corpus(sf: str, first_id: int, n_docs: int, n_files: int) -> set[int]:

@@ -146,6 +146,30 @@ def test_high_watermark_checkpoint_batch(spark, sf_dir, tmp_path):
     assert state.runs == 2
 
 
+def test_checkpoint_failed_save_leaves_no_stray_file(tmp_path, monkeypatch):
+    """A commit whose write fails (a full disk) keeps the committed
+    progress.json byte-identical and leaves no temp file beside it."""
+    import errno
+    import json
+
+    import pytest
+
+    ckpt = HighWatermarkCheckpoint(str(tmp_path / "_checkpoint" / "progress.json"))
+    ckpt.commit_values(watermark=9, n_disposed=10)
+    with open(ckpt.path, "rb") as f:
+        committed = f.read()
+
+    def disk_full(*args, **kwargs):
+        raise OSError(errno.ENOSPC, "No space left on device")
+
+    monkeypatch.setattr(json, "dump", disk_full)
+    with pytest.raises(OSError, match="No space left"):
+        ckpt.commit_values(watermark=19, n_disposed=10)
+    with open(ckpt.path, "rb") as f:
+        assert f.read() == committed
+    assert os.listdir(tmp_path / "_checkpoint") == ["progress.json"]
+
+
 def test_stream_static_enrichment_matches_batch(spark, sf_dir, tmp_path):
     """Stream-static broadcast join (J1 streaming form) must produce
     exactly the batch join's rows once the stream drains."""

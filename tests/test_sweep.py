@@ -1,9 +1,9 @@
 """The registry sweep under the audit tools (tools/sweep.py), on
 `spark.range` frames and a fake registry: construction stages and
 pin() calls are attributed to the query that ran them, a failing
-builder becomes an error record without ending the sweep, unknown
-names are rejected before a session starts, and every tool answers
-``--help``."""
+builder becomes an error record without ending the sweep (and makes
+plan_audit exit 1), unknown names are rejected before a session
+starts, and every tool answers ``--help``."""
 
 from __future__ import annotations
 
@@ -78,6 +78,17 @@ def test_pin_observer_records_and_detaches(spark):
     assert boom.error == "ValueError: builder failed after a pin"
     assert (plain.pins, plain.error) == (0, None)
     assert pin._observer is None
+
+
+@pytest.mark.parametrize("name, code", [("boom", 1), ("plain", 0)])
+def test_plan_audit_exits_1_when_a_query_fails_to_build(
+    spark, monkeypatch, name, code
+):
+    import plan_audit
+
+    monkeypatch.setattr(sweep, "all_queries", lambda: FAKE)
+    monkeypatch.setattr(plan_audit, "session", lambda app: spark)
+    assert plan_audit.main([name]) == code
 
 
 @pytest.mark.parametrize(

@@ -15,7 +15,7 @@ Flags are for a human to read, not failures: the fixture-window L3/L4
 forms legitimately use a single partition (their scale-safe twins are
 separate queries), and the test suite keeps the exact allowlists. The
 audit makes every such choice visible so it is a decision, not an
-accident.
+accident. The exit code is 1 when any query fails to build or plan.
 """
 
 from __future__ import annotations
@@ -331,15 +331,17 @@ def _audit(df) -> tuple[dict, list[str]]:
     return a, fl
 
 
-def main(argv=None) -> None:
+def main(argv=None) -> int:
     args = parse(parser(__doc__), argv)
     (sf_dir,) = args.sf_dir
     spark = session("plan-audit")
     flagged: dict[str, list[str]] = {}
+    failed = 0
     for r in sweep(spark, args.names, sf_dir, _audit):
         if r.error is not None:
             print(json.dumps({"name": r.name, "error": r.error[:200]}))
             flagged[r.name] = ["ERROR"]
+            failed += 1
             continue
         a, fl = r.value
         if fl:
@@ -352,7 +354,8 @@ def main(argv=None) -> None:
         ),
         file=sys.stderr,
     )
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

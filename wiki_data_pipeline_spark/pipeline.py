@@ -335,7 +335,7 @@ def run_pipeline_streaming(
     # lock lives BESIDE the checkpoint dir (out_dir/_stream_runner.lock),
     # not inside it: the offset log stays exactly what Spark wrote, and
     # --reset's rmtree of _stream_checkpoint never races the lease file
-    # (stale locks are reaped by pid-liveness, not by reset)
+    # (a dead holder's lock is freed by the kernel, not by reset)
     lease_ckpt = HighWatermarkCheckpoint(
         os.path.join(out_dir, "_stream_runner")
     )

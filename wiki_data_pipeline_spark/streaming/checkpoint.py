@@ -1,17 +1,18 @@
-"""Batch high-watermark checkpointing (reference ST2:
-src/checkpoint_manager.py — resumable progress persisted as JSON).
+"""Batch high-watermark checkpointing and the single-writer lease
+(reference ST2: src/checkpoint_manager.py — resumable progress as JSON).
 
 The reference tracks ``last_processed_index`` and skips re-enumeration
 on resume (can_resume :96-98, get_resume_info :100-108). The batch
 engine analog: persist the max committed sequence value; the next run
 filters ``seq > watermark`` — a pushed-down range predicate, so resume
 cost scales with NEW data only. Structured Streaming's
-checkpointLocation (streaming/jobs.py) is the streaming counterpart —
-we do not hand-roll offset logs for streams."""
+checkpointLocation (streaming/jobs.py) is the streaming counterpart.
+Both runners hold the lease for a whole run (``lease()``)."""
 
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import tempfile
@@ -24,13 +25,10 @@ from pyspark.sql import functions as F
 class CheckpointLeaseError(RuntimeError):
     """Another live run holds this checkpoint's lease.
 
-    The reference's queue/checkpoint assumes exactly one process
-    (src/queue_manager.py:34-50, src/checkpoint_manager.py:39-47 —
-    read-modify-write JSON with no guard); two concurrent runs there
-    silently double-process the pending queue or interleave watermark
-    commits. The Spark engine makes the single-writer assumption
-    EXPLICIT: a second concurrent runner fails fast with this error
-    instead of corrupting the watermark or duplicating sink files."""
+    The reference assumes exactly one process per queue/checkpoint
+    (src/queue_manager.py:34-50, src/checkpoint_manager.py:39-47), so
+    two runs there silently double-process the queue or interleave
+    watermark commits; here the second concurrent runner fails fast."""
 
 
 @dataclass
@@ -47,173 +45,41 @@ class CheckpointState:
 class HighWatermarkCheckpoint:
     def __init__(self, path: str) -> None:
         self.path = path
+        self._lock_fd: int | None = None
 
-    # ---------------------------------------------------------------
-    # Single-writer lease. POSIX O_CREAT|O_EXCL is the atomic
-    # primitive (works on any local/NFS-v3+ filesystem, no fcntl
-    # byte-range locks that silently no-op on some network mounts);
-    # the holder's pid rides in the file so a crashed run's stale
-    # lock is reaped instead of wedging the checkpoint forever.
-    # ---------------------------------------------------------------
+    # Single-writer lease: an exclusive flock(2) on the lock file, held
+    # by one open file description until release(). The kernel drops it
+    # when the holder closes the fd or dies, so a crashed run leaves
+    # nothing to reap and no pid is ever read. Each acquire() opens its
+    # own description, so two threads of one driver fence each other.
+    # The file is never unlinked: a contender could then lock the old
+    # inode while a third run creates and locks a new one.
 
     @property
     def lock_path(self) -> str:
         return self.path + ".lock"
 
-    def _try_acquire(self) -> bool:
-        """Create the lock ATOMICALLY WITH its pid content: the pid is
-        written to a private temp file first and link()ed into place,
-        so no contender can ever observe an existing-but-empty lock
-        (the pre-r10 O_CREAT-then-write sequence had a window where a
-        reader parsed the momentarily-empty file as pid -1 = dead and
-        reaped a live holder)."""
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(
-            dir=os.path.dirname(self.lock_path) or "."
-        )
-        try:
-            with os.fdopen(fd, "w", encoding="utf-8") as f:
-                f.write(str(os.getpid()))
-            try:
-                os.link(tmp, self.lock_path)  # atomic: content + name
-            except FileExistsError:
-                return False
-            return True
-        finally:
-            os.unlink(tmp)
-
     def acquire(self) -> None:
-        """Take the single-writer lease or raise CheckpointLeaseError.
-
-        A lock held by a DEAD pid (runner crashed between acquire and
-        release) is reaped and re-contended once — liveness beats a
-        manual `rm`; a lock held by a LIVE pid (including this one:
-        two threads of one driver race the same out_dir) is an error,
-        never a wait — a batch runner queueing behind another run on
-        the same checkpoint is operator error, and failing fast
-        surfaces it."""
-        if self._try_acquire():
-            return
-        pid = self._read_pid(self.lock_path)
-        # pid None (unreadable/vanished-mid-read) is treated as ALIVE:
-        # lock creation is atomic-with-content now, so an unparseable
-        # lock is an anomaly — fail fast rather than reap on a guess.
-        alive = True
-        if pid is not None:
-            try:
-                os.kill(pid, 0)
-            except ProcessLookupError:
-                alive = False
-            except PermissionError:
-                pass  # exists, owned by someone else
-        if not alive and self._reap_stale(pid) and self._try_acquire():
-            return
-        raise CheckpointLeaseError(
-            f"checkpoint {self.path} is leased by a live run (lock "
-            f"{self.lock_path}, holder pid {pid}); concurrent runners "
-            "on one checkpoint would double-process the same delta"
-        )
-
-    @staticmethod
-    def _read_pid(path: str) -> int | None:
+        """Take the lease or raise CheckpointLeaseError, never wait: a
+        runner queued behind another on one checkpoint is operator error."""
+        os.makedirs(os.path.dirname(self.lock_path) or ".", exist_ok=True)
+        fd = os.open(self.lock_path, os.O_RDWR | os.O_CREAT, 0o644)
         try:
-            with open(path, encoding="utf-8") as f:
-                txt = f.read().strip()
-            return int(txt) if txt else None
-        except (OSError, ValueError):
-            return None
-
-    _REAP_CLAIM_MAX_AGE_S = 30.0
-
-    def _reap_stale(self, dead_pid: int) -> bool:
-        """Remove a lock whose holder pid is dead — link-FIRST claim
-        (r10, replacing the r9 rename protocol whose restore path left
-        lock_path briefly nonexistent, letting a third contender
-        acquire alongside a restored holder):
-
-        1. link(lock_path, claim) with ONE shared claim name — atomic,
-           so exactly one contender holds the reap critical section;
-           the ORIGINAL LOCK NEVER LEAVES ITS PLACE, so no acquire can
-           slip through a missing-lock window.
-        2. Verify the claimed inode IS the current lock (stat compare)
-           and still names the dead pid. While the claim exists other
-           contenders cannot reap, no live holder exists (pid is
-           dead), and acquires fail on the still-present lock — so
-           the verified inode cannot change underneath us.
-        3. unlink(lock_path) then unlink(claim): deletes exactly the
-           dead holder's lock, never a re-created live one.
-
-        A claim orphaned by a reaper that crashed mid-reap is cleaned
-        up when it no longer matches the current lock inode, or ages
-        out after _REAP_CLAIM_MAX_AGE_S seconds MEASURED FROM THE
-        link() ITSELF: the claim shares the lock's inode, whose ctime
-        is bumped by link(2), so st_ctime is the claim's creation time
-        (r11, ADVICE — st_mtime was the dead holder's pid write,
-        almost always >30 s old, so the age-out fired on LIVE reaps
-        and a contender could void an active claim). A live reap is
-        three syscalls, so its claim can never age out. Residual
-        window: a reaper suspended longer than the age-out INSIDE
-        step 3 while a contender re-claims could still unlink a fresh
-        lock — documented as accepted (pause must exceed 30 s between
-        two adjacent syscalls)."""
-        claim = self.lock_path + ".reap"
-        try:
-            os.link(self.lock_path, claim)
-        except FileExistsError:
-            self._cleanup_orphaned_claim(claim)
-            return False  # a reap is (or was) in flight; retry later
-        except FileNotFoundError:
-            # holder vanished on its own; a claim left behind by a
-            # crashed reaper of that vanished lock is defunct — clear it
-            self._cleanup_orphaned_claim(claim)
-            return False
-        try:
-            lock_st = os.stat(self.lock_path)
-            claim_st = os.stat(claim)
-            same = lock_st.st_ino == claim_st.st_ino
-        except FileNotFoundError:
-            same = False
-        # claim unlinks tolerate FileNotFoundError (r11, ADVICE): a
-        # racing contender's orphan cleanup may remove the claim
-        # mid-reap; that voids nothing this branch still relies on.
-        if not same or self._read_pid(claim) != dead_pid:
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(claim)  # lock changed hands between check and claim
-            return False
-        with contextlib.suppress(FileNotFoundError):
-            os.unlink(self.lock_path)
-        with contextlib.suppress(FileNotFoundError):
-            os.unlink(claim)
-        return True
-
-    def _cleanup_orphaned_claim(self, claim: str) -> None:
-        """Clear a claim left by a crashed reaper: safe when it no
-        longer matches the current lock inode (it refers to a defunct
-        reap) or when it exceeds the age-out (no live reap spans it).
-        The age-out clock is st_ctime — bumped by the reaper's link(2)
-        that created the claim — NOT st_mtime, which belongs to the
-        dead holder's pid write and would read >30 s on every live
-        reap (the r10 shape let any contender delete an active claim
-        and, three-way, unlink a freshly re-acquired live lock)."""
-        import time
-
-        try:
-            claim_st = os.stat(claim)
-        except FileNotFoundError:
-            return
-        try:
-            lock_st = os.stat(self.lock_path)
-        except FileNotFoundError:
-            lock_st = None
-        stale_inode = lock_st is None or lock_st.st_ino != claim_st.st_ino
-        aged_out = (time.time() - claim_st.st_ctime) > self._REAP_CLAIM_MAX_AGE_S
-        if stale_inode or aged_out:
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(claim)
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except OSError as e:
+            os.close(fd)
+            if isinstance(e, BlockingIOError):
+                raise CheckpointLeaseError(
+                    f"checkpoint {self.path} is leased by a live run "
+                    f"(lock {self.lock_path})"
+                ) from None
+            raise
+        self._lock_fd = fd
 
     def release(self) -> None:
-        with contextlib.suppress(FileNotFoundError):
-            os.unlink(self.lock_path)
+        fd, self._lock_fd = self._lock_fd, None
+        if fd is not None:
+            os.close(fd)
 
     @contextlib.contextmanager
     def lease(self):
@@ -232,9 +98,13 @@ class HighWatermarkCheckpoint:
     def save(self, state: CheckpointState) -> None:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(asdict(state), f)
-        os.replace(tmp, self.path)  # atomic commit
+        try:
+            with os.fdopen(fd, "w", encoding="utf-8") as f:
+                json.dump(asdict(state), f)
+            os.replace(tmp, self.path)  # atomic commit
+        except BaseException:
+            os.unlink(tmp)  # a failed write (e.g. ENOSPC) leaves no stray
+            raise
 
     def incremental(self, df: DataFrame, seq_col: str) -> DataFrame:
         """Rows newer than the committed watermark (pushdown-friendly)."""
