@@ -10,8 +10,13 @@ The sf0.1 run times every registered query, reports the HEADLINE sum
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 on stdout and the full table in BENCH_SPREAD.json. The x10 run times
 every query at a x1 and a x10 replica and writes BENCH_SF1.json. Both
-gate every query against their frozen baseline (BENCH_BASELINE.json,
-BENCH_SF1_BASELINE.json) and append first-seen medians to it.
+list as ``regressions_over_2x`` every query whose raw median is over 2x
+its frozen baseline (BENCH_BASELINE.json, BENCH_SF1_BASELINE.json) and
+over an absolute floor, and append first-seen medians to the baseline.
+
+The 2x gate is a measurement, not a check: the script exits 0 whatever
+it lists. A baseline's ``provenance`` names the cores it was frozen on,
+and a run on another box compares the machine as much as the code.
 
 Each query is forced end-to-end with the noop sink (full execution,
 no driver-side collect bottleneck). Session startup and JVM warmup are
@@ -123,157 +128,26 @@ REGRESSION_FACTOR = 2.0
 # multi-second queries the gate exists to protect.
 REGRESSION_ABS_FLOOR_SEC = 0.5
 
-# Session-normalization sentinels (round-7 verdict item 2): the r7
-# driver artifacts showed a UNIFORM ~1.3x elevation across all 201
-# queries — including ones whose baselines were frozen the same round
-# and whose code didn't change — i.e. a measurement-session shift
-# (driver-host load), not a code regression; an idle-box rerun of the
-# same commit read median 1.02x against the same baselines. The gate
-# therefore measures the session itself: three pinned queries whose
-# code has been untouched since r1 (TPC-H Q1/Q3 shapes + hash-groupBy
-# dedup — scan+agg, join+topk, and groupBy, so they move with the host
-# the way the registry does), takes the MEDIAN of their
-# measured/baseline ratios (robust to one sentinel genuinely
-# regressing — that one still flags via its own gate row), clamps at
-# 1.0 (a fast session must never amplify deltas), and divides every
-# query's measurement by it before gating.
-SENTINELS = ["q1_pricing_summary", "q3_top_orders", "dedup_exact"]
-
-# Sanity bound on the normalization itself (r8 advice): sentinels
-# cannot distinguish host load from a GENUINE code-wide slowdown (a
-# global conf change slowing the whole registry — sentinels included —
-# divides itself away). Driver-round host load has measured
-# 1.27–1.33x; anything past this bound forces a human look instead of
-# silent normalization. The raw sentinel ratios ship in the gate line
-# and the JSON so the evidence is inspectable either way.
-SESSION_RATIO_SANITY_BOUND = 1.5
-
-# The normalization actually APPLIED to the per-query gate is capped
-# at the sanity bound (r11 verdict item 3): an uncapped divisor under
-# extreme host load would scale every query's gate by that load and
-# mask a real regression of the same magnitude. Past the cap the run
-# is alert-flagged anyway (session_ratio_alert) — the residue shows up
-# as uniform over-the-cap deltas rather than silently vanishing. Both
-# raw and normalized per-query ratios ship in the artifact so either
-# view is inspectable after the fact.
-GATE_NORM_CAP = SESSION_RATIO_SANITY_BOUND
-
-
-# Sentinel AGREEMENT band (r13, verdict item 3): one multiplicative
-# session_ratio is only meaningful if the sentinels moved together.
-# r12's driver box read sentinels spanning 1.034-1.312 (27% apart)
-# while a single 1.241 divisor was applied to all 209 normalized
-# deltas — putting ±25% uncertainty on every normalized ratio, wide
-# enough to hide a genuine ~1.5x regression. When max/min sentinel
-# disagreement exceeds this band the sentinels are RE-MEASURED (three
-# fresh trials; transient load on one sentinel is the common cause)
-# and, if they still disagree, the artifact carries
-# sentinel_spread_alert=true so the normalized view is read as
-# untrusted. The merge after re-measurement takes the per-sentinel
-# MIN of the two medians: host load only ever inflates a timing, so
-# the smaller median is closer to the true cost — and a smaller
-# sentinel ratio yields a smaller divisor, which makes the 2x gate
-# STRICTER, never masking.
-SENTINEL_SPREAD_BOUND = 1.2
-
-
-def sentinel_spread(ratios: dict[str, float]) -> float:
-    """max/min disagreement across the measured sentinel ratios,
-    each CLAMPED at 1.0 first (1.0 when fewer than two measured).
-
-    The clamp mirrors gate_norm's own floor: the applied divisor is
-    never below 1.0, so a sentinel reading FASTER than its baseline
-    (routine on an idle box whose baseline was frozen under load)
-    cannot move the divisor or mask anything — normalized deltas are
-    raw deltas on such a session. Only disagreement ABOVE 1.0 is
-    divisor-relevant uncertainty; an unclamped spread alerted on
-    exactly the harmless fast-session shape (r13: sentinels
-    1.00/0.79/0.70 with divisor 1.0 applied)."""
-    vals = [max(1.0, v) for v in ratios.values() if v]
-    if len(vals) < 2:
-        return 1.0
-    return max(vals) / min(vals)
-
-
-def merge_remeasured(
-    timings: dict[str, float],
-    fresh: dict[str, float],
-    sentinels: list[str] = SENTINELS,
-) -> dict[str, float]:
-    """Fold re-measured sentinel medians into ``timings`` by
-    per-sentinel MIN (strict-safe: see SENTINEL_SPREAD_BOUND). A
-    genuinely regressed sentinel stays high — both medians carry the
-    regression — so the retry cannot hide it."""
-    out = dict(timings)
-    for s in sentinels:
-        if s in fresh and s in out:
-            out[s] = min(out[s], fresh[s])
-    return out
-
-
-def gate_norm(norm: float) -> float:
-    """The session-ratio divisor the regression gate applies: the
-    measured sentinel median, clamped to [1.0, GATE_NORM_CAP]."""
-    return min(max(1.0, norm), GATE_NORM_CAP)
-
-
-def sentinel_ratios(
-    timings: dict[str, float],
-    baseline: dict[str, float],
-    sentinels: list[str] = SENTINELS,
-) -> dict[str, float]:
-    return {
-        s: round(timings[s] / baseline[s], 3)
-        for s in sentinels
-        if baseline.get(s) and timings.get(s)
-    }
-
-
-def session_ratio(
-    timings: dict[str, float],
-    baseline: dict[str, float],
-    sentinels: list[str] = SENTINELS,
-) -> float:
-    ratios = sorted(
-        timings[s] / baseline[s]
-        for s in sentinels
-        if baseline.get(s) and timings.get(s)
-    )
-    if not ratios:
-        return 1.0
-    n = len(ratios)
-    mid = (
-        ratios[n // 2]
-        if n % 2
-        else (ratios[n // 2 - 1] + ratios[n // 2]) / 2
-    )
-    return max(1.0, mid)
-
 
 def compute_regressions(
     timings: dict[str, float],
     baseline: dict[str, float],
     factor: float = REGRESSION_FACTOR,
     abs_floor_sec: float = REGRESSION_ABS_FLOOR_SEC,
-    norm: float = 1.0,
 ) -> dict[str, float]:
-    """Flag name -> RAW ratio for every query whose session-normalized
-    time (``measured / norm``) is slower than ``factor``x its frozen
-    baseline AND slower by more than ``abs_floor_sec`` absolute — both
-    conditions, so sub-second queries can't trip the gate on
-    job-overhead jitter while multi-second regressions (where 2x is
-    always >> the floor) are gated exactly as before. ``norm`` is the
-    :func:`session_ratio` sentinel factor (1.0 = idle-calibrated
-    session). Queries missing from the baseline are skipped (the
+    """Flag name -> ratio for every query whose median is slower than
+    ``factor``x its frozen baseline AND slower by more than
+    ``abs_floor_sec`` absolute — both conditions, so sub-second queries
+    can't trip the gate on job-overhead jitter while multi-second
+    regressions (where 2x is always >> the floor) are gated by the
+    ratio alone. Medians are compared raw: a loaded or smaller box
+    reads as slower code. Queries missing from the baseline are skipped (the
     registry-coverage meta-test makes that state unreachable for
     registered queries)."""
     out = {}
     for name, sec in timings.items():
         base = baseline.get(name)
-        if not base:
-            continue
-        adj = sec / norm
-        if adj / base > factor and (adj - base) > abs_floor_sec:
+        if base and sec / base > factor and sec - base > abs_floor_sec:
             out[name] = round(sec / base, 2)
     return out
 
@@ -284,8 +158,8 @@ def compute_regressions(
 # built by build_scaled below), in ONE session so the per-query scaling
 # exponent log10(t_sf1/t_sf0.1) is host-load-self-normalized. The sf1
 # timings gate against BENCH_SF1_BASELINE.json with the same 2x factor +
-# absolute floor + sentinel session normalization as the sf0.1 gate
-# (floor scaled 10x: at 10x data, a real regression costs seconds).
+# absolute floor as the sf0.1 gate (floor scaled 10x: at 10x data, a
+# real regression costs seconds).
 # Artifact lands in BENCH_SF1.json.
 SF1_BASELINE_PATH = "BENCH_SF1_BASELINE.json"
 SF1_ABS_FLOOR_SEC = 5.0  # 10x data -> 10x the sf0.1 floor
@@ -335,8 +209,7 @@ def build_scaled(spark, workdir: str, mult: int) -> str:
     # fixture scan in, one output file with ONE giant row group out —
     # and parquet cannot split inside a row group, so every scan-bound
     # x10 measurement was a single-core measurement (the (11+1)/12
-    # straggler stage; q1's exponent partly an artifact; the
-    # sentinel-spread alert). 4·mult files (x10 → 40 ≥ the 32 local
+    # straggler stage; q1's exponent partly an artifact). 4·mult files (x10 → 40 ≥ the 32 local
     # cores) restores the scan parallelism a real 10× dataset would
     # have. Fixed formula, not defaultParallelism: the layout must not
     # depend on the core count of the session that happens to build
@@ -467,7 +340,7 @@ def time_queries(spark, queries, names, sf_dir, warm) -> dict[str, list[float]]:
     values stay comparable: the sf0.1 run warms HEADLINE only (the
     median-of-3 already discards the one cold trial of the rest, and a
     full-registry warmup adds ~2.5 min for no change in the median);
-    the x10 run and every sentinel re-measure warm every name. Three
+    the x10 run warms every name. Three
     trials and a per-query MEDIAN: the fixture host's shared disk shows
     multi-second I/O stalls, and a median of three makes the 2x gate
     robust to one contended trial without letting a lucky min hide a
@@ -491,82 +364,26 @@ def medians(trials: dict[str, list[float]]) -> dict[str, float]:
     return {name: sorted(ts)[len(ts) // 2] for name, ts in trials.items()}
 
 
-def gate(spark, queries, sf_dir, trials, baseline, abs_floor_sec):
-    """The regression gate of both runs: returns the gated medians, the
-    gate fields both artifacts carry, and the per-query raw and
-    normalized deltas against ``baseline`` the sf0.1 sidecar ships.
-
-    Sentinel agreement check (r13): if the three sentinels disagree
-    past the band, re-measure them once — the common cause is a
-    transient load spike during one sentinel's trials — and merge by
-    per-sentinel min (strict-safe; see SENTINEL_SPREAD_BOUND). The
-    fresh medians join ``trials`` so a per-query [min, max] stays
-    consistent with the merged median. Everything downstream (session
-    ratio, regressions, exponents) reads the merged medians. The delta
-    table goes to stderr so stdout stays ONE JSON line."""
+def gate(trials, baseline, abs_floor_sec):
+    """The regression gate of both runs, a pure function of the trials:
+    returns the per-query medians, ``regressions_over_2x`` (see
+    :func:`compute_regressions`) and every baselined query's
+    median/baseline ratio. The delta table goes to stderr so stdout
+    stays ONE JSON line."""
     timings = medians(trials)
-    raw_sentinels = sentinel_ratios(timings, baseline)
-    remeasured = sentinel_spread(raw_sentinels) > SENTINEL_SPREAD_BOUND
-    if remeasured:
-        fresh = medians(time_queries(spark, queries, SENTINELS, sf_dir, SENTINELS))
-        timings = merge_remeasured(timings, fresh)
-        raw_sentinels = sentinel_ratios(timings, baseline)
-        for s, sec in fresh.items():
-            trials.setdefault(s, []).append(sec)
-    spread = sentinel_spread(raw_sentinels)
-    raw_norm = session_ratio(timings, baseline)
-    norm = gate_norm(raw_norm)
     regressions = compute_regressions(
-        timings, baseline, abs_floor_sec=abs_floor_sec, norm=norm
+        timings, baseline, abs_floor_sec=abs_floor_sec
     )
     deltas = {
         name: round(timings[name] / baseline[name], 2)
         for name in timings
         if baseline.get(name)
     }
-    report = {
-        "deltas": deltas,
-        "deltas_normalized": {n: round(d / norm, 2) for n, d in deltas.items()},
-    }
-    fields = {
-        "session_ratio": round(raw_norm, 3),
-        "session_ratio_applied": round(norm, 3),
-        "session_ratio_sentinels": raw_sentinels,
-        "session_ratio_alert": raw_norm > SESSION_RATIO_SANITY_BOUND,
-        "sentinel_spread": round(spread, 3),
-        "sentinel_spread_alert": spread > SENTINEL_SPREAD_BOUND,
-        "sentinels_remeasured": remeasured,
-        "regressions_over_2x": regressions,
-        "regressions_over_2x_normalized": {
-            n: round(timings[n] / baseline[n] / norm, 2) for n in regressions
-        },
-    }
     if baseline:
         print(
-            f"-- bench deltas vs the frozen baseline (this/prev, >1 = "
-            f"slower; session_ratio={raw_norm:.3f}, gate divisor "
-            f"applied={norm:.3f} (capped at {GATE_NORM_CAP}), "
-            f"sentinels={raw_sentinels}):",
+            "-- bench deltas vs the frozen baseline (this/prev, >1 = slower):",
             file=sys.stderr,
         )
-        if fields["session_ratio_alert"]:
-            print(
-                f"-- WARNING: session_ratio {norm:.3f} exceeds sanity "
-                f"bound {SESSION_RATIO_SANITY_BOUND} — either extreme "
-                "host load or a GENUINE uniform code-wide slowdown the "
-                "sentinels cannot tell apart; inspect the raw sentinel "
-                "ratios above before trusting regressions_over_2x",
-                file=sys.stderr,
-            )
-        if fields["sentinel_spread_alert"]:
-            print(
-                f"-- WARNING: sentinels disagree {spread:.3f}x "
-                f"(band {SENTINEL_SPREAD_BOUND}) even after "
-                "re-measurement — a single session_ratio cannot "
-                "normalize this run; treat deltas_normalized as "
-                "untrusted and read the RAW ratios",
-                file=sys.stderr,
-            )
         for name in sorted(deltas, key=deltas.get, reverse=True):
             flag = "  << REGRESSION" if name in regressions else ""
             print(
@@ -574,7 +391,7 @@ def gate(spark, queries, sf_dir, trials, baseline, abs_floor_sec):
                 f"= {deltas[name]:.2f}x{flag}",
                 file=sys.stderr,
             )
-    return timings, fields, report
+    return timings, regressions, deltas
 
 
 def load_baseline(name: str) -> dict:
@@ -682,8 +499,7 @@ def run_sf1(refreeze: str | None = None) -> None:
 
     t01 = medians(time_queries(spark, queries, names, sf01_dir, names))
     base = load_baseline(SF1_BASELINE_PATH)
-    t1, fields, _ = gate(
-        spark, queries, sf1_dir,
+    t1, regressions, _ = gate(
         time_queries(spark, queries, names, sf1_dir, names),
         base.get("queries", {}), SF1_ABS_FLOOR_SEC,
     )
@@ -730,7 +546,7 @@ def run_sf1(refreeze: str | None = None) -> None:
         "baseline_frozen_this_run": frozen_now,
         "replica_layout": layout,
         "replica_layout_changed": layout_changed,
-        **fields,
+        "regressions_over_2x": regressions,
     }
     with open(os.path.join(HERE, "BENCH_SF1.json"), "w", encoding="utf-8") as f:
         json.dump(doc, f, indent=1)
@@ -763,8 +579,8 @@ def main() -> None:
     trials = time_queries(spark, queries, gate_set, sf_dir, HEADLINE)
     base = load_baseline(BASELINE_BENCH)
     baseline = base.get("queries", {})
-    all_timings, fields, report = gate(
-        spark, queries, sf_dir, trials, baseline, REGRESSION_ABS_FLOOR_SEC
+    all_timings, regressions, deltas = gate(
+        trials, baseline, REGRESSION_ABS_FLOOR_SEC
     )
     freeze(spark, BASELINE_BENCH, base, all_timings, sf, refreeze)
     timings = {name: all_timings[name] for name in HEADLINE}
@@ -773,15 +589,13 @@ def main() -> None:
     # bounded tail of stdout and the r5 artifact became unparseable when
     # 70 per-query [min,max] arrays pushed the JSON head past the
     # capture window. stdout stays ONE compact JSON line.
-    gate_fields = {k: v for k, v in fields.items() if "regressions" not in k}
     with open(os.path.join(HERE, "BENCH_SPREAD.json"), "w", encoding="utf-8") as f:
         json.dump(
             {
                 "sf": sf,
-                **gate_fields,
                 "all_timings": all_timings,
                 "spread": {name: [min(ts), max(ts)] for name, ts in trials.items()},
-                **report,
+                "deltas": deltas,
             },
             f,
             indent=1,
@@ -806,9 +620,9 @@ def main() -> None:
                 "trials": 3,
                 "stat": "median",
                 "baseline_bench": BASELINE_BENCH if baseline else None,
-                "gated_queries": len(report["deltas"]),
+                "gated_queries": len(deltas),
                 "registered_queries": len(gate_set),
-                **fields,
+                "regressions_over_2x": regressions,
             }
         )
     )

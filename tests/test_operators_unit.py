@@ -1004,8 +1004,9 @@ def test_bench_gate_noise_floor_semantics():
     item 1): flag only when ratio > 2x AND absolute slowdown > 0.5 s.
     The r7 false positive (a3_status_counts: 0.164 s -> 0.358 s,
     '2.18x' of pure job-overhead jitter) must NOT flag; a genuine
-    multi-second 2x+ regression must; and the floor must not excuse a
-    barely-2x slip on a large baseline."""
+    multi-second 2x+ regression must; the floor must not excuse a
+    barely-2x slip on a large baseline; and ``gate`` compares raw
+    medians, with no correction for a uniformly loaded session."""
     import os
     import sys
 
@@ -1039,122 +1040,18 @@ def test_bench_gate_noise_floor_semantics():
     assert bench.compute_regressions({"q": 2.02}, {"q": 1.0}) == {
         "q": 2.02
     }
-
-
-def test_bench_gate_session_normalization():
-    """Pin the sentinel session-ratio semantics (round-7 verdict item
-    2, the 'or' branch): a uniformly loaded session (everything ~1.3x,
-    the r7 driver shape) must not flag anything; a genuine regression
-    riding on top of that load must still flag; an idle or FAST
-    session clamps to 1.0 (never amplifies deltas); a single regressed
-    sentinel cannot drag the median."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # the r7 loaded-session shape through the whole gate: every query
+    # at 1.3x its baseline and one at 2.2x (+2.4 s). Medians are gated
+    # raw, so the 2.2x query is flagged and the 1.3x ones are not.
+    loaded_base = {"q1": 1.0, "q3": 2.0, "dedup": 3.0, "victim": 2.0}
+    trials = {n: [1.3 * b] * 3 for n, b in loaded_base.items()}
+    trials["victim"] = [4.4, 4.5, 4.3]
+    timings, regressions, deltas = bench.gate(
+        trials, loaded_base, bench.REGRESSION_ABS_FLOOR_SEC
     )
-    import bench
-
-    base = {s: 1.0 for s in bench.SENTINELS}
-    base.update({"victim": 2.0, "regressed": 2.0})
-
-    # idle session: ratios ~1.0 -> norm 1.0
-    idle = {s: 1.02 for s in bench.SENTINELS}
-    assert bench.session_ratio(idle, base) == pytest.approx(1.02)
-    # fast session clamps at 1.0 — deltas are never scaled UP
-    fast = {s: 0.7 for s in bench.SENTINELS}
-    assert bench.session_ratio(fast, base) == 1.0
-    # one regressed sentinel: median of [1.0, 1.0, 9.0] stays 1.0
-    skew = {s: 1.0 for s in bench.SENTINELS}
-    skew[bench.SENTINELS[0]] = 9.0
-    assert bench.session_ratio(skew, base) == 1.0
-    # no sentinel overlap (foreign baseline) -> neutral 1.0
-    assert bench.session_ratio({"x": 5.0}, {"x": 1.0}) == 1.0
-
-    # the r7 driver shape: uniform 1.3x load incl. a query at 2.2x raw
-    # that is only ~1.7x normalized -> nothing flags
-    loaded = {s: 1.3 for s in bench.SENTINELS}
-    loaded["victim"] = 4.4  # 2.2x raw, 1.69x normalized
-    norm = bench.session_ratio(loaded, base)
-    assert norm == pytest.approx(1.3)
-    assert bench.compute_regressions(loaded, base, norm=norm) == {}
-    # a true regression on top of the load still flags, reported RAW
-    loaded["regressed"] = 6.0  # 3.0x raw, 2.3x normalized
-    flagged = bench.compute_regressions(loaded, base, norm=norm)
-    assert flagged == {"regressed": 3.0}
-    # sentinels are registered + baselined (the gate can always form
-    # its ratio) — guarded here so a registry rename can't silently
-    # neuter the normalization
-    from wiki_data_pipeline_spark.plans.registry import all_queries
-
-    registered = set(all_queries())
-    import json as _json
-
-    frozen = _json.load(
-        open(
-            os.path.join(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                "BENCH_BASELINE.json",
-            ),
-            encoding="utf-8",
-        )
-    )["queries"]
-    for s in bench.SENTINELS:
-        assert s in registered and s in frozen, s
-
-
-def test_bench_sentinel_spread_guard():
-    """The sentinel-DISAGREEMENT band (r13, verdict item 3): a single
-    session_ratio is only trusted when the sentinels moved together.
-    r12's driver box read sentinels 1.034-1.312 — a 27% band — while
-    one 1.241 divisor was applied to every normalized delta; the
-    spread check flags exactly that shape, the re-measure merge takes
-    the per-sentinel MIN (host load only inflates, so min is closer
-    to truth AND yields a smaller divisor = a stricter gate), and a
-    genuinely regressed sentinel survives the merge because both of
-    its medians carry the regression."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    import bench
-
-    # agreement: tight band -> no alert
-    assert bench.sentinel_spread({"a": 1.05, "b": 1.1, "c": 1.08}) < 1.2
-    # the r12 driver shape -> over the band
-    r12 = {"a": 1.034, "b": 1.241, "c": 1.312}
-    assert bench.sentinel_spread(r12) > bench.SENTINEL_SPREAD_BOUND
-    # the r13 FAST-session shape (two sentinels under baseline, one
-    # at it) is harmless — the divisor clamps at 1.0 so nothing can
-    # be masked — and must NOT alert: sub-1.0 ratios clamp before
-    # the spread is taken
-    fast = {"a": 1.002, "b": 0.792, "c": 0.70}
-    assert bench.sentinel_spread(fast) < bench.SENTINEL_SPREAD_BOUND
-    # ...but genuine above-1.0 disagreement still alerts even when
-    # one sentinel sits below baseline
-    mixed = {"a": 1.31, "b": 0.9, "c": 1.02}
-    assert bench.sentinel_spread(mixed) > bench.SENTINEL_SPREAD_BOUND
-    # degenerate inputs are neutral, never a crash
-    assert bench.sentinel_spread({}) == 1.0
-    assert bench.sentinel_spread({"a": 1.3}) == 1.0
-
-    # merge: transient spike on one sentinel washes out via min...
-    timings = {s: 1.0 for s in bench.SENTINELS}
-    timings[bench.SENTINELS[0]] = 2.6  # spiked trial median
-    fresh = {bench.SENTINELS[0]: 1.05}
-    merged = bench.merge_remeasured(timings, fresh)
-    assert merged[bench.SENTINELS[0]] == 1.05
-    # ...but a REAL regression persists (fresh median equally high)
-    still = bench.merge_remeasured(
-        timings, {bench.SENTINELS[0]: 2.55}
-    )
-    assert still[bench.SENTINELS[0]] == 2.55
-    # non-sentinel keys are untouched
-    t2 = bench.merge_remeasured({"x": 9.0, **timings}, fresh)
-    assert t2["x"] == 9.0
+    assert timings["victim"] == 4.4
+    assert regressions == {"victim": 2.2}
+    assert deltas == {"q1": 1.3, "q3": 1.3, "dedup": 1.3, "victim": 2.2}
 
 
 def test_replica_layout_fingerprint(tmp_path):
@@ -1193,7 +1090,7 @@ def test_replica_layout_fingerprint(tmp_path):
 def test_bench_runs_share_one_gate_and_freeze(
     spark, sf_dir, tmp_path, monkeypatch, capsys
 ):
-    """Both bench runs end to end over the three sentinels at sf0.001:
+    """Both bench runs end to end over three queries at sf0.001:
     the sf0.1 run and the --sf1 run emit the same gate-field set, flag
     a baseline planted 10x below their measured times, archive the
     displaced values on --refreeze (once per tag), and leave a baseline
@@ -1211,9 +1108,12 @@ def test_bench_runs_share_one_gate_and_freeze(
 
     from wiki_data_pipeline_spark.plans.registry import all_queries
 
-    sentinels = {n: all_queries()[n] for n in bench.SENTINELS}
-    monkeypatch.setattr(bench, "all_queries", lambda: dict(sentinels))
-    monkeypatch.setattr(bench, "HEADLINE", list(sentinels))
+    picked = {
+        n: all_queries()[n]
+        for n in ("q1_pricing_summary", "q3_top_orders", "dedup_exact")
+    }
+    monkeypatch.setattr(bench, "all_queries", lambda: dict(picked))
+    monkeypatch.setattr(bench, "HEADLINE", list(picked))
     monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
     monkeypatch.setattr(bench, "build_scaled", lambda *a: sf_dir)
     monkeypatch.setattr(bench, "HERE", str(tmp_path))
@@ -1235,17 +1135,14 @@ def test_bench_runs_share_one_gate_and_freeze(
         path = tmp_path / name
         run(*args)  # no baseline yet: every first-seen median is frozen
         doc = json.loads(path.read_text())
-        assert doc["sf"] == sf and set(doc["queries"]) == set(sentinels)
-        assert set(doc["source"]) == set(sentinels)
+        assert doc["sf"] == sf and set(doc["queries"]) == set(picked)
+        assert set(doc["source"]) == set(picked)
 
         planted = {n: t / 10 for n, t in doc["queries"].items()}
         path.write_text(json.dumps({**doc, "queries": planted}))
         out = run(*args, "--refreeze", "t2")
-        gate_fields[args] = {
-            k for k in out
-            if k.startswith(("session_ratio", "sentinel", "regressions"))
-        }
-        assert set(out["regressions_over_2x"]) == set(sentinels), (args, out)
+        gate_fields[args] = {k for k in out if "regressions" in k}
+        assert set(out["regressions_over_2x"]) == set(picked), (args, out)
         doc = json.loads(path.read_text())
         assert doc["archive"]["t2"]["queries"] == planted
         assert doc["queries"] != planted
@@ -1256,9 +1153,9 @@ def test_bench_runs_share_one_gate_and_freeze(
         with pytest.raises(SystemExit):  # archive[t2] is never overwritten
             bench.freeze(spark, name, doc, doc["queries"], sf, "t2")
 
-        # another scale: the dropped sentinel would be appended at sf
+        # another scale: the dropped query would be appended at sf
         doc["sf"] = sf * 10
-        del doc["queries"][bench.SENTINELS[0]]
+        del doc["queries"]["q1_pricing_summary"]
         path.write_text(json.dumps(doc))
         frozen = path.read_bytes()
         run(*args)
@@ -1267,76 +1164,7 @@ def test_bench_runs_share_one_gate_and_freeze(
             bench.freeze(spark, name, doc, planted, sf, "t3")
         assert path.read_bytes() == frozen
 
-    assert gate_fields[()] == gate_fields[("--sf1",)] == {
-        "session_ratio",
-        "session_ratio_applied",
-        "session_ratio_sentinels",
-        "session_ratio_alert",
-        "sentinel_spread",
-        "sentinel_spread_alert",
-        "sentinels_remeasured",
-        "regressions_over_2x",
-        "regressions_over_2x_normalized",
-    }
-
-
-def test_bench_gate_norm_is_capped():
-    """Pin the r11 gate-divisor cap (verdict item 3): the per-query
-    normalization applied to the 2x gate is min(session_ratio, cap) —
-    an extreme-load divisor must not scale the gate so far that it
-    masks a genuine regression of the same magnitude. Below the cap
-    the divisor passes through; above it, it saturates."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    import bench
-
-    assert bench.gate_norm(1.0) == 1.0
-    assert bench.gate_norm(1.3) == 1.3
-    assert bench.gate_norm(0.8) == 1.0  # fast sessions never amplify
-    assert bench.gate_norm(3.0) == bench.GATE_NORM_CAP
-    # a 4x regression under (impossible-to-normalize) 3x "load": with
-    # the capped divisor it still flags; an uncapped 3.0 divisor would
-    # have passed it at a computed 1.33x
-    base = {s: 1.0 for s in bench.SENTINELS}
-    base["regressed"] = 2.0
-    loaded = {s: 3.0 for s in bench.SENTINELS}
-    loaded["regressed"] = 8.0
-    norm = bench.gate_norm(bench.session_ratio(loaded, base))
-    assert norm == bench.GATE_NORM_CAP
-    assert "regressed" in bench.compute_regressions(loaded, base, norm=norm)
-
-
-def test_bench_gate_session_ratio_sanity_alert():
-    """Pin the r8-advice sanity bound: a uniform elevation past the
-    bound (code-wide slowdown and extreme host load are
-    indistinguishable to the sentinels) must raise the alert flag
-    instead of being silently normalized, and the raw per-sentinel
-    ratios must be reportable evidence."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    import bench
-
-    base = {s: 1.0 for s in bench.SENTINELS}
-    # measured driver-round load (~1.3x) stays under the bound
-    loaded = {s: 1.3 for s in bench.SENTINELS}
-    assert bench.session_ratio(loaded, base) <= bench.SESSION_RATIO_SANITY_BOUND
-    # a uniform 1.6x (e.g. a global conf change) crosses it
-    uniform = {s: 1.6 for s in bench.SENTINELS}
-    assert bench.session_ratio(uniform, base) > bench.SESSION_RATIO_SANITY_BOUND
-    # raw sentinel evidence survives normalization
-    assert bench.sentinel_ratios(uniform, base) == {
-        s: 1.6 for s in bench.SENTINELS
-    }
-    # missing sentinels -> empty evidence, not a crash
-    assert bench.sentinel_ratios({"x": 2.0}, {"x": 1.0}) == {}
+    assert gate_fields[()] == gate_fields[("--sf1",)] == {"regressions_over_2x"}
 
 
 def test_plan_audit_counters():

@@ -129,9 +129,14 @@ def test_high_watermark_checkpoint_batch(spark, sf_dir, tmp_path):
     ckpt = HighWatermarkCheckpoint(os.path.join(tmp_path, "progress.json"))
     events = read_table(spark, sf_dir, "events")
 
+    def commit(batch):
+        agg = batch.agg(F.max("event_id").alias("mx"), F.count("*").alias("n"))
+        mx, n = agg.first()
+        return ckpt.commit_values(watermark=mx, n_disposed=n)
+
     first = ckpt.incremental(events, "event_id")
     assert first.count() == events.count()
-    ckpt.commit(first, "event_id")
+    commit(first)
 
     # nothing new → empty incremental
     second = ckpt.incremental(events, "event_id")
@@ -141,7 +146,7 @@ def test_high_watermark_checkpoint_batch(spark, sf_dir, tmp_path):
     newer = events.withColumn("event_id", F.col("event_id") + 1_000_000)
     combined = events.unionAll(newer)
     assert ckpt.incremental(combined, "event_id").count() == events.count()
-    state = ckpt.commit(ckpt.incremental(combined, "event_id"), "event_id")
+    state = commit(ckpt.incremental(combined, "event_id"))
     assert state.total_processed == 2 * events.count()
     assert state.runs == 2
 

@@ -4,7 +4,9 @@
 # command, not a remembered checklist. Run from the repo root on an
 # otherwise-idle box (the bench steps are timing-sensitive); expect
 # ~2h total at the default scales. Any step failing stops the script
-# (set -e) — a red gate should block the round, not scroll past.
+# (set -e) — a red gate should block the round, not scroll past. The
+# two bench steps are measurements: they exit 0 whatever they list
+# under regressions_over_2x, so read that field in their artifacts.
 #
 # Artifacts produced (all committed at the repo root):
 #   ADVERSARIAL_PARITY.json  full registry vs DuckDB on the
@@ -13,8 +15,8 @@
 #                            pin.mode=reliable (set pinned by
 #                            tests/test_reliable_parity_artifact.py)
 #   BENCH_SPREAD.json        sf0.1 bench sidecar (per-query medians,
-#                            trial spreads, sentinel verdicts)
-#   BENCH_SF1.json           gated x10 run: exponents + regressions
+#                            trial spreads, ratios to the baseline)
+#   BENCH_SF1.json           x10 measurement: exponents + regressions
 #   PLAN_SCALE_DIFF.json     registry-wide join-strategy diff at x10
 # (Step 5, the heavy test tier, writes none; it needs step 4's replica.)
 
@@ -32,7 +34,7 @@ python tools/check_parity.py --json RELIABLE_PARITY.json \
 echo "== 3/6 sf0.1 bench (writes BENCH_SPREAD.json sidecar)"
 python bench.py
 
-echo "== 4/6 gated x10 bench (builds .scale/x10 if absent)"
+echo "== 4/6 x10 bench (builds .scale/x10 if absent)"
 python bench.py --sf1
 
 echo "== 5/6 heavy test tier (x10 plan invariants, reliable-pin sites)"

@@ -85,9 +85,3 @@ def read_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() can be used."""
-    for name in TABLES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)

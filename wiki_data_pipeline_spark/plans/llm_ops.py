@@ -4783,7 +4783,6 @@ def text_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PR_ITERS = 3
-_PR_DAMP = 0.85
 # the damping factor as an exact rational (85/100) for the all-integer
 # nano-unit iteration — no float ever enters the PR loop
 _PR_DAMP_NUM = 85

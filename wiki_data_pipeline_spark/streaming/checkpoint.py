@@ -110,44 +110,29 @@ class HighWatermarkCheckpoint:
         """Rows newer than the committed watermark (pushdown-friendly)."""
         return df.filter(F.col(seq_col) > self.load().watermark)
 
-    def commit(
-        self, df: DataFrame, seq_col: str, n_processed: int | None = None
-    ) -> CheckpointState:
-        """Advance the watermark to max(seq) of the processed batch.
-        Call AFTER the sink write succeeds (at-least-once + idempotent
-        sink ≡ the reference's overwrite=True story, ST3).
-
-        ``df`` must be EVERYTHING the run disposed of — successes AND
-        dead-lettered rows (the reference's mark_failed also advances
-        past failures, src/checkpoint_manager.py); otherwise a failed
-        row above the max success id would be re-selected and
-        re-dead-lettered on every subsequent run. ``n_processed``
-        overrides the amount added to ``total_processed`` (e.g. count
-        only sink-written rows while the watermark still covers the
-        dead-lettered ones — total_processed seeds the consecutive
-        output-file numbering, L3)."""
-        agg = df.agg(
-            F.max(seq_col).alias("mx"), F.count("*").alias("n")
-        ).collect()[0]
-        return self.commit_values(
-            watermark=agg["mx"],
-            n_disposed=int(agg["n"]),
-            n_processed=n_processed,
-        )
-
     def commit_values(
         self,
         watermark: int | None,
         n_disposed: int,
         n_processed: int | None = None,
     ) -> CheckpointState:
-        """Commit from PRECOMPUTED aggregates — for callers whose sink
-        jobs already saw every row (Observation on a DataFrame write,
-        or the JSON sink's per-partition max): no extra scan of the
-        source. ``watermark`` is max(seq) over everything disposed
-        (None when the batch was empty); ``n_disposed`` gates the
-        advance; ``n_processed`` overrides the total_processed
-        increment as in :meth:`commit`."""
+        """Advance the watermark from PRECOMPUTED aggregates: the
+        caller's sink jobs already saw every row (Observation on a
+        DataFrame write, or the JSON sink's per-partition max), so no
+        extra scan of the source runs. Call AFTER the sink write
+        succeeds (at-least-once + idempotent sink ≡ the reference's
+        overwrite=True story, ST3).
+
+        ``watermark`` is max(seq) over EVERYTHING the run disposed of —
+        successes AND dead-lettered rows (the reference's mark_failed
+        also advances past failures, src/checkpoint_manager.py);
+        otherwise a failed row above the max success id would be
+        re-selected and re-dead-lettered on every later run. It is None
+        when the batch was empty; ``n_disposed`` gates the advance.
+        ``n_processed`` overrides the amount added to
+        ``total_processed`` (e.g. count only sink-written rows while the
+        watermark still covers the dead-lettered ones — total_processed
+        seeds the consecutive output-file numbering, L3)."""
         state = self.load()
         if n_disposed and watermark is not None:
             state.watermark = int(watermark)
