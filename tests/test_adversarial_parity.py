@@ -26,13 +26,7 @@ test keeps the known-divergence-prone subset in the suite (~1 min).
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
-
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(HERE, "tools"))
 
 # queries over corpus text bytes, props JSON, or embedding norms —
 # the three data axes the adversarial fixture perturbs

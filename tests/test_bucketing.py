@@ -60,97 +60,69 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, warehouse):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
 
 
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_contamination_probe_is_broadcast(spark, sf_dir):
+def test_contamination_probe_is_broadcast(registry_plan):
     """SCALE.md claims the decontamination probe broadcasts the
     benchmark shingle set so the corpus never shuffles on shingle."""
-    from wiki_data_pipeline_spark.plans.registry import get
-
-    df = get("contamination_ngram_overlap").fn(spark, sf_dir)
-    plan = _executed_plan(df)
+    plan = registry_plan("contamination_ngram_overlap")
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_surprisal_lm_join_is_broadcast(spark, sf_dir):
+def test_surprisal_lm_join_is_broadcast(registry_plan):
     """The unigram LM (vocabulary-sized) must broadcast back onto the
     token stream, not shuffle it."""
-    from wiki_data_pipeline_spark.plans.registry import get
-
-    df = get("score_unigram_surprisal").fn(spark, sf_dir)
-    plan = _executed_plan(df)
+    plan = registry_plan("score_unigram_surprisal")
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_quantize_plan_is_shuffle_free(spark, sf_dir):
+def test_quantize_plan_is_shuffle_free(registry_plan):
     """emb_scalar_quantize is a map-only rewrite: no Exchange beyond
     the deliberate _spread pre-repartition of the single-split
     fixture file (RoundRobinPartitioning), which is NOT a keyed
     shuffle."""
-    from wiki_data_pipeline_spark.plans.registry import get
-
-    df = get("emb_scalar_quantize").fn(spark, sf_dir)
-    plan = _executed_plan(df)
+    plan = registry_plan("emb_scalar_quantize")
     assert "hashpartitioning" not in plan, plan
     assert "rangepartitioning" not in plan, plan
 
 
-def test_pq_adc_scoring_join_is_broadcast(spark, sf_dir):
+def test_pq_adc_scoring_join_is_broadcast(registry_plan):
     """SCALE.md claims the ADC distance table (|Q|·m·k rows) broadcasts
     onto the code table — the code table must never sort-merge."""
-    from wiki_data_pipeline_spark.plans.registry import get
-
-    df = get("sim_ann_pq_adc").fn(spark, sf_dir)
-    plan = _executed_plan(df)
+    plan = registry_plan("sim_ann_pq_adc")
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_zorder_layout_single_aggregation_shuffle(spark, sf_dir):
+def test_zorder_layout_single_aggregation_shuffle(registry_plan):
     """The Morton interleave is map-only; the only keyed exchange is
     the final per-file stats aggregation."""
-    from wiki_data_pipeline_spark.plans.registry import get
-
-    df = get("layout_zorder_files").fn(spark, sf_dir)
-    plan = _executed_plan(df)
+    plan = registry_plan("layout_zorder_files")
     assert plan.count("hashpartitioning") <= 1, plan
     assert "rangepartitioning" not in plan, plan
 
 
-def test_quantile_check_threshold_join_is_broadcast(spark, sf_dir):
+def test_quantile_check_threshold_join_is_broadcast(registry_plan):
     """The per-type GK threshold table must broadcast back over events
     for the rank pass, never shuffle events."""
-    from wiki_data_pipeline_spark.plans.registry import get
-
-    df = get("sketch_quantile_rank_check").fn(spark, sf_dir)
-    plan = _executed_plan(df)
+    plan = registry_plan("sketch_quantile_rank_check")
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_column_profile_is_single_scan(spark, sf_dir):
+def test_column_profile_is_single_scan(registry_plan):
     """quality_column_profile's point is 1 scan for all columns — the
     plan must contain exactly one parquet scan of events."""
-    from wiki_data_pipeline_spark.plans.registry import get
-
-    df = get("quality_column_profile").fn(spark, sf_dir)
-    plan = _executed_plan(df)
+    plan = registry_plan("quality_column_profile")
     assert plan.count("Scan parquet") == 1, plan
 
 
-def test_tfidf_single_tokenize_pass(spark, sf_dir):
+def test_tfidf_single_tokenize_pass(registry_plan):
     """text_tfidf_keywords must tokenize documents exactly ONCE: df and
     dlen are window aggregates over the one grouped count, so the plan
     has a single Generate (explode) and no vocabulary self-join. The
     only other scan is the cheap un-exploded n_docs count."""
-    from wiki_data_pipeline_spark.plans.registry import get
-
-    df = get("text_tfidf_keywords").fn(spark, sf_dir)
-    plan = _executed_plan(df)
+    plan = registry_plan("text_tfidf_keywords")
     assert plan.count("Generate") == 1, plan
     assert plan.count("Scan parquet") <= 2, plan
     assert "SortMergeJoin" not in plan, plan

@@ -29,9 +29,6 @@ from pyspark.sql import functions as F
 
 from wiki_data_pipeline_spark.functions.vectors import as_double, cosine
 
-SF = "/root/testdata/sf0.001"
-
-
 def test_cosine_zero_norm_nulls_match_duckdb(spark):
     pdf = pd.DataFrame(
         {
@@ -133,7 +130,7 @@ def test_scalar_quantize_degenerate_cross_engine(spark, degenerate_sf):
         assert mse is not None and math.isfinite(mse) and mse > 0
 
 
-def test_scalar_quantize_fixture_parity_unchanged(spark):
+def test_scalar_quantize_fixture_parity_unchanged(spark, sf_dir):
     """The guard must be invisible on the real fixture (no constant
     vectors there): spot-check the registered query still matches its
     oracle on sf0.001."""
@@ -143,12 +140,12 @@ def test_scalar_quantize_fixture_parity_unchanged(spark):
     sql = mod.oracle_sql()["emb_scalar_quantize"]
     got = {
         r.vec_id: (r.vmin, r.vmax, r.codes_csv)
-        for r in fn(spark, SF).collect()
+        for r in fn(spark, sf_dir).collect()
     }
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS "
-        f"SELECT * FROM read_parquet('{SF}/embeddings.parquet')"
+        f"SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
     )
     want = {r[0]: tuple(r[1:4]) for r in con.execute(sql).fetchall()}
     con.close()

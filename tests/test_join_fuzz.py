@@ -340,7 +340,7 @@ def test_sessionize_gap_boundary_fuzz_vs_duckdb(spark):
     assert got == want
 
 
-def test_cogrouped_asof_survives_output_pruning(spark):
+def test_cogrouped_asof_survives_output_pruning(spark, sf_dir):
     """count() regression pin (r14, caught by the driver-contract
     verify): when a parent prunes the cogrouped-map's output columns
     (count() needs none), Spark's column pruning used to strip the
@@ -352,9 +352,7 @@ def test_cogrouped_asof_survives_output_pruning(spark):
     both runs and agrees with the collected row count."""
     from wiki_data_pipeline_spark.plans.registry import all_queries
 
-    df = all_queries()["join_cogrouped_asof"](
-        spark, "/root/testdata/sf0.001"
-    )
+    df = all_queries()["join_cogrouped_asof"](spark, sf_dir)
     n = df.count()  # used to raise PythonException(KeyError: 'ts')
     assert n == len(df.collect())
     assert n > 0

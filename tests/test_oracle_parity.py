@@ -2,7 +2,9 @@
 
 This is the default-tier gate that compares the whole registry to its
 oracles; ``tools/check_parity.py`` runs the same comparison at other
-scales."""
+scales. Each comparison reads the query's one session build
+(conftest ``registry_build``), which the plan rules in
+tests/test_plan_invariants.py read too."""
 
 from __future__ import annotations
 
@@ -16,27 +18,21 @@ _ORACLES = all_oracles()
 
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
-def test_query_matches_oracle(spark, sf_dir, name):
-    res = compare_query(spark, name, sf_dir)
+def test_query_matches_oracle(spark, sf_dir, registry_build, name):
+    rec = registry_build(name)
+    assert rec.error is None, f"{name}: {rec.error}"
+    res = compare_query(spark, name, sf_dir, df=rec.value.df)
     assert res.ok, f"{name}: {res.details}"
-
-
-@pytest.mark.parametrize("name", sorted(set(_QUERIES) - set(_ORACLES)))
-def test_rows_only_query_runs(spark, sf_dir, name):
-    df = _QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
 
 
 def test_oracle_coverage_total():
     """Oracle-discipline meta-test: EVERY registered query has a
-    DuckDB oracle — the rows-only set is empty, so every query's
-    parity check compares values. (r12: the one historical
-    exception, sketch_approx_distinct, became a library-only surface;
-    its ε-bound companion sketch_approx_distinct_check is the
-    hash-checked row.) A new query landing without an oracle silently
-    downgrades its check to rows-only; this test makes that a
-    conscious, visible decision."""
+    DuckDB oracle, so every query's parity check compares values.
+    (r12: the one historical exception, sketch_approx_distinct, became
+    a library-only surface; its ε-bound companion
+    sketch_approx_distinct_check is the hash-checked row.) A new query
+    landing without an oracle would have no value check at all; this
+    test makes that a conscious, visible decision."""
     assert set(_QUERIES) - set(_ORACLES) == set()
 
 

@@ -128,7 +128,9 @@ def test_pin_reliable_keeps_caller_cache(spark, pin_conf, tmp_path):
     assert not (lvl.useMemory or lvl.useDisk)
 
 
-def test_pin_reliable_drives_a_registry_fixpoint(spark, pin_conf, tmp_path):
+def test_pin_reliable_drives_a_registry_fixpoint(
+    spark, sf_dir, pin_conf, tmp_path
+):
     """A real multi-pin query (the connected-components fixpoint)
     runs unchanged under the reliable tier — every pin site routes
     through the helper, none hard-codes localCheckpoint — and the
@@ -139,9 +141,6 @@ def test_pin_reliable_drives_a_registry_fixpoint(spark, pin_conf, tmp_path):
     cp = str(tmp_path / "fixpoint_pins")
     pin_conf.set(PIN_MODE_KEY, "reliable")
     pin_conf.set(PIN_DIR_KEY, cp)
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
-    )
     out = get("dedup_cluster_components").fn(spark, sf_dir)
     assert out.count() > 0
     found = [f for _r, _d, fs in os.walk(cp) for f in fs]

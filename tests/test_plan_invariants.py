@@ -1,5 +1,7 @@
-"""Plan-shape invariants, compile-only (``executedPlan`` is the pre-AQE
-physical plan, deterministic at the pinned fixture SF).
+"""Plan-shape invariants over each query's one session build
+(conftest ``registry_build``): ``executedPlan`` is read before any
+action, so it is the pre-AQE physical plan, deterministic at the
+pinned fixture SF, even after the oracle sweep has collected the frame.
 
 ``test_registry_wide_blanket_invariants`` applies the structural rules
 to every registered query: zero CartesianProduct, zero row-at-a-time
@@ -18,27 +20,14 @@ join-strategy and pushdown claims against the 10x replica.
 
 from __future__ import annotations
 
-import os
 import re
-import sys
 
 import pytest
+from plan_audit import audit_plan, duplicate_exchanges, unbounded_global_windows
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-sys.path.insert(
-    0,
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-    ),
-)
-from plan_audit import (  # noqa: E402
-    audit_plan,
-    duplicate_exchanges,
-    unbounded_global_windows,
-)
-
-from wiki_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
+from wiki_data_pipeline_spark.plans.registry import all_queries
 
 # name -> the query's design claims, checked by shape_errors:
 #   max_exchanges, max_smj, max_bnlj: ceilings on shuffle Exchange,
@@ -173,9 +162,6 @@ MANIFEST: dict[str, dict] = {
     ),
 }
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-
 # MANIFEST bound -> the audit_plan counter it bounds
 _BOUNDS = dict(
     max_exchanges="exchanges", min_bhj="bhj", max_smj="smj", max_bnlj="bnlj"
@@ -198,20 +184,10 @@ def shape_errors(inv: dict, plan: str) -> list[str]:
     return errors
 
 
-def _compile(spark, name: str):
-    # Compile under a CLEARED cache: a frame cached by an earlier test
-    # in the same session shows up as a leaf InMemoryTableScan, which
-    # hides its subtree from every check here — the query's OWN plan
-    # is audited, not the session's cache history.
-    spark.catalog.clearCache()
-    df = all_queries()[name](spark, SF_DIR)
-    return df, df._jdf.queryExecution().executedPlan().toString()
-
-
 @pytest.mark.parametrize("name", sorted(MANIFEST))
-def test_plan_invariants(spark, name):
+def test_plan_invariants(registry_plan, name):
     inv = MANIFEST[name]
-    _, plan = _compile(spark, name)
+    plan = registry_plan(name)
     errors = shape_errors(inv, plan)
     assert not errors, (
         f"{name}: plan shape degraded — {'; '.join(errors)}\n"
@@ -245,35 +221,45 @@ DUPLICATE_WORK_ALLOWED: dict[str, str] = {
 }
 
 
-def test_registry_wide_blanket_invariants(spark):
+def test_registry_wide_blanket_invariants(registry_build):
     """Every registered query's plan passes the blanket shapes and the
-    plan-tree rules outside their exact allowlists. Compile-only
-    (iterative queries run their build-time rounds at sf0.001)."""
-    rules = [  # plan-tree rule, its exact allowlist
-        (unbounded_global_windows, UNBOUNDED_WINDOW_WHITELIST),
-        (duplicate_exchanges, set(DUPLICATE_WORK_ALLOWED)),
-    ]
-    stale = {(rule.__name__, n) for rule, allowed in rules for n in allowed}
+    plan-tree rules outside their exact allowlists. Reads each query's
+    session build (conftest ``registry_build``), whose plan and rule
+    hits were read when it was built (iterative queries run their
+    rounds then), before the oracle's collect."""
+    allowlists = {  # plan-tree rule -> its exact allowlist
+        unbounded_global_windows.__name__: UNBOUNDED_WINDOW_WHITELIST,
+        duplicate_exchanges.__name__: set(DUPLICATE_WORK_ALLOWED),
+    }
+    stale = {(rule, n) for rule, allowed in allowlists.items() for n in allowed}
     bad: dict[str, list[str]] = {}
     for name in sorted(all_queries()):
-        try:
-            df, plan = _compile(spark, name)
-        except Exception as e:  # noqa: BLE001
-            bad[name] = [f"COMPILE_ERROR: {str(e)[:150]}"]
+        rec = registry_build(name)
+        if rec.error:
+            bad[name] = [f"COMPILE_ERROR: {rec.error[:150]}"]
             continue
-        found = shape_errors({}, plan)
-        for rule, allowed in rules:
-            hits = rule(df)
-            if hits and name in allowed:
-                stale.discard((rule.__name__, name))
+        found = shape_errors({}, rec.value.plan)
+        for rule, hits in rec.value.hits.items():
+            if hits and name in allowlists[rule]:
+                stale.discard((rule, name))
             else:
-                found += [f"{rule.__name__}: {h[:200]}" for h in hits]
+                found += [f"{rule}: {h[:200]}" for h in hits]
         if found:
             bad[name] = found
     assert not bad, f"scale-hostile plan shapes: {bad}"
     # an allowlist entry that no longer trips its rule is deleted in the
     # same commit, so no allowance outlives its cause
     assert not stale, f"allowlist entries no longer trip their rule: {stale}"
+
+
+def test_each_query_is_built_once(registry_build):
+    """Each registered query was built exactly once in this session,
+    however many readers read its build: in the default tier, the
+    oracle sweep (tests/test_oracle_parity.py), the plan claims in
+    tests/test_bucketing.py and every plan rule above."""
+    for name in all_queries():
+        registry_build(name)
+    assert registry_build.builds == dict.fromkeys(all_queries(), 1)
 
 
 def test_round_plan_variants_are_auditable(spark, sf_dir, monkeypatch):

@@ -31,21 +31,18 @@ product, not a checked-in fixture.
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
-
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(HERE, "tools"))
-from plan_audit import unbounded_global_windows  # noqa: E402
-
-from test_plan_invariants import (  # noqa: E402
+from plan_audit import unbounded_global_windows
+from test_plan_invariants import (
     MANIFEST,
     UNBOUNDED_WINDOW_WHITELIST,
     shape_errors,
 )
 
-from wiki_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
+from wiki_data_pipeline_spark.plans.registry import all_queries
+
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 X10_DIR = os.environ.get(
     "SPARK_GRAFT_X10_DIR", os.path.join(HERE, ".scale", "x10")
@@ -122,7 +119,6 @@ def test_plan_invariants_hold_at_x10_under_cluster_profile(
     pin tier for every pin-routed query built here. One conf
     apply/restore around a single loop (not a parametrize) so a failure
     cannot leak profile confs into the session-scoped fixture."""
-    sys.path.insert(0, HERE)
     from wiki_data_pipeline_spark.operators.pin import PIN_DIR_KEY
     from wiki_data_pipeline_spark.session import load_profile
 

@@ -22,13 +22,10 @@ from __future__ import annotations
 
 import json
 import os
-import sys
+
+import plan_scale_diff as psd
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(HERE, "tools"))
-sys.path.insert(0, HERE)
-
-import plan_scale_diff as psd  # noqa: E402
 
 
 def _audit(**over) -> dict:

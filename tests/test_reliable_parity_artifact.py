@@ -23,15 +23,12 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 
 import pytest
 
+from wiki_data_pipeline_spark.plans.registry import all_queries
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "tools"))
-
-from sweep import sweep  # noqa: E402
-
 ARTIFACT = os.path.join(REPO, "RELIABLE_PARITY.json")
 
 
@@ -68,14 +65,15 @@ def test_reliable_parity_artifact_is_green():
 # heavy tier (r16): discovery builds all 200+ query plans with the pin
 # observer installed and the eager pins RUN at fixture scale (~1.6 min)
 # — the cheap artifact-shape tests above stay in the default tier
-def test_reliable_parity_covers_every_live_pin_site(spark, sf_dir):
+def test_reliable_parity_covers_every_live_pin_site(registry_build):
     """The artifact's query set == the live pin-routed set. Discovery
-    builds all 200+ query plans in the registry sweep, which counts
-    each build's pin() calls (the eager pins run at fixture scale), so
-    this is one of the suite's slower tests — deliberately: it is the
-    guard that makes the committed sweep trustworthy. A builder that
-    fails here fails the test: its pin sites would go unseen."""
-    records = list(sweep(spark, (), sf_dir, lambda df: None))
+    reads every query's session build (conftest ``registry_build``, a
+    registry sweep record), which counts the build's pin() calls (the
+    eager pins run at fixture scale): in a session without the oracle
+    sweep this builds all 200+ queries — deliberately: it is the guard
+    that makes the committed sweep trustworthy. A builder that fails
+    here fails the test: its pin sites would go unseen."""
+    records = [registry_build(name) for name in all_queries()]
     errors = {r.name: r.error for r in records if r.error}
     assert not errors, f"query builders failed: {errors}"
     live = {r.name for r in records if r.pins}

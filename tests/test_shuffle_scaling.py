@@ -26,17 +26,9 @@ UI off, read through the registry sweep (tools/sweep.py).
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
+from sweep import noop, sweep
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(HERE, "tools"))
-
-from sweep import noop, sweep  # noqa: E402
-
-SMALL = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 BIG = "/root/testdata/sf0.01"
 
 SAMPLE = [
@@ -57,8 +49,8 @@ def _shuffle_write_bytes(spark, sf_dir: str) -> dict[str, int]:
 
 
 @pytest.fixture(scope="module")
-def shuffle_bytes(spark) -> dict[str, dict[str, int]]:
-    small = _shuffle_write_bytes(spark, SMALL)
+def shuffle_bytes(spark, sf_dir) -> dict[str, dict[str, int]]:
+    small = _shuffle_write_bytes(spark, sf_dir)
     big = _shuffle_write_bytes(spark, BIG)
     return {name: {"small": small[name], "big": big[name]} for name in SAMPLE}
 

@@ -7,16 +7,9 @@ lowering both buffer thresholds forces that buffer to spill."""
 
 from __future__ import annotations
 
-import os
-import sys
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(HERE, "tools"))
-
-from stage_metrics import snapshot, stages_since  # noqa: E402
+from stage_metrics import snapshot, stages_since
 
 SPILL_CONFS = {
     "spark.sql.windowExec.buffer.in.memory.threshold": "100",

@@ -13,13 +13,11 @@ import subprocess
 import sys
 
 import pytest
+import sweep
+
+from wiki_data_pipeline_spark.operators import pin
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(HERE, "tools"))
-
-import sweep  # noqa: E402
-
-from wiki_data_pipeline_spark.operators import pin  # noqa: E402
 
 
 def _boom(spark, sf_dir):

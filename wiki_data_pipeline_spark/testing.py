@@ -8,7 +8,7 @@ import math
 from dataclasses import dataclass, field
 
 import duckdb
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from wiki_data_pipeline_spark.io import TABLES, table_path
 
@@ -57,12 +57,20 @@ class ParityResult:
 
 
 def compare_query(
-    spark: SparkSession, name: str, sf_dir: str, max_diff_report: int = 5
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    max_diff_report: int = 5,
+    df: DataFrame | None = None,
 ) -> ParityResult:
+    """Collect registered query ``name`` and its DuckDB oracle over the
+    tables in ``sf_dir``. ``df`` is the query's frame when the caller
+    already built it at ``sf_dir``; by default the query is built
+    here."""
     from wiki_data_pipeline_spark.plans.registry import get
 
     spec = get(name)
-    sdf = spec.fn(spark, sf_dir)
+    sdf = spec.fn(spark, sf_dir) if df is None else df
     s_cols = sorted(sdf.columns)
     s_rows = [tuple(_norm(row[c]) for c in s_cols) for row in sdf.collect()]
 
